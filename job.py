@@ -145,11 +145,10 @@ def main(argv=None):
         # refuse an output whose lineage was written by a batch run: the
         # streaming sink keys idempotence on batch_id, which batch lineage
         # lacks — mixing the two schemas corrupts resume for both modes
-        try:
-            prior_lin = spark.read.parquet(f"{args.output}/lineage")
-        except Exception:
-            prior_lin = None
-        if prior_lin is not None and "batch_id" not in prior_lin.columns:
+        from pdf2dom_spark import tables
+        lineage_target = f"{args.output}/lineage"
+        if (tables.table_exists(spark, lineage_target) and "batch_id"
+                not in tables.read_table(spark, lineage_target).columns):
             raise SystemExit(
                 f"error: {args.output}/lineage exists without a batch_id "
                 "column (batch-mode output); point --stream at a fresh "
@@ -192,12 +191,7 @@ def main(argv=None):
         lineage_target = (f"{args.output}_lineage"
                           if tables.is_table_identifier(args.output)
                           else f"{args.output}/lineage")
-        try:
-            tables.read_table(spark, lineage_target).limit(1).collect()
-            has_lineage = True
-        except Exception:
-            has_lineage = False
-        if has_lineage:
+        if tables.table_exists(spark, lineage_target):
             raise SystemExit(
                 f"error: {lineage_target} already exists; pass --resume "
                 "to continue that run, or point --output at a fresh target")

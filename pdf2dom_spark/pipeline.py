@@ -16,10 +16,13 @@ Scale design (the 10^12-doc / 1000-executor story, tested at local[32]):
   dynamic partition overwrite: re-running a failed partition replaces exactly
   its own files (Iceberg overwrite-by-partition in production; parquet
   dynamic overwrite in this sandbox).
-- **Resume = anti-join.** Pending work is
-  ``docs.join(completed_lineage, "part_id", "left_anti")`` — a broadcast
-  anti-join (lineage has P rows), no extra shuffle of the fact side beyond
-  the salting exchange it needs anyway.
+- **Resume = driver-side lineage + literal pruning.** The lineage table
+  has one row per finished ``part_id`` (at most P rows), so it is collected
+  once and every decision over it is made on the driver: pending ids are
+  ``range(P) - done``, the docs are filtered with a literal
+  ``part_id IN (...)``, and this run's lineage comes from one pruned
+  read-back of only its own partitions. No join, no scan of the docs to
+  find pending ids, no re-read of the lineage table.
 - **Bounded Arrow batches.** Set
   ``spark.sql.execution.arrow.maxRecordsPerBatch`` (docs vary wildly in
   size); the kernel is O(tokens) per batch with numpy-vectorized glyph work.
@@ -28,12 +31,13 @@ Scale design (the 10^12-doc / 1000-executor story, tested at local[32]):
 from __future__ import annotations
 
 import uuid
+from datetime import datetime
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from .extract import DEFAULT_CONFIG, ExtractConfig, make_extract_batch
-from .schema import SPAN_FLAT_SCHEMA, SPAN_SCHEMA
+from .schema import LINEAGE_SCHEMA, SPAN_FLAT_SCHEMA, SPAN_SCHEMA
 
 
 def with_part_id(docs: DataFrame, num_partitions: int) -> DataFrame:
@@ -124,6 +128,71 @@ def _recover_lineage_swap(lineage_dir: str) -> None:
         os.rename(old, lineage_dir)
 
 
+def _table_targets(out_dir: str) -> tuple[str, str]:
+    """(spans, lineage) targets of an output: ``<out>_spans`` /
+    ``<out>_lineage`` tables in an Iceberg catalog namespace, or the
+    ``spans/`` and ``lineage/`` dirs of a parquet output."""
+    from . import tables
+
+    if tables.is_table_identifier(out_dir):
+        return f"{out_dir}_spans", f"{out_dir}_lineage"
+    return f"{out_dir}/spans", f"{out_dir}/lineage"
+
+
+def _prior_lineage(spark: SparkSession, lineage_dir: str):
+    """(columns, rows) of the lineage table, collected once (at most one
+    row per part_id), or None when no lineage table exists yet. Any other
+    read failure raises: taking an unreadable table for "no lineage" would
+    turn a resume into a full re-extraction with duplicate lineage rows."""
+    from . import tables
+
+    if not tables.is_table_identifier(lineage_dir):
+        _recover_lineage_swap(lineage_dir)
+    if not tables.table_exists(spark, lineage_dir):
+        return None
+    prior = tables.read_table(spark, lineage_dir)
+    return prior.columns, prior.collect()
+
+
+def _pinned_modulus(columns: list[str], rows: list) -> int | None:
+    """The salt modulus P recorded in lineage (None if none recorded)."""
+    if "num_partitions" not in columns:
+        return None
+    return max((r.num_partitions for r in rows
+                if r.num_partitions is not None), default=None)
+
+
+_LineageRow = Row(*LINEAGE_SCHEMA.names)
+_STAT_COLS = LINEAGE_SCHEMA.names[1:-3]  # lineage()'s aggregates
+
+
+def _lineage_rows(stats: list, part_ids, run_id: str,
+                  num_partitions: int) -> list[Row]:
+    """Lineage rows for ``part_ids`` from the collected ``lineage(...)``
+    rows. An id with no spans (its docs extract to nothing, or it has no
+    docs at all) gets an explicit zero row (checksum 0) so that it counts
+    as done."""
+    by_part = {r.part_id: r for r in stats}
+    now = datetime.now()
+    return [_LineageRow(p, *(by_part[p][c] if p in by_part else 0
+                             for c in _STAT_COLS),
+                        run_id, now, num_partitions)
+            for p in sorted(part_ids)]
+
+
+def _run_stats(run_id: str, prior_rows: list, new_rows: list) -> dict:
+    # cumulative size comes from the P-row lineage (each done part_id has
+    # exactly one row; failed partitions have none and no data), never from
+    # a count() scan of the cumulative spans table
+    rows = prior_rows + new_rows
+    return {
+        "run_id": run_id,
+        "parts_done": len({r.part_id for r in rows}),
+        "span_count": sum(r.span_count for r in new_rows),  # THIS run's
+        "total_span_count": sum(r.span_count or 0 for r in rows),
+    }
+
+
 def run_checkpointed(
     spark: SparkSession,
     docs: DataFrame,
@@ -138,8 +207,14 @@ def run_checkpointed(
     """One checkpointed run: extract only partitions that have no lineage row
     yet, write them idempotently, append lineage. Returns run stats.
 
-    ``fail_parts`` injects a failure for those part_ids (the partition's
-    lineage row is withheld and its output discarded) to test resume.
+    The lineage table is read once; the pinned modulus, the done set and
+    the prior span total all come from those rows on the driver. Pending
+    ids are ``range(P) - done - fail_parts``, every one of which gets a
+    lineage row (zero if it has no spans). With nothing pending the run
+    reads lineage and returns: no extraction, no write.
+
+    ``fail_parts`` injects a failure for those part_ids (the partition is
+    neither extracted nor written, and gets no lineage row) to test resume.
 
     ``split_min_bytes`` (opt-in) routes extraction through the page-split
     path (pagesplit.extract_spans_paged): documents whose content streams
@@ -151,50 +226,34 @@ def run_checkpointed(
     from . import tables
 
     run_id = run_id or uuid.uuid4().hex[:12]
-    if tables.is_table_identifier(out_dir):
-        # Iceberg catalog namespace: <out>_spans / <out>_lineage tables
-        spans_dir = f"{out_dir}_spans"
-        lineage_dir = f"{out_dir}_lineage"
-    else:
-        spans_dir = f"{out_dir}/spans"
-        lineage_dir = f"{out_dir}/lineage"
+    spans_dir, lineage_dir = _table_targets(out_dir)
+    prior = _prior_lineage(spark, lineage_dir)
+    columns, prior_rows = prior if prior is not None else ([], [])
 
-    if not tables.is_table_identifier(out_dir):
-        _recover_lineage_swap(lineage_dir)
-    try:
-        prior = tables.read_table(spark, lineage_dir)
-    except Exception:  # no lineage yet -> everything pending
-        prior = None
+    # part_id = pmod(xxhash64(doc_id), P): resuming with a different P would
+    # remap every part_id and double-write already-extracted documents — so
+    # the salt modulus is pinned by the first run's lineage and reused
+    stored = _pinned_modulus(columns, prior_rows)
+    if stored is not None and stored != num_partitions:
+        import warnings
+        warnings.warn(
+            f"resume: ignoring num_partitions={num_partitions}; the "
+            f"salt modulus is pinned to {stored} by this output's "
+            "lineage", stacklevel=2)
+        num_partitions = stored
 
-    if prior is not None and "num_partitions" in prior.columns:
-        # part_id = pmod(xxhash64(doc_id), P): resuming with a different P
-        # would remap every part_id, defeat the anti-join, and double-write
-        # already-extracted documents — so the salt modulus is pinned by the
-        # first run's lineage and silently reused on resume.
-        stored = prior.select(F.max("num_partitions")).first()[0]
-        if stored is not None and int(stored) != num_partitions:
-            import warnings
-            warnings.warn(
-                f"resume: ignoring num_partitions={num_partitions}; the "
-                f"salt modulus is pinned to {int(stored)} by this "
-                "output's lineage", stacklevel=2)
-            num_partitions = int(stored)
+    # ids this run is responsible for, fixed BEFORE extraction: an id whose
+    # docs all extract to zero spans (or that has no docs) still gets a
+    # lineage row — otherwise resume would re-extract it forever
+    done = {r.part_id for r in prior_rows}
+    processed = sorted(set(range(num_partitions)) - done
+                       - set(fail_parts or ()))
+    if not processed:
+        return _run_stats(run_id, prior_rows, [])
 
-    salted = with_part_id(docs, num_partitions)
-    if prior is not None:
-        done = prior.select("part_id").distinct()
-        pending = salted.join(F.broadcast(done), "part_id", "left_anti")
-    else:
-        pending = salted
-
-    # partition ids this run is responsible for (BEFORE extraction, so a
-    # partition whose docs all extract to zero spans STILL gets a lineage
-    # row — otherwise resume would re-extract it forever)
-    processed = [int(r.part_id) for r in
-                 pending.select("part_id").distinct().collect()]
-    if fail_parts:
-        processed = [p for p in processed if p not in fail_parts]
-
+    pending = with_part_id(docs, num_partitions)
+    if len(processed) < num_partitions:
+        pending = pending.where(F.col("part_id").isin(processed))
     if split_min_bytes is not None:
         # monster-doc defense: page-group fan-out (does its own salting +
         # renumber; part_id is the same pmod(xxhash64) column either way)
@@ -210,52 +269,19 @@ def run_checkpointed(
         from .extract import make_extract_arrow
         spans = pending.mapInArrow(make_extract_arrow(cfg),
                                    SPAN_FLAT_SCHEMA)
-    if fail_parts:
-        # simulate a mid-job crash: these partitions produce no output and
-        # no lineage row this run
-        spans = spans.filter(~F.col("part_id").isin(*fail_parts))
 
     tables.write_partitioned(spans, spans_dir, "part_id", spark)
 
-    # Read back ONLY this run's partitions: the literal isin() predicate on
-    # the partition column statically prunes the scan (the table is
-    # partitioned by part_id), so lineage costs O(this run's output) — never
-    # O(cumulative table). The previous broadcast-join shape *might* DPP-prune
-    # but nothing guaranteed it; at 10^12 docs every resume paid a full-table
-    # scan (VERDICT r2 #3).
-    written = tables.read_table(spark, spans_dir)
-    this_run = (written.where(F.col("part_id").isin(processed))
-                if processed else written.where(F.lit(False)))
-    proc_df = spark.createDataFrame(
-        [(p,) for p in processed] or [(None,)], "part_id int").where(
-        F.col("part_id").isNotNull())
-    # lineage for every PROCESSED partition; zero-span partitions get an
-    # explicit zero row (checksum 0) so they count as done
-    stats = lineage(this_run)
-    new_lineage = (
-        proc_df.join(stats, "part_id", "left")
-        .fillna(0, subset=[c for c in stats.columns if c != "part_id"])
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("completed_at", F.current_timestamp())
-        .withColumn("num_partitions", F.lit(num_partitions))
-    )
-    tables.append_table(new_lineage, lineage_dir, spark)
-
-    done_now = tables.read_table(spark, lineage_dir)
-    run_spans = sum(
-        r.span_count for r in new_lineage.select("span_count").collect())
-    # Cumulative size comes from the P-row lineage table (each part_id has
-    # exactly one lineage row once done; failed partitions have none and no
-    # data), NOT from a count() scan of the cumulative spans table.
-    agg = done_now.agg(
-        F.countDistinct("part_id").alias("parts"),
-        F.sum("span_count").alias("total")).collect()[0]
-    return {
-        "run_id": run_id,
-        "parts_done": int(agg["parts"]),
-        "span_count": int(run_spans),                 # THIS run's spans
-        "total_span_count": int(agg["total"] or 0),   # from lineage, O(P)
-    }
+    # lineage from one read-back of ONLY this run's partitions (static
+    # pruning on the partition column: O(this run's output), never
+    # O(cumulative table)), collected once — it has at most P rows
+    this_run = tables.read_partitions(spark, spans_dir, SPAN_FLAT_SCHEMA,
+                                      "part_id", processed)
+    new_rows = _lineage_rows(lineage(this_run).collect(), processed,
+                             run_id, num_partitions)
+    tables.append_table(spark.createDataFrame(new_rows, LINEAGE_SCHEMA),
+                        lineage_dir, spark)
+    return _run_stats(run_id, prior_rows, new_rows)
 
 
 def compact_spans(spark: SparkSession, spans_dir: str,
@@ -318,56 +344,55 @@ def upsert_docs(
     from . import tables
 
     run_id = run_id or uuid.uuid4().hex[:12]
-    if tables.is_table_identifier(out_dir):
-        spans_dir = f"{out_dir}_spans"
-        lineage_dir = f"{out_dir}_lineage"
-    else:
-        spans_dir = f"{out_dir}/spans"
-        lineage_dir = f"{out_dir}/lineage"
-
-    if not tables.is_table_identifier(out_dir):
-        _recover_lineage_swap(lineage_dir)
-    prior = tables.read_table(spark, lineage_dir)
-    if "num_partitions" not in prior.columns:
+    spans_dir, lineage_dir = _table_targets(out_dir)
+    prior = _prior_lineage(spark, lineage_dir)
+    if prior is None:
+        raise ValueError(
+            f"{lineage_dir} does not exist — upsert needs the output of a "
+            "run_checkpointed run")
+    columns, prior_rows = prior
+    if "num_partitions" not in columns:
         raise ValueError(
             f"{lineage_dir} has no num_partitions column — this output was "
             "not created by a batch run_checkpointed run (streaming-sink "
             "lineage carries batch_id instead) and does not support upsert")
-    stored = prior.select(F.max("num_partitions")).first()[0]
-    if stored is None:
+    num_partitions = _pinned_modulus(columns, prior_rows)
+    if num_partitions is None:
         raise ValueError(
             f"{lineage_dir} has only null num_partitions values — cannot "
             "recover the salt modulus; this target does not support upsert")
-    num_partitions = int(stored)
 
     salted = with_part_id(updated_docs, num_partitions)
-    affected = [int(r.part_id) for r in
-                salted.select("part_id").distinct().collect()]
+    # one aggregate gives the affected ids and the doc count (a doc_id maps
+    # to exactly one part_id, so the per-part distinct counts add up)
+    per_part = (salted.groupBy("part_id")
+                .agg(F.countDistinct("doc_id").alias("n")).collect())
+    affected = sorted(r.part_id for r in per_part)
     if not affected:
         return {"run_id": run_id, "parts_touched": 0, "docs_updated": 0}
     updated_ids = salted.select("doc_id").distinct()
 
     from .extract import make_extract_arrow
     fresh = (salted.repartition(
-        min(num_partitions, max(len(affected), 1)), F.xxhash64("doc_id"))
+        min(num_partitions, len(affected)), F.xxhash64("doc_id"))
         .mapInArrow(make_extract_arrow(cfg), SPAN_FLAT_SCHEMA))
-    existing = (tables.read_table(spark, spans_dir)
-                .where(F.col("part_id").isin(affected)))
+    existing = tables.read_partitions(spark, spans_dir, SPAN_FLAT_SCHEMA,
+                                      "part_id", affected)
     kept = existing.join(F.broadcast(updated_ids), "doc_id", "left_anti")
     merged = kept.select(fresh.columns).unionByName(fresh)
     # one materialization: the overwrite deletes the very files `existing`
     # reads, and the lineage aggregate below must not re-run extraction
     merged = merged.localCheckpoint(eager=True)
     tables.write_partitioned(merged, spans_dir, "part_id", spark)
+    stats = lineage(merged).collect()
 
     # dynamic overwrite only touches partitions PRESENT in `merged`: an
     # affected partition whose every doc updated to a zero-span version
-    # would keep its stale files on disk — delete those explicitly, and
-    # give every affected partition a lineage row (zero row if empty) so
-    # lineage and data stay consistent (ADVICE r3).
-    present = {int(r.part_id) for r in
-               merged.select("part_id").distinct().collect()}
-    emptied = sorted(set(affected) - present)
+    # would keep its stale files on disk — delete those explicitly; every
+    # affected partition gets a lineage row (zero row if empty) so lineage
+    # and data stay consistent
+    touched = set(affected)
+    emptied = sorted(touched - {r.part_id for r in stats})
     if emptied:
         if tables.is_table_identifier(out_dir):
             spark.sql(f"DELETE FROM {spans_dir} WHERE part_id IN "
@@ -378,25 +403,15 @@ def upsert_docs(
                 shutil.rmtree(f"{spans_dir}/part_id={pid}",
                               ignore_errors=True)
 
-    stats = lineage(merged)
-    affected_df = spark.createDataFrame(
-        [(p,) for p in affected], "part_id int")
-    new_lineage = (
-        affected_df.join(stats, "part_id", "left")
-        .fillna(0, subset=[c for c in stats.columns if c != "part_id"])
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("completed_at", F.current_timestamp())
-        .withColumn("num_partitions", F.lit(num_partitions))
-    )
-    # replace the affected partitions' lineage rows (keep the rest):
-    # materialize the merged table BEFORE touching the old files, write to
-    # a sibling dir, swap (Iceberg: one MERGE commit does both)
-    survivors = prior.where(~F.col("part_id").isin(affected))
-    merged_lineage = (survivors.select(new_lineage.columns)
-                      .unionByName(new_lineage)
-                      .localCheckpoint(eager=True))
+    # replace the affected partitions' lineage rows and keep the rest:
+    # build the new table on the driver, write it to a sibling dir, swap
+    # (Iceberg: one atomic replace commit)
+    survivors = [_LineageRow(*(r[c] for c in LINEAGE_SCHEMA.names))
+                 for r in prior_rows if r.part_id not in touched]
+    merged_lineage = spark.createDataFrame(
+        survivors + _lineage_rows(stats, affected, run_id, num_partitions),
+        LINEAGE_SCHEMA)
     if tables.is_table_identifier(out_dir):
-        # Iceberg: one atomic replace commit
         merged_lineage.writeTo(lineage_dir).createOrReplace()
     else:
         merged_lineage.repartition(1).write.mode("overwrite").parquet(
@@ -415,5 +430,5 @@ def upsert_docs(
     return {
         "run_id": run_id,
         "parts_touched": len(affected),
-        "docs_updated": int(updated_ids.count()),
+        "docs_updated": sum(r.n for r in per_part),
     }

@@ -84,13 +84,19 @@ SPAN_FLAT_SCHEMA = T.StructType(
     + [T.StructField(f"style_{f.name}", f.dataType, True) for f in STYLE_STRUCT.fields]
 )
 
+# One lineage row per finished part_id: pipeline.lineage()'s aggregates plus
+# the run that produced them and the salt modulus that defines part_id.
 LINEAGE_SCHEMA = T.StructType(
-    [
-        T.StructField("part_id", T.IntegerType(), False),
-        T.StructField("doc_count", T.LongType(), False),
-        T.StructField("span_count", T.LongType(), False),
-        T.StructField("checksum", T.LongType(), False),
-        T.StructField("run_id", T.StringType(), False),
+    [T.StructField("part_id", T.IntegerType())]
+    + [T.StructField(c, T.LongType()) for c in (
+        "doc_count", "span_count", "n_text", "n_page", "n_rect", "n_line",
+        "n_image", "n_font", "n_meta")]
+    + [
+        T.StructField("max_doc_spans", T.IntegerType()),
+        T.StructField("checksum", T.LongType()),
+        T.StructField("run_id", T.StringType()),
+        T.StructField("completed_at", T.TimestampType()),
+        T.StructField("num_partitions", T.IntegerType()),
     ]
 )
 

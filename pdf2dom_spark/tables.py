@@ -22,6 +22,8 @@ anything path-like is a parquet directory.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 _ICEBERG_CLASS = "org.apache.iceberg.spark.SparkCatalog"
 
@@ -43,16 +45,50 @@ def is_table_identifier(source: str) -> bool:
             and not source.endswith(".parquet"))
 
 
+def _require_iceberg(spark: SparkSession, source: str) -> None:
+    if not iceberg_available(spark):
+        raise RuntimeError(
+            f"'{source}' looks like a catalog table but no Iceberg "
+            "runtime is on the classpath; pass a parquet path or add "
+            "the iceberg-spark-runtime package")
+
+
 def read_table(spark: SparkSession, source: str) -> DataFrame:
     """documents table -> DataFrame (Iceberg table or parquet dir)."""
     if is_table_identifier(source):
-        if not iceberg_available(spark):
-            raise RuntimeError(
-                f"'{source}' looks like a catalog table but no Iceberg "
-                "runtime is on the classpath; pass a parquet path or add "
-                "the iceberg-spark-runtime package")
+        _require_iceberg(spark, source)
         return spark.read.format("iceberg").load(source)
     return spark.read.parquet(source)
+
+
+def read_partitions(spark: SparkSession, source: str, schema: StructType,
+                    column: str, values: list) -> DataFrame:
+    """Only the partitions ``column IN values`` of a partitioned table. The
+    literal predicate on the partition column prunes the scan statically,
+    so the cost is O(those partitions), never O(table). A parquet dir is
+    read with ``schema`` (no schema-inference job); an Iceberg table keeps
+    its catalog schema."""
+    if is_table_identifier(source):
+        _require_iceberg(spark, source)
+        df = spark.read.format("iceberg").load(source)
+    else:
+        df = spark.read.schema(schema).parquet(source)
+    return df.where(F.col(column).isin(values))
+
+
+def table_exists(spark: SparkSession, target: str) -> bool:
+    """Whether ``target`` holds a table: the catalog knows the Iceberg
+    table, or the parquet path exists with at least one data entry (a dir
+    left with only ``_temporary`` by a crashed first write holds no
+    table). Says nothing about readability: reading it may still fail."""
+    if is_table_identifier(target):
+        _require_iceberg(spark, target)
+        return spark.catalog.tableExists(target)
+    path = spark._jvm.org.apache.hadoop.fs.Path(target)  # noqa: SLF001
+    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())  # noqa: SLF001
+    return fs.exists(path) and any(
+        not st.getPath().getName().startswith(("_", "."))
+        for st in fs.listStatus(path))
 
 
 def write_partitioned(df: DataFrame, target: str,
@@ -74,7 +110,6 @@ def write_partitioned(df: DataFrame, target: str,
         if not spark.catalog.tableExists(target):
             # first write must CREATE the partitioned table —
             # overwritePartitions requires an existing one
-            from pyspark.sql import functions as F
             df.writeTo(target).partitionedBy(
                 *[F.col(c) for c in cols]).create()
             return

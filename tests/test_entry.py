@@ -83,6 +83,25 @@ def test_job_cli_lifecycle(spark, tmp_path):
     assert spark.read.parquet(f"{sout}/spans").count() == n1
 
 
+def test_job_cli_refuses_unreadable_lineage(spark, tmp_path):
+    """A fresh run into an output whose lineage exists is refused, also
+    when that lineage cannot be read: the probe is an existence check,
+    not a read whose failure would pass for "no lineage yet"."""
+    import pytest
+
+    import job
+    from tests.conftest import SF_SMOKE
+
+    out = tmp_path / "taken"
+    (out / "lineage").mkdir(parents=True)
+    (out / "lineage" / "part-00000.parquet").write_bytes(
+        b"not a parquet file")
+    with pytest.raises(SystemExit, match="already exists"):
+        job.main(["--synth", SF_SMOKE, "--output", str(out),
+                  "--partitions", "4"])
+    assert not (out / "spans").exists()
+
+
 def test_job_cli_input_pdfs(spark, tmp_path):
     """--input-pdfs: real .pdf files through the distributed binaryFile
     ingest into the same checkpointed table contract as every other

@@ -3,6 +3,9 @@ checkpoint-resume idempotence under failure injection, skew handling."""
 
 from __future__ import annotations
 
+import contextlib
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -111,6 +114,108 @@ def test_resume_pins_partition_count(spark, docs, tmp_path):
     b = spark.read.parquet(f"{out}/spans")
     assert a.count() == b.count()
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+
+
+@contextlib.contextmanager
+def _jobs_issued(spark, group):
+    """Collects the ids of the Spark jobs run inside the block."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    jobs: list[int] = []
+    try:
+        yield jobs
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _mtimes(root):
+    return {os.path.join(d, f): os.stat(os.path.join(d, f)).st_mtime_ns
+            for d, _, files in os.walk(root) for f in files}
+
+
+def test_checkpoint_resume_job_count(spark, docs, tmp_path):
+    """A failed first run plus its resume is a bounded number of Spark
+    jobs: lineage is collected once per run and decided on the driver, and
+    the run's lineage comes from one pruned read-back. 14 jobs at P=8
+    (40 before lineage moved to the driver); a new collect or a second
+    evaluation of the lineage aggregate breaks this bound."""
+    docs.count()  # the cached fixture is materialized outside the count
+    out = str(tmp_path / "jobs")
+    with _jobs_issued(spark, "ckpt-job-count") as jobs:
+        run_checkpointed(spark, docs, out, num_partitions=8, run_id="r1",
+                         fail_parts={2, 5})
+        stats = run_checkpointed(spark, docs, out, num_partitions=8,
+                                 run_id="r2")
+    assert stats["parts_done"] == 8
+    assert len(jobs) <= 16, jobs
+
+
+def test_noop_resume_short_circuits(spark, docs, tmp_path):
+    """Resuming a complete output reads lineage and returns: no
+    extraction, no write, no lineage append. Its jobs are the schema
+    inference of the parquet lineage table and the collect of its rows."""
+    out = str(tmp_path / "noop")
+    first = run_checkpointed(spark, docs, out, num_partitions=8,
+                             run_id="r1")
+    before = _mtimes(out)
+    with _jobs_issued(spark, "ckpt-noop") as jobs:
+        stats = run_checkpointed(spark, docs, out, num_partitions=8,
+                                 run_id="r2")
+    assert len(jobs) <= 2, jobs
+    assert _mtimes(out) == before
+    assert stats["span_count"] == 0
+    assert stats["parts_done"] == 8
+    assert stats["total_span_count"] == first["total_span_count"]
+
+
+def test_zero_lineage_rows_for_empty_and_docless_parts(spark, docs,
+                                                       tmp_path):
+    """Ids are fixed before extraction, so a part_id whose docs all have
+    empty spans arrays and a part_id with no docs at all each get one
+    explicit zero lineage row, and the resume after is a no-op."""
+    salted = with_part_id(docs.limit(12), 16).localCheckpoint(eager=True)
+    present = {r.part_id for r in salted.select("part_id").collect()}
+    emptied = min(present)
+    docless = set(range(16)) - present
+    assert docless, "need a part_id without docs for this test"
+    small = salted.withColumn(
+        "spans", F.when(F.col("part_id") == emptied,
+                        F.expr("slice(spans, 1, 0)"))
+        .otherwise(F.col("spans"))).drop("part_id")
+
+    out = str(tmp_path / "zero")
+    stats = run_checkpointed(spark, small, out, num_partitions=16,
+                             run_id="r1")
+    assert stats["parts_done"] == 16
+    lin = {r.part_id: r for r in
+           spark.read.parquet(f"{out}/lineage").collect()}
+    assert sorted(lin) == list(range(16))
+    for pid in docless | {emptied}:
+        row = lin[pid]
+        assert (row.doc_count, row.span_count, row.checksum) == (0, 0, 0)
+        assert row.run_id == "r1" and row.num_partitions == 16
+    assert not os.path.exists(f"{out}/spans/part_id={emptied}")
+
+    before = _mtimes(out)
+    again = run_checkpointed(spark, small, out, num_partitions=16,
+                             run_id="r2")
+    assert again["span_count"] == 0 and again["parts_done"] == 16
+    assert _mtimes(out) == before
+
+
+def test_unreadable_lineage_raises(spark, docs, tmp_path):
+    """A lineage table that exists but cannot be read is an error, not
+    "no lineage": the run must raise instead of re-extracting everything
+    and appending duplicate lineage rows."""
+    out = tmp_path / "corrupt"
+    (out / "lineage").mkdir(parents=True)
+    (out / "lineage" / "part-00000.snappy.parquet").write_bytes(
+        b"not a parquet file")
+    with pytest.raises(Exception):
+        run_checkpointed(spark, docs, str(out), num_partitions=8,
+                         run_id="r1")
+    assert not (out / "spans").exists()
 
 
 def test_resume_idempotent_paged(spark, docs, tmp_path):
