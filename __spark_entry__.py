@@ -3,10 +3,12 @@
 - ``entry(spark)`` — flagship: build the deterministic interleaved
   text+media corpus from /root/testdata/sf0.001 and run the full
   Pdf2Dom-equivalent extraction (tokenize -> interpret -> chunk -> ordered
-  spans) through the salted mapInPandas pipeline.
-- ``queries()`` / ``oracle_sql()`` — one entry per implemented operator
-  (SURVEY.md §2 + training-data ops); oracles run on DuckDB against the same
-  parquet tables.
+  spans) through the salted pipeline, as nested-style spans (the
+  ``mapInPandas`` variant of ``extract_spans``; the production paths use
+  the flat ``mapInArrow`` kernel).
+- ``queries()`` / ``oracle_sql()`` — the extraction gates (qkernel +
+  qunits), then the relational (qrel) and text (textops) queries, in
+  registry order; oracles run on DuckDB against the same parquet tables.
 """
 
 from __future__ import annotations
@@ -26,7 +28,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2."""
+    """One entry per registered query, in registry order."""
     from pdf2dom_spark.queries import all_queries
 
     return all_queries()

@@ -11,15 +11,18 @@ Architecture (Spark-first, not a port):
 
 - The input is a DataFrame of interleaved text+media documents
   ``(doc_id, spans: array<struct<kind,text,media_ref,offset>>)``.
-- Extraction runs as one ``mapInPandas`` over Arrow batches; inside the UDF
-  everything is columnar pandas/numpy (no per-row Python at the Spark level).
+- Extraction runs as one ``mapInArrow`` over Arrow batches on every
+  production path (``run_checkpointed``, ``job.py``, streaming, pagesplit);
+  inside the kernel everything is columnar numpy (no per-row Python at the
+  Spark level). Only the nested-style ``extract_spans(nested=True)``
+  variant goes through ``mapInPandas``.
 - Skew from giant documents is defused by salted repartitioning on the raw
   ``xxhash64(doc_id)`` (``part_id = pmod(hash, P)`` stays a deterministic
   COLUMN for lineage/resume).
 - Per-partition lineage + metrics rows enable idempotent checkpoint-resume.
 
 Modules:
-  schema     — Spark StructTypes shared by readers, the UDF contract, tests
+  schema     — Spark StructTypes shared by readers, the kernel contract, tests
   fonts      — deterministic synthetic font metrics + FontTable semantics
   fontbytes  — F2 font payloads: SFNT build/normalize, WOFF1 conversion
   tokenizer  — content-stream scanner (regex fast path + full PDF lexer tier)
@@ -29,15 +32,20 @@ Modules:
   raster     — polygon scanline fill + stdlib PNG codec (G11, pixel paths)
   extract    — per-document driver: spans in -> ordered span rows out
   corpus     — deterministic synthetic corpora (fixtures + oracle + rich)
-  pipeline   — Spark-level wiring: salting, mapInPandas, lineage, resume
+  pdfread    — real PDF reader + distributed binaryFile ingest
+  pdfcrypt   — standard security handler (empty/known-password decryption)
+  pdfwrite   — real PDF writer for the synthetic corpora
+  jpegdec    — baseline/progressive JPEG codec for the image-pixel path
+  pipeline   — Spark-level wiring: salting, mapInArrow, lineage, resume
   pagesplit  — giant-document page-group fan-out (skew layer 3)
   tables     — Iceberg-or-parquet table IO routing
-  streaming  — the same kernel over readStream; watermarked/stateful aggs
-  queries    — driver-facing queries() / oracle_sql() registry
-  textops    — training-data ops: dedup (+ banded MinHash LSH), lang-id, ...
-  simsearch  — embedding search (brute-force, sign-LSH, IVF, LSH near-dup)
-  multimodal — binary media columns incl. real PNG decode/rot90/resize
+  streaming  — the same kernel over readStream, incl. a lineage sink
+  memtune    — per-process glibc malloc tuning for the Arrow kernels
   render_html— optional HTML sink (reference-exact CSS serialization)
+  queries    — driver-facing queries() / oracle_sql() registry: the
+               extraction gates of qkernel + qunits, then qrel
+               (relational/event queries) and textops (training-data ops:
+               dedup + banded MinHash LSH, lang-id, ...); helpers in qshared
 """
 
 __version__ = "0.1.0"

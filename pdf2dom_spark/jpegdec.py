@@ -70,50 +70,20 @@ for _u in range(8):
         _A[_u, _x] = 0.5 * _c * np.cos((2 * _x + 1) * _u * np.pi / 16.0)
 del _u, _c, _x
 
-# einsum contraction lists cached per (expr, operand shapes), REPLAYED
-# locally: np.einsum re-runs its parser + einsum_path validation on every
-# call even when handed an explicit path (measured ~half the contraction
-# wall on small images). einsum_call=True returns the parsed contraction
-# list einsum itself executes; the loop below replays it with the
-# identical tensordot / c_einsum calls (numpy 1.26 einsumfunc.py:1395-
-# 1437), so the numerics stay bit-identical BY CONSTRUCTION while the
-# per-call parse/plan cost is paid once per (expr, shape). Verified
-# array_equal against np.einsum(optimize=path) across 24 shape/expr
-# combos including the BLAS-blocking-sensitive large grids.
+# einsum contraction paths cached per (expr, operand shapes): with
+# optimize=True np.einsum searches for a path on every call; handing it the
+# cached path skips that search and runs the same contraction.
 _EINSUM_PATHS: dict = {}
 
 
 def _einsum(expr: str, *ops: np.ndarray) -> np.ndarray:
     key = (expr, tuple(o.shape for o in ops))
-    clist = _EINSUM_PATHS.get(key)
-    if clist is None:
-        _, clist = np.einsum_path(expr, *ops, optimize=True,
-                                  einsum_call=True)
+    path = _EINSUM_PATHS.get(key)
+    if path is None:
+        path = np.einsum_path(expr, *ops, optimize=True)[0]
         if len(_EINSUM_PATHS) < 4096:
-            _EINSUM_PATHS[key] = clist
-    operands = list(ops)
-    for inds, idx_rm, einsum_str, _remaining, blas in clist:
-        tmp = [operands.pop(x) for x in inds]
-        if blas:
-            input_str, results_index = einsum_str.split('->')
-            input_left, input_right = input_str.split(',')
-            tensor_result = input_left + input_right
-            for s in idx_rm:
-                tensor_result = tensor_result.replace(s, "")
-            left_pos, right_pos = [], []
-            for s in sorted(idx_rm):
-                left_pos.append(input_left.find(s))
-                right_pos.append(input_right.find(s))
-            new_view = np.tensordot(
-                *tmp, axes=(tuple(left_pos), tuple(right_pos)))
-            if tensor_result != results_index:
-                new_view = np.einsum(
-                    tensor_result + '->' + results_index, new_view,
-                    optimize=False)
-        else:
-            new_view = np.einsum(einsum_str, *tmp, optimize=False)
-        operands.append(new_view)
-    return operands[0]
+            _EINSUM_PATHS[key] = path
+    return np.einsum(expr, *ops, optimize=path)
 
 
 class _HuffTable:

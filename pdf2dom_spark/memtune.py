@@ -1,7 +1,6 @@
 """Per-process glibc malloc tuning for the Arrow batch kernels.
 
-Why this exists (measured on the round-5 sandbox, BENCH/BASELINE.md
-"Measured memory-stall evidence"): numpy serves every array larger than
+Why this exists (measured on a shared-hypervisor VM): numpy serves every array larger than
 glibc's M_MMAP_THRESHOLD (128 KB default) with a fresh mmap and returns
 it with munmap on free. Each Arrow batch therefore allocates and
 RELEASES tens of MB of pages back to the OS, and every next batch
@@ -24,7 +23,7 @@ cluster.
 Runtime mallopt(2) via ctypes is used instead of MALLOC_*_ env vars so
 the tune also lands in Python workers whose environment the harness
 does not control (e.g. the correctness driver creates the
-SparkSession). Env vars are still set by bench.py / job.py so forked
+SparkSession). Env vars are still set by job.py and perfbench so forked
 workers start tuned from their first allocation.
 """
 

@@ -19,7 +19,7 @@ Stdlib only (zlib + re). Covers the constructs the fixtures use:
   PDF-1.5+ fixture stores its objects in),
 - FlateDecode for content; DCTDecode/raw image payloads kept as opaque
   bytes (hashed into a stable ``media_ref`` — the kernel never decodes
-  real image codecs, matching multimodal.py's opaque-binary design),
+  real image codecs; ``image_pixels=True`` decodes them here instead),
 - page tree walk with attribute inheritance (Resources, MediaBox, Rotate),
 - simple-font /Encoding /Differences and /ToUnicode CMaps -> kind='cmap'
   spans (the kernel's font-encoding hook, interp.doc_cmaps),

@@ -1,8 +1,8 @@
 """Shared scaffolding for the driver-gate query modules.
 
 The query registry is split by domain (qkernel / qunits / qrel /
-qsketch — merged and sweep-ordered in queries.py); these helpers are the
-pieces more than one domain uses.
+textops, merged in queries.py); these helpers are the pieces more than
+one domain uses.
 """
 
 from __future__ import annotations

@@ -26,6 +26,26 @@ def test_registry_alignment():
     assert set(qs) - set(orc) == {"extract_spans_rich"}
 
 
+def test_registry_ignores_working_directory(tmp_path, monkeypatch):
+    """queries()/oracle_sql() are the domain registries in registry order,
+    whatever correctness files sit in the working directory."""
+    import json
+
+    import __spark_entry__ as e
+    from pdf2dom_spark import qkernel, qrel, qunits, textops
+
+    (tmp_path / "CORRECTNESS_r99.json").write_text(json.dumps(
+        {name: {"rows_match": True}
+         for name in ("extract_spans_rich", "color_hex", "rtl_reverse")}))
+    monkeypatch.chdir(tmp_path)
+
+    want = (list(qkernel.REGISTRY) + list(qunits.REGISTRY)
+            + list(qrel.REGISTRY) + list(textops.REGISTRY))
+    assert list(e.queries()) == want
+    assert list(e.oracle_sql()) == [n for n in want
+                                    if n != "extract_spans_rich"]
+
+
 def test_job_cli(spark, tmp_path):
     import job
 

@@ -1,6 +1,5 @@
 """Scale-surface guards: verification-only all-pairs baselines must refuse
-oversized inputs (VERDICT r2 #7), and the LSH query must release its
-signature cache (VERDICT r2 #9)."""
+oversized inputs, and the LSH query must release its signature cache."""
 
 from __future__ import annotations
 
@@ -56,18 +55,3 @@ def test_lsh_releases_signature_cache(spark):
     after = set(jsc.getPersistentRDDs().keySet().toArray())
     new = after - before
     assert len(new) <= 1, f"signature cache leaked: {len(new)} new RDDs"
-
-
-def test_bloom_probe_has_no_false_negatives(spark):
-    """Bloom's structural guarantee: every member key probes positive.
-    From the query's own report this is exactly
-    bloom_positive == true_positive + false_positive per group (a missed
-    member would make bloom_positive - false_positive < true_positive).
-    Also pins that the filter actually filters (some group sees a
-    non-member rejected, i.e. bloom_positive < group size) at smoke sf."""
-    from pdf2dom_spark.queries import all_queries
-
-    rows = all_queries()["bloom_filter_probe"](spark, SF_SMOKE).collect()
-    assert rows
-    for r in rows:
-        assert r["bloom_positive"] == r["true_positive"] + r["false_positive"], r

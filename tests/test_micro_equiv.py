@@ -72,7 +72,7 @@ def test_mat_matches_nested_list_array():
                           np.array([[1, 0], [0, 1], [7, 8]], np.float64))
 
 
-# --- jpegdec: cached-contraction replay vs np.einsum -----------------------
+# --- jpegdec: cached-path einsum vs np.einsum(optimize=True) --------------
 
 @pytest.mark.parametrize("shape", [(1, 1), (3, 4), (7, 7), (40, 60),
                                    (3, 200), (128, 96)])

@@ -1,6 +1,6 @@
 """Driver-style correctness gate: every ``queries()`` entry vs its DuckDB
 ``oracle_sql()`` on the same parquet tables (row count + column set +
-order-insensitive value comparison), mimicking CORRECTNESS_r{N}.json."""
+order-insensitive value comparison)."""
 
 from __future__ import annotations
 

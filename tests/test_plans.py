@@ -50,17 +50,6 @@ def test_broadcast_join_used_for_dim(spark):
     assert "BroadcastHashJoin" in _plan(q)
 
 
-def test_resume_anti_join_is_broadcast(spark, tmp_path):
-    from pdf2dom_spark.corpus import build_docs_df
-    from pdf2dom_spark.pipeline import with_part_id
-    docs = build_docs_df(spark, SF_SMOKE, mode="oracle")
-    done = spark.createDataFrame([(1,), (2,)], ["part_id"])
-    pending = with_part_id(docs, 16).join(
-        F.broadcast(done), "part_id", "left_anti")
-    plan = _plan(pending)
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
-
-
 def test_extraction_has_single_exchange(spark):
     """The extraction job's only shuffle is the salting repartition."""
     from pdf2dom_spark.corpus import build_docs_df
@@ -117,7 +106,7 @@ def test_no_python_udf_outside_extraction(spark):
     """Every non-extraction query is built from JVM expressions only."""
     from pdf2dom_spark.queries import all_queries
     for name, fn in all_queries().items():
-        if name.startswith(("extract_", "mm_", "render_")):
+        if name.startswith(("extract_", "render_")):
             continue  # mapInPandas kernels (the designated Arrow UDFs)
         plan = _plan(fn(spark, SF_SMOKE))
         assert "EvalPython" not in plan, f"{name} uses a Python UDF"
@@ -136,37 +125,6 @@ def test_minhash_lsh_join_is_band_keyed(spark):
     join_lines = [ln for ln in plan.splitlines()
                   if "Join" in ln and "lang" in ln]
     assert not join_lines, join_lines
-
-
-def test_embedding_dedup_join_is_bucket_keyed(spark):
-    from pdf2dom_spark.queries import all_queries
-    q = all_queries()["dedup_embedding_cosine"](spark, SF_SMOKE)
-    plan = _plan(q)
-    assert "bucket" in plan
-    join_lines = [ln for ln in plan.splitlines()
-                  if "Join" in ln and "label" in ln]
-    assert not join_lines, join_lines
-
-
-def test_knn_lsh_no_exchange_on_embedding(spark):
-    """Signatures are one projection: no shuffle keyed on the vector column
-    (VERDICT r1 'What's wrong' #4)."""
-    from pdf2dom_spark.queries import all_queries
-    q = all_queries()["knn_lsh"](spark, SF_SMOKE)
-    plan = _plan(q)
-    bad = [ln for ln in plan.splitlines()
-           if "Exchange hashpartitioning" in ln and "embedding" in ln]
-    assert not bad, bad
-
-
-def test_html_main_content_is_narrow(spark):
-    """Boilerplate strip must stay a pure narrow JVM map: no Exchange, no
-    Python eval — the whole operator is higher-order array functions."""
-    from pdf2dom_spark.htmlops import html_main_content
-    plan = _plan(html_main_content(spark, SF_SMOKE))
-    assert "Exchange" not in plan
-    assert "EvalPython" not in plan
-    assert plan.lstrip().startswith("*(")  # whole-stage codegen root
 
 
 def test_skew_salted_join_shape(spark):
@@ -270,16 +228,14 @@ def test_decontaminate_bench_side_is_broadcast(spark):
 
 
 def test_chunk_and_quantize_are_narrow(spark):
-    """Sliding-window chunking and int8 quantization are pure narrow
-    map+generate pipelines: zero Exchange, zero Python."""
+    """Sliding-window chunking is a pure narrow map+generate pipeline:
+    zero Exchange, zero Python."""
     from pdf2dom_spark.queries import all_queries
 
-    for name in ("doc_chunk_windows", "embedding_quantize"):
-        df = all_queries()[name](spark, "/root/testdata/sf0.001")
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, name
-        assert "MapInPandas" not in plan and "BatchEvalPython" not in plan, \
-            name
+    df = all_queries()["doc_chunk_windows"](spark, SF_SMOKE)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan
+    assert "MapInPandas" not in plan and "BatchEvalPython" not in plan
 
 
 def test_tpch_q3_pushdown_and_broadcast(spark):
@@ -389,21 +345,6 @@ def test_runtime_bloom_filter_prunes_shuffle_join(spark):
                 spark.conf.set(k, v)
 
 
-def test_bloom_probe_side_is_narrow(spark):
-    """bloom_filter_probe's probe side must stay a pure JVM projection:
-    the 2 Kbit filter rides in as a broadcast literal, so the only
-    Exchange in the whole query is the final per-priority aggregate and
-    the only join is the gate-only broadcast truth join — no shuffle,
-    no Python, no SMJ ever touches the probe rows."""
-    from pdf2dom_spark.queries import all_queries
-    q = all_queries()["bloom_filter_probe"](spark, SF_SMOKE)
-    plan = _plan(q)
-    assert plan.count("Exchange hashpartitioning") == 1, plan
-    assert "EvalPython" not in plan
-    assert "SortMergeJoin" not in plan
-    assert "BroadcastHashJoin" in plan
-
-
 def test_sample_reservoir_is_take_ordered(spark):
     """Exact-k reservoir sampling must run as TakeOrderedAndProject —
     per-partition k-heaps merged on the driver, O(k) memory at any
@@ -429,20 +370,6 @@ def test_sample_weighted_shape(spark):
     assert "EvalPython" not in plan
 
 
-def test_dedup_bloom_apply_negative_branch_joinless(spark):
-    """The Bloom-negative branch (the 100 TB majority) must be kept with
-    ZERO join — four md5 bit probes against a broadcast literal; only
-    the Bloom-positive sliver pays the (broadcast) anti-join, and no
-    SortMergeJoin appears anywhere."""
-    from pdf2dom_spark.queries import all_queries
-    q = all_queries()["dedup_bloom_apply"](spark, SF_SMOKE)
-    plan = _plan(q)
-    assert "SortMergeJoin" not in plan
-    # exactly one join in the whole union: the positive-sliver anti-join
-    assert plan.count("BroadcastHashJoin") == 1, plan
-    assert "LeftAnti" in plan
-
-
 def test_extract_spans_realfile_single_shuffle(spark):
     """The real-file chain keeps the flagship's plan: ONE Exchange of the
     compact (doc_id, text) rows, then ONE fused Python stage that
@@ -455,15 +382,3 @@ def test_extract_spans_realfile_single_shuffle(spark):
     # the fused write+parse+extract kernel moved to MapInArrow (r6)
     assert plan.count("MapInPandas") + plan.count("MapInArrow") == 1, plan
 
-
-def test_media_kernels_spread_before_python(spark):
-    """A small-file parquet scan is ONE split; every media generator
-    that feeds a Python kernel must salt-repartition first or the
-    kernel runs serially (measured: mm_jpeg_dct_chain 5.75s -> 1.28s at
-    sf0.1 from this fix alone)."""
-    from pdf2dom_spark.queries import all_queries
-    qs = all_queries()
-    for name in ("mm_jpeg_dct_chain", "mm_png_decode", "mm_audio_energy",
-                 "mm_decode_meta"):
-        plan = _plan(qs[name](spark, SF_SMOKE))
-        assert "Exchange hashpartitioning(xxhash64" in plan, (name, plan)
