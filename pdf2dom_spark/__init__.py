@@ -40,7 +40,9 @@ Modules:
   pagesplit  — giant-document page-group fan-out (skew layer 3)
   tables     — Iceberg-or-parquet table IO routing
   streaming  — the same kernel over readStream, incl. a lineage sink
-  memtune    — per-process glibc malloc tuning for the Arrow kernels
+  memtune    — once-per-worker tuning every kernel calls first: glibc
+               malloc thresholds, no per-task zip-importer re-reads,
+               import-time heap frozen out of the per-task gc
   render_html— optional HTML sink (reference-exact CSS serialization)
   queries    — driver-facing queries() / oracle_sql() registry: the
                extraction gates of qkernel + qunits, then qrel

@@ -320,7 +320,6 @@ def docs_frame_to_spans(pdf: pd.DataFrame,
     over the scalar ``part_id`` (TaskContext partition index): lineage must
     be stable across runs/schedulers for checkpoint-resume.
     """
-    memtune.tune_malloc()  # once per worker: see memtune.py
     parts = pdf["part_id"].tolist() if "part_id" in pdf.columns else None
     doc_parts_list: list = []
     parts_list: list[tuple[list, dict]] = []
@@ -344,7 +343,6 @@ def parts_to_flat(parts_list: list[tuple[list, dict]], doc_ids: list[str],
     """Per-document parts -> (ONE flat pandas frame with the SPAN_FLAT
     schema dtypes, per-doc span counts). Shared by the batch kernel and
     the page-split group kernel."""
-    memtune.tune_malloc()  # once per worker: see memtune.py
     if not parts_list:
         return (pd.DataFrame({c: [] for c in SPAN_FLAT_COLUMNS}),
                 np.empty(0, dtype=np.int64))
@@ -370,8 +368,6 @@ def parts_to_flat(parts_list: list[tuple[list, dict]], doc_ids: list[str],
 def docs_to_arrow_spans(doc_ids, spans_col, parts, cfg: ExtractConfig):
     """Columnar core for the mapInArrow path: python lists in ->
     pyarrow arrays out (skips pandas block consolidation entirely)."""
-    memtune.tune_malloc()  # once per worker: see memtune.py
-
     parts_list = [extract_doc_parts(str(doc_id), spans, cfg)
                   for doc_id, spans in zip(doc_ids, spans_col)]
     return parts_to_arrow(parts_list, doc_ids, parts)
@@ -394,7 +390,6 @@ def parts_to_arrow(parts_list: list, doc_ids, parts,
     per-column array builds and the boundary bytes are skipped."""
     import pyarrow as pa
 
-    memtune.tune_malloc()  # once per worker: see memtune.py
     want = None if columns is None else set(columns)
     cols, counts = (finalize_docs(parts_list, columns=want)
                     if parts_list else ({}, None))
@@ -456,7 +451,7 @@ def make_extract_arrow(cfg: ExtractConfig = DEFAULT_CONFIG):
     """mapInArrow kernel: pyarrow batches in/out, flat schema."""
 
     def extract_arrow(batches):
-        import pyarrow as pa  # noqa: F401
+        memtune.tune_worker()
         try:
             from pyspark import TaskContext
             tc = TaskContext.get()
@@ -482,6 +477,7 @@ def make_extract_batch(cfg: ExtractConfig = DEFAULT_CONFIG, nested: bool = True)
     (SPAN_FLAT_SCHEMA) for SQL-oracle comparison."""
 
     def extract_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        memtune.tune_worker()
         try:
             from pyspark import TaskContext
             tc = TaskContext.get()

@@ -1,6 +1,10 @@
-"""Per-process glibc malloc tuning for the Arrow batch kernels.
+"""Per-process tuning of the Python worker that runs the Arrow kernels.
 
-Why this exists (measured on a shared-hypervisor VM): numpy serves every array larger than
+Two things happen here, both once per worker process and both without
+changing what any kernel computes.
+
+glibc malloc (``tune_malloc``). Measured on a shared-hypervisor VM:
+numpy serves every array larger than
 glibc's M_MMAP_THRESHOLD (128 KB default) with a fresh mmap and returns
 it with munmap on free. Each Arrow batch therefore allocates and
 RELEASES tens of MB of pages back to the OS, and every next batch
@@ -25,11 +29,44 @@ the tune also lands in Python workers whose environment the harness
 does not control (e.g. the correctness driver creates the
 SparkSession). Env vars are still set by job.py and perfbench so forked
 workers start tuned from their first allocation.
+
+The PySpark worker's per-task tax (``tune_worker``). A reused Python
+worker pays two fixed costs on every task, whatever the task does.
+Measured on a 4-vCPU VM (Python 3.11, pyspark 4.1, workers importing
+pyspark from ``pyspark.zip``): a no-op ``mapInArrow`` over 16 salted
+partitions took 1.6-1.8 s wall and 4.3-4.6 s of Python-worker CPU
+against a 0.4 s bare shuffle; with ``tune_worker`` at its top, 0.6 s and
+0.04 s.
+
+1. ``worker_util.setup_spark_files`` calls
+   ``importlib.invalidate_caches()`` at the start of every task. On
+   Python 3.11 every ``zipimport.zipimporter`` in
+   ``sys.path_importer_cache`` then re-reads its archive's central
+   directory: 16 re-reads of the 3.5 MB, 1,328-entry ``pyspark.zip`` per
+   task, ~80% of ``pyspark.worker.main`` under cProfile. Dropping the
+   cached zip importers makes that call free. Imports keep working:
+   submodules resolve through their package's ``__path__``, and a finder
+   is recreated from zipimport's own directory cache when one is needed.
+   It is redone on every call because any later import from the zip
+   caches a fresh importer, which the next task would re-read again; the
+   dict scan costs microseconds.
+2. After every task the daemon runs a full ``gc.collect()`` over the
+   ~110k objects the imports left behind: 70-100 ms per task.
+   ``gc.freeze()`` once per process moves that import-time heap out of
+   the collector's reach; objects a task allocates are collected as
+   before.
+
+On the same VM the pair took perfbench ``rich_extract`` (16
+extraction tasks) from a median 793 to 1175 docs/s and 3.79 to 2.56 s
+per job (seeds 1-10, each against the code without it).
 """
 
 from __future__ import annotations
 
+import gc as _gc
 import os as _os
+import sys as _sys
+import zipimport as _zipimport
 
 _result: bool | None = None
 
@@ -68,6 +105,29 @@ def tune_malloc() -> bool:
         ok = False
     _result = ok  # don't retry per batch either way
     return ok
+
+
+def tune_worker() -> None:
+    """Tuning for a Python kernel task: ``tune_malloc``, the cached zip
+    importers dropped (every call) and the heap frozen (once per
+    process). Every Spark kernel generator calls this before it converts
+    its first input batch; see the module docstring.
+
+    Outside a Spark task (the process that owns the SparkSession, or a
+    test running a kernel directly) it does nothing: that process is not
+    a reused worker, and freezing its heap would change how its own
+    garbage is collected."""
+    from pyspark import TaskContext
+
+    if TaskContext.get() is None:
+        return
+    tune_malloc()
+    cache = _sys.path_importer_cache
+    for path in [p for p, f in cache.items()
+                 if isinstance(f, _zipimport.zipimporter)]:
+        del cache[path]
+    if _gc.get_freeze_count() == 0:
+        _gc.freeze()
 
 
 def tuned_env(env: dict | None = None) -> dict:

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from . import memtune
 from .extract import DEFAULT_CONFIG, ExtractConfig
 from .fonts import FontTable
 from .schema import IN_SPAN_STRUCT, SPAN_FLAT_SCHEMA
@@ -343,6 +344,7 @@ def extract_groups(groups: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG,
 
         from pdf2dom_spark.extract import extract_doc_parts, parts_to_arrow
 
+        memtune.tune_worker()
         for b in batches:
             names = b.schema.names
             col = {n: b.column(names.index(n)).to_pylist()
@@ -417,6 +419,7 @@ def extract_spans_paged(docs: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG,
         big = docs.where(doc_bytes >= F.lit(min_bytes))
 
     def split_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        memtune.tune_worker()
         for pdf in batches:
             rows: list[dict] = []
             for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):

@@ -1653,8 +1653,8 @@ def pdf_docs_df(spark, path_glob: str, password: bytes = b"",
     def parse_batch(it):
         import pandas as pd
 
-        from .memtune import tune_malloc
-        tune_malloc()  # once per worker: file payloads are large allocs
+        from .memtune import tune_worker
+        tune_worker()
         for pdf_batch in it:
             ids, spans = [], []
             for path, content in zip(pdf_batch["path"], pdf_batch["content"]):
@@ -1782,6 +1782,9 @@ def pdf_archive_docs_df(spark, path_glob: str, suffix: str = "*",
 
     def parse_batch(it):
         import pandas as pd
+
+        from .memtune import tune_worker
+        tune_worker()
         for batch in it:
             ids, spans = [], []
             for path, content in zip(batch["path"], batch["content"]):

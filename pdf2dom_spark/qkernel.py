@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from . import memtune
 from .extract import ExtractConfig
 from .qshared import (ORACLE_COLS, RICH_LITE_COLS, _doc_ids,
                       _extract_flat, make_reg)
@@ -1031,6 +1032,7 @@ def cos_coercion(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _doc_ids(spark, sf_dir)
 
     def kernel(batches):
+        memtune.tune_worker()
         for pdf in batches:
             rows = {"doc_id": [], "spans": []}
             for doc_id in pdf["doc_id"]:
@@ -1075,6 +1077,7 @@ def resource_embed_datauri(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _doc_ids(spark, sf_dir)
 
     def kernel(batches):
+        memtune.tune_worker()
         for pdf in batches:
             rows = {"doc_id": [], "spans": []}
             for doc_id in pdf["doc_id"]:
@@ -1122,6 +1125,7 @@ def dup_overlap_stream_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _doc_ids(spark, sf_dir)
 
     def kernel(batches):
+        memtune.tune_worker()
         for pdf in batches:
             rows = {"doc_id": [], "spans": []}
             for doc_id in pdf["doc_id"]:
@@ -1179,6 +1183,7 @@ def raster_fill_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _doc_ids(spark, sf_dir)
 
     def kernel(batches):
+        memtune.tune_worker()
         import base64
 
         from .raster import decode_png_rgba
@@ -1246,6 +1251,7 @@ def extract_spans_realfile(spark: SparkSession, sf_dir: str) -> DataFrame:
            .repartition(p, F.xxhash64("doc_id")))
 
     def kernel(batches):
+        memtune.tune_worker()
         cfg = ExtractConfig()
         for b in batches:
             names = b.schema.names

@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import memtune
 from .extract import ExtractConfig
 from .schema import SPAN_FLAT_SCHEMA
 
@@ -73,6 +74,7 @@ def _extract_flat(spark: SparkSession, sf_dir: str,
             [f for f in SPAN_FLAT_SCHEMA.fields if f.name in want])
 
     def kernel(batches):
+        memtune.tune_worker()
         for b in batches:
             names = b.schema.names
             doc_ids = [str(d) for d in

@@ -9,6 +9,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from . import memtune
 from .extract import ExtractConfig
 from .qshared import _doc_ids, _extract_flat, make_reg
 from .schema import SPAN_FLAT_SCHEMA
@@ -253,6 +254,7 @@ def line_width_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _doc_ids(spark, sf_dir)
 
     def kernel(batches):
+        memtune.tune_worker()
         for pdf in batches:
             rows = {"doc_id": [], "spans": []}
             for doc_id in pdf["doc_id"]:

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import memtune
 from .extract import DEFAULT_CONFIG, ExtractConfig
 from .schema import DOC_SCHEMA, SPAN_FLAT_SCHEMA
 
@@ -173,6 +174,7 @@ def extract_pdf_stream_lineage(spark: SparkSession, pdf_dir: str,
         import pandas as pd
 
         from .pdfread import pdf_to_spans
+        memtune.tune_worker()
         for batch in it:
             ids, spans = [], []
             for path, content in zip(batch["path"], batch["content"]):

@@ -122,6 +122,34 @@ def test_operand_typing_matches_reference():
     assert tx["style_color"] == "rgba(0,0,0,0)", tx["style_color"]
 
 
+def _three_page_pdf() -> bytes:
+    """The reference's 3-page fixture when present, else a real 3-page PDF
+    written by pdfwrite from the first all-latin-1 rich corpus document
+    (24 words per page, so 60 words make 3 pages)."""
+    import os
+
+    from pdf2dom_spark.corpus import rich_stream
+    from pdf2dom_spark.pdfread import pdf_to_spans
+    from pdf2dom_spark.pdfwrite import spans_to_pdf
+
+    from tests.test_realpdf import RES
+
+    path = os.path.join(RES, "3-page-document.pdf")
+    if os.path.exists(path):
+        with open(path, "rb") as f:
+            return f.read()
+    text = " ".join(f"word{i}" for i in range(60))
+    for k in range(100):
+        spans = rich_stream(f"fuzz{k}", text)
+        if all(ord(c) < 256 for sp in spans for c in sp["text"] or ""):
+            break
+    pdf = spans_to_pdf(f"fuzz{k}", spans)
+    pages = [sp for sp in pdf_to_spans(pdf)
+             if sp["kind"] == "text" and " PG " in sp["text"][:24]]
+    assert len(pages) == 3
+    return pdf
+
+
 def test_corrupt_pdf_bytes_terminate():
     """pdf_to_spans on mutated/truncated/garbage PDF bytes must TERMINATE
     (raise or return) — never hang or corrupt state. The production ingest
@@ -130,8 +158,7 @@ def test_corrupt_pdf_bytes_terminate():
     a parser loop that stops advancing."""
     from pdf2dom_spark.pdfread import pdf_to_spans
 
-    real = open("/root/reference/src/test/resources/3-page-document.pdf",
-                "rb").read()
+    real = _three_page_pdf()
     rng = random.Random(20260817)
     done = 0
     for trial in range(120):

@@ -1,4 +1,4 @@
-"""memtune: glibc malloc tuning applied at every kernel entry point.
+"""memtune: the once-per-worker tuning every kernel entry point applies.
 
 Why it exists: glibc serves >128 KB allocations with mmap and returns
 them with munmap on free, so each Arrow batch's numpy arrays round-trip
@@ -60,3 +60,54 @@ print(len(addrs))
     # split (ADVICE r5: exact single-address reuse flaked across glibc
     # policies); 4 distinct addresses would mean mmap-per-allocation.
     assert int(out.stdout.strip()) <= 2, out.stdout
+
+
+def test_tune_worker_stops_per_task_zip_rereads_and_freezes_heap(tmp_path):
+    """The two per-task costs of a reused PySpark worker: the task-start
+    ``importlib.invalidate_caches()`` re-reads the central directory of
+    every cached zip importer (pyspark.zip in production), and the
+    daemon's post-task ``gc.collect()`` scans the whole import-time heap.
+    After ``tune_worker`` the first costs no directory read and the
+    heap is frozen; imports from the zip keep working. Outside a Spark
+    task it leaves the process alone."""
+    import zipfile
+
+    archive = tmp_path / "zpkg.zip"
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr("zpkg/__init__.py", "VALUE = 1\n")
+        z.writestr("zpkg/sub/__init__.py", "")
+        z.writestr("zpkg/sub/a.py", "A = 2\n")
+        z.writestr("zpkg/sub/b.py", "B = 3\n")
+    code = r"""
+import gc, importlib, sys, zipimport
+sys.path.insert(0, ARCHIVE)
+import zpkg.sub.a
+assert any(isinstance(f, zipimport.zipimporter)
+           for f in sys.path_importer_cache.values())
+from pyspark import TaskContext
+from pdf2dom_spark import memtune
+memtune.tune_worker()  # no task: nothing changes
+assert gc.get_freeze_count() == 0
+assert any(isinstance(f, zipimport.zipimporter)
+           for f in sys.path_importer_cache.values())
+TaskContext._setTaskContext(TaskContext())  # as pyspark.worker does
+memtune.tune_worker()
+reads = []
+real = zipimport._read_directory
+def counting(archive):
+    reads.append(archive)
+    return real(archive)
+zipimport._read_directory = counting
+importlib.invalidate_caches()
+zipimport._read_directory = real
+import zpkg.sub.b
+print(len(reads), gc.get_freeze_count(), zpkg.VALUE + zpkg.sub.a.A + zpkg.sub.b.B)
+""".replace("ARCHIVE", repr(str(archive)))
+    out = subprocess.run([sys.executable, "-c", code],
+                         capture_output=True, text=True,
+                         cwd=os.path.dirname(os.path.dirname(__file__)))
+    assert out.returncode == 0, out.stderr
+    reads, frozen, total = map(int, out.stdout.split())
+    assert reads == 0
+    assert frozen > 0
+    assert total == 6

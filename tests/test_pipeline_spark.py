@@ -29,6 +29,36 @@ def test_nested_schema_and_rows(spark, docs):
     assert {"page", "text", "rect", "line", "image", "font"} <= kinds
 
 
+def test_kernel_tunes_its_python_worker(spark, docs):
+    """The kernel leaves its worker without cached zip importers (whose
+    central directories every task start would re-read) and with the
+    import-time heap frozen (out of the per-task gc.collect)."""
+
+    def probe(batches):
+        # one batch through the extraction kernel inside the worker,
+        # then that worker's cached zip importers and frozen objects
+        import gc
+        import sys
+        import zipimport
+
+        import pyarrow as pa
+
+        from pdf2dom_spark.extract import make_extract_arrow
+
+        for _ in make_extract_arrow()(batches):
+            pass
+        zips = sum(isinstance(f, zipimport.zipimporter)
+                   for f in sys.path_importer_cache.values())
+        yield pa.RecordBatch.from_pydict(
+            {"zips": [zips], "frozen": [gc.get_freeze_count()]})
+
+    rows = (docs.select("doc_id", "spans").limit(8).repartition(1)
+            .mapInArrow(probe, "zips long, frozen long").collect())
+    assert len(rows) == 1
+    assert rows[0]["zips"] == 0
+    assert rows[0]["frozen"] > 0
+
+
 def test_order_is_dense_per_doc(spark, docs):
     spans = extract_spans(docs, num_partitions=8, nested=False)
     bad = (spans.groupBy("doc_id")
