@@ -3,9 +3,9 @@
 - ``entry(spark)`` — flagship: build the deterministic interleaved
   text+media corpus from /root/testdata/sf0.001 and run the full
   Pdf2Dom-equivalent extraction (tokenize -> interpret -> chunk -> ordered
-  spans) through the salted pipeline, as nested-style spans (the
-  ``mapInPandas`` variant of ``extract_spans``; the production paths use
-  the flat ``mapInArrow`` kernel).
+  spans) through the salted pipeline, as nested-style spans (the flat
+  ``mapInArrow`` kernel's output with ``style_*`` folded into a
+  ``style`` struct by a JVM-side projection).
 - ``queries()`` / ``oracle_sql()`` — the extraction gates (qkernel +
   qunits), then the relational (qrel) and text (textops) queries, in
   registry order; oracles run on DuckDB against the same parquet tables.

@@ -11,11 +11,13 @@ Architecture (Spark-first, not a port):
 
 - The input is a DataFrame of interleaved text+media documents
   ``(doc_id, spans: array<struct<kind,text,media_ref,offset>>)``.
-- Extraction runs as one ``mapInArrow`` over Arrow batches on every
-  production path (``run_checkpointed``, ``job.py``, streaming, pagesplit);
-  inside the kernel everything is columnar numpy (no per-row Python at the
-  Spark level). Only the nested-style ``extract_spans(nested=True)``
-  variant goes through ``mapInPandas``.
+- Extraction runs as one ``mapInArrow`` over Arrow batches on every path
+  (``extract_spans``, ``run_checkpointed``, ``job.py``, streaming,
+  pagesplit), all through ``pipeline.extract_salted`` except pagesplit's
+  page-group kernel; inside the kernel everything is columnar numpy (no
+  per-row Python at the Spark level). The nested-style
+  ``extract_spans(nested=True)`` output is a JVM-side ``struct``
+  projection over the same flat kernel output.
 - Skew from giant documents is defused by salted repartitioning on the raw
   ``xxhash64(doc_id)`` (``part_id = pmod(hash, P)`` stays a deterministic
   COLUMN for lineage/resume).

@@ -1,4 +1,4 @@
-"""Per-document extraction driver + the mapInPandas batch kernel.
+"""Per-document extraction driver + the mapInArrow batch kernel.
 
 ``extract_doc_columnar`` mirrors the reference lifecycle
 (``PDFDomTree.writeText``/``createDOM`` -> per-page processing -> endDocument,
@@ -12,22 +12,22 @@ across the whole Arrow batch (``extract_doc_parts`` + ``finalize_docs``):
 one global stable lexsort by (doc, emission key) replaces per-document
 argsorts and double concatenation (+31% single-core on the oracle corpus).
 
-``extract_batch`` is the Spark-facing generator for
-``DataFrame.mapInPandas(extract_batch, SPAN_SCHEMA)``.
+``make_extract_arrow`` builds the Spark-facing generator for
+``DataFrame.mapInArrow(kernel, SPAN_FLAT_SCHEMA)``; the nested ``style``
+struct of SPAN_SCHEMA is a JVM-side projection over its output
+(pipeline.extract_spans).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
 
 from . import graphics, memtune, textpipe
 from .interp import (DocInterp, _concat_glyphs_many, doc_cid2_fonts,
                      doc_cmaps, doc_tokens, doc_vmetrics, doc_widths)
-from .schema import SPAN_FLAT_COLUMNS, STYLE_FIELDS
+from .schema import STYLE_FIELDS
 
 
 @dataclass
@@ -307,67 +307,10 @@ def extract_doc(doc_id: str, spans: list[dict],
     return rows
 
 
-def docs_frame_to_spans(pdf: pd.DataFrame,
-                        cfg: ExtractConfig = DEFAULT_CONFIG,
-                        part_id: int | None = None,
-                        page_offset: int = 0,
-                        font_seed: list[str] | None = None,
-                        emit_fonts: bool = True) -> pd.DataFrame:
-    """A pandas batch of documents -> one flat span frame (columnar concat).
-
-    A ``part_id`` column on the input (deterministic
-    ``pmod(xxhash64(doc_id), P)`` computed by pipeline.py) takes precedence
-    over the scalar ``part_id`` (TaskContext partition index): lineage must
-    be stable across runs/schedulers for checkpoint-resume.
-    """
-    parts = pdf["part_id"].tolist() if "part_id" in pdf.columns else None
-    doc_parts_list: list = []
-    parts_list: list[tuple[list, dict]] = []
-    doc_ids: list[str] = []
-    for i, (doc_id, spans) in enumerate(zip(pdf["doc_id"], pdf["spans"])):
-        if isinstance(spans, np.ndarray):
-            spans = list(spans)
-        parts_list.append(extract_doc_parts(str(doc_id), spans, cfg,
-                                            page_offset=page_offset,
-                                            font_seed=font_seed,
-                                            emit_fonts=emit_fonts))
-        doc_ids.append(str(doc_id))
-        doc_parts_list.append(int(parts[i]) if parts is not None else part_id)
-
-    flat, _counts = parts_to_flat(parts_list, doc_ids, doc_parts_list)
-    return flat
-
-
-def parts_to_flat(parts_list: list[tuple[list, dict]], doc_ids: list[str],
-                  doc_parts: list) -> tuple[pd.DataFrame, np.ndarray]:
-    """Per-document parts -> (ONE flat pandas frame with the SPAN_FLAT
-    schema dtypes, per-doc span counts). Shared by the batch kernel and
-    the page-split group kernel."""
-    if not parts_list:
-        return (pd.DataFrame({c: [] for c in SPAN_FLAT_COLUMNS}),
-                np.empty(0, dtype=np.int64))
-
-    cols, counts = finalize_docs(parts_list)
-    data: dict[str, np.ndarray] = {}
-    data["doc_id"] = np.repeat(np.array(doc_ids, dtype=object), counts)
-    data["part_id"] = np.repeat(np.array(doc_parts, dtype=object), counts)
-    data.update(cols)
-
-    out = pd.DataFrame(data, columns=SPAN_FLAT_COLUMNS)
-    # float32 style columns (reference float fidelity)
-    for f in STYLE_FIELDS:
-        col = f"style_{f}"
-        if f in _FLOAT_STYLE:
-            out[col] = pd.to_numeric(out[col], errors="coerce").astype(np.float32)
-    out["order"] = out["order"].astype(np.int32)
-    out["page_no"] = pd.to_numeric(out["page_no"], errors="coerce").astype("Int32")
-    out["part_id"] = pd.to_numeric(out["part_id"], errors="coerce").astype("Int32")
-    return out, counts
-
-
 def docs_to_arrow_spans(doc_ids, spans_col, parts, cfg: ExtractConfig):
-    """Columnar core for the mapInArrow path: python lists in ->
-    pyarrow arrays out (skips pandas block consolidation entirely)."""
+    """Columnar core of every unsplit extraction: python lists in -> ONE
+    pyarrow RecordBatch with the SPAN_FLAT schema out (``parts``: per-doc
+    part_id values, or None for a null column)."""
     parts_list = [extract_doc_parts(str(doc_id), spans, cfg)
                   for doc_id, spans in zip(doc_ids, spans_col)]
     return parts_to_arrow(parts_list, doc_ids, parts)
@@ -380,7 +323,7 @@ def parts_to_arrow(parts_list: list, doc_ids, parts,
     schema (plus ``extra`` trailing columns: (name, pa.type, per-doc
     values) repeated by span count). ``parts=None`` emits a null part_id
     column — the contract of the fused synthesize-inside-the-query
-    kernels, whose pandas path never carried a partition id either.
+    kernels, which carry no partition id.
 
     ``columns`` restricts the OUTPUT to a subset of the flat schema (in
     schema order): column pruning cannot cross an opaque Python map, so a
@@ -469,39 +412,3 @@ def make_extract_arrow(cfg: ExtractConfig = DEFAULT_CONFIG):
             yield docs_to_arrow_spans(doc_ids, spans_col, parts, cfg)
 
     return extract_arrow
-
-
-def make_extract_batch(cfg: ExtractConfig = DEFAULT_CONFIG, nested: bool = True):
-    """Build the mapInPandas kernel. ``nested=True`` emits the ``style``
-    struct column (SPAN_SCHEMA); ``nested=False`` keeps flat style_* columns
-    (SPAN_FLAT_SCHEMA) for SQL-oracle comparison."""
-
-    def extract_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        memtune.tune_worker()
-        try:
-            from pyspark import TaskContext
-            tc = TaskContext.get()
-            pid = tc.partitionId() if tc is not None else None
-        except Exception:  # pragma: no cover - non-Spark context
-            pid = None
-        for pdf in batches:
-            scalar_pid = None if "part_id" in pdf.columns else pid
-            flat = docs_frame_to_spans(pdf, cfg, part_id=scalar_pid)
-            if nested:
-                style_cols = {f: flat[f"style_{f}"].tolist() for f in STYLE_FIELDS}
-                style = pd.Series(
-                    [
-                        {f: style_cols[f][i] for f in STYLE_FIELDS}
-                        for i in range(len(flat))
-                    ],
-                    dtype=object,
-                )
-                out = flat[["doc_id", "order", "kind", "text", "media_ref"]].copy()
-                out["style"] = style
-                out["page_no"] = flat["page_no"]
-                out["part_id"] = flat["part_id"]
-                yield out
-            else:
-                yield flat
-
-    return extract_batch

@@ -6,7 +6,7 @@ Reimplements the stateful single-pass of the reference
 LegacyPDFStreamEngine glyph positioning) as a per-document scan whose
 high-cardinality inner work (per-glyph positions/advances) is numpy-vectorized
 per show-string. No per-row Python at the Spark level: this runs inside
-``mapInPandas`` over Arrow batches.
+``mapInArrow`` over Arrow batches.
 
 State tracked (mirrors the reference's mutable fields):
   - graphics stack for q/Q: CTM, colors, line width, text state

@@ -34,6 +34,7 @@ from pyspark.sql.window import Window
 from . import memtune
 from .extract import DEFAULT_CONFIG, ExtractConfig
 from .fonts import FontTable
+from .pipeline import extract_salted, with_part_id
 from .schema import IN_SPAN_STRUCT, SPAN_FLAT_SCHEMA
 
 # chars that open a region the tokenizer treats as non-operator content
@@ -327,10 +328,8 @@ def extract_groups(groups: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG,
         columns = list(dict.fromkeys(["doc_id", "order", *columns]))
     out_fields = (SPAN_FLAT_SCHEMA.fields if columns is None else
                   [f for f in SPAN_FLAT_SCHEMA.fields if f.name in columns])
-    salted = groups.withColumn(
-        "part_id",
-        F.pmod(F.xxhash64(F.col("doc_id")), F.lit(p)).cast("int"),
-    ).repartition(p, F.xxhash64("doc_id", "grp"))
+    salted = with_part_id(groups, p).repartition(
+        p, F.xxhash64("doc_id", "grp"))
 
     out_schema = T.StructType(
         out_fields + [T.StructField("grp", T.IntegerType())])
@@ -438,11 +437,5 @@ def extract_spans_paged(docs: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG,
     if small is None:
         return big_spans
 
-    from .extract import make_extract_arrow
-    small_salted = (small.withColumn(
-        "part_id",
-        F.pmod(F.xxhash64(F.col("doc_id")), F.lit(p)).cast("int"))
-        .repartition(p, F.xxhash64("doc_id")))
-    small_spans = small_salted.mapInArrow(
-        make_extract_arrow(cfg), SPAN_FLAT_SCHEMA)
+    small_spans = extract_salted(with_part_id(small, p), cfg, p)
     return small_spans.unionByName(big_spans)

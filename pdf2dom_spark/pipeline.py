@@ -4,10 +4,12 @@ Scale design (the 10^12-doc / 1000-executor story, tested at local[32]):
 
 - **One shuffle, total.** The only exchange in the whole job is the salted
   ``repartition(P, xxhash64(doc_id))`` that defuses skew from giant
-  multi-page documents (BASELINE.json north_star). Extraction itself is a
-  narrow ``mapInArrow``/``mapInPandas``; the lineage aggregate is a
-  partial-agg over the already-partitioned output, so AQE coalesces it
-  cheaply. (Monster documents optionally fan out per page-group first —
+  multi-page documents (BASELINE.json north_star). Extraction itself is
+  one narrow ``mapInArrow`` kernel behind one function
+  (``extract_salted``), and the nested ``style`` struct is a JVM
+  projection over its flat output; the lineage aggregate is a partial-agg
+  over the already-partitioned output, so AQE coalesces it cheaply.
+  (Monster documents optionally fan out per page-group first —
   pagesplit.py.)
 - **Deterministic partitioning.** ``part_id`` is a *column*
   (``pmod(xxhash64(doc_id), P)``), not the runtime partition index, so
@@ -36,8 +38,8 @@ from datetime import datetime
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
-from .extract import DEFAULT_CONFIG, ExtractConfig, make_extract_batch
-from .schema import LINEAGE_SCHEMA, SPAN_FLAT_SCHEMA, SPAN_SCHEMA
+from .extract import DEFAULT_CONFIG, ExtractConfig, make_extract_arrow
+from .schema import LINEAGE_SCHEMA, SPAN_FLAT_SCHEMA, STYLE_FIELDS
 
 
 def with_part_id(docs: DataFrame, num_partitions: int) -> DataFrame:
@@ -47,36 +49,39 @@ def with_part_id(docs: DataFrame, num_partitions: int) -> DataFrame:
     )
 
 
+def extract_salted(salted: DataFrame, cfg: ExtractConfig,
+                   num_partitions: int) -> DataFrame:
+    """The one salted extraction: ``salted`` already carries the
+    ``part_id`` column (``with_part_id``); shuffle it into
+    ``num_partitions`` tasks on the raw 64-bit hash, then run the flat
+    ``mapInArrow`` kernel.
+
+    The shuffle key is the raw hash, not the p-valued part_id: hashing
+    only p distinct values into p partitions leaves ~37% of tasks empty
+    and piles 2-3 part_ids onto others (Poisson occupancy). The raw hash
+    balances by law of large numbers; part_id stays a deterministic
+    *column* for lineage/resume either way."""
+    return (salted.repartition(num_partitions, F.xxhash64(F.col("doc_id")))
+            .mapInArrow(make_extract_arrow(cfg), SPAN_FLAT_SCHEMA))
+
+
 def extract_spans(docs: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG,
                   num_partitions: int | None = None,
-                  nested: bool = True,
-                  presalted: bool = False) -> DataFrame:
+                  nested: bool = True) -> DataFrame:
     """documents -> ordered spans. The salted repartition is the only
     shuffle; extraction is narrow from there on.
 
-    ``presalted=True``: the input is already hash-balanced on doc_id (e.g.
-    the corpus builder repartitioned before synthesis) — extraction is
-    per-document independent, so no second shuffle is needed; ``part_id``
-    stays the deterministic column either way. This shuffles the small
-    (doc_id, payload) rows once instead of re-shuffling them post-synthesis.
-    """
+    ``nested=True`` gives SPAN_SCHEMA: the flat kernel output with the
+    ``style_*`` columns folded into the ``style`` struct by a JVM-side
+    projection (nothing nested crosses Arrow)."""
     spark = docs.sparkSession
     p = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    salted = with_part_id(docs, p)
-    if not presalted:
-        # Shuffle on the raw 64-bit hash, not the p-valued part_id: hashing
-        # only p distinct values into p partitions leaves ~37% of tasks empty
-        # and piles 2-3 part_ids onto others (Poisson occupancy). The raw
-        # hash balances by law of large numbers; part_id stays a
-        # deterministic *column* for lineage/resume either way.
-        salted = salted.repartition(p, F.xxhash64(F.col("doc_id")))
-    if nested:
-        return salted.mapInPandas(make_extract_batch(cfg, nested=True),
-                                  SPAN_SCHEMA)
-    # flat path goes through mapInArrow: pyarrow batches in/out skip pandas
-    # block consolidation on the (large) output side
-    from .extract import make_extract_arrow
-    return salted.mapInArrow(make_extract_arrow(cfg), SPAN_FLAT_SCHEMA)
+    flat = extract_salted(with_part_id(docs, p), cfg, p)
+    if not nested:
+        return flat
+    style = F.struct(*[F.col(f"style_{f}").alias(f) for f in STYLE_FIELDS])
+    return flat.select("doc_id", "order", "kind", "text", "media_ref",
+                       style.alias("style"), "page_no", "part_id")
 
 
 def lineage(spans: DataFrame) -> DataFrame:
@@ -262,13 +267,7 @@ def run_checkpointed(
             pending.drop("part_id"), cfg, num_partitions,
             pages_per_group=pages_per_group, min_bytes=split_min_bytes)
     else:
-        # shuffle on the raw 64-bit hash (pmod into num_partitions values
-        # leaves ~1/e of the extraction tasks empty — same Poisson-occupancy
-        # fix as extract_spans above); part_id stays the deterministic COLUMN
-        pending = pending.repartition(num_partitions, F.xxhash64("doc_id"))
-        from .extract import make_extract_arrow
-        spans = pending.mapInArrow(make_extract_arrow(cfg),
-                                   SPAN_FLAT_SCHEMA)
+        spans = extract_salted(pending, cfg, num_partitions)
 
     tables.write_partitioned(spans, spans_dir, "part_id", spark)
 
@@ -372,10 +371,7 @@ def upsert_docs(
         return {"run_id": run_id, "parts_touched": 0, "docs_updated": 0}
     updated_ids = salted.select("doc_id").distinct()
 
-    from .extract import make_extract_arrow
-    fresh = (salted.repartition(
-        min(num_partitions, len(affected)), F.xxhash64("doc_id"))
-        .mapInArrow(make_extract_arrow(cfg), SPAN_FLAT_SCHEMA))
+    fresh = extract_salted(salted, cfg, min(num_partitions, len(affected)))
     existing = tables.read_partitions(spark, spans_dir, SPAN_FLAT_SCHEMA,
                                       "part_id", affected)
     kept = existing.join(F.broadcast(updated_ids), "doc_id", "left_anti")

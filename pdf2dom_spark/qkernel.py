@@ -13,7 +13,7 @@ from pyspark.sql.window import Window
 from . import memtune
 from .extract import ExtractConfig
 from .qshared import (ORACLE_COLS, RICH_LITE_COLS, _doc_ids,
-                      _extract_flat, make_reg)
+                      _extract_flat, _synth_spans, make_reg)
 from .schema import SPAN_FLAT_SCHEMA
 
 REGISTRY: dict = {}
@@ -1025,38 +1025,25 @@ SELECT CAST(doc_id AS BIGINT) AS doc_id,
 FROM documents
 """)
 def cos_coercion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
+    def spans_for(i):
+        c1 = 65 + i % 26
+        c2 = 66 + i % 25
+        c3 = 67 + i % 24
+        lit = (chr(c1) + "\\" + format(c2, "03o")
+               + "\\(" + "\\)" + "\\\\")
+        frag = ("612 792 0 PG BT /Mono 10 Tf 1 0 0 1 72 700 Tm "
+                f"({lit}) Tj <41{c3:02x}ff> Tj ET")
+        return [{"kind": "text", "text": frag, "media_ref": None,
+                 "offset": 0}]
 
-    from .extract import docs_frame_to_spans
-
-    src = _doc_ids(spark, sf_dir)
-
-    def kernel(batches):
-        memtune.tune_worker()
-        for pdf in batches:
-            rows = {"doc_id": [], "spans": []}
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                c1 = 65 + i % 26
-                c2 = 66 + i % 25
-                c3 = 67 + i % 24
-                lit = (chr(c1) + "\\" + format(c2, "03o")
-                       + "\\(" + "\\)" + "\\\\")
-                frag = ("612 792 0 PG BT /Mono 10 Tf 1 0 0 1 72 700 Tm "
-                        f"({lit}) Tj <41{c3:02x}ff> Tj ET")
-                rows["doc_id"].append(str(i))
-                rows["spans"].append([{"kind": "text", "text": frag,
-                                       "media_ref": None, "offset": 0}])
-            yield docs_frame_to_spans(pd.DataFrame(rows), ExtractConfig())
-
-    flat = src.mapInPandas(kernel, SPAN_FLAT_SCHEMA)
+    flat = _synth_spans(spark, sf_dir, spans_for)
     return flat.where(F.col("kind") == "text").select(
         F.col("doc_id").cast("long").alias("doc_id"), "text")
 
 
 # 1e-embed. S7 embed resource handler under the cross-engine gate
-# (previously pytest-only): the kernel runs with image_handler="embed",
-# which must pass the image XObject's media_ref through UNCHANGED
+# (previously pytest-only): the kernel runs with image_handler="embed"
+# (the ExtractConfig default), which must pass the image XObject's media_ref through UNCHANGED
 # (EmbedAsBase64Handler keeps the payload inline,
 # PDFDomTree.java:431-434); the data-URI is then assembled JVM-side from
 # deterministic per-ref bytes — concat + base64(unhex(md5(ref))) — so the
@@ -1070,29 +1057,15 @@ SELECT CAST(doc_id AS BIGINT) AS doc_id,
 FROM documents
 """)
 def resource_embed_datauri(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
+    def spans_for(i):
+        return [
+            {"kind": "text", "text": "612 792 0 PG",
+             "media_ref": None, "offset": 0},
+            {"kind": "image", "text": f"64 48 Im{i % 7}",
+             "media_ref": f"media:{i}", "offset": 1},
+        ]
 
-    from .extract import docs_frame_to_spans
-
-    src = _doc_ids(spark, sf_dir)
-
-    def kernel(batches):
-        memtune.tune_worker()
-        for pdf in batches:
-            rows = {"doc_id": [], "spans": []}
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                rows["doc_id"].append(str(i))
-                rows["spans"].append([
-                    {"kind": "text", "text": "612 792 0 PG",
-                     "media_ref": None, "offset": 0},
-                    {"kind": "image", "text": f"64 48 Im{i % 7}",
-                     "media_ref": f"media:{i}", "offset": 1},
-                ])
-            yield docs_frame_to_spans(
-                pd.DataFrame(rows), ExtractConfig(image_handler="embed"))
-
-    flat = src.mapInPandas(kernel, SPAN_FLAT_SCHEMA)
+    flat = _synth_spans(spark, sf_dir, spans_for)
     return (flat.where(F.col("kind") == "image")
             .select(F.col("doc_id").cast("long").alias("doc_id"),
                     F.concat(F.lit("data:image/png;base64,"),
@@ -1118,29 +1091,16 @@ FROM documents d
 CROSS JOIN (SELECT unnest([0, 1, 2]) AS ord) o
 """)
 def dup_overlap_stream_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
+    def spans_for(i):
+        c = chr(65 + i % 26)
+        frag = ("612 792 0 PG BT /Mono 10 Tf "
+                f"1 0 0 1 72 700 Tm (B{c}) Tj "
+                f"1 0 0 1 72 750 Tm (A{c}) Tj "
+                f"1 0 0 1 72 700 Tm (B{c}) Tj ET")
+        return [{"kind": "text", "text": frag, "media_ref": None,
+                 "offset": 0}]
 
-    from .extract import docs_frame_to_spans
-
-    src = _doc_ids(spark, sf_dir)
-
-    def kernel(batches):
-        memtune.tune_worker()
-        for pdf in batches:
-            rows = {"doc_id": [], "spans": []}
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                c = chr(65 + i % 26)
-                frag = ("612 792 0 PG BT /Mono 10 Tf "
-                        f"1 0 0 1 72 700 Tm (B{c}) Tj "
-                        f"1 0 0 1 72 750 Tm (A{c}) Tj "
-                        f"1 0 0 1 72 700 Tm (B{c}) Tj ET")
-                rows["doc_id"].append(str(i))
-                rows["spans"].append([{"kind": "text", "text": frag,
-                                       "media_ref": None, "offset": 0}])
-            yield docs_frame_to_spans(pd.DataFrame(rows), ExtractConfig())
-
-    flat = src.mapInPandas(kernel, SPAN_FLAT_SCHEMA)
+    flat = _synth_spans(spark, sf_dir, spans_for)
     w = Window.partitionBy("doc_id").orderBy("order")
     return (flat.where(F.col("kind") == "text")
             .select(F.col("doc_id").cast("long").alias("doc_id"),
@@ -1176,49 +1136,53 @@ SELECT doc_id, CAST(a AS INT) AS w, CAST(b AS INT) AS h,
 FROM rows GROUP BY doc_id, a, b
 """)
 def raster_fill_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
-    from .extract import docs_frame_to_spans
+    import pyarrow as pa
+    import pyspark.sql.types as T
 
     src = _doc_ids(spark, sf_dir)
-
-    def kernel(batches):
-        memtune.tune_worker()
-        import base64
-
-        from .raster import decode_png_rgba
-
-        for pdf in batches:
-            rows = {"doc_id": [], "spans": []}
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                a, b = 20 + i % 13, 10 + i % 7
-                frag = (f"612 792 0 PG 72 700 m {72 + a} 700 l "
-                        f"72 {700 - b} l h f")
-                rows["doc_id"].append(str(i))
-                rows["spans"].append([{"kind": "text", "text": frag,
-                                       "media_ref": None, "offset": 0}])
-            flat = docs_frame_to_spans(
-                pd.DataFrame(rows), ExtractConfig(raster_paths=True))
-            img = flat[flat["kind"] == "image"]
-            out = {"doc_id": [], "w": [], "h": [], "filled_px": []}
-            for _, rec in img.iterrows():
-                png = base64.b64decode(rec["media_ref"].split(",", 1)[1])
-                arr = decode_png_rgba(png)
-                out["doc_id"].append(int(rec["doc_id"]))
-                out["w"].append(int(rec["style_width"]))
-                out["h"].append(int(rec["style_height"]))
-                out["filled_px"].append(int((arr[:, :, 3] == 255).sum()))
-            yield pd.DataFrame(out)
-
-    import pyspark.sql.types as T
+    cfg = ExtractConfig(raster_paths=True)
     schema = T.StructType([
         T.StructField("doc_id", T.LongType()),
         T.StructField("w", T.IntegerType()),
         T.StructField("h", T.IntegerType()),
         T.StructField("filled_px", T.LongType()),
     ])
-    return src.mapInPandas(kernel, schema)
+    arrow_schema = pa.schema([("doc_id", pa.int64()), ("w", pa.int32()),
+                              ("h", pa.int32()), ("filled_px", pa.int64())])
+
+    def kernel(batches):
+        memtune.tune_worker()
+        import base64
+
+        from .extract import docs_to_arrow_spans
+        from .raster import decode_png_rgba
+
+        for batch in batches:
+            ids, spans = [], []
+            for doc_id in batch.column(0).to_pylist():
+                i = int(doc_id)
+                a, b = 20 + i % 13, 10 + i % 7
+                frag = (f"612 792 0 PG 72 700 m {72 + a} 700 l "
+                        f"72 {700 - b} l h f")
+                ids.append(str(i))
+                spans.append([{"kind": "text", "text": frag,
+                               "media_ref": None, "offset": 0}])
+            flat = docs_to_arrow_spans(ids, spans, None, cfg).to_pydict()
+            out = {"doc_id": [], "w": [], "h": [], "filled_px": []}
+            for did, kind, ref, w, h in zip(
+                    flat["doc_id"], flat["kind"], flat["media_ref"],
+                    flat["style_width"], flat["style_height"]):
+                if kind != "image":
+                    continue
+                png = base64.b64decode(ref.split(",", 1)[1])
+                arr = decode_png_rgba(png)
+                out["doc_id"].append(int(did))
+                out["w"].append(int(w))
+                out["h"].append(int(h))
+                out["filled_px"].append(int((arr[:, :, 3] == 255).sum()))
+            yield pa.RecordBatch.from_pydict(out, schema=arrow_schema)
+
+    return src.mapInArrow(kernel, schema)
 
 
 # 1f. font family parse (F1; FontTable.java:31,105-118)

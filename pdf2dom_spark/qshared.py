@@ -95,6 +95,23 @@ def _doc_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_id").repartition(p, F.xxhash64("doc_id")))
 
 
+def _synth_spans(spark: SparkSession, sf_dir: str, spans_for) -> DataFrame:
+    """Flat spans of a synthesized-per-id corpus: ``spans_for(i)`` builds
+    doc ``i``'s input span list inside the worker, and the same
+    ``mapInArrow`` call extracts it with the default config (null
+    ``part_id``) — the shared kernel of the synthesize-and-extract gates
+    over ``_doc_ids``."""
+    from .extract import DEFAULT_CONFIG, docs_to_arrow_spans
+
+    def kernel(batches):
+        memtune.tune_worker()
+        for b in batches:
+            ids = [int(d) for d in b.column(0).to_pylist()]
+            yield docs_to_arrow_spans([str(i) for i in ids],
+                                      [spans_for(i) for i in ids], None,
+                                      DEFAULT_CONFIG)
+
+    return _doc_ids(spark, sf_dir).mapInArrow(kernel, SPAN_FLAT_SCHEMA)
 
 
 def make_reg(registry: dict, oracles: dict):

@@ -9,10 +9,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from . import memtune
-from .extract import ExtractConfig
-from .qshared import _doc_ids, _extract_flat, make_reg
-from .schema import SPAN_FLAT_SCHEMA
+from .qshared import _extract_flat, _synth_spans, make_reg
 
 REGISTRY: dict = {}
 ORACLES: dict[str, str] = {}
@@ -247,33 +244,20 @@ SELECT doc_id,
 FROM m
 """)
 def line_width_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
+    def spans_for(i):
+        a = 1.0 + (i % 5) * 0.5
+        d = 1.0 + (i % 3) * 0.25
+        s = 0.5 + (i % 4)
+        x1 = 100 + (i % 7) * 10
+        sel = i % 3
+        x2 = 300 if sel < 2 else x1
+        y2 = 100 if sel == 0 else 180
+        frag = (f"612 792 0 PG q {a:g} 0 0 {d:g} 0 0 cm {s:g} w "
+                f"0 0 0.9 RG {x1:g} 100 m {x2:g} {y2:g} l S Q")
+        return [{"kind": "text", "text": frag, "media_ref": None,
+                 "offset": 0}]
 
-    from .extract import docs_frame_to_spans
-
-    src = _doc_ids(spark, sf_dir)
-
-    def kernel(batches):
-        memtune.tune_worker()
-        for pdf in batches:
-            rows = {"doc_id": [], "spans": []}
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                a = 1.0 + (i % 5) * 0.5
-                d = 1.0 + (i % 3) * 0.25
-                s = 0.5 + (i % 4)
-                x1 = 100 + (i % 7) * 10
-                sel = i % 3
-                x2 = 300 if sel < 2 else x1
-                y2 = 100 if sel == 0 else 180
-                frag = (f"612 792 0 PG q {a:g} 0 0 {d:g} 0 0 cm {s:g} w "
-                        f"0 0 0.9 RG {x1:g} 100 m {x2:g} {y2:g} l S Q")
-                rows["doc_id"].append(str(i))
-                rows["spans"].append([{"kind": "text", "text": frag,
-                                       "media_ref": None, "offset": 0}])
-            yield docs_frame_to_spans(pd.DataFrame(rows), ExtractConfig())
-
-    flat = src.mapInPandas(kernel, SPAN_FLAT_SCHEMA)
+    flat = _synth_spans(spark, sf_dir, spans_for)
     return (flat.where(F.col("kind") == "line").select(
         F.col("doc_id").cast("long").alias("doc_id"),
         F.round(F.col("style_left").cast("double"), 2).alias("left_pt"),

@@ -17,8 +17,10 @@ both modes:
     parquet or from a directory of real .pdf files.
 
 Scale notes: the streaming extraction keeps the salting property by
-``repartition(P, xxhash64(doc_id))`` inside each micro-batch; no state
-store is needed (extraction is per-document independent)."""
+running the batch path's ``pipeline.extract_salted`` (the
+``repartition(P, xxhash64(doc_id))`` shuffle + kernel) inside each
+micro-batch; no state store is needed (extraction is per-document
+independent)."""
 
 from __future__ import annotations
 
@@ -45,14 +47,10 @@ def extract_spans_stream(spark: SparkSession, docs_dir: str,
               .option("maxFilesPerTrigger", 4)
               .parquet(docs_dir))
     # deterministic part_id column (lineage invariant — without it the
-    # kernel falls back to the unstable TaskContext partition index), then
-    # the raw-hash shuffle (not pmod into num_partitions values — that
-    # leaves ~1/e of tasks empty); mirrors pipeline.extract_spans
-    from .pipeline import with_part_id
-    salted = with_part_id(stream, num_partitions).repartition(
-        num_partitions, F.xxhash64("doc_id"))
-    from .extract import make_extract_arrow
-    spans = salted.mapInArrow(make_extract_arrow(cfg), SPAN_FLAT_SCHEMA)
+    # kernel falls back to the unstable TaskContext partition index)
+    from .pipeline import extract_salted, with_part_id
+    spans = extract_salted(with_part_id(stream, num_partitions), cfg,
+                           num_partitions)
     return (spans.writeStream
             .format("parquet")
             .option("path", out_dir)
@@ -83,7 +81,7 @@ def _lineage_batch_writer(spark: SparkSession, out_dir: str,
     checkpoint commit -> replay sees lineage and skips. Either way the
     final table is identical."""
     from . import tables
-    from .pipeline import lineage, with_part_id
+    from .pipeline import extract_salted, lineage, with_part_id
 
     spans_dir = f"{out_dir}/spans"
     lineage_dir = f"{out_dir}/lineage"
@@ -105,12 +103,9 @@ def _lineage_batch_writer(spark: SparkSession, out_dir: str,
                     "dir)")
             if lin_tbl.where(F.col("batch_id") == bid).limit(1).count():
                 return
-        salted = with_part_id(batch_df, num_partitions).repartition(
-            num_partitions, F.xxhash64("doc_id"))
-        from .extract import make_extract_arrow
-        spans = (salted.mapInArrow(make_extract_arrow(cfg),
-                                   SPAN_FLAT_SCHEMA)
-                 .withColumn("batch_id", F.lit(bid)))
+        spans = extract_salted(with_part_id(batch_df, num_partitions), cfg,
+                               num_partitions)
+        spans = spans.withColumn("batch_id", F.lit(bid))
         tables.write_partitioned(spans, spans_dir, ["batch_id", "part_id"],
                                  spark)
         # lineage from the read-back pruned to THIS batch's partitions

@@ -4,22 +4,23 @@ The finalize (extract.finalize_docs) and the text-box chunker
 (textpipe.boxes_from_glyphs_batched) run once per Arrow batch over ALL
 documents; correctness rests on every lagged comparison carrying a
 same-document guard. These tests pin: for ANY multi-document batch,
-``docs_frame_to_spans`` over the batch equals the concatenation of
-per-document ``extract_doc`` results — including the boundary cases a
-batched implementation can get wrong (diacritic pending at a document
-boundary, equal page numbers across a boundary, equal emission keys,
-empty / whitespace-only / glyphless documents).
+``docs_to_arrow_spans`` (the batch core of the production mapInArrow
+kernel) over the batch equals the concatenation of per-document
+``extract_doc`` results — including the boundary cases a batched
+implementation can get wrong (diacritic pending at a document boundary,
+equal page numbers across a boundary, equal emission keys, empty /
+whitespace-only / glyphless documents).
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pytest
 
 from pdf2dom_spark import corpus
 from pdf2dom_spark.corpus import fixture_docs
-from pdf2dom_spark.extract import ExtractConfig, docs_frame_to_spans, extract_doc
+from pdf2dom_spark.extract import (ExtractConfig, docs_to_arrow_spans,
+                                   extract_doc)
 
 FX = fixture_docs()
 
@@ -32,26 +33,11 @@ def _single_rows(doc_ids, spans_by_doc, cfg):
 
 
 def _batch_rows(doc_ids, spans_by_doc, cfg):
-    pdf = pd.DataFrame({
-        "doc_id": doc_ids,
-        "spans": [spans_by_doc[d] for d in doc_ids],
-    })
-    flat = docs_frame_to_spans(pdf, cfg)
-    out = []
-    for rec in flat.to_dict("records"):
-        row = {}
-        for k, v in rec.items():
-            if k == "part_id":
-                continue
-            if isinstance(v, (np.floating, np.integer)):
-                v = v.item()
-            if isinstance(v, float) and np.isnan(v):
-                v = None
-            if v is pd.NA:
-                v = None
-            row[k] = v
-        out.append(row)
-    return out
+    rows = docs_to_arrow_spans(
+        doc_ids, [spans_by_doc[d] for d in doc_ids], None, cfg).to_pylist()
+    for row in rows:
+        del row["part_id"]
+    return rows
 
 
 def _assert_batch_equals_single(doc_ids, spans_by_doc, cfg=None):

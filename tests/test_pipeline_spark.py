@@ -21,12 +21,21 @@ def docs(spark):
 
 
 def test_nested_schema_and_rows(spark, docs):
+    from pdf2dom_spark.schema import STYLE_FIELDS
+
     spans = extract_spans(docs, num_partitions=8)
     assert spans.schema["style"].dataType.typeName() == "struct"
     sample = spans.where(F.col("kind") == "text").first()
     assert sample["style"]["font_size"] is not None
     kinds = {r["kind"] for r in spans.select("kind").distinct().collect()}
     assert {"page", "text", "rect", "line", "image", "font"} <= kinds
+    # nested == flat with style assembled from the style_* columns
+    flat = extract_spans(docs, num_partitions=8, nested=False)
+    style = F.struct(*[F.col(f"style_{f}").alias(f) for f in STYLE_FIELDS])
+    assembled = flat.select("doc_id", "order", "kind", "text", "media_ref",
+                            style.alias("style"), "page_no", "part_id")
+    assert spans.exceptAll(assembled).count() == 0
+    assert assembled.exceptAll(spans).count() == 0
 
 
 def test_kernel_tunes_its_python_worker(spark, docs):

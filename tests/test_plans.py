@@ -6,6 +6,7 @@ and scalar pipelines must stay inside WholeStageCodegen."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
@@ -50,14 +51,20 @@ def test_broadcast_join_used_for_dim(spark):
     assert "BroadcastHashJoin" in _plan(q)
 
 
-def test_extraction_has_single_exchange(spark):
-    """The extraction job's only shuffle is the salting repartition."""
+@pytest.mark.parametrize("nested", [False, True])
+def test_extraction_has_single_exchange(spark, nested):
+    """The extraction job's only shuffle is the salting repartition, and
+    both span shapes run the one mapInArrow kernel (the nested ``style``
+    struct is a JVM projection, never a mapInPandas)."""
     from pdf2dom_spark.corpus import build_docs_df
     from pdf2dom_spark.pipeline import extract_spans
-    docs = build_docs_df(spark, SF_SMOKE, mode="oracle")
-    spans = extract_spans(docs, num_partitions=8, nested=False)
+    # checkpointed: the corpus synthesizer is itself a mapInPandas, and
+    # the plan under test is extraction's alone
+    docs = build_docs_df(spark, SF_SMOKE, mode="oracle").localCheckpoint()
+    spans = extract_spans(docs, num_partitions=8, nested=nested)
     plan = _plan(spans)
     assert plan.count("Exchange") == 1, plan
+    assert "MapInArrow" in plan and "MapInPandas" not in plan, plan
 
 
 def test_scalar_query_stays_in_codegen(spark):
