@@ -7,8 +7,8 @@
   ``mapInArrow`` kernel's output with ``style_*`` folded into a
   ``style`` struct by a JVM-side projection).
 - ``queries()`` / ``oracle_sql()`` — the extraction gates (qkernel +
-  qunits), then the relational (qrel) and text (textops) queries, in
-  registry order; oracles run on DuckDB against the same parquet tables.
+  qunits), then the text (textops) queries, in registry order; oracles
+  run on DuckDB against the same parquet tables.
 """
 
 from __future__ import annotations

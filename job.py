@@ -65,11 +65,6 @@ def parse_args(argv):
                         "path (monster-doc skew defense; off by default)")
     p.add_argument("--pages-per-group", type=int, default=8,
                    help="pages per fan-out group on the split path")
-    p.add_argument("--stream", action="store_true",
-                   help="ingest --input (a DOC_SCHEMA parquet dir) as an "
-                        "availableNow stream through the foreachBatch "
-                        "lineage sink (checkpoint under <output>/ckpt); "
-                        "replay-safe, same table contract as batch")
     p.add_argument("--upsert", action="store_true",
                    help="treat the input docs as changed/new versions: "
                         "re-extract only them and replace their spans in "
@@ -85,8 +80,10 @@ def main(argv=None):
     args = parse_args(argv or sys.argv[1:])
     from pyspark.sql import SparkSession
 
+    from pdf2dom_spark import tables
     from pdf2dom_spark.extract import ExtractConfig
-    from pdf2dom_spark.pipeline import run_checkpointed
+    from pdf2dom_spark.pipeline import (compact_spans, run_checkpointed,
+                                        table_targets, upsert_docs)
 
     # malloc tuning before the JVM forks (workers inherit the env); on a
     # real cluster executors are separate JVMs, so also ship it via
@@ -134,63 +131,20 @@ def main(argv=None):
         docs = build_docs_df(spark, args.synth, mode="rich", num_partitions=p)
     else:
         # Iceberg table identifier or parquet dir (pdf2dom_spark.tables)
-        from pdf2dom_spark import tables
         docs = tables.read_table(spark, args.input)
 
-    if args.stream:
-        if not args.input and not args.input_pdfs:
-            raise SystemExit("error: --stream requires --input (a "
-                             "DOC_SCHEMA parquet dir) or --input-pdfs "
-                             "(a directory of .pdf files) to watch")
-        # refuse an output whose lineage was written by a batch run: the
-        # streaming sink keys idempotence on batch_id, which batch lineage
-        # lacks — mixing the two schemas corrupts resume for both modes
-        from pdf2dom_spark import tables
-        lineage_target = f"{args.output}/lineage"
-        if (tables.table_exists(spark, lineage_target) and "batch_id"
-                not in tables.read_table(spark, lineage_target).columns):
-            raise SystemExit(
-                f"error: {args.output}/lineage exists without a batch_id "
-                "column (batch-mode output); point --stream at a fresh "
-                "output dir")
-        if args.input_pdfs:
-            from pdf2dom_spark.streaming import extract_pdf_stream_lineage
-            q = extract_pdf_stream_lineage(
-                spark, args.input_pdfs, args.output,
-                f"{args.output}/ckpt", cfg=cfg, num_partitions=p,
-                password=args.pdf_password.encode("utf-8"))
-        else:
-            from pdf2dom_spark.streaming import extract_spans_stream_lineage
-            q = extract_spans_stream_lineage(
-                spark, args.input, args.output, f"{args.output}/ckpt",
-                cfg=cfg, num_partitions=p)
-        q.awaitTermination()
-        lin = spark.read.parquet(f"{args.output}/lineage")
-        from pyspark.sql import functions as SF
-        agg = lin.agg(SF.sum("span_count").alias("total"),
-                      SF.countDistinct("batch_id").alias("batches")).first()
-        print({"total_span_count": int(agg["total"] or 0),
-               "batches": int(agg["batches"])})
-        if not pre_existing:
-            spark.stop()
-        return 0
-
     if args.upsert:
-        from pdf2dom_spark.pipeline import upsert_docs
         print(upsert_docs(spark, docs, args.output, cfg=cfg,
                           run_id=args.run_id))
         if not pre_existing:
             spark.stop()
         return 0
 
+    spans_target, lineage_target = table_targets(args.output)
     if not args.resume:
         # fresh-run semantics: run_checkpointed always skips partitions with
         # existing lineage, so silently reusing a previous output dir would
         # skip work instead of recomputing — refuse loudly.
-        from pdf2dom_spark import tables
-        lineage_target = (f"{args.output}_lineage"
-                          if tables.is_table_identifier(args.output)
-                          else f"{args.output}/lineage")
         if tables.table_exists(spark, lineage_target):
             raise SystemExit(
                 f"error: {lineage_target} already exists; pass --resume "
@@ -202,16 +156,11 @@ def main(argv=None):
     print(stats)
 
     if args.compact:
-        from pdf2dom_spark import tables
-        from pdf2dom_spark.pipeline import compact_spans
-        spans_target = (f"{args.output}_spans"
-                        if tables.is_table_identifier(args.output)
-                        else f"{args.output}/spans")
         compact_spans(spark, spans_target)
 
     if args.render_html:
         from pdf2dom_spark.render_html import render_html_df
-        spans = spark.read.parquet(f"{args.output}/spans")
+        spans = tables.read_table(spark, spans_target)
         render_html_df(spans).write.mode("overwrite").parquet(
             f"{args.output}/html")
 

@@ -12,7 +12,7 @@ Architecture (Spark-first, not a port):
 - The input is a DataFrame of interleaved text+media documents
   ``(doc_id, spans: array<struct<kind,text,media_ref,offset>>)``.
 - Extraction runs as one ``mapInArrow`` over Arrow batches on every path
-  (``extract_spans``, ``run_checkpointed``, ``job.py``, streaming,
+  (``extract_spans``, ``run_checkpointed``, ``upsert_docs``, ``job.py``,
   pagesplit), all through ``pipeline.extract_salted`` except pagesplit's
   page-group kernel; inside the kernel everything is columnar numpy (no
   per-row Python at the Spark level). The nested-style
@@ -41,15 +41,14 @@ Modules:
   pipeline   — Spark-level wiring: salting, mapInArrow, lineage, resume
   pagesplit  — giant-document page-group fan-out (skew layer 3)
   tables     — Iceberg-or-parquet table IO routing
-  streaming  — the same kernel over readStream, incl. a lineage sink
   memtune    — once-per-worker tuning every kernel calls first: glibc
                malloc thresholds, no per-task zip-importer re-reads,
                import-time heap frozen out of the per-task gc
   render_html— optional HTML sink (reference-exact CSS serialization)
   queries    — driver-facing queries() / oracle_sql() registry: the
-               extraction gates of qkernel + qunits, then qrel
-               (relational/event queries) and textops (training-data ops:
-               dedup + banded MinHash LSH, lang-id, ...); helpers in qshared
+               extraction gates of qkernel + qunits, then textops
+               (training-data ops: dedup + banded MinHash LSH, lang-id,
+               ...); helpers in qshared
 """
 
 __version__ = "0.1.0"

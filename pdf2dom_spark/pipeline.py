@@ -133,7 +133,7 @@ def _recover_lineage_swap(lineage_dir: str) -> None:
         os.rename(old, lineage_dir)
 
 
-def _table_targets(out_dir: str) -> tuple[str, str]:
+def table_targets(out_dir: str) -> tuple[str, str]:
     """(spans, lineage) targets of an output: ``<out>_spans`` /
     ``<out>_lineage`` tables in an Iceberg catalog namespace, or the
     ``spans/`` and ``lineage/`` dirs of a parquet output."""
@@ -231,7 +231,7 @@ def run_checkpointed(
     from . import tables
 
     run_id = run_id or uuid.uuid4().hex[:12]
-    spans_dir, lineage_dir = _table_targets(out_dir)
+    spans_dir, lineage_dir = table_targets(out_dir)
     prior = _prior_lineage(spark, lineage_dir)
     columns, prior_rows = prior if prior is not None else ([], [])
 
@@ -343,7 +343,7 @@ def upsert_docs(
     from . import tables
 
     run_id = run_id or uuid.uuid4().hex[:12]
-    spans_dir, lineage_dir = _table_targets(out_dir)
+    spans_dir, lineage_dir = table_targets(out_dir)
     prior = _prior_lineage(spark, lineage_dir)
     if prior is None:
         raise ValueError(
@@ -353,8 +353,7 @@ def upsert_docs(
     if "num_partitions" not in columns:
         raise ValueError(
             f"{lineage_dir} has no num_partitions column — this output was "
-            "not created by a batch run_checkpointed run (streaming-sink "
-            "lineage carries batch_id instead) and does not support upsert")
+            "not created by run_checkpointed and does not support upsert")
     num_partitions = _pinned_modulus(columns, prior_rows)
     if num_partitions is None:
         raise ValueError(

@@ -1,8 +1,8 @@
 """Shared scaffolding for the driver-gate query modules.
 
-The query registry is split by domain (qkernel / qunits / qrel /
-textops, merged in queries.py); these helpers are the pieces more than
-one domain uses.
+The query registry is split by domain (qkernel / qunits / textops,
+merged in queries.py); these helpers are the pieces the extraction-gate
+modules (qkernel, qunits) share.
 """
 
 from __future__ import annotations

@@ -1,7 +1,7 @@
-"""Unit-level parity gates: font classification, line/page transforms,
-CSS/HTML renderer serialization, rich-corpus structure, and the composed
-end-to-end corpus pipeline gate. Split out of queries.py (VERDICT r4
-#9)."""
+"""Unit-level parity gates: font classification and used-name de-dup,
+line/page transforms, rect recognition, CSS/HTML renderer serialization,
+rich-corpus structure, the lineage aggregate shape, and the composed
+end-to-end corpus pipeline gate."""
 
 from __future__ import annotations
 
@@ -545,6 +545,96 @@ def render_doc_skeleton(spark: SparkSession, sf_dir: str) -> DataFrame:
         occ("@font-face").alias("n_font_faces"))
 
 
+# row_number de-dup naming (F1 usedName analog; FontTable.java:77-88)
+@_reg("window_rownum_dedup", """
+WITH r AS (
+  SELECT p_brand, CAST(p_partkey AS BIGINT) AS p_partkey,
+         ROW_NUMBER() OVER (PARTITION BY p_brand ORDER BY p_partkey) AS rn
+  FROM part
+)
+SELECT p_brand AS brand, p_partkey,
+       CASE WHEN rn = 1 THEN p_brand ELSE p_brand || CAST(rn - 1 AS VARCHAR) END AS used_name
+FROM r WHERE rn <= 3
+""")
+def window_rownum_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    pt = spark.read.parquet(f"{sf_dir}/part.parquet")
+    win = Window.partitionBy("p_brand").orderBy("p_partkey")
+    r = pt.select("p_brand", F.col("p_partkey").cast("long").alias("p_partkey"),
+                  F.row_number().over(win).alias("rn"))
+    used = F.when(F.col("rn") == 1, F.col("p_brand")).otherwise(
+        F.concat(F.col("p_brand"), (F.col("rn") - 1).cast("string")))
+    return r.where(F.col("rn") <= 3).select(
+        F.col("p_brand").alias("brand"), "p_partkey", used.alias("used_name"))
+
+
+# rect recognition as a relational op (G9; PDFBoxTree.java:325-348):
+# synthesize 4-segment paths from events, test 2-distinct-x / 2-distinct-y
+@_reg("rect_detect", """
+WITH seg AS (
+  SELECT CAST(event_id // 4 AS BIGINT) AS path_id,
+         CAST(event_id % 4 AS INT) AS seg_no,
+         -- even paths form axis-aligned rects, odd paths get a slanted edge
+         CAST(CASE event_id % 4 WHEN 0 THEN 10 WHEN 1 THEN 60
+              WHEN 2 THEN 60 ELSE 10 END
+              + CASE WHEN event_id % 8 >= 4 AND event_id % 4 = 1
+                     THEN 5 ELSE 0 END AS DOUBLE) AS x1,
+         CAST(CASE event_id % 4 WHEN 0 THEN 20 WHEN 1 THEN 20
+              WHEN 2 THEN 90 ELSE 90 END AS DOUBLE) AS y1
+  FROM events
+),
+p AS (
+  SELECT path_id,
+         COUNT(DISTINCT x1) AS nx, COUNT(DISTINCT y1) AS ny,
+         MIN(x1) AS minx, MIN(y1) AS miny, MAX(x1) AS maxx, MAX(y1) AS maxy,
+         COUNT(*) AS nseg
+  FROM seg GROUP BY path_id
+)
+SELECT path_id,
+       (nseg = 4 AND nx = 2 AND ny = 2) AS is_rect,
+       CASE WHEN nseg = 4 AND nx = 2 AND ny = 2 THEN minx END AS rx,
+       CASE WHEN nseg = 4 AND nx = 2 AND ny = 2 THEN miny END AS ry,
+       CASE WHEN nseg = 4 AND nx = 2 AND ny = 2 THEN maxx - minx END AS rw,
+       CASE WHEN nseg = 4 AND nx = 2 AND ny = 2 THEN maxy - miny END AS rh
+FROM p
+""")
+def rect_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    seg_no = F.col("event_id") % 4
+    x_skew = F.when((F.col("event_id") % 8 >= 4) & (seg_no == 1), 5).otherwise(0)
+    seg = ev.select(
+        (F.col("event_id") / 4).cast("long").alias("path_id"),
+        (F.when(seg_no.isin(1, 2), 60).otherwise(10) + x_skew)
+        .cast("double").alias("x1"),
+        F.when(seg_no.isin(0, 1), 20).otherwise(90).cast("double").alias("y1"))
+    p = seg.groupBy("path_id").agg(
+        F.countDistinct("x1").alias("nx"), F.countDistinct("y1").alias("ny"),
+        F.min("x1").alias("minx"), F.min("y1").alias("miny"),
+        F.max("x1").alias("maxx"), F.max("y1").alias("maxy"),
+        F.count(F.lit(1)).alias("nseg"))
+    is_rect = (F.col("nseg") == 4) & (F.col("nx") == 2) & (F.col("ny") == 2)
+    box = {"rx": F.col("minx"), "ry": F.col("miny"),
+           "rw": F.col("maxx") - F.col("minx"), "rh": F.col("maxy") - F.col("miny")}
+    return p.select("path_id", is_rect.alias("is_rect"),
+                    *(F.when(is_rect, v).alias(k) for k, v in box.items()))
+
+
+# lineage aggregation shape (per-partition counters + checksums)
+@_reg("lineage_agg", """
+SELECT CAST(doc_id % 16 AS INT) AS part_id,
+       CAST(COUNT(*) AS BIGINT) AS doc_count,
+       CAST(SUM(n_chars) AS BIGINT) AS total_chars,
+       MIN(md5(text)) AS checksum_lo, MAX(md5(text)) AS checksum_hi
+FROM documents GROUP BY 1
+""")
+def lineage_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # digest projected once; min+max aggregates share it
+    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        "doc_id", "n_chars", F.md5("text").alias("h"))
+    return (d.groupBy((F.col("doc_id") % 16).cast("int").alias("part_id"))
+            .agg(F.count(F.lit(1)).alias("doc_count"),
+                 F.sum("n_chars").cast("long").alias("total_chars"),
+                 F.min("h").alias("checksum_lo"),
+                 F.max("h").alias("checksum_hi")))
 
 
 # ---------------------------------------------------------------------------
@@ -559,7 +649,6 @@ def extract_spans_rich(spark: SparkSession, sf_dir: str) -> DataFrame:
     return flat.select(
         "doc_id", F.col("order").cast("int").alias("ord"), "kind", "text",
         "media_ref", F.col("page_no").cast("int").alias("page_no"))
-
 
 
 # ---------------------------------------------------------------------------

@@ -91,17 +91,13 @@ def table_exists(spark: SparkSession, target: str) -> bool:
         for st in fs.listStatus(path))
 
 
-def write_partitioned(df: DataFrame, target: str,
-                      partition_col: str | list[str],
+def write_partitioned(df: DataFrame, target: str, partition_col: str,
                       spark: SparkSession | None = None) -> None:
     """Idempotent partition-replacing write: Iceberg overwritePartitions
     (dynamic overwrite of exactly the partitions present in ``df``) or the
-    parquet dynamic-partition-overwrite equivalent. ``partition_col`` may
-    be one column or a list (e.g. ["batch_id", "part_id"] for the
-    streaming sink, where each micro-batch owns its own partition space)."""
+    parquet dynamic-partition-overwrite equivalent, partitioned by the one
+    column ``partition_col``."""
     spark = spark or df.sparkSession
-    cols = ([partition_col] if isinstance(partition_col, str)
-            else list(partition_col))
     if is_table_identifier(target):
         if not iceberg_available(spark):
             raise RuntimeError(
@@ -110,22 +106,20 @@ def write_partitioned(df: DataFrame, target: str,
         if not spark.catalog.tableExists(target):
             # first write must CREATE the partitioned table —
             # overwritePartitions requires an existing one
-            df.writeTo(target).partitionedBy(
-                *[F.col(c) for c in cols]).create()
+            df.writeTo(target).partitionedBy(F.col(partition_col)).create()
             return
         df.writeTo(target).overwritePartitions()
         return
-    # toggle the conf on df's OWN session: inside foreachBatch the batch
-    # DataFrame carries a cloned session whose conf snapshot ignores later
-    # changes to the outer session — setting dynamic mode there alone
-    # leaves the clone on static overwrite, which wipes every partition of
-    # the table on each micro-batch instead of replacing just the ones in
-    # ``df`` (caught live: only the last batch's rows survived)
+    # toggle the conf on df's OWN session, which may be a clone of
+    # ``spark`` whose conf snapshot ignores later changes to the outer
+    # session: setting dynamic mode on ``spark`` alone would leave such a
+    # clone on static overwrite, which wipes every partition of the table
+    # instead of replacing just the ones in ``df``
     conf = df.sparkSession.conf
     prev = conf.get("spark.sql.sources.partitionOverwriteMode", None)
     conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
-        df.write.mode("overwrite").partitionBy(cols).parquet(target)
+        df.write.mode("overwrite").partitionBy(partition_col).parquet(target)
     finally:
         # restore the session-global setting (other writers in the same
         # session may rely on the default static semantics)

@@ -422,7 +422,7 @@ def dedup_minhash_lsh_incremental(spark: SparkSession, new_docs: DataFrame,
     NEW docs only and band-join them against the existing signature table
     plus themselves — every pair involving a new doc (new-new and new-old)
     at O(|new| + colliding buckets), never a corpus re-scan. This is the
-    per-batch dedup step of a streaming/incremental ingest: the signature
+    per-batch dedup step of an incremental ingest: the signature
     table is append-only (new signatures are written back after the check).
 
     ``new_docs``: (doc_id long, text). ``existing_sigs``: the persisted

@@ -32,7 +32,7 @@ def test_registry_ignores_working_directory(tmp_path, monkeypatch):
     import json
 
     import __spark_entry__ as e
-    from pdf2dom_spark import qkernel, qrel, qunits, textops
+    from pdf2dom_spark import qkernel, qunits, textops
 
     (tmp_path / "CORRECTNESS_r99.json").write_text(json.dumps(
         {name: {"rows_match": True}
@@ -40,7 +40,7 @@ def test_registry_ignores_working_directory(tmp_path, monkeypatch):
     monkeypatch.chdir(tmp_path)
 
     want = (list(qkernel.REGISTRY) + list(qunits.REGISTRY)
-            + list(qrel.REGISTRY) + list(textops.REGISTRY))
+            + list(textops.REGISTRY))
     assert list(e.queries()) == want
     assert list(e.oracle_sql()) == [n for n in want
                                     if n != "extract_spans_rich"]
@@ -64,11 +64,16 @@ def test_job_cli(spark, tmp_path):
 def test_job_cli_lifecycle(spark, tmp_path):
     """The full production CLI surface in one lifecycle: fresh run ->
     resume no-op -> upsert (same docs = no growth) -> compact (one file
-    per partition dir) -> streaming ingest into a fresh target."""
+    per partition dir) -> new arrivals: a run over half A of the corpus,
+    then ``--upsert`` of the disjoint half B into the same output, equals
+    one fresh run over A + B."""
     import glob
+
+    from pyspark.sql import functions as F
 
     import job
     from pdf2dom_spark.corpus import build_docs_df
+    from pdf2dom_spark.pipeline import lineage
 
     out = str(tmp_path / "life")
     assert job.main(["--synth", "/root/testdata/sf0.001", "--output", out,
@@ -93,14 +98,33 @@ def test_job_cli_lifecycle(spark, tmp_path):
     assert per_dir and all(n == 1 for n in per_dir)
     assert spark.read.parquet(f"{out}/spans").count() == n1
 
-    # streaming ingest of the same corpus into a fresh target
-    docs_dir = str(tmp_path / "docs_src")
+    # new arrivals: a complete run has a lineage row for every part_id, so
+    # a --resume over newly arrived docs would extract nothing; --upsert
+    # inserts the new doc_ids into the affected partitions
+    half_a, half_b, both = (str(tmp_path / d) for d in ("a", "b", "ab"))
     build_docs_df(spark, "/root/testdata/sf0.001",
-                  mode="rich").write.parquet(docs_dir)
-    sout = str(tmp_path / "stream_out")
-    assert job.main(["--input", docs_dir, "--output", sout,
-                     "--partitions", "4", "--stream"]) == 0
-    assert spark.read.parquet(f"{sout}/spans").count() == n1
+                  mode="rich").write.parquet(both)
+    docs = spark.read.parquet(both)
+    # split on crc32, not on the salt's xxhash64, so both halves land in
+    # every part_id
+    docs.where(F.crc32("doc_id") % 2 == 0).write.parquet(half_a)
+    docs.where(F.crc32("doc_id") % 2 == 1).write.parquet(half_b)
+    grown, fresh = str(tmp_path / "grown"), str(tmp_path / "fresh")
+    assert job.main(["--input", half_a, "--output", grown,
+                     "--partitions", "4"]) == 0
+    assert job.main(["--input", half_b, "--output", grown,
+                     "--upsert"]) == 0
+    assert job.main(["--input", both, "--output", fresh,
+                     "--partitions", "4"]) == 0
+    got = spark.read.parquet(f"{grown}/spans")
+    want = spark.read.parquet(f"{fresh}/spans")
+    assert got.count() == want.count() == n1
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+    lin = {r.part_id: r.checksum
+           for r in spark.read.parquet(f"{grown}/lineage").collect()}
+    assert lin == {r.part_id: r.checksum
+                   for r in lineage(got).collect()}
 
 
 def test_job_cli_refuses_unreadable_lineage(spark, tmp_path):

@@ -501,13 +501,13 @@ def test_upsert_empties_partition(spark, docs, tmp_path):
 
 
 def test_upsert_rejects_unsupported_lineage(spark, docs, tmp_path):
-    """Upsert against an output whose lineage lacks num_partitions (e.g.
-    the streaming sink's batch_id lineage) fails with a clear error, not
-    an opaque AnalysisException (ADVICE r3)."""
+    """Upsert against an output whose lineage lacks num_partitions (a
+    table written by something other than run_checkpointed) fails with a
+    clear error, not an opaque AnalysisException (ADVICE r3)."""
     from pdf2dom_spark.pipeline import upsert_docs
 
     out = str(tmp_path / "badlin")
-    spark.range(3).selectExpr("id as part_id", "id as batch_id") \
+    spark.range(3).selectExpr("id as part_id", "id as seq") \
         .write.parquet(f"{out}/lineage")
     with pytest.raises(ValueError, match="num_partitions"):
         upsert_docs(spark, docs.limit(1), out, run_id="nope")

@@ -45,12 +45,6 @@ def test_corpus_builder_prunes_columns(spark):
     assert "lang" not in scan and "source" not in scan
 
 
-def test_broadcast_join_used_for_dim(spark):
-    from pdf2dom_spark.queries import all_queries
-    q = all_queries()["broadcast_dim_join"](spark, SF_SMOKE)
-    assert "BroadcastHashJoin" in _plan(q)
-
-
 @pytest.mark.parametrize("nested", [False, True])
 def test_extraction_has_single_exchange(spark, nested):
     """The extraction job's only shuffle is the salting repartition, and
@@ -132,19 +126,6 @@ def test_minhash_lsh_join_is_band_keyed(spark):
     join_lines = [ln for ln in plan.splitlines()
                   if "Join" in ln and "lang" in ln]
     assert not join_lines, join_lines
-
-
-def test_skew_salted_join_shape(spark):
-    """The salted join must be a SortMergeJoin keyed on (k, salt) — the salt
-    must reach the join keys (that's what splits hot keys across tasks) and
-    no side may degrade to a broadcast."""
-    from pdf2dom_spark.queries import all_queries
-    df = all_queries()["skew_salted_join"](spark, SF_SMOKE)
-    plan = _plan(df)
-    assert "SortMergeJoin" in plan
-    assert "BroadcastHashJoin" not in plan
-    join_line = [ln for ln in plan.splitlines() if "SortMergeJoin" in ln][0]
-    assert "salt" in join_line
 
 
 def test_salt_spreads_hot_keys_across_partitions(spark):
@@ -243,52 +224,6 @@ def test_chunk_and_quantize_are_narrow(spark):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
     assert "MapInPandas" not in plan and "BatchEvalPython" not in plan
-
-
-def test_tpch_q3_pushdown_and_broadcast(spark):
-    from pdf2dom_spark.queries import all_queries
-    q = all_queries()["tpch_q3_shipping"](spark, SF_SMOKE)
-    fmt = _fmt(q)
-    pushed = [ln for ln in fmt.splitlines() if "PushedFilters" in ln]
-    assert any("o_orderdate" in ln for ln in pushed)
-    assert any("l_shipdate" in ln for ln in pushed)
-    plan = _plan(q)
-    assert "BroadcastHashJoin" in plan          # BUILDING customer keys
-    assert "TakeOrderedAndProject" in plan      # top-10, no global sort
-
-
-def test_tpch_q5_broadcasts_tiny_dims(spark):
-    from pdf2dom_spark.queries import all_queries
-    q = all_queries()["tpch_q5_local_supplier"](spark, SF_SMOKE)
-    plan = _plan(q)
-    # nation and region both ride broadcast joins; the fact-side joins
-    # stay shuffle joins (no accidental broadcast of customer/orders)
-    assert plan.count("BroadcastHashJoin") >= 2
-    fmt = _fmt(q)
-    assert any("r_name" in ln for ln in fmt.splitlines()
-               if "PushedFilters" in ln)
-
-
-def test_tpch_q10_pushdown_and_broadcast(spark):
-    from pdf2dom_spark.queries import all_queries
-    q = all_queries()["tpch_q10_returns"](spark, SF_SMOKE)
-    fmt = _fmt(q)
-    pushed = [ln for ln in fmt.splitlines() if "PushedFilters" in ln]
-    assert any("o_orderdate" in ln for ln in pushed)
-    assert any("l_returnflag" in ln for ln in pushed)
-    plan = _plan(q)
-    assert "BroadcastHashJoin" in plan          # 25-row nation decoration
-    assert "TakeOrderedAndProject" in plan      # top-20, no global sort
-
-
-def test_tpch_q18_broadcasts_having_keys(spark):
-    from pdf2dom_spark.queries import all_queries
-    q = all_queries()["tpch_q18_large_orders"](spark, SF_SMOKE)
-    plan = _plan(q)
-    # the HAVING-derived qualifying key set rides a broadcast back into
-    # the fact; the orders/customer joins stay shuffle joins
-    assert "BroadcastHashJoin" in plan
-    assert "TakeOrderedAndProject" in plan
 
 
 def test_paged_fused_split_is_single_python_stage(spark):
