@@ -69,10 +69,6 @@ def parse_args(argv):
                    help="treat the input docs as changed/new versions: "
                         "re-extract only them and replace their spans in "
                         "the existing --output (affected partitions only)")
-    p.add_argument("--compact", action="store_true",
-                   help="compact the spans table after the run (rewrite "
-                        "each part_id partition to one file; Iceberg "
-                        "rewrite_data_files analog)")
     return p.parse_args(argv)
 
 
@@ -82,8 +78,8 @@ def main(argv=None):
 
     from pdf2dom_spark import tables
     from pdf2dom_spark.extract import ExtractConfig
-    from pdf2dom_spark.pipeline import (compact_spans, run_checkpointed,
-                                        table_targets, upsert_docs)
+    from pdf2dom_spark.pipeline import (run_checkpointed, table_targets,
+                                        upsert_docs)
 
     # malloc tuning before the JVM forks (workers inherit the env); on a
     # real cluster executors are separate JVMs, so also ship it via
@@ -154,9 +150,6 @@ def main(argv=None):
                              split_min_bytes=args.split_min_bytes,
                              pages_per_group=args.pages_per_group)
     print(stats)
-
-    if args.compact:
-        compact_spans(spark, spans_target)
 
     if args.render_html:
         from pdf2dom_spark.render_html import render_html_df

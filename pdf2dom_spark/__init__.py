@@ -13,14 +13,16 @@ Architecture (Spark-first, not a port):
   ``(doc_id, spans: array<struct<kind,text,media_ref,offset>>)``.
 - Extraction runs as one ``mapInArrow`` over Arrow batches on every path
   (``extract_spans``, ``run_checkpointed``, ``upsert_docs``, ``job.py``,
-  pagesplit), all through ``pipeline.extract_salted`` except pagesplit's
+  pagesplit), through ``pipeline.extract_salted`` or, in
+  ``run_checkpointed``, ``pipeline.extract_gathered``, except pagesplit's
   page-group kernel; inside the kernel everything is columnar numpy (no
   per-row Python at the Spark level). The nested-style
   ``extract_spans(nested=True)`` output is a JVM-side ``struct``
   projection over the same flat kernel output.
 - Skew from giant documents is defused by salted repartitioning on the raw
-  ``xxhash64(doc_id)`` (``part_id = pmod(hash, P)`` stays a deterministic
-  COLUMN for lineage/resume).
+  ``xxhash64(doc_id)``. ``part_id = pmod(hash(xxhash64(doc_id)), P)`` is a
+  deterministic COLUMN for lineage/resume and, by construction, the task
+  index of that shuffle: each task writes one ``part_id`` directory.
 - Per-partition lineage + metrics rows enable idempotent checkpoint-resume.
 
 Modules:

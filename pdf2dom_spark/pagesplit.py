@@ -34,7 +34,8 @@ from pyspark.sql.window import Window
 from . import memtune
 from .extract import DEFAULT_CONFIG, ExtractConfig
 from .fonts import FontTable
-from .pipeline import extract_salted, with_part_id
+from .pipeline import (_require_positive, extract_salted, salt_key,
+                       with_part_id)
 from .schema import IN_SPAN_STRUCT, SPAN_FLAT_SCHEMA
 
 # chars that open a region the tokenizer treats as non-operator content
@@ -365,10 +366,14 @@ def extract_groups(groups: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG,
                 extra=[("grp", pa.int32(),
                         np.asarray(grps, dtype=np.int32))])
 
-    big_spans = salted.mapInArrow(extract_group, out_schema)
     # per-document renumber over the split subset only (an exchange +
-    # sort of just those docs' spans; sub-threshold docs never enter it)
-    win = Window.partitionBy("doc_id").orderBy("grp", "order")
+    # sort of just those docs' spans; sub-threshold docs never enter it).
+    # The exchange is keyed like extract_salted's, so task i holds
+    # part_id i; the window clusters on the same key and reuses it.
+    key = salt_key()
+    big_spans = (salted.mapInArrow(extract_group, out_schema)
+                 .repartition(p, key))
+    win = Window.partitionBy(key, "doc_id").orderBy("grp", "order")
     big_spans = (big_spans.withColumn(
         "order", (F.row_number().over(win) - 1).cast("int")).drop("grp"))
     return big_spans.select(*[f.name for f in out_fields])
@@ -402,6 +407,7 @@ def extract_spans_paged(docs: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG,
     spark = docs.sparkSession
     p = num_partitions or int(
         spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    _require_positive(num_partitions=p, pages_per_group=pages_per_group)
 
     # exact transliteration of split_doc's size check:
     # sum(len(s.text or "") for s in spans)

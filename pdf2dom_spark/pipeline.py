@@ -2,18 +2,26 @@
 
 Scale design (the 10^12-doc / 1000-executor story, tested at local[32]):
 
-- **One shuffle, total.** The only exchange in the whole job is the salted
-  ``repartition(P, xxhash64(doc_id))`` that defuses skew from giant
-  multi-page documents (BASELINE.json north_star). Extraction itself is
-  one narrow ``mapInArrow`` kernel behind one function
-  (``extract_salted``), and the nested ``style`` struct is a JVM
-  projection over its flat output; the lineage aggregate is a partial-agg
-  over the already-partitioned output, so AQE coalesces it cheaply.
-  (Monster documents optionally fan out per page-group first —
-  pagesplit.py.)
-- **Deterministic partitioning.** ``part_id`` is a *column*
-  (``pmod(xxhash64(doc_id), P)``), not the runtime partition index, so
-  lineage/resume is stable across schedulers, cluster sizes, and retries.
+- **One document shuffle.** ``extract_spans`` has one exchange: the
+  salted ``repartition(P, xxhash64(doc_id))`` that defuses skew from
+  giant multi-page documents (BASELINE.json north_star). Extraction
+  itself is one narrow ``mapInArrow`` kernel (``extract_salted``), and
+  the nested ``style`` struct is a JVM projection over its flat output.
+  ``run_checkpointed`` spreads the docs on ``doc_id`` instead and adds
+  one exchange of the spans on the salt key (``extract_gathered``), so a
+  resume of a few parts runs on every task and still writes one file
+  per part. The lineage aggregate is a partial-agg over the
+  already-partitioned output, so AQE coalesces it cheaply. (Monster
+  documents optionally fan out per page-group first — pagesplit.py.)
+- **Deterministic partitioning, one task per part.** ``part_id`` is a
+  *column* (``pmod(hash(xxhash64(doc_id)), P)``) and, by construction,
+  also the runtime partition index: ``F.hash`` is the Murmur3 (seed 42)
+  that Spark's hash partitioning applies to the shuffle key
+  ``xxhash64(doc_id)``. Lineage/resume is stable across schedulers,
+  cluster sizes and retries, and every task writes exactly one
+  ``part_id`` directory, so a run adds one file per part (no compaction
+  job). The formula is recorded in lineage (``part_scheme``); an output
+  written under another formula is refused, never remapped.
 - **Idempotent writes.** Output is written partitioned by ``part_id`` with
   dynamic partition overwrite: re-running a failed partition replaces exactly
   its own files (Iceberg overwrite-by-partition in production; parquet
@@ -35,18 +43,38 @@ from __future__ import annotations
 import uuid
 from datetime import datetime
 
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from .extract import DEFAULT_CONFIG, ExtractConfig, make_extract_arrow
 from .schema import LINEAGE_SCHEMA, SPAN_FLAT_SCHEMA, STYLE_FIELDS
 
 
+# the part_id formula, recorded in every lineage row: an output's part_ids
+# are only meaningful under the formula that wrote them
+PART_SCHEME = "pmod(hash(xxhash64(doc_id)), P)"
+
+
+def salt_key() -> Column:
+    """The shuffle key of every spans-producing exchange: the raw 64-bit
+    hash, so a task's rows are exactly one ``part_id``."""
+    return F.xxhash64(F.col("doc_id"))
+
+
 def with_part_id(docs: DataFrame, num_partitions: int) -> DataFrame:
-    """Deterministic salt: pmod(xxhash64(doc_id), P) (SURVEY.md §4)."""
+    """Deterministic salt: ``pmod(hash(xxhash64(doc_id)), P)`` — the
+    partition index that ``repartition(P, salt_key())`` gives a row
+    (Spark's hash partitioning is ``pmod(murmur3(key, 42), P)``, and
+    ``F.hash`` is that Murmur3)."""
     return docs.withColumn(
-        "part_id", F.pmod(F.xxhash64(F.col("doc_id")), F.lit(num_partitions)).cast("int")
-    )
+        "part_id",
+        F.pmod(F.hash(salt_key()), F.lit(num_partitions)))
+
+
+def _require_positive(**values: int) -> None:
+    for name, v in values.items():
+        if v < 1:
+            raise ValueError(f"{name} must be >= 1, got {v}")
 
 
 def extract_salted(salted: DataFrame, cfg: ExtractConfig,
@@ -54,15 +82,31 @@ def extract_salted(salted: DataFrame, cfg: ExtractConfig,
     """The one salted extraction: ``salted`` already carries the
     ``part_id`` column (``with_part_id``); shuffle it into
     ``num_partitions`` tasks on the raw 64-bit hash, then run the flat
-    ``mapInArrow`` kernel.
+    ``mapInArrow`` kernel. Task ``i`` holds exactly the rows with
+    ``part_id == i``.
 
     The shuffle key is the raw hash, not the p-valued part_id: hashing
     only p distinct values into p partitions leaves ~37% of tasks empty
     and piles 2-3 part_ids onto others (Poisson occupancy). The raw hash
-    balances by law of large numbers; part_id stays a deterministic
-    *column* for lineage/resume either way."""
-    return (salted.repartition(num_partitions, F.xxhash64(F.col("doc_id")))
+    balances by law of large numbers, and ``with_part_id`` applies the
+    shuffle's own placement to it."""
+    return (salted.repartition(num_partitions, salt_key())
             .mapInArrow(make_extract_arrow(cfg), SPAN_FLAT_SCHEMA))
+
+
+def extract_gathered(salted: DataFrame, cfg: ExtractConfig,
+                     num_partitions: int) -> DataFrame:
+    """``run_checkpointed``'s extraction of the pending parts: the docs
+    spread over ``num_partitions`` tasks on ``doc_id``, a placement
+    independent of ``part_id``, so a run of a few pending parts (a
+    resume) still keeps every task busy; the spans then gather on
+    ``salt_key()``, so write task ``i`` holds exactly ``part_id == i``.
+    With ``extract_salted`` alone, k pending parts would extract on k
+    tasks, and the run's time would follow the size of its largest
+    part."""
+    return (salted.repartition(num_partitions, F.col("doc_id"))
+            .mapInArrow(make_extract_arrow(cfg), SPAN_FLAT_SCHEMA)
+            .repartition(num_partitions, salt_key()))
 
 
 def extract_spans(docs: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG,
@@ -76,6 +120,7 @@ def extract_spans(docs: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG,
     projection (nothing nested crosses Arrow)."""
     spark = docs.sparkSession
     p = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    _require_positive(num_partitions=p)
     flat = extract_salted(with_part_id(docs, p), cfg, p)
     if not nested:
         return flat
@@ -159,6 +204,25 @@ def _prior_lineage(spark: SparkSession, lineage_dir: str):
     return prior.columns, prior.collect()
 
 
+def _check_part_scheme(columns: list[str], rows: list,
+                       lineage_dir: str) -> None:
+    """Refuse an output whose part_ids were computed by another formula:
+    resuming or upserting it under ``PART_SCHEME`` would re-extract its
+    documents into different part_ids and leave the old spans in place."""
+    if "part_scheme" not in columns:
+        raise ValueError(
+            f"{lineage_dir} has no part_scheme column — its part_ids were "
+            f"not written under part_id = {PART_SCHEME}; resume or upsert "
+            "it with the version that wrote it, or re-run into a fresh "
+            "output")
+    other = {r.part_scheme for r in rows} - {PART_SCHEME}
+    if other:
+        raise ValueError(
+            f"{lineage_dir} was written under part_id scheme(s) "
+            f"{sorted(map(str, other))}, not {PART_SCHEME}; re-run into a "
+            "fresh output")
+
+
 def _pinned_modulus(columns: list[str], rows: list) -> int | None:
     """The salt modulus P recorded in lineage (None if none recorded)."""
     if "num_partitions" not in columns:
@@ -168,7 +232,8 @@ def _pinned_modulus(columns: list[str], rows: list) -> int | None:
 
 
 _LineageRow = Row(*LINEAGE_SCHEMA.names)
-_STAT_COLS = LINEAGE_SCHEMA.names[1:-3]  # lineage()'s aggregates
+# lineage()'s aggregates: the columns between part_id and run_id
+_STAT_COLS = LINEAGE_SCHEMA.names[1:LINEAGE_SCHEMA.names.index("run_id")]
 
 
 def _lineage_rows(stats: list, part_ids, run_id: str,
@@ -181,7 +246,7 @@ def _lineage_rows(stats: list, part_ids, run_id: str,
     now = datetime.now()
     return [_LineageRow(p, *(by_part[p][c] if p in by_part else 0
                              for c in _STAT_COLS),
-                        run_id, now, num_partitions)
+                        run_id, now, num_partitions, PART_SCHEME)
             for p in sorted(part_ids)]
 
 
@@ -216,7 +281,8 @@ def run_checkpointed(
     the prior span total all come from those rows on the driver. Pending
     ids are ``range(P) - done - fail_parts``, every one of which gets a
     lineage row (zero if it has no spans). With nothing pending the run
-    reads lineage and returns: no extraction, no write.
+    reads lineage and returns: no extraction, no write. An output whose
+    lineage records another ``part_id`` formula, or none, is refused.
 
     ``fail_parts`` injects a failure for those part_ids (the partition is
     neither extracted nor written, and gets no lineage row) to test resume.
@@ -230,14 +296,19 @@ def run_checkpointed(
     """
     from . import tables
 
+    _require_positive(num_partitions=num_partitions,
+                      pages_per_group=pages_per_group)
     run_id = run_id or uuid.uuid4().hex[:12]
     spans_dir, lineage_dir = table_targets(out_dir)
     prior = _prior_lineage(spark, lineage_dir)
     columns, prior_rows = prior if prior is not None else ([], [])
+    if prior is not None:
+        _check_part_scheme(columns, prior_rows, lineage_dir)
 
-    # part_id = pmod(xxhash64(doc_id), P): resuming with a different P would
-    # remap every part_id and double-write already-extracted documents — so
-    # the salt modulus is pinned by the first run's lineage and reused
+    # part_id = pmod(hash(xxhash64(doc_id)), P): resuming with a different
+    # P would remap every part_id and double-write already-extracted
+    # documents — so the salt modulus is pinned by the first run's lineage
+    # and reused
     stored = _pinned_modulus(columns, prior_rows)
     if stored is not None and stored != num_partitions:
         import warnings
@@ -261,13 +332,13 @@ def run_checkpointed(
         pending = pending.where(F.col("part_id").isin(processed))
     if split_min_bytes is not None:
         # monster-doc defense: page-group fan-out (does its own salting +
-        # renumber; part_id is the same pmod(xxhash64) column either way)
+        # renumber; part_id is the same with_part_id column either way)
         from .pagesplit import extract_spans_paged
         spans = extract_spans_paged(
             pending.drop("part_id"), cfg, num_partitions,
             pages_per_group=pages_per_group, min_bytes=split_min_bytes)
     else:
-        spans = extract_salted(pending, cfg, num_partitions)
+        spans = extract_gathered(pending, cfg, num_partitions)
 
     tables.write_partitioned(spans, spans_dir, "part_id", spark)
 
@@ -278,45 +349,13 @@ def run_checkpointed(
                                       "part_id", processed)
     new_rows = _lineage_rows(lineage(this_run).collect(), processed,
                              run_id, num_partitions)
-    tables.append_table(spark.createDataFrame(new_rows, LINEAGE_SCHEMA),
-                        lineage_dir, spark)
+    # one slice, one file per run: the <= P rows would otherwise be sliced
+    # over defaultParallelism tasks and files
+    tables.append_table(
+        spark.createDataFrame(spark.sparkContext.parallelize(new_rows, 1),
+                              LINEAGE_SCHEMA),
+        lineage_dir, spark)
     return _run_stats(run_id, prior_rows, new_rows)
-
-
-def compact_spans(spark: SparkSession, spans_dir: str,
-                  files_per_partition: int = 1) -> dict:
-    """Small-file compaction of the spans table (the maintenance job every
-    long-lived ingest needs: each extraction task writes a file into every
-    part_id dir it holds rows for, so a P-partition table accretes
-    tasks x P files over many runs).
-
-    Rewrites each ``part_id`` partition into exactly ``files_per_partition``
-    files via one shuffle keyed on (part_id[, intra-partition salt]) +
-    dynamic partition overwrite — content is bit-identical (same rows, same
-    columns), so lineage checksums stay valid; only file layout changes.
-    The input is eagerly materialized before the overwrite because source
-    and target are the same location (lazy re-read during its own overwrite
-    would race the delete). On Iceberg this maps to the
-    rewrite_data_files maintenance procedure; the parquet path implements
-    the same contract for the sandbox.
-    """
-    from . import tables
-
-    spans = tables.read_table(spark, spans_dir)
-    n_before = spans.rdd.getNumPartitions()
-    spans = spans.localCheckpoint(eager=True)
-    if files_per_partition <= 1:
-        compacted = spans.repartition(
-            int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
-            F.col("part_id"))
-    else:
-        compacted = spans.repartition(
-            int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-            * files_per_partition,
-            F.col("part_id"),
-            F.pmod(F.xxhash64("doc_id"), F.lit(files_per_partition)))
-    tables.write_partitioned(compacted, spans_dir, "part_id", spark)
-    return {"input_tasks": int(n_before)}
 
 
 def upsert_docs(
@@ -359,6 +398,7 @@ def upsert_docs(
         raise ValueError(
             f"{lineage_dir} has only null num_partitions values — cannot "
             "recover the salt modulus; this target does not support upsert")
+    _check_part_scheme(columns, prior_rows, lineage_dir)
 
     salted = with_part_id(updated_docs, num_partitions)
     # one aggregate gives the affected ids and the doc count (a doc_id maps
@@ -374,7 +414,11 @@ def upsert_docs(
     existing = tables.read_partitions(spark, spans_dir, SPAN_FLAT_SCHEMA,
                                       "part_id", affected)
     kept = existing.join(F.broadcast(updated_ids), "doc_id", "left_anti")
-    merged = kept.select(fresh.columns).unionByName(fresh)
+    # the one exchange that puts part_id i in task i (fresh's tasks hold
+    # several part_ids, and a scan task of `existing` packs files of
+    # several part dirs)
+    merged = (kept.select(fresh.columns).unionByName(fresh)
+              .repartition(num_partitions, salt_key()))
     # one materialization: the overwrite deletes the very files `existing`
     # reads, and the lineage aggregate below must not re-run extraction
     merged = merged.localCheckpoint(eager=True)

@@ -85,7 +85,8 @@ SPAN_FLAT_SCHEMA = T.StructType(
 )
 
 # One lineage row per finished part_id: pipeline.lineage()'s aggregates plus
-# the run that produced them and the salt modulus that defines part_id.
+# the run that produced them, and the salt modulus and formula
+# (pipeline.PART_SCHEME) that define part_id.
 LINEAGE_SCHEMA = T.StructType(
     [T.StructField("part_id", T.IntegerType())]
     + [T.StructField(c, T.LongType()) for c in (
@@ -97,6 +98,7 @@ LINEAGE_SCHEMA = T.StructType(
         T.StructField("run_id", T.StringType()),
         T.StructField("completed_at", T.TimestampType()),
         T.StructField("num_partitions", T.IntegerType()),
+        T.StructField("part_scheme", T.StringType()),
     ]
 )
 

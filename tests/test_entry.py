@@ -63,10 +63,10 @@ def test_job_cli(spark, tmp_path):
 
 def test_job_cli_lifecycle(spark, tmp_path):
     """The full production CLI surface in one lifecycle: fresh run ->
-    resume no-op -> upsert (same docs = no growth) -> compact (one file
-    per partition dir) -> new arrivals: a run over half A of the corpus,
-    then ``--upsert`` of the disjoint half B into the same output, equals
-    one fresh run over A + B."""
+    resume no-op -> upsert (same docs = no growth, one file per partition
+    dir) -> new arrivals: a run over half A of the corpus, then
+    ``--upsert`` of the disjoint half B into the same output, equals one
+    fresh run over A + B."""
     import glob
 
     from pyspark.sql import functions as F
@@ -90,9 +90,7 @@ def test_job_cli_lifecycle(spark, tmp_path):
                      "--upsert"]) == 0
     assert spark.read.parquet(f"{out}/spans").count() == n1
 
-    # compact: one file per part_id dir, same rows
-    assert job.main(["--synth", "/root/testdata/sf0.001", "--output", out,
-                     "--resume", "--compact"]) == 0
+    # one file per part_id dir, same rows: each task writes one part_id
     per_dir = [len(glob.glob(f"{d}/*.parquet"))
                for d in glob.glob(f"{out}/spans/part_id=*")]
     assert per_dir and all(n == 1 for n in per_dir)
@@ -144,6 +142,29 @@ def test_job_cli_refuses_unreadable_lineage(spark, tmp_path):
         job.main(["--synth", SF_SMOKE, "--output", str(out),
                   "--partitions", "4"])
     assert not (out / "spans").exists()
+
+
+def test_job_cli_rejects_nonpositive_sizes(spark, tmp_path):
+    """``--partitions -4`` (``range(-4)`` is no pending id: exit 0 with
+    nothing written) and ``--pages-per-group 0`` (no page boundary ever
+    closes a group: splitting silently off) are refused before any
+    write."""
+    import pytest
+
+    import job
+    from pdf2dom_spark.corpus import build_docs_df
+    from tests.conftest import SF_SMOKE
+
+    src = str(tmp_path / "docs")
+    build_docs_df(spark, SF_SMOKE, mode="rich").limit(20).write.parquet(src)
+    for name, flags in {
+            "parts": ["--partitions", "-4"],
+            "groups": ["--split-min-bytes", "0", "--pages-per-group", "0"],
+    }.items():
+        out = tmp_path / name
+        with pytest.raises(ValueError, match="must be >= 1"):
+            job.main(["--input", src, "--output", str(out), *flags])
+        assert not out.exists()
 
 
 def test_job_cli_input_pdfs(spark, tmp_path):

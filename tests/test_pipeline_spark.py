@@ -132,8 +132,8 @@ def test_resume_idempotent(spark, docs, tmp_path):
 
 def test_resume_pins_partition_count(spark, docs, tmp_path):
     """Resuming with a different --partitions must NOT remap part_ids:
-    part_id = pmod(xxhash64(doc_id), P), so a changed P would defeat the
-    done-lineage anti-join and double-write every already-extracted doc
+    part_id = pmod(hash(xxhash64(doc_id)), P), so a changed P would defeat
+    the done-lineage anti-join and double-write every already-extracted doc
     (observed live: 8-partition run resumed at the 200 default doubled the
     table). The lineage table pins the salt modulus; resume reuses it."""
     out = str(tmp_path / "pinned")
@@ -176,9 +176,10 @@ def _mtimes(root):
 def test_checkpoint_resume_job_count(spark, docs, tmp_path):
     """A failed first run plus its resume is a bounded number of Spark
     jobs: lineage is collected once per run and decided on the driver, and
-    the run's lineage comes from one pruned read-back. 14 jobs at P=8
-    (40 before lineage moved to the driver); a new collect or a second
-    evaluation of the lineage aggregate breaks this bound."""
+    the run's lineage comes from one pruned read-back. 16 jobs at P=8
+    (40 before lineage moved to the driver; the span gather of
+    extract_gathered is one shuffle-stage job per run); a new collect or
+    a second evaluation of the lineage aggregate breaks this bound."""
     docs.count()  # the cached fixture is materialized outside the count
     out = str(tmp_path / "jobs")
     with _jobs_issued(spark, "ckpt-job-count") as jobs:
@@ -344,37 +345,6 @@ def test_bare_dirname_is_a_path_not_a_table(spark, tmp_path):
         os.chdir(cwd)
 
 
-def test_compact_spans_preserves_content(spark, docs, tmp_path):
-    """Compaction rewrites each part_id dir to one file with bit-identical
-    content (lineage checksums stay valid)."""
-    import glob
-
-    from pdf2dom_spark.pipeline import compact_spans
-
-    out = str(tmp_path / "c")
-    run_checkpointed(spark, docs, out, num_partitions=8, run_id="r1")
-    files = lambda: {d: len(glob.glob(f"{d}/*.parquet"))
-                     for d in glob.glob(f"{out}/spans/part_id=*")}
-    before_files = files()
-    assert max(before_files.values()) > 1  # the problem exists
-    before = spark.read.parquet(f"{out}/spans").localCheckpoint(eager=True)
-
-    compact_spans(spark, f"{out}/spans")
-
-    after_files = files()
-    assert set(after_files) == set(before_files)
-    assert all(n == 1 for n in after_files.values()), after_files
-    after = spark.read.parquet(f"{out}/spans")
-    assert after.count() == before.count()
-    cols = before.columns
-    assert after.select(cols).exceptAll(before.select(cols)).count() == 0
-    # lineage checksums still describe the compacted table
-    lin = spark.read.parquet(f"{out}/lineage").select("part_id", "checksum")
-    fresh = lineage(after).select("part_id", "checksum")
-    assert (sorted(map(tuple, lin.collect()))
-            == sorted(map(tuple, fresh.collect())))
-
-
 def test_upsert_docs_equals_full_rerun(spark, docs, tmp_path):
     """Incremental re-extraction: after updating a subset of documents,
     upsert_docs must produce exactly the table a full re-run over the
@@ -444,25 +414,6 @@ def test_upsert_inserts_new_docs(spark, docs, tmp_path):
         upsert_docs(spark, new, str(tmp_path / "missing"), run_id="boom")
 
 
-def test_compact_spans_multi_file_target(spark, docs, tmp_path):
-    """files_per_partition > 1: each part_id dir lands on at most that many
-    files (intra-partition salt), content still bit-identical."""
-    import glob
-
-    from pdf2dom_spark.pipeline import compact_spans
-
-    out = str(tmp_path / "c2")
-    run_checkpointed(spark, docs, out, num_partitions=8, run_id="r1")
-    before = spark.read.parquet(f"{out}/spans").localCheckpoint(eager=True)
-    compact_spans(spark, f"{out}/spans", files_per_partition=2)
-    per_dir = [len(glob.glob(f"{d}/*.parquet"))
-               for d in glob.glob(f"{out}/spans/part_id=*")]
-    assert per_dir and all(1 <= n <= 2 for n in per_dir), per_dir
-    after = spark.read.parquet(f"{out}/spans")
-    assert after.count() == before.count()
-    assert after.select(before.columns).exceptAll(before).count() == 0
-
-
 def test_upsert_empties_partition(spark, docs, tmp_path):
     """An affected partition whose every doc updates to a zero-span version
     must end EMPTY on disk (dynamic overwrite alone never touches it) with
@@ -511,6 +462,85 @@ def test_upsert_rejects_unsupported_lineage(spark, docs, tmp_path):
         .write.parquet(f"{out}/lineage")
     with pytest.raises(ValueError, match="num_partitions"):
         upsert_docs(spark, docs.limit(1), out, run_id="nope")
+
+
+def test_other_part_scheme_lineage_refused(spark, docs, tmp_path):
+    """An output whose lineage has no part_scheme column (written before
+    part_id followed the shuffle's placement) or names another formula is
+    refused by both resume and upsert, never remapped: its part_ids would
+    not match the ones this version computes."""
+    from pdf2dom_spark.pipeline import upsert_docs
+    from pdf2dom_spark.schema import LINEAGE_SCHEMA
+
+    row = {c: 0 for c in LINEAGE_SCHEMA.names}
+    row.update(run_id="old", completed_at=None, num_partitions=4)
+    old_cols = [c for c in LINEAGE_SCHEMA.names if c != "part_scheme"]
+    cases = {
+        "missing": (spark.createDataFrame([row], LINEAGE_SCHEMA)
+                    .select(old_cols), "no part_scheme column"),
+        "other": (spark.createDataFrame(
+            [{**row, "part_scheme": "pmod(xxhash64(doc_id), P)"}],
+            LINEAGE_SCHEMA), "pmod\\(xxhash64"),
+    }
+    for name, (lin, msg) in cases.items():
+        out = tmp_path / name
+        lin.write.parquet(str(out / "lineage"))
+        with pytest.raises(ValueError, match=msg):
+            run_checkpointed(spark, docs, str(out), num_partitions=4,
+                             run_id="r")
+        with pytest.raises(ValueError, match=msg):
+            upsert_docs(spark, docs.limit(1), str(out), run_id="u")
+        assert not (out / "spans").exists()
+
+
+def test_one_task_writes_one_part(spark, docs, tmp_path):
+    """part_id is the shuffle's task index (of extract_salted's doc
+    shuffle and extract_gathered's span shuffle), so every write puts one
+    file in each part_id dir it touches: a failed first run, its resume and
+    an upsert leave exactly one file per dir (the upsert's rewrite
+    replaces the dir), and so does a run on the split path. The task
+    check also covers the split path's renumber exchange, which adaptive
+    execution would otherwise coalesce into one task on this small
+    corpus."""
+    import glob
+
+    from pdf2dom_spark.extract import DEFAULT_CONFIG
+    from pdf2dom_spark.pagesplit import extract_spans_paged
+    from pdf2dom_spark.pipeline import (extract_gathered, extract_salted,
+                                        upsert_docs)
+
+    one_part = with_part_id(docs, 4).where(F.col("part_id") == 1)
+    gathered = extract_gathered(one_part, DEFAULT_CONFIG, 4)
+    for spans in (extract_salted(with_part_id(docs, 4), DEFAULT_CONFIG, 4),
+                  gathered,
+                  extract_spans_paged(docs, DEFAULT_CONFIG, 4,
+                                      pages_per_group=4, min_bytes=0)):
+        assert spans.where(
+            F.spark_partition_id() != F.col("part_id")).count() == 0
+    # run_checkpointed's extraction: the docs of one pending part spread
+    # over all 4 tasks on doc_id, not onto that part's one task
+    extracted = gathered._jdf.queryExecution().executedPlan().toString()
+    assert "hashpartitioning(doc_id" in extracted, extracted
+
+    def files_per_dir(out):
+        return {d: len(glob.glob(f"{d}/*.parquet"))
+                for d in glob.glob(f"{out}/spans/part_id=*")}
+
+    out = str(tmp_path / "one")
+    run_checkpointed(spark, docs, out, num_partitions=4, run_id="r1",
+                     fail_parts={1})
+    assert sorted(files_per_dir(out).values()) == [1, 1, 1]
+    run_checkpointed(spark, docs, out, num_partitions=4, run_id="r2")
+    assert sorted(files_per_dir(out).values()) == [1, 1, 1, 1]
+    ids = [r.doc_id for r in docs.select("doc_id").limit(40).collect()]
+    upsert_docs(spark, docs.where(F.col("doc_id").isin(ids))
+                .withColumn("spans", F.reverse("spans")), out, run_id="u1")
+    assert sorted(files_per_dir(out).values()) == [1, 1, 1, 1]
+
+    split = str(tmp_path / "split")
+    run_checkpointed(spark, docs, split, num_partitions=4, run_id="s1",
+                     split_min_bytes=0, pages_per_group=4)
+    assert sorted(files_per_dir(split).values()) == [1, 1, 1, 1]
 
 
 def test_upsert_lineage_swap_crash_recovery(spark, docs, tmp_path):
