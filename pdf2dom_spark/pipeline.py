@@ -10,9 +10,10 @@ Scale design (the 10^12-doc / 1000-executor story, tested at local[32]):
   ``run_checkpointed`` spreads the docs on ``doc_id`` instead and adds
   one exchange of the spans on the salt key (``extract_gathered``), so a
   resume of a few parts runs on every task and still writes one file
-  per part. The lineage aggregate is a partial-agg over the
-  already-partitioned output, so AQE coalesces it cheaply. (Monster
-  documents optionally fan out per page-group first — pagesplit.py.)
+  per part. The lineage aggregate is one partial-agg and one exchange
+  over the written output (``doc_count`` counts the ``order == 0``
+  spans, so no distinct-count stage). (Monster documents optionally fan
+  out per page-group first — pagesplit.py.)
 - **Deterministic partitioning, one task per part.** ``part_id`` is a
   *column* (``pmod(hash(xxhash64(doc_id)), P)``) and, by construction,
   also the runtime partition index: ``F.hash`` is the Murmur3 (seed 42)
@@ -32,7 +33,9 @@ Scale design (the 10^12-doc / 1000-executor story, tested at local[32]):
   ``range(P) - done``, the docs are filtered with a literal
   ``part_id IN (...)``, and this run's lineage comes from one pruned
   read-back of only its own partitions. No join, no scan of the docs to
-  find pending ids, no re-read of the lineage table.
+  find pending ids, no re-read of the lineage table. The new lineage rows
+  go back to the JVM as one Arrow table (``_lineage_frame``): no Python
+  worker, no shuffle, one file per append.
 - **Bounded Arrow batches.** Set
   ``spark.sql.execution.arrow.maxRecordsPerBatch`` (docs vary wildly in
   size); the kernel is O(tokens) per batch with numpy-vectorized glyph work.
@@ -134,13 +137,21 @@ def lineage(spans: DataFrame) -> DataFrame:
     count, span count, per-kind breakdown, max document size, and an
     order-insensitive checksum. bit_xor keeps the checksum overflow-free
     and commutative, so it is insensitive to within-partition ordering.
-    All metrics are map-side-combinable aggregates over the already-written
-    partition — no extra shuffle."""
+
+    ``doc_count`` is the number of documents with at least one span,
+    counted as the spans with ``order == 0``: ``order`` is dense from 0
+    within each document on every write path (the kernel's, and
+    pagesplit's ``row_number() - 1`` renumber), so this equals
+    ``countDistinct(doc_id)``. Every metric is then a map-side-combinable
+    aggregate — one exchange, where a distinct count needs two."""
+    def count_if(cond: Column) -> Column:
+        return F.sum(cond.cast("long"))
+
     def kind_count(k: str):
-        return F.sum((F.col("kind") == k).cast("long")).alias(f"n_{k}")
+        return count_if(F.col("kind") == k).alias(f"n_{k}")
 
     return spans.groupBy("part_id").agg(
-        F.countDistinct("doc_id").alias("doc_count"),
+        count_if(F.col("order") == 0).alias("doc_count"),
         F.count(F.lit(1)).alias("span_count"),
         kind_count("text"), kind_count("page"), kind_count("rect"),
         kind_count("line"), kind_count("image"), kind_count("font"),
@@ -250,6 +261,35 @@ def _lineage_rows(stats: list, part_ids, run_id: str,
             for p in sorted(part_ids)]
 
 
+def _lineage_frame(spark: SparkSession, rows: list) -> DataFrame:
+    """Lineage rows (tuples in ``LINEAGE_SCHEMA`` order) as a one-partition
+    DataFrame, built through a pyarrow table: the rows reach the JVM as
+    Arrow batches, so no Python worker runs, and ``coalesce(1)`` keeps
+    them in one task (one file per write) without a shuffle.
+
+    Timestamps are converted the way the Row path converts them
+    (``TimestampType.toInternal``: a naive datetime is the driver's local
+    time) and passed as UTC instants; a naive Arrow timestamp would be
+    read in the session time zone instead."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = to_arrow_schema(LINEAGE_SCHEMA)
+    columns = []
+    for f, col in zip(LINEAGE_SCHEMA.fields, zip(*rows)):
+        if f.needConversion():
+            # completed_at holds one value per run: convert each distinct
+            # value once, not once per row (mktime dominated the whole
+            # conversion at 2^18 rows)
+            internal = {v: f.toInternal(v) for v in set(col)}
+            col = [internal[v] for v in col]
+        columns.append(col)
+    table = pa.Table.from_arrays(
+        [pa.array(col, a.type) for col, a in zip(columns, schema)],
+        schema=schema)
+    return spark.createDataFrame(table, LINEAGE_SCHEMA).coalesce(1)
+
+
 def _run_stats(run_id: str, prior_rows: list, new_rows: list) -> dict:
     # cumulative size comes from the P-row lineage (each done part_id has
     # exactly one row; failed partitions have none and no data), never from
@@ -349,12 +389,9 @@ def run_checkpointed(
                                       "part_id", processed)
     new_rows = _lineage_rows(lineage(this_run).collect(), processed,
                              run_id, num_partitions)
-    # one slice, one file per run: the <= P rows would otherwise be sliced
-    # over defaultParallelism tasks and files
-    tables.append_table(
-        spark.createDataFrame(spark.sparkContext.parallelize(new_rows, 1),
-                              LINEAGE_SCHEMA),
-        lineage_dir, spark)
+    # one file per run, appended from an Arrow-built frame: a Row-built
+    # one pickles every row through a Python-worker task first
+    tables.append_table(_lineage_frame(spark, new_rows), lineage_dir, spark)
     return _run_stats(run_id, prior_rows, new_rows)
 
 
@@ -445,16 +482,15 @@ def upsert_docs(
     # replace the affected partitions' lineage rows and keep the rest:
     # build the new table on the driver, write it to a sibling dir, swap
     # (Iceberg: one atomic replace commit)
-    survivors = [_LineageRow(*(r[c] for c in LINEAGE_SCHEMA.names))
+    survivors = [tuple(r[c] for c in LINEAGE_SCHEMA.names)
                  for r in prior_rows if r.part_id not in touched]
-    merged_lineage = spark.createDataFrame(
-        survivors + _lineage_rows(stats, affected, run_id, num_partitions),
-        LINEAGE_SCHEMA)
+    merged_lineage = _lineage_frame(
+        spark,
+        survivors + _lineage_rows(stats, affected, run_id, num_partitions))
     if tables.is_table_identifier(out_dir):
         merged_lineage.writeTo(lineage_dir).createOrReplace()
     else:
-        merged_lineage.repartition(1).write.mode("overwrite").parquet(
-            lineage_dir + "_new")
+        merged_lineage.write.mode("overwrite").parquet(lineage_dir + "_new")
         import os
         import shutil
         # rename the live table ASIDE first (never delete-then-move): a

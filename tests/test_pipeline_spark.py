@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import contextlib
 import os
+import time
+from datetime import datetime
 
 import pytest
 from pyspark.sql import functions as F
@@ -103,6 +105,41 @@ def test_lineage_reconciles(spark, docs):
     assert tot[1] == spans.count()
 
 
+def _distinct_doc_lineage(spans):
+    """lineage() with doc_count as countDistinct(doc_id) per part_id."""
+    lin = lineage(spans)
+    distinct = spans.groupBy("part_id").agg(
+        F.countDistinct("doc_id").alias("doc_count"))
+    return lin.drop("doc_count").join(distinct, "part_id").select(lin.columns)
+
+
+def test_lineage_doc_count_is_distinct_docs(spark, docs, tmp_path):
+    """doc_count counts the order == 0 spans, which equals the distinct
+    doc_ids of a part because order is dense from 0 within each document:
+    on the gathered extraction, on the page-split path (its renumber) and
+    on an upserted table (kept spans plus fresh ones), every column of
+    lineage() matches the countDistinct formulation."""
+    from pdf2dom_spark.extract import DEFAULT_CONFIG
+    from pdf2dom_spark.pagesplit import extract_spans_paged
+    from pdf2dom_spark.pipeline import extract_gathered, upsert_docs
+
+    out = str(tmp_path / "up")
+    run_checkpointed(spark, docs, out, num_partitions=4, run_id="base")
+    ids = [r.doc_id for r in docs.select("doc_id").limit(30).collect()]
+    upsert_docs(spark, docs.where(F.col("doc_id").isin(ids))
+                .withColumn("spans", F.reverse("spans")), out, run_id="u1")
+
+    for spans in (extract_gathered(with_part_id(docs, 4), DEFAULT_CONFIG, 4),
+                  extract_spans_paged(docs, DEFAULT_CONFIG, 4,
+                                      pages_per_group=4, min_bytes=0),
+                  spark.read.parquet(f"{out}/spans")):
+        spans = spans.localCheckpoint(eager=True)
+        got = sorted(map(tuple, lineage(spans).collect()))
+        assert len(got) == 4
+        assert got == sorted(map(tuple, _distinct_doc_lineage(spans)
+                                 .collect()))
+
+
 def test_resume_idempotent(spark, docs, tmp_path):
     out1 = str(tmp_path / "full")
     out2 = str(tmp_path / "resumed")
@@ -189,6 +226,85 @@ def test_checkpoint_resume_job_count(spark, docs, tmp_path):
                                  run_id="r2")
     assert stats["parts_done"] == 8
     assert len(jobs) <= 16, jobs
+
+
+def test_checkpoint_resume_job_count_one_lineage_shuffle(spark, docs,
+                                                        tmp_path):
+    """The same failed run plus resume as test_checkpoint_resume_job_count
+    issues 14 jobs, 2 fewer than the 16 of a distinct-count lineage
+    aggregate: each run's read-back aggregate has one shuffle stage, so
+    it is 2 jobs (stage + collect), not 3."""
+    docs.count()
+    out = str(tmp_path / "jobs")
+    with _jobs_issued(spark, "ckpt-job-count-arrow") as jobs:
+        run_checkpointed(spark, docs, out, num_partitions=8, run_id="r1",
+                         fail_parts={2, 5})
+        stats = run_checkpointed(spark, docs, out, num_partitions=8,
+                                 run_id="r2")
+    assert stats["parts_done"] == 8
+    assert len(jobs) <= 14, jobs
+
+
+@contextlib.contextmanager
+def _local_zone(zone):
+    """The driver's local time zone (``TZ`` + ``time.tzset()``) set to
+    ``zone`` inside the block, both restored after it."""
+    prev = os.environ.get("TZ")
+    os.environ["TZ"] = zone
+    time.tzset()
+    try:
+        yield
+    finally:
+        if prev is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = prev
+        time.tzset()
+
+
+def test_lineage_timestamps_survive_a_non_utc_driver(spark, docs, tmp_path):
+    """completed_at is the driver's wall clock when the driver's zone is
+    not the session's: lineage frames are built through Arrow, where a
+    naive datetime would be read in the session zone (UTC here) and land
+    4-5 hours off in New York. An upsert rebuilds the lineage table from
+    the collected rows, so every part it does not touch must keep its row
+    unchanged in every column, completed_at included."""
+    from pdf2dom_spark.pipeline import upsert_docs
+
+    small = docs.limit(40).localCheckpoint(eager=True)
+    out = str(tmp_path / "tz")
+    conf = spark.conf
+    prev_zone = conf.get("spark.sql.session.timeZone")
+    conf.set("spark.sql.session.timeZone", "UTC")
+    try:
+        with _local_zone("America/New_York"):
+            t0 = datetime.now()
+            run_checkpointed(spark, small, out, num_partitions=8,
+                             run_id="r1", fail_parts={3})
+            run_checkpointed(spark, small, out, num_partitions=8,
+                             run_id="r2")
+            t1 = datetime.now()
+            before = {r.part_id: r for r in
+                      spark.read.parquet(f"{out}/lineage").collect()}
+            assert sorted(before) == list(range(8))
+            assert all(t0 <= r.completed_at <= t1 for r in before.values())
+
+            updated = (with_part_id(small, 8).where(F.col("part_id") == 3)
+                       .drop("part_id").withColumn("spans",
+                                                    F.reverse("spans")))
+            assert upsert_docs(spark, updated, out,
+                               run_id="u1")["parts_touched"] == 1
+            t2 = datetime.now()
+            after = {r.part_id: r for r in
+                     spark.read.parquet(f"{out}/lineage").collect()}
+            assert sorted(after) == list(range(8))
+            for pid in range(8):
+                if pid != 3:
+                    assert after[pid] == before[pid], pid
+            assert after[3].run_id == "u1"
+            assert t1 <= after[3].completed_at <= t2
+    finally:
+        conf.set("spark.sql.session.timeZone", prev_zone)
 
 
 def test_noop_resume_short_circuits(spark, docs, tmp_path):
@@ -498,8 +614,9 @@ def test_one_task_writes_one_part(spark, docs, tmp_path):
     shuffle and extract_gathered's span shuffle), so every write puts one
     file in each part_id dir it touches: a failed first run, its resume and
     an upsert leave exactly one file per dir (the upsert's rewrite
-    replaces the dir), and so does a run on the split path. The task
-    check also covers the split path's renumber exchange, which adaptive
+    replaces the dir), and so does a run on the split path. The first run,
+    its resume and the upsert also each leave one new lineage file. The
+    task check also covers the split path's renumber exchange, which adaptive
     execution would otherwise coalesce into one task on this small
     corpus."""
     import glob
@@ -526,16 +643,26 @@ def test_one_task_writes_one_part(spark, docs, tmp_path):
         return {d: len(glob.glob(f"{d}/*.parquet"))
                 for d in glob.glob(f"{out}/spans/part_id=*")}
 
+    def lineage_files(out):
+        return set(glob.glob(f"{out}/lineage/*.parquet"))
+
     out = str(tmp_path / "one")
     run_checkpointed(spark, docs, out, num_partitions=4, run_id="r1",
                      fail_parts={1})
     assert sorted(files_per_dir(out).values()) == [1, 1, 1]
+    first = lineage_files(out)
+    assert len(first) == 1
     run_checkpointed(spark, docs, out, num_partitions=4, run_id="r2")
     assert sorted(files_per_dir(out).values()) == [1, 1, 1, 1]
+    resumed = lineage_files(out)
+    assert first < resumed and len(resumed) == 2
     ids = [r.doc_id for r in docs.select("doc_id").limit(40).collect()]
     upsert_docs(spark, docs.where(F.col("doc_id").isin(ids))
                 .withColumn("spans", F.reverse("spans")), out, run_id="u1")
     assert sorted(files_per_dir(out).values()) == [1, 1, 1, 1]
+    # the upsert rewrites the lineage table: one new file replaces both
+    upserted = lineage_files(out)
+    assert len(upserted) == 1 and not upserted & resumed
 
     split = str(tmp_path / "split")
     run_checkpointed(spark, docs, split, num_partitions=4, run_id="s1",
