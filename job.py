@@ -69,7 +69,11 @@ def parse_args(argv):
                    help="treat the input docs as changed/new versions: "
                         "re-extract only them and replace their spans in "
                         "the existing --output (affected partitions only)")
-    return p.parse_args(argv)
+    args = p.parse_args(argv)
+    if args.upsert and args.split_min_bytes is not None:
+        # upsert_docs has no page-split path: the flag would be dropped
+        p.error("--split-min-bytes cannot be combined with --upsert")
+    return args
 
 
 def main(argv=None):
@@ -129,26 +133,22 @@ def main(argv=None):
         # Iceberg table identifier or parquet dir (pdf2dom_spark.tables)
         docs = tables.read_table(spark, args.input)
 
-    if args.upsert:
-        print(upsert_docs(spark, docs, args.output, cfg=cfg,
-                          run_id=args.run_id))
-        if not pre_existing:
-            spark.stop()
-        return 0
-
     spans_target, lineage_target = table_targets(args.output)
-    if not args.resume:
+    if args.upsert:
+        stats = upsert_docs(spark, docs, args.output, cfg=cfg,
+                            run_id=args.run_id)
+    else:
         # fresh-run semantics: run_checkpointed always skips partitions with
         # existing lineage, so silently reusing a previous output dir would
         # skip work instead of recomputing — refuse loudly.
-        if tables.table_exists(spark, lineage_target):
+        if not args.resume and tables.table_exists(spark, lineage_target):
             raise SystemExit(
                 f"error: {lineage_target} already exists; pass --resume "
                 "to continue that run, or point --output at a fresh target")
-    stats = run_checkpointed(spark, docs, args.output, cfg=cfg,
-                             num_partitions=p, run_id=args.run_id,
-                             split_min_bytes=args.split_min_bytes,
-                             pages_per_group=args.pages_per_group)
+        stats = run_checkpointed(spark, docs, args.output, cfg=cfg,
+                                 num_partitions=p, run_id=args.run_id,
+                                 split_min_bytes=args.split_min_bytes,
+                                 pages_per_group=args.pages_per_group)
     print(stats)
 
     if args.render_html:

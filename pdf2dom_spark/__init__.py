@@ -49,8 +49,8 @@ Modules:
   render_html— optional HTML sink (reference-exact CSS serialization)
   queries    — driver-facing queries() / oracle_sql() registry: the
                extraction gates of qkernel + qunits, then textops
-               (training-data ops: dedup + banded MinHash LSH, lang-id,
-               ...); helpers in qshared
+               (training-data ops: lang-id, quality scoring, PII scrub,
+               sampling, ...); helpers in qshared
 """
 
 __version__ = "0.1.0"

@@ -99,10 +99,7 @@ def write_partitioned(df: DataFrame, target: str, partition_col: str,
     column ``partition_col``."""
     spark = spark or df.sparkSession
     if is_table_identifier(target):
-        if not iceberg_available(spark):
-            raise RuntimeError(
-                f"'{target}' looks like a catalog table but no Iceberg "
-                "runtime is on the classpath")
+        _require_iceberg(spark, target)
         if not spark.catalog.tableExists(target):
             # first write must CREATE the partitioned table —
             # overwritePartitions requires an existing one
@@ -134,10 +131,7 @@ def append_table(df: DataFrame, target: str,
     """Append rows (lineage): Iceberg append or parquet append."""
     spark = spark or df.sparkSession
     if is_table_identifier(target):
-        if not iceberg_available(spark):
-            raise RuntimeError(
-                f"'{target}' looks like a catalog table but no Iceberg "
-                "runtime is on the classpath")
+        _require_iceberg(spark, target)
         if not spark.catalog.tableExists(target):
             df.writeTo(target).create()
         else:

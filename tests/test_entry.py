@@ -111,7 +111,7 @@ def test_job_cli_lifecycle(spark, tmp_path):
     assert job.main(["--input", half_a, "--output", grown,
                      "--partitions", "4"]) == 0
     assert job.main(["--input", half_b, "--output", grown,
-                     "--upsert"]) == 0
+                     "--upsert", "--render-html"]) == 0
     assert job.main(["--input", both, "--output", fresh,
                      "--partitions", "4"]) == 0
     got = spark.read.parquet(f"{grown}/spans")
@@ -123,6 +123,9 @@ def test_job_cli_lifecycle(spark, tmp_path):
            for r in spark.read.parquet(f"{grown}/lineage").collect()}
     assert lin == {r.part_id: r.checksum
                    for r in lineage(got).collect()}
+    # --render-html after --upsert renders the grown spans table
+    html = spark.read.parquet(f"{grown}/html")
+    assert html.count() == got.select("doc_id").distinct().count()
 
 
 def test_job_cli_refuses_unreadable_lineage(spark, tmp_path):
@@ -146,9 +149,10 @@ def test_job_cli_refuses_unreadable_lineage(spark, tmp_path):
 
 def test_job_cli_rejects_nonpositive_sizes(spark, tmp_path):
     """``--partitions -4`` (``range(-4)`` is no pending id: exit 0 with
-    nothing written) and ``--pages-per-group 0`` (no page boundary ever
-    closes a group: splitting silently off) are refused before any
-    write."""
+    nothing written), ``--pages-per-group 0`` (no page boundary ever
+    closes a group: splitting silently off) and ``--upsert`` with
+    ``--split-min-bytes`` (the upsert has no split path: the flag would
+    be dropped) are refused before any write."""
     import pytest
 
     import job
@@ -165,6 +169,11 @@ def test_job_cli_rejects_nonpositive_sizes(spark, tmp_path):
         with pytest.raises(ValueError, match="must be >= 1"):
             job.main(["--input", src, "--output", str(out), *flags])
         assert not out.exists()
+    out = tmp_path / "upsert_split"
+    with pytest.raises(SystemExit):
+        job.main(["--input", src, "--output", str(out), "--upsert",
+                  "--split-min-bytes", "1000"])
+    assert not out.exists()
 
 
 def test_job_cli_input_pdfs(spark, tmp_path):

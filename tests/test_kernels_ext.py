@@ -137,58 +137,6 @@ def test_unknown_ops_ignored():
     assert [x["text"] for x in b] == ["ok"]
 
 
-# --- shingle guard for <=2-word documents (ADVICE r1, medium) ---------------
-
-def test_short_doc_shingles_do_not_crash(spark):
-    """Spark's sequence(1, 0) is the descending [1, 0]; unguarded shingling
-    crashes with INVALID_INDEX_OF_ZERO on <=2-word docs."""
-    import pandas as pd
-    from pdf2dom_spark.textops import _shingles
-    from pyspark.sql import functions as F
-
-    df = spark.createDataFrame(pd.DataFrame({
-        "doc_id": [1, 2, 3, 4],
-        "text": ["one", "two words", "now three words", ""],
-    }))
-    out = df.select(
-        "doc_id",
-        _shingles(F.split("text", " ")).alias("sh")).orderBy("doc_id")
-    rows = out.collect()
-    assert [len(r.sh) for r in rows] == [0, 0, 1, 0]
-    assert rows[2].sh == ["now three words"]
-
-
-def test_short_doc_dedup_parity_vs_duckdb(spark, tmp_path):
-    """dedup_ngram_jaccard / dedup_minhash / dedup_minhash_lsh run green on a
-    corpus containing 1- and 2-word docs (crash + divergence regression)."""
-    import duckdb
-    import pandas as pd
-    from pdf2dom_spark import textops
-
-    pdf = pd.DataFrame({
-        "doc_id": [1, 2, 3, 4, 5],
-        "lang": ["en", "en", "en", "en", "en"],
-        "text": ["one", "two words",
-                 "alpha beta gamma delta epsilon zeta",
-                 "alpha beta gamma delta epsilon eta",
-                 ""],
-    })
-    sf = str(tmp_path)
-    spark.createDataFrame(pdf).coalesce(1).write.mode("overwrite").parquet(
-        f"{sf}/documents.parquet")
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{sf}/documents.parquet/*.parquet'")
-    for name in ("dedup_ngram_jaccard", "dedup_minhash", "dedup_minhash_lsh"):
-        srows = sorted(tuple(r) for r in
-                       textops.REGISTRY[name](spark, sf).collect())
-        drows = sorted(tuple(r) for r in
-                       con.sql(textops.ORACLES[name]).fetchall())
-        assert len(srows) == len(drows), (name, srows, drows)
-        # near-dup docs 3/4 share shingles -> expect at least one pair
-        assert srows, name
-
-
 def test_pathological_docs_parity_vs_duckdb(spark, tmp_path):
     """Docs with repeated/leading/trailing spaces keep the extraction
     oracles in cross-engine agreement (code-review regression: the kernel
