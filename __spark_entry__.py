@@ -6,9 +6,9 @@
   spans) through the salted pipeline, as nested-style spans (the flat
   ``mapInArrow`` kernel's output with ``style_*`` folded into a
   ``style`` struct by a JVM-side projection).
-- ``queries()`` / ``oracle_sql()`` — the extraction gates (qkernel +
-  qunits), then the text (textops) queries, in registry order; oracles
-  run on DuckDB against the same parquet tables.
+- ``queries()`` / ``oracle_sql()`` — the extraction gates, qkernel's
+  then qunits', in registry order; oracles run on DuckDB against the
+  same parquet tables.
 """
 
 from __future__ import annotations

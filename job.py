@@ -28,7 +28,9 @@ def parse_args(argv):
     p.add_argument("--input", help="documents table (DOC_SCHEMA parquet dir)")
     p.add_argument("--input-pdfs", help="directory/glob of real .pdf files "
                    "to ingest (distributed binaryFile scan -> stdlib PDF "
-                   "parser -> DOC_SCHEMA; pdf2dom_spark.pdfread)")
+                   "parser -> DOC_SCHEMA; pdf2dom_spark.pdfread); a "
+                   "file's doc_id is its path under the input root, the "
+                   "glob's leading components with no glob character")
     p.add_argument("--image-pixels", action="store_true",
                    help="decode image XObjects to pixels and carry the "
                         "reference's PNG re-encode as a data: URI media "
@@ -40,7 +42,9 @@ def parse_args(argv):
     p.add_argument("--input-archives", help="directory/glob of .zip "
                    "archives of PDFs (one binaryFile row per archive -> "
                    "in-memory member parse -> DOC_SCHEMA with "
-                   "<archive>/<member> doc_ids)")
+                   "<archive>/<member> doc_ids, <archive> being the "
+                   "archive's path under the input root as for "
+                   "--input-pdfs)")
     p.add_argument("--synth", help="synthesize corpus from this sf dir instead")
     p.add_argument("--output", required=True)
     p.add_argument("--partitions", type=int, default=0,

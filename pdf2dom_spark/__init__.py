@@ -48,9 +48,8 @@ Modules:
                import-time heap frozen out of the per-task gc
   render_html— optional HTML sink (reference-exact CSS serialization)
   queries    — driver-facing queries() / oracle_sql() registry: the
-               extraction gates of qkernel + qunits, then textops
-               (training-data ops: lang-id, quality scoring, PII scrub,
-               sampling, ...); helpers in qshared
+               extraction gates of qkernel, then qunits; helpers in
+               qshared
 """
 
 __version__ = "0.1.0"

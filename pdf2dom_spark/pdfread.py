@@ -1104,13 +1104,6 @@ def _splice_inline_images(raw: bytes, images: dict,
     return bytes(out), n
 
 
-def _name_sub(content: str, old: str, new: str) -> str:
-    if old == new:
-        return content
-    return re.sub(r"/" + re.escape(old) + r"(?=[\s/\[\]()<>{}%]|$)",
-                  "/" + new, content)
-
-
 def _apply_renames(content: str, renames: dict[str, str]) -> str:
     """ALL name renames in ONE pass: sequential substitution is order-
     dependent when one rename's target equals another's source (e.g.
@@ -1635,6 +1628,33 @@ def pdf_file_to_row(path: str, doc_id: str | None = None,
 # ---------------------------------------------------------------------------
 
 
+def _input_root(spark, path_glob: str) -> str:
+    """The scheme-less absolute path a ``binaryFile`` glob reads under: its
+    leading run of components with no glob character, qualified the way
+    the scan qualifies it (the Hadoop filesystem's working directory)."""
+    parts = []
+    for part in path_glob.split("/"):
+        if any(c in part for c in "*?[{"):
+            break
+        parts.append(part)
+    root = "/".join(parts) or ("/" if path_glob.startswith("/") else ".")
+    path = spark._jvm.org.apache.hadoop.fs.Path(root)  # noqa: SLF001
+    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())  # noqa: SLF001
+    return fs.makeQualified(path).toUri().getPath()
+
+
+def _relative_id(path: str, root: str) -> str:
+    """doc_id of one scanned file: its path relative to the input root
+    (``binaryFile``'s ``path`` is a URI such as ``file:/d/b c/x.pdf``,
+    unescaped), or its basename when the root is the file itself."""
+    import posixpath
+
+    path = re.sub(r"^[A-Za-z][A-Za-z0-9+.-]+:(//[^/]*)?", "", path)
+    if path == root:
+        return posixpath.basename(path)
+    return posixpath.relpath(path, root)
+
+
 def pdf_docs_df(spark, path_glob: str, password: bytes = b"",
                 image_pixels: bool = False):
     """Distributed real-PDF ingest: ``binaryFile`` scan -> per-file parse in
@@ -1645,10 +1665,14 @@ def pdf_docs_df(spark, path_glob: str, password: bytes = b"",
     executors (one row per PDF, content as bytes); parsing is a narrow
     mapInPandas — no shuffle at all until the extraction salt. One monster
     PDF cannot skew a task beyond its own size; the extraction stage
-    re-salts by doc_id hash anyway (pipeline.extract_spans)."""
-    import os
+    re-salts by doc_id hash anyway (pipeline.extract_spans).
 
+    A file's doc_id is its path relative to the glob's input root (see
+    ``_input_root``), so ``a/x.pdf`` and ``b/x.pdf`` stay two documents
+    and the files directly under a given directory keep their names."""
     from .schema import DOC_SCHEMA
+
+    root = _input_root(spark, path_glob)
 
     def parse_batch(it):
         import pandas as pd
@@ -1662,7 +1686,7 @@ def pdf_docs_df(spark, path_glob: str, password: bytes = b"",
                     spans.append(pdf_to_spans(bytes(content),
                                               password=password,
                                               image_pixels=image_pixels))
-                    ids.append(os.path.basename(str(path)))
+                    ids.append(_relative_id(str(path), root))
                 except Exception:
                     # unparseable file: skip, never poison the batch
                     continue
@@ -1772,13 +1796,14 @@ def pdf_archive_docs_df(spark, path_glob: str, suffix: str = "*",
     by magic bytes per container. Same plan as ``pdf_docs_df``:
     binaryFile scan (one row per CONTAINER) -> one narrow mapInPandas
     that opens each container in memory and emits DOC_SCHEMA rows with
-    ``<container>/<member>`` doc_ids. Zero shuffle before the extraction
+    ``<container>/<member>`` doc_ids, the container named as
+    ``pdf_docs_df`` names a file. Zero shuffle before the extraction
     salt; a corrupt container or member degrades to a skip, never
     poisoning its batch. Stdlib codecs only — no temp files on
     executors."""
-    import os
-
     from .schema import DOC_SCHEMA
+
+    root = _input_root(spark, path_glob)
 
     def parse_batch(it):
         import pandas as pd
@@ -1788,7 +1813,7 @@ def pdf_archive_docs_df(spark, path_glob: str, suffix: str = "*",
         for batch in it:
             ids, spans = [], []
             for path, content in zip(batch["path"], batch["content"]):
-                base = os.path.basename(str(path))
+                base = _relative_id(str(path), root)
                 for name, blob in _container_pdf_members(bytes(content)):
                     try:
                         spans.append(pdf_to_spans(

@@ -163,10 +163,6 @@ def lineage(spans: DataFrame) -> DataFrame:
     )
 
 
-class FailureInjection(Exception):
-    pass
-
-
 def _recover_lineage_swap(lineage_dir: str) -> None:
     """Self-heal a crash mid-way through upsert_docs' parquet lineage swap
     (write _new -> rename live aside to _old -> rename _new in -> rm _old).

@@ -1,8 +1,7 @@
 """Full-kernel driver gates: the synthetic corpora through the REAL
 extraction pipeline (tokenize -> interpret -> chunk -> finalize) against
-closed-form DuckDB oracles. Split out of queries.py (VERDICT r4 #9);
-registration order is irrelevant — the sweep self-orders by staleness in
-queries.py."""
+closed-form DuckDB oracles. queries.py merges this registry first, in
+registration order, then qunits'."""
 
 from __future__ import annotations
 

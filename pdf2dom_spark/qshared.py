@@ -1,8 +1,7 @@
 """Shared scaffolding for the driver-gate query modules.
 
-The query registry is split by domain (qkernel / qunits / textops,
-merged in queries.py); these helpers are the pieces the extraction-gate
-modules (qkernel, qunits) share.
+The query registry is split by domain (qkernel / qunits, merged in
+queries.py); these helpers are the pieces the two modules share.
 """
 
 from __future__ import annotations

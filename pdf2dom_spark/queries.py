@@ -1,14 +1,13 @@
 """Driver-gate registry: the domain registries, merged in registry order.
 
 The queries themselves live in the domain modules (qkernel: full-kernel
-cross-engine gates; qunits: per-unit gates; textops: training-data text
-ops); this module merges their registries in that order for
-``__spark_entry__``.
+cross-engine gates; qunits: per-unit gates); this module merges their
+registries in that order for ``__spark_entry__``.
 """
 
 from __future__ import annotations
 
-from . import qkernel, qunits, textops
+from . import qkernel, qunits
 
 
 def _merge(*regs: dict) -> dict:
@@ -20,8 +19,8 @@ def _merge(*regs: dict) -> dict:
     return out
 
 
-REGISTRY: dict = _merge(qkernel.REGISTRY, qunits.REGISTRY, textops.REGISTRY)
-ORACLES: dict = _merge(qkernel.ORACLES, qunits.ORACLES, textops.ORACLES)
+REGISTRY: dict = _merge(qkernel.REGISTRY, qunits.REGISTRY)
+ORACLES: dict = _merge(qkernel.ORACLES, qunits.ORACLES)
 
 
 def all_queries() -> dict:

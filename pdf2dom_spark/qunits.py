@@ -656,7 +656,7 @@ def extract_spans_rich(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the downstream corpus stages — rebuild each document's text from its
 # extracted word spans, quality-filter short docs, exact-dedup the rebuilt
 # texts (keeper = min doc_id per md5), shard by a doc-hash hex char, and
-# pack survivors into fixed-token bins per shard (pack_bins idiom). One
+# pack survivors into fixed-token bins per shard. One
 # value-hash gate over the COMPOSITION: proves extraction output drives
 # filtering/dedup/packing with no seams, not just each stage alone. The
 # oracle replays the chain off the closed-form word stream. 100 TB shape:

@@ -95,15 +95,6 @@ def merge_diacritics(gl: dict, gdoc: np.ndarray) -> tuple[dict, np.ndarray]:
     return {k: v[keep] for k, v in gl.items()}, gdoc[keep]
 
 
-def boxes_from_glyphs(glyphs: dict, page_flush: dict[int, int]) -> dict:
-    """Glyph frame -> columnar text-box records (dict of arrays).
-
-    Single-document wrapper over the batched chunker so the two paths
-    cannot diverge."""
-    boxes, _doc = boxes_from_glyphs_batched([glyphs], [page_flush])
-    return boxes
-
-
 def boxes_from_glyphs_batched(glyph_frames: list[dict],
                               flushes: list[dict]
                               ) -> tuple[dict, np.ndarray]:

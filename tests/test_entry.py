@@ -32,18 +32,55 @@ def test_registry_ignores_working_directory(tmp_path, monkeypatch):
     import json
 
     import __spark_entry__ as e
-    from pdf2dom_spark import qkernel, qunits, textops
+    from pdf2dom_spark import qkernel, qunits
 
     (tmp_path / "CORRECTNESS_r99.json").write_text(json.dumps(
         {name: {"rows_match": True}
          for name in ("extract_spans_rich", "color_hex", "rtl_reverse")}))
     monkeypatch.chdir(tmp_path)
 
-    want = (list(qkernel.REGISTRY) + list(qunits.REGISTRY)
-            + list(textops.REGISTRY))
+    want = list(qkernel.REGISTRY) + list(qunits.REGISTRY)
     assert list(e.queries()) == want
     assert list(e.oracle_sql()) == [n for n in want
                                     if n != "extract_spans_rich"]
+
+
+def test_every_module_name_is_referenced():
+    """Every undecorated, non-dunder top-level def, class or assignment in
+    the package is named somewhere besides its definition: in the
+    package, the tests, the benchmark, job.py or __spark_entry__.py. A
+    name nothing mentions is dead code."""
+    import ast
+    import re
+    from collections import Counter
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent
+    package = sorted((root / "pdf2dom_spark").glob("*.py"))
+    sources = [*package, *(root / "tests").rglob("*.py"),
+               *(root / "perfbench").rglob("*.py"),
+               root / "job.py", root / "__spark_entry__.py"]
+    words = Counter(w for f in sources
+                    for w in re.findall(r"\w+", f.read_text()))
+
+    unused = []
+    for f in package:
+        for node in ast.parse(f.read_text()).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                 ast.ClassDef)):
+                names = [] if node.decorator_list else [node.name]
+            elif isinstance(node, ast.Assign):
+                names = [n.id for t in node.targets for n in ast.walk(t)
+                         if isinstance(n, ast.Name)]
+            elif isinstance(node, ast.AnnAssign) and isinstance(
+                    node.target, ast.Name):
+                names = [node.target.id]
+            else:
+                names = []
+            unused += [f"{f.stem}.{n}" for n in names
+                       if not (n.startswith("__") and n.endswith("__"))
+                       and words[n] < 2]
+    assert not unused, unused
 
 
 def test_job_cli(spark, tmp_path):

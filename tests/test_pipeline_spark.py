@@ -461,6 +461,40 @@ def test_bare_dirname_is_a_path_not_a_table(spark, tmp_path):
         os.chdir(cwd)
 
 
+def test_ingest_doc_ids_are_relative_to_input_root(spark, tmp_path):
+    """Real-PDF ingest names a file by its path under the input root (the
+    glob's leading components with no glob character): same-named files
+    in two directories stay two documents, files directly under a given
+    directory keep their bare names, and archives name their members
+    ``<container>/<member>`` the same way."""
+    import zipfile
+
+    from pdf2dom_spark.corpus import oracle_stream
+    from pdf2dom_spark.pdfread import pdf_archive_docs_df, pdf_docs_df
+    from pdf2dom_spark.pdfwrite import spans_to_pdf
+
+    pdf = spans_to_pdf("x", oracle_stream("x", "two words"))
+    for sub in ("a", "b c"):
+        (tmp_path / sub).mkdir()
+        (tmp_path / sub / "x.pdf").write_bytes(pdf)
+        with zipfile.ZipFile(tmp_path / sub / "batch.zip", "w") as zf:
+            zf.writestr("x.pdf", pdf)
+
+    def ids(df):
+        return sorted(r["doc_id"] for r in df.select("doc_id").collect())
+
+    assert ids(pdf_docs_df(spark, f"{tmp_path}/*")) == ["a/x.pdf",
+                                                        "b c/x.pdf"]
+    assert ids(pdf_docs_df(spark, str(tmp_path / "a"))) == ["x.pdf"]
+    assert ids(pdf_docs_df(spark, str(tmp_path / "a" / "x.pdf"))) == [
+        "x.pdf"]
+    assert ids(pdf_archive_docs_df(spark, f"{tmp_path}/*",
+                                   suffix="*.zip")) == [
+        "a/batch.zip/x.pdf", "b c/batch.zip/x.pdf"]
+    assert ids(pdf_archive_docs_df(spark, str(tmp_path / "a"),
+                                   suffix="*.zip")) == ["batch.zip/x.pdf"]
+
+
 def test_upsert_docs_equals_full_rerun(spark, docs, tmp_path):
     """Incremental re-extraction: after updating a subset of documents,
     upsert_docs must produce exactly the table a full re-run over the

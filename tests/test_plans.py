@@ -28,15 +28,6 @@ def test_filter_pushdown_to_parquet(spark):
     assert "PushedFilters: [IsNotNull(lang), EqualTo(lang,en)]" in plan
 
 
-def test_column_pruning_reaches_scan(spark):
-    from pdf2dom_spark.queries import all_queries
-    q = all_queries()["token_count"](spark, SF_SMOKE)
-    plan = _fmt(q)
-    # only doc_id and text are read, not lang/source/n_chars
-    scan = [ln for ln in plan.splitlines() if "ReadSchema" in ln][0]
-    assert "text" in scan and "lang" not in scan and "n_chars" not in scan
-
-
 def test_corpus_builder_prunes_columns(spark):
     from pdf2dom_spark.corpus import build_docs_df
     docs = build_docs_df(spark, SF_SMOKE, mode="oracle")
@@ -67,10 +58,6 @@ def test_scalar_query_stays_in_codegen(spark):
     s = spark._jvm.PythonSQLUtils.explainString(
         q._jdf.queryExecution(), "codegen")
     assert "Found 1 WholeStageCodegen subtrees" in s
-    # higher-order-function query: not codegen-able, but still pure JVM
-    q2 = all_queries()["quality_score"](spark, SF_SMOKE)
-    plan2 = _plan(q2)
-    assert "ArrowEvalPython" not in plan2 and "BatchEvalPython" not in plan2
 
 
 def test_bucketed_join_avoids_shuffle(spark, tmp_path):
@@ -108,7 +95,7 @@ def test_no_python_udf_outside_extraction(spark):
     from pdf2dom_spark.queries import all_queries
     for name, fn in all_queries().items():
         if name.startswith(("extract_", "render_")):
-            continue  # mapInPandas kernels (the designated Arrow UDFs)
+            continue  # the extraction kernels (the designated Arrow UDFs)
         plan = _plan(fn(spark, SF_SMOKE))
         assert "EvalPython" not in plan, f"{name} uses a Python UDF"
 
@@ -188,29 +175,6 @@ def test_pdf_ingest_is_narrow(spark, tmp_path):
     assert plan.count("MapInPandas") == 1
 
 
-def test_decontaminate_bench_side_is_broadcast(spark):
-    """Decontamination joins the corpus shingles against the (small, fixed)
-    benchmark shingle set via broadcast — no shuffle of the corpus side's
-    exploded grams beyond the final per-doc aggregate."""
-    from pdf2dom_spark.queries import all_queries
-
-    df = all_queries()["decontaminate"](spark, "/root/testdata/sf0.001")
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-
-
-def test_chunk_and_quantize_are_narrow(spark):
-    """Sliding-window chunking is a pure narrow map+generate pipeline:
-    zero Exchange, zero Python."""
-    from pdf2dom_spark.queries import all_queries
-
-    df = all_queries()["doc_chunk_windows"](spark, SF_SMOKE)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
-    assert "MapInPandas" not in plan and "BatchEvalPython" not in plan
-
-
 def test_paged_fused_split_is_single_python_stage(spark):
     """The stress gate's front half (synthesis+split) must be ONE
     MapInPandas fed by the scan with no Exchange before it — the
@@ -270,31 +234,6 @@ def test_runtime_bloom_filter_prunes_shuffle_join(spark):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
-
-
-def test_sample_reservoir_is_take_ordered(spark):
-    """Exact-k reservoir sampling must run as TakeOrderedAndProject —
-    per-partition k-heaps merged on the driver, O(k) memory at any
-    corpus size — never a global Sort + Limit (which shuffles the
-    world)."""
-    from pdf2dom_spark.queries import all_queries
-    q = all_queries()["sample_reservoir"](spark, SF_SMOKE)
-    plan = _plan(q)
-    assert "TakeOrderedAndProject" in plan
-    assert "Exchange rangepartitioning" not in plan
-    assert "EvalPython" not in plan
-
-
-def test_sample_weighted_shape(spark):
-    """Weighted ticket sampling: bounded narrow explode, ONE combinable
-    min-aggregate shuffle, top-k via TakeOrderedAndProject."""
-    from pdf2dom_spark.queries import all_queries
-    q = all_queries()["sample_weighted"](spark, SF_SMOKE)
-    plan = _plan(q)
-    assert "TakeOrderedAndProject" in plan
-    assert plan.count("Exchange hashpartitioning") == 1, plan
-    assert "partial_min" in plan  # map-side combine before the shuffle
-    assert "EvalPython" not in plan
 
 
 def test_extract_spans_realfile_single_shuffle(spark):
