@@ -27,10 +27,11 @@ def parse_args(argv):
     p = argparse.ArgumentParser(description=__doc__)
     p.add_argument("--input", help="documents table (DOC_SCHEMA parquet dir)")
     p.add_argument("--input-pdfs", help="directory/glob of real .pdf files "
-                   "to ingest (distributed binaryFile scan -> stdlib PDF "
-                   "parser -> DOC_SCHEMA; pdf2dom_spark.pdfread); a "
-                   "file's doc_id is its path under the input root, the "
-                   "glob's leading components with no glob character")
+                   "to ingest, subdirectories included (distributed "
+                   "binaryFile scan -> stdlib PDF parser -> DOC_SCHEMA; "
+                   "pdf2dom_spark.pdfread); a file's doc_id is its path "
+                   "under the input root, the glob's leading components "
+                   "with no glob character")
     p.add_argument("--image-pixels", action="store_true",
                    help="decode image XObjects to pixels and carry the "
                         "reference's PNG re-encode as a data: URI media "
@@ -40,7 +41,8 @@ def parse_args(argv):
                    help="password for encrypted input PDFs (tried as user "
                         "then owner; empty-password files open without it)")
     p.add_argument("--input-archives", help="directory/glob of .zip "
-                   "archives of PDFs (one binaryFile row per archive -> "
+                   "archives of PDFs, subdirectories included (one "
+                   "binaryFile row per archive -> "
                    "in-memory member parse -> DOC_SCHEMA with "
                    "<archive>/<member> doc_ids, <archive> being the "
                    "archive's path under the input root as for "

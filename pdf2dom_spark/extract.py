@@ -5,17 +5,25 @@
 PDFDomTree.java:180-217, PDFBoxTree.java:200-210): splice spans to tokens,
 interpret, chunk text boxes, convert layout events, then materialize DOM
 append order as the ``order`` column (appendChild order = content-stream
-order, PDFDomTree.java:222-258). Assembly is columnar end-to-end: the only
-Python-level loops are per *document* and per *layout event* (tens per doc);
-all glyph/box work is numpy. The merge/sort/gather finalize is BATCHED
-across the whole Arrow batch (``extract_doc_parts`` + ``finalize_docs``):
-one global stable lexsort by (doc, emission key) replaces per-document
-argsorts and double concatenation (+31% single-core on the oracle corpus).
+order, PDFDomTree.java:222-258).
+
+Two ways produce the pre-finalize parts of a document, with equal results:
+  - ``extract_doc_parts``: one document's ``list[dict]`` spans through
+    ``doc_tokens`` and ``DocInterp.run`` (per-op Python dispatch);
+  - ``batch_parts``: a whole Arrow batch, read through the ``spans``
+    column's offsets and child arrays (one content buffer per batch),
+    tokenized in one pass (``tokenizer.tokenize_batch``) and interpreted
+    as flat arrays (``interp.run_batch``). A document it does not cover
+    goes through ``extract_doc_parts``; only those are converted to
+    Python dicts.
+The merge/sort/gather finalize is BATCHED across the whole Arrow batch
+(``finalize_docs``): one global stable lexsort by (doc, emission key)
+replaces per-document argsorts and double concatenation.
 
 ``make_extract_arrow`` builds the Spark-facing generator for
-``DataFrame.mapInArrow(kernel, SPAN_FLAT_SCHEMA)``; the nested ``style``
-struct of SPAN_SCHEMA is a JVM-side projection over its output
-(pipeline.extract_spans).
+``DataFrame.mapInArrow(kernel, SPAN_FLAT_SCHEMA)`` on ``batch_parts``; the
+nested ``style`` struct of SPAN_SCHEMA is a JVM-side projection over its
+output (pipeline.extract_spans).
 """
 
 from __future__ import annotations
@@ -25,9 +33,12 @@ from dataclasses import dataclass
 import numpy as np
 
 from . import graphics, memtune, textpipe
-from .interp import (DocInterp, _concat_glyphs_many, doc_cid2_fonts,
-                     doc_cmaps, doc_tokens, doc_vmetrics, doc_widths)
+from .interp import (FRAG_CONTENT, FRAG_FORM, FRAG_OTHER, ChunkFrame,
+                     DocInterp, chunk_frame, doc_cid2_fonts, doc_cmaps,
+                     doc_tokens, doc_vmetrics, doc_widths, glyph_frame,
+                     image_op_args, run_batch)
 from .schema import STYLE_FIELDS
+from .tokenizer import tokenize_batch
 
 
 @dataclass
@@ -95,8 +106,26 @@ def extract_doc_parts(doc_id: str, spans: list[dict],
     )
     glyph_chunks, events, font_table, end_key, page_flush = interp.run(
         tokens, concat=False)
+    title = _title_text(spans)
+    records = _event_records(events, cfg, title)
+    if emit_fonts:
+        _tail_records(records, font_table, end_key, cfg, title, [
+            sp for sp in spans if sp.get("kind") == "fontfile"])
+    return records, glyph_chunks, page_flush
 
-    records: list[dict] = []
+
+def _title_text(spans: list[dict]) -> str | None:
+    """Text of the first document-info title span (None: no title)."""
+    for sp in spans:
+        if sp.get("kind") == "meta" and sp.get("media_ref") == "title":
+            return sp.get("text")
+    return None
+
+
+def _event_records(events: list, cfg: ExtractConfig,
+                   title: str | None) -> list:
+    """Layout events -> span record tuples, images named in event order."""
+    records: list = []
     namer = graphics.ImageNamer()
     # Save-to-dir filename base: bitmap images are named by the DOCUMENT
     # TITLE (ImageResource(getTitle(), ...), PDFBoxTree.java:554,952-958 —
@@ -104,12 +133,7 @@ def extract_doc_parts(doc_id: str, spans: list[dict],
     # resource name. Path images share the same handler instance under the
     # fixed name "PathImage" (PathDrawer.java:71, PDFDomTree.java:399-433),
     # so both kinds de-dup through ONE namer in append order.
-    img_name_base = "PDF Document"
-    for sp in spans:
-        if sp.get("kind") == "meta" and sp.get("media_ref") == "title":
-            if sp.get("text"):
-                img_name_base = sp["text"]
-            break
+    img_name_base = title or "PDF Document"
     for ev in events:
         kind = ev[0]
         if kind == "page":
@@ -138,10 +162,17 @@ def extract_doc_parts(doc_id: str, spans: list[dict],
             else:
                 out_ref = ev[7]
             records.append(graphics.image_record(ev, out_ref))
+    return records
 
+
+def _tail_records(records: list, font_table, end_key: int,
+                  cfg: ExtractConfig, title: str | None,
+                  fontfiles: list[dict]) -> None:
+    """endDocument's records: the font table's @font-face spans, then the
+    document-info title."""
     # endDocument: @font-face per valid table entry (PDFDomTree.java:464-492),
     # skipped entirely under the ignore handler (PDFDomTree.java:456-462)
-    if cfg.font_handler != "ignore" and emit_fonts:
+    if cfg.font_handler != "ignore":
         if cfg.font_payloads or cfg.font_handler == "dir":
             import base64
             from .fontbytes import convert_entry, convert_program
@@ -151,9 +182,7 @@ def extract_doc_parts(doc_id: str, spans: list[dict],
             # the @font-face payload is then the document's own converted
             # binary (FontTable.Entry.getData on actual FontFile bytes)
             real_progs: dict[str, tuple[str, bytes]] = {}
-            for sp in spans:
-                if sp.get("kind") != "fontfile":
-                    continue
+            for sp in fontfiles:
                 nm = (sp.get("media_ref") or "")
                 nm = nm[9:] if nm.startswith("fontfile:") else nm
                 kindp, _, b64 = (sp.get("text") or "").partition(";")
@@ -195,26 +224,39 @@ def extract_doc_parts(doc_id: str, spans: list[dict],
     # document-info title (endDocument, PDFDomTree.java:165-174): a 'meta'
     # span models PDDocumentInformation; surfaced as a trailing record only
     # when non-blank (the reference keeps the default title otherwise)
-    if emit_fonts:
-        for sp in spans:
-            if sp.get("kind") == "meta" and sp.get("media_ref") == "title":
-                t = (sp.get("text") or "").strip()
-                if t:
-                    records.append(graphics.make_rec(
-                        end_key + 1 + len(font_table.entries) + 1, "meta",
-                        text=sp.get("text"), media_ref="title"))
-                break
-
-    return records, glyph_chunks, page_flush
+    if (title or "").strip():
+        records.append(graphics.make_rec(
+            end_key + 1 + len(font_table.entries) + 1, "meta",
+            text=title, media_ref="title"))
 
 
-def finalize_docs(parts: list[tuple[list, dict, dict]],
+@dataclass
+class BatchParts:
+    """Pre-finalize parts of a batch of documents: per document its event
+    records and page-flush keys, and all shows as one ChunkFrame."""
+    records: list
+    chunks: ChunkFrame
+    flushes: list
+
+    def __len__(self) -> int:
+        return len(self.records)
+
+    @staticmethod
+    def from_doc_parts(parts: list[tuple[list, list, dict]]
+                       ) -> "BatchParts":
+        return BatchParts([r for r, _g, _f in parts],
+                          chunk_frame([g for _r, g, _f in parts]),
+                          [f for _r, _g, f in parts])
+
+
+def finalize_docs(parts: "BatchParts | list[tuple[list, list, dict]]",
                   columns: set[str] | None = None
                   ) -> tuple[dict, np.ndarray]:
     """Batched finalize: chunk every document's glyphs into text boxes
-    (one batched gaps-and-islands pass, textpipe.boxes_from_glyphs_batched)
-    and merge them with the event records into GLOBAL doc-major span
-    columns in DOM append order.
+    (one batched gaps-and-islands pass, textpipe.boxes_core) and merge
+    them with the event records into GLOBAL doc-major span columns in DOM
+    append order. ``parts``: a BatchParts, or per-document
+    ``extract_doc_parts`` results.
 
     Per-document DOM order is the stable sort of [events..., boxes...] by
     emission key (appendChild order = content-stream order,
@@ -226,11 +268,12 @@ def finalize_docs(parts: list[tuple[list, dict, dict]],
     numpy pass for the whole Arrow batch.
 
     Returns (columns dict incl. ``order``, per-doc span counts)."""
+    if not isinstance(parts, BatchParts):
+        parts = BatchParts.from_doc_parts(parts)
     ndocs = len(parts)
-    ne = np.fromiter((len(r) for r, _g, _f in parts), np.int64, ndocs)
-    frame, gdoc = _concat_glyphs_many([g for _r, g, _f in parts])
-    boxes, box_doc = textpipe.boxes_core(
-        frame, gdoc, [f for _r, _g, f in parts])
+    ne = np.fromiter((len(r) for r in parts.records), np.int64, ndocs)
+    frame, gdoc = glyph_frame(parts.chunks)
+    boxes, box_doc = textpipe.boxes_core(frame, gdoc, parts.flushes)
     n_ev = int(ne.sum())
     n_bx = len(box_doc)
     nb = np.bincount(box_doc, minlength=ndocs) if n_bx \
@@ -238,7 +281,7 @@ def finalize_docs(parts: list[tuple[list, dict, dict]],
     counts = ne + nb
     total = n_ev + n_bx
 
-    all_recs = [r for recs, _g, _f in parts for r in recs]
+    all_recs = [r for recs in parts.records for r in recs]
     # fixed-order record tuples -> one C-level transpose (no per-field loop)
     rec_cols = list(zip(*all_recs)) if all_recs else [()] * len(_REC_COLS)
 
@@ -308,9 +351,11 @@ def extract_doc(doc_id: str, spans: list[dict],
 
 
 def docs_to_arrow_spans(doc_ids, spans_col, parts, cfg: ExtractConfig):
-    """Columnar core of every unsplit extraction: python lists in -> ONE
-    pyarrow RecordBatch with the SPAN_FLAT schema out (``parts``: per-doc
-    part_id values, or None for a null column)."""
+    """Per-document extraction of python lists -> ONE pyarrow RecordBatch
+    with the SPAN_FLAT schema (``parts``: per-doc part_id values, or None
+    for a null column). The kernels that synthesize their documents in
+    the worker use it; the mapInArrow kernel reads Arrow batches through
+    ``batch_parts`` instead."""
     parts_list = [extract_doc_parts(str(doc_id), spans, cfg)
                   for doc_id, spans in zip(doc_ids, spans_col)]
     return parts_to_arrow(parts_list, doc_ids, parts)
@@ -390,8 +435,156 @@ def _arrow_schema():
     return to_arrow_schema(SPAN_FLAT_SCHEMA)
 
 
+# span kinds -> how a document's stream uses them (doc_tokens): content
+# fragments, image placements, form definitions, skipped spans, and the
+# kinds the batch interpreter leaves to the per-document path (encodings,
+# width tables and font programs change how shows decode and advance)
+_K_CONTENT, _K_IMAGE, _K_FORM, _K_SKIP, _K_FALLBACK = range(5)
+_KIND_CAT = {"image": _K_IMAGE, "form": _K_FORM, "meta": _K_SKIP,
+             "cmap": _K_FALLBACK, "widths": _K_FALLBACK,
+             "fontfile": _K_FALLBACK}
+
+
+def _utf32(arr) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """A pyarrow string array -> (code points of all its values end to
+    end, start, end per value; a null value is empty)."""
+    import pyarrow as pa
+
+    n = len(arr)
+    if not n:
+        return (np.zeros(0, np.uint32), np.zeros(0, np.int64),
+                np.zeros(0, np.int64))
+    bufs = arr.buffers()
+    odt = np.int64 if pa.types.is_large_string(arr.type) else np.int32
+    o = np.frombuffer(bufs[1], odt)[arr.offset:arr.offset + n + 1]
+    o = o.astype(np.int64)
+    data = (np.frombuffer(bufs[2], np.uint8)[o[0]:o[-1]]
+            if bufs[2] is not None else np.zeros(0, np.uint8))
+    rel = o - o[0]
+    codes = np.frombuffer(data.tobytes().decode("utf-8").encode("utf-32-le"),
+                          dtype=np.uint32)
+    if len(data) and int(data.max()) >= 128:
+        cnt = np.zeros(len(data) + 1, dtype=np.int64)
+        np.cumsum((data & 0xC0) != 0x80, out=cnt[1:])
+        rel = cnt[rel]
+    starts, ends = rel[:-1], rel[1:].copy()
+    if arr.null_count:
+        ends = np.where(np.asarray(arr.is_valid()), ends, starts)
+    return codes, starts, ends
+
+
+def batch_parts(batch, cfg: ExtractConfig = DEFAULT_CONFIG) -> BatchParts:
+    """One Arrow batch of DOC_SCHEMA rows -> BatchParts. The ``spans``
+    column is read through its offsets and child arrays, tokenized as one
+    buffer (``tokenizer.tokenize_batch``) and interpreted as one batch
+    (``interp.run_batch``); a document the batch path does not cover —
+    encodings, width tables, font programs, or any operator, operand or
+    token outside its set — goes through ``extract_doc_parts``, and only
+    those documents are converted to Python dicts."""
+    names = batch.schema.names
+    spans = batch.column(names.index("spans"))
+    n = batch.num_rows
+    fallback = np.zeros(n, dtype=bool)
+    if spans.null_count:
+        fallback |= ~np.asarray(spans.is_valid())
+    offs = np.asarray(spans.offsets).astype(np.int64)
+    child = spans.values.slice(int(offs[0]), int(offs[-1] - offs[0]))
+    offs -= offs[0]
+    st = child.type
+    kind, text, mref, offset = (
+        child.field(st.get_field_index(f))
+        for f in ("kind", "text", "media_ref", "offset"))
+    span_doc = np.repeat(np.arange(n), np.diff(offs))
+    if child.null_count:
+        fallback[span_doc[~np.asarray(child.is_valid())]] = True
+
+    enc = kind.dictionary_encode()
+    lut = np.array([_KIND_CAT.get(k, _K_CONTENT)
+                    for k in enc.dictionary.to_pylist()] + [_K_CONTENT])
+    idx = enc.indices.fill_null(len(lut) - 1)
+    cat = lut[np.asarray(idx)]
+    fallback[span_doc[cat == _K_FALLBACK]] = True
+    if offset.null_count:
+        fallback[span_doc[~np.asarray(offset.is_valid())]] = True
+    off = np.asarray(offset.fill_null(0)).astype(np.int64)
+    try:
+        codes, cst, cen = _utf32(text)
+    except UnicodeDecodeError:
+        fallback[:] = True
+        codes = np.zeros(0, np.uint32)
+        cst = cen = np.zeros(len(child), np.int64)
+
+    # spans in stream order: by document, then offset (stable)
+    order = np.lexsort((off, span_doc))
+    rank = np.empty(len(order), dtype=np.int64)
+    rank[order] = np.arange(len(order))
+    live = ~fallback[span_doc]
+    fkind = np.full(len(cat), FRAG_OTHER)
+    fkind[live & (cat == _K_CONTENT)] = FRAG_CONTENT
+    fkind[live & (cat == _K_FORM)] = FRAG_FORM
+    forms = np.flatnonzero(fkind == FRAG_FORM)
+    imgs = order[live[order] & (cat[order] == _K_IMAGE)]
+    named = np.concatenate((forms, imgs))
+    named_ref = dict(zip(named.tolist(), mref.take(named).to_pylist()))
+
+    def span_text(i: int) -> str:
+        return codes[cst[i]:cen[i]].tobytes().decode("utf-32-le")
+
+    frag_form = {}
+    for i in forms.tolist():
+        nm = named_ref[i] or ""
+        frag_form[i] = nm[5:] if nm.startswith("form:") else nm
+    img_args = [image_op_args(span_text(i), named_ref[i])
+                for i in imgs.tolist()]
+
+    run = run_batch(
+        tokenize_batch(codes, cst, cen), span_doc, rank, fkind, frag_form,
+        span_doc[imgs], rank[imgs], img_args, n,
+        start_page=cfg.start_page, end_page=cfg.end_page,
+        disable_graphics=cfg.disable_graphics,
+        disable_images=cfg.disable_images,
+        collect_fonts=cfg.font_handler != "ignore",
+        raster_paths=cfg.raster_paths)
+    fallback |= ~run.covered
+
+    # document-info titles: the first title span in input order
+    titles: dict[int, str | None] = {}
+    meta = np.flatnonzero(cat == _K_SKIP)
+    if len(meta):
+        for i, ref in zip(meta.tolist(), mref.take(meta).to_pylist()):
+            d = int(span_doc[i])
+            if ref == "title" and d not in titles:
+                titles[d] = span_text(i) if text.is_valid()[i].as_py() \
+                    else None
+
+    records: list = [None] * n
+    flushes: list = [None] * n
+    for d in np.flatnonzero(~fallback).tolist():
+        title = titles.get(d)
+        recs = _event_records(run.events[d], cfg, title)
+        _tail_records(recs, run.fonts[d], int(run.end_key[d]), cfg, title,
+                      [])
+        records[d] = recs
+        flushes[d] = run.flushes[d]
+    chunks = run.chunks
+    fb = np.flatnonzero(fallback)
+    if len(fb):
+        doc_ids = batch.column(names.index("doc_id"))
+        fb_chunks = []
+        for d in fb.tolist():
+            r, g, f = extract_doc_parts(str(doc_ids[d].as_py()),
+                                        spans[d].as_py(), cfg)
+            records[d], flushes[d] = r, f
+            fb_chunks.append(g)
+        fcf = chunk_frame(fb_chunks)
+        fcf.doc = fb[fcf.doc]
+        chunks = chunks.concat_sorted(fcf)
+    return BatchParts(records, chunks, flushes)
+
+
 def make_extract_arrow(cfg: ExtractConfig = DEFAULT_CONFIG):
-    """mapInArrow kernel: pyarrow batches in/out, flat schema."""
+    """mapInArrow kernel: pyarrow batches in/out, flat schema. Each batch
+    is interpreted as a whole (``batch_parts``)."""
 
     def extract_arrow(batches):
         memtune.tune_worker()
@@ -404,11 +597,11 @@ def make_extract_arrow(cfg: ExtractConfig = DEFAULT_CONFIG):
         for b in batches:
             names = b.schema.names
             doc_ids = b.column(names.index("doc_id")).to_pylist()
-            spans_col = b.column(names.index("spans")).to_pylist()
             if "part_id" in names:
                 parts = b.column(names.index("part_id")).to_pylist()
             else:
                 parts = [pid] * len(doc_ids)
-            yield docs_to_arrow_spans(doc_ids, spans_col, parts, cfg)
+            yield parts_to_arrow(batch_parts(b, cfg), doc_ids, parts)
+        memtune.task_done()
 
     return extract_arrow

@@ -3,10 +3,18 @@
 Reimplements the stateful single-pass of the reference
 (``PDFBoxTree.processOperator`` PDFBoxTree.java:410-542 and
 ``processTextPosition`` PDFBoxTree.java:592-656 / PDFBox's
-LegacyPDFStreamEngine glyph positioning) as a per-document scan whose
-high-cardinality inner work (per-glyph positions/advances) is numpy-vectorized
-per show-string. No per-row Python at the Spark level: this runs inside
-``mapInArrow`` over Arrow batches.
+LegacyPDFStreamEngine glyph positioning) twice, with equal results:
+  - ``DocInterp.run``: a per-document scan of ``(op, args)`` tuples whose
+    high-cardinality inner work (per-glyph positions/advances) is
+    numpy-vectorized per show-string; it covers every operator and every
+    damaged operand shape;
+  - ``run_batch``: a whole Arrow batch at once over the flat operator
+    arrays of ``tokenizer.tokenize_batch``, the running state turned into
+    cumulative array operations (see the block comment above it). The
+    mapInArrow kernel uses it for every document whose operators and
+    operand shapes it covers, and ``DocInterp.run`` for the rest.
+Both produce layout events, the font table and the shows, which
+``glyph_frame`` turns into the batch's glyph frame.
 
 State tracked (mirrors the reference's mutable fields):
   - graphics stack for q/Q: CTM, colors, line width, text state
@@ -42,7 +50,8 @@ from dataclasses import dataclass, field
 import numpy as np
 
 from . import fonts as F
-from .tokenizer import PdfName, tokenize
+from .tokenizer import (ARG_ARR, ARG_NAME, ARG_NUM, ARG_STR, TK_NUM, TK_OP,
+                        TK_STR, PdfName, op_key, tokenize)
 
 # Sub-ordering space per token: event key = token_seq * KEY_STRIDE + sub.
 KEY_STRIDE = 1 << 20
@@ -545,49 +554,6 @@ class DocInterp:
             uy = x * c01 + y * c11 + c21
             return (ux * p00 + uy * p10 + p20, ux * p01 + uy * p11 + p21)
 
-        def transform_width(w: float) -> float:
-            """PDFBox PDFStreamEngine.transformWidth."""
-            x = g.ctm[0, 0] + g.ctm[1, 0]
-            y = g.ctm[0, 1] + g.ctm[1, 1]
-            return w * math.sqrt((x * x + y * y) * 0.5)
-
-        def render_path(key: int, stroke: bool, fill: bool) -> None:
-            """PDFDomTree.renderPath dispatch (PDFDomTree.java:234-252)."""
-            rect = _to_rectangle(path)
-            if rect is not None:
-                lw = transform_width(g.line_width)
-                events.append(("rect", key, page_no, rect[0], rect[1],
-                               rect[2] - rect[0], rect[3] - rect[1], lw,
-                               stroke, fill, color_hex(g.stroke_rgb),
-                               color_hex(g.fill_rgb)))
-            elif stroke:
-                lw = transform_width(g.line_width)
-                for i, seg in enumerate(path):
-                    events.append(("line", key + i, page_no, seg[0], seg[1],
-                                   seg[2], seg[3], lw, color_hex(g.stroke_rgb)))
-            elif path:
-                # PathDrawer.drawPath bounds (PathDrawer.java:43-136):
-                # int-truncated min/max over both endpoints; degenerate -> 1x1.
-                xs = [_jint(v) for s in path for v in (s[0], s[2])]
-                ys = [_jint(v) for s in path for v in (s[1], s[3])]
-                x0, y0 = min(xs), min(ys)
-                w, h = max(xs) - x0, max(ys) - y0
-                if w <= 0 or h <= 0:
-                    w = h = 1
-                if self.raster_paths:
-                    from .raster import draw_path_png
-                    ref = draw_path_png(path, g.fill_rgb, x0, y0, w, h)
-                else:
-                    ref = "path:" + hashlib.sha256(
-                        (";".join(
-                            f"{_jint(s[0])},{_jint(s[1])},"
-                            f"{_jint(s[2])},{_jint(s[3])}"
-                            for s in path)
-                         + "|" + color_hex(g.fill_rgb)).encode()
-                    ).hexdigest()[:16]
-                events.append(("pathimg", key, page_no, float(x0), float(y0),
-                               float(w), float(h), ref))
-
         font_cache: dict[tuple, tuple] = {}
 
         def _font_style(font: str) -> tuple:
@@ -877,29 +843,6 @@ class DocInterp:
                 return None
             return bases, strs, xs, ys, j, tl
 
-        def do_image(key: int, media_ref: str, iw: float, ih: float,
-                     name: str) -> None:
-            """processImageOperation + calculateImagePosition
-            (PDFBoxTree.java:544-590)."""
-            if iw <= 0 or ih <= 0:
-                return
-            m = compose(mat(1, 0, 0, 1, 0, -ih),
-                        compose(mat(1.0 / iw, 0, 0, -1.0 / ih, 0, 0),
-                                compose(g.ctm, page_m)))
-            corners = apply_pts(m, np.array(
-                [[0.0, 0.0], [iw, 0.0], [0.0, ih], [iw, ih]]))
-            x0, y0 = corners.min(axis=0)
-            x1, y1 = corners.max(axis=0)
-            # rotateImage: rotation-only component of the CTM minus the page
-            # rotation (PDFBoxTree.java:564-575: atan2(shearY, scaleY));
-            # the reference applies it to the raster pixels — we record the
-            # angle on the span (the payload ref stays content-stable)
-            angle = math.degrees(
-                math.atan2(g.ctm[0, 1], g.ctm[1, 1])) - page_rot
-            events.append(("image", key, page_no, float(x0), float(y0),
-                           float(x1 - x0), float(y1 - y0), media_ref, name,
-                           angle))
-
         i = 0
         ntok = len(tokens)
         while i < ntok:
@@ -1116,22 +1059,13 @@ class DocInterp:
                     path.append((p1[0], p2[1], p1[0], p1[1]))
 
             # --- path painting (PDFBoxTree.java:496-532) ----------------------
-            elif op in ("f", "F", "f*"):
-                render_path(base, stroke=False, fill=True)
-                path = []
-            elif op == "S":
-                render_path(base, stroke=True, fill=False)
-                path = []
-            elif op == "s":
-                path.append((px, py, psx, psy))
-                render_path(base, stroke=True, fill=False)
-                path = []
-            elif op in ("B", "B*"):
-                render_path(base, stroke=True, fill=True)
-                path = []
-            elif op in ("b", "b*"):
-                path.append((px, py, psx, psy))
-                render_path(base, stroke=True, fill=True)
+            elif op in _PAINT_OPS:
+                stroke, fill, close = _PAINT_OPS[op]
+                if close:
+                    path.append((px, py, psx, psy))
+                render_path(events, path, base, page_no, stroke, fill,
+                            g.ctm, g.line_width, g.stroke_rgb, g.fill_rgb,
+                            self.raster_paths)
                 path = []
             elif op == "n":
                 path = []
@@ -1144,8 +1078,9 @@ class DocInterp:
                 if (not self.disable_images
                         and isinstance(args[0], str)
                         and (nv := _nums(args[1:3], 2)) is not None):
-                    do_image(base, args[0], nv[0], nv[1],
-                             str(args[3]) if len(args) > 3 else "Untitled")
+                    image_event(events, base, page_no, args[0], nv[0], nv[1],
+                                str(args[3]) if len(args) > 3 else "Untitled",
+                                g.ctm, page_m, page_rot)
             # plain named Do without a registry entry: not an image XObject
             # -> ignored (PDFBoxTree.java:548 instanceof check)
 
@@ -1154,7 +1089,7 @@ class DocInterp:
             page_flush[flush_page] = end_key
         # concat=False hands the raw show chunks to the caller so the
         # glyph-frame build can run ONCE per Arrow batch
-        # (_concat_glyphs_many) instead of once per document
+        # (glyph_frame) instead of once per document
         glyphs = _concat_glyphs(glyph_chunks) if concat else glyph_chunks
         return glyphs, events, self.font_table, end_key, page_flush
 
@@ -1192,8 +1127,119 @@ def _to_rectangle(path: list[tuple]) -> list[float] | None:
     return None
 
 
+# path-painting operators -> (stroke, fill, close the subpath first)
+_PAINT_OPS = {"f": (False, True, False), "F": (False, True, False),
+              "f*": (False, True, False), "S": (True, False, False),
+              "s": (True, False, True), "B": (True, True, False),
+              "B*": (True, True, False), "b": (True, True, True),
+              "b*": (True, True, True)}
+
+
+def transform_width(w: float, ctm: np.ndarray) -> float:
+    """PDFBox PDFStreamEngine.transformWidth."""
+    x = ctm[0, 0] + ctm[1, 0]
+    y = ctm[0, 1] + ctm[1, 1]
+    return w * math.sqrt((x * x + y * y) * 0.5)
+
+
+def render_path(events: list, path: list, key: int, page_no: int,
+                stroke: bool, fill: bool, ctm: np.ndarray,
+                line_width: float, stroke_rgb: tuple, fill_rgb: tuple,
+                raster_paths: bool) -> None:
+    """PDFDomTree.renderPath dispatch (PDFDomTree.java:234-252): the
+    events one path paint appends, from the device-space segments
+    ``path`` and the graphics state at the paint."""
+    rect = _to_rectangle(path)
+    if rect is not None:
+        lw = transform_width(line_width, ctm)
+        events.append(("rect", key, page_no, rect[0], rect[1],
+                       rect[2] - rect[0], rect[3] - rect[1], lw,
+                       stroke, fill, color_hex(stroke_rgb),
+                       color_hex(fill_rgb)))
+    elif stroke:
+        lw = transform_width(line_width, ctm)
+        for i, seg in enumerate(path):
+            events.append(("line", key + i, page_no, seg[0], seg[1],
+                           seg[2], seg[3], lw, color_hex(stroke_rgb)))
+    elif path:
+        # PathDrawer.drawPath bounds (PathDrawer.java:43-136):
+        # int-truncated min/max over both endpoints; degenerate -> 1x1.
+        xs = [_jint(v) for s in path for v in (s[0], s[2])]
+        ys = [_jint(v) for s in path for v in (s[1], s[3])]
+        x0, y0 = min(xs), min(ys)
+        w, h = max(xs) - x0, max(ys) - y0
+        if w <= 0 or h <= 0:
+            w = h = 1
+        if raster_paths:
+            from .raster import draw_path_png
+            ref = draw_path_png(path, fill_rgb, x0, y0, w, h)
+        else:
+            ref = _path_ref(xs, ys, color_hex(fill_rgb))
+        events.append(("pathimg", key, page_no, float(x0), float(y0),
+                       float(w), float(h), ref))
+
+
+_PATH_REF_CACHE: dict[tuple, str] = {}
+
+
+def _path_ref(xs: list, ys: list, color: str) -> str:
+    """Content-hash ref of a filled path from its int-truncated endpoint
+    coordinates (x1, x2 and y1, y2 per segment) and fill color; shapes
+    repeat across pages, so the hash is memoized."""
+    ck = (tuple(xs), tuple(ys), color)
+    hit = _PATH_REF_CACHE.get(ck)
+    if hit is None:
+        hit = "path:" + hashlib.sha256(
+            (";".join(f"{xs[2 * i]},{ys[2 * i]},{xs[2 * i + 1]},"
+                      f"{ys[2 * i + 1]}" for i in range(len(xs) // 2))
+             + "|" + color).encode()).hexdigest()[:16]
+        if len(_PATH_REF_CACHE) < 4096:
+            _PATH_REF_CACHE[ck] = hit
+    return hit
+
+
+def image_event(events: list, key: int, page_no: int, media_ref: str,
+                iw: float, ih: float, name: str, ctm: np.ndarray,
+                page_m: np.ndarray, page_rot: int) -> None:
+    """processImageOperation + calculateImagePosition
+    (PDFBoxTree.java:544-590)."""
+    if iw <= 0 or ih <= 0:
+        return
+    # placements repeat (one logo or layout per page of a corpus): the
+    # geometry is a pure function of the operands and both matrices
+    ck = (iw, ih, ctm.tobytes(), page_m.tobytes(), page_rot)
+    hit = _IMAGE_GEOM_CACHE.get(ck)
+    if hit is None:
+        hit = _image_geom(iw, ih, ctm, page_m, page_rot)
+        if len(_IMAGE_GEOM_CACHE) < 4096:
+            _IMAGE_GEOM_CACHE[ck] = hit
+    events.append(("image", key, page_no, *hit[:4], media_ref, name, hit[4]))
+
+
+_IMAGE_GEOM_CACHE: dict[tuple, tuple] = {}
+
+
+def _image_geom(iw: float, ih: float, ctm: np.ndarray, page_m: np.ndarray,
+                page_rot: int) -> tuple:
+    """(x, y, width, height, angle) of an image placement."""
+    m = compose(mat(1, 0, 0, 1, 0, -ih),
+                compose(mat(1.0 / iw, 0, 0, -1.0 / ih, 0, 0),
+                        compose(ctm, page_m)))
+    corners = apply_pts(m, np.array(
+        [[0.0, 0.0], [iw, 0.0], [0.0, ih], [iw, ih]]))
+    x0, y0 = corners.min(axis=0)
+    x1, y1 = corners.max(axis=0)
+    # rotateImage: rotation-only component of the CTM minus the page
+    # rotation (PDFBoxTree.java:564-575: atan2(shearY, scaleY));
+    # the reference applies it to the raster pixels — we record the
+    # angle on the span (the payload ref stays content-stable)
+    angle = math.degrees(math.atan2(ctm[0, 1], ctm[1, 1])) - page_rot
+    return (float(x0), float(y0), float(x1 - x0), float(y1 - y0), angle)
+
+
 # show-record tuple slots (see DocInterp.run.show)
-_K_KEY, _K_S, _K_CODES, _K_ADV = 0, 1, 2, 3
+# (slot 1 is the show string; the glyph frame reads its code points)
+_K_KEY, _K_CODES, _K_ADV = 0, 2, 3
 _K_AX, _K_BX, _K_AY, _K_BY, _K_M00, _K_PAGE = 4, 5, 6, 7, 8, 9
 _SCALAR_F64 = {  # column -> tuple slot
     "height": 10, "xscale": 11, "yscale": 12, "ascent": 13, "descent": 14,
@@ -1206,86 +1252,93 @@ _SCALAR_OBJ = {
 
 
 def _concat_glyphs(chunks: list[tuple]) -> dict:
-    """One document's show records -> glyph frame (see
-    ``_concat_glyphs_many``; single-doc wrapper so the paths share code)."""
-    out, _gdoc = _concat_glyphs_many([chunks])
+    """One document's show records -> glyph frame (the batched
+    ``glyph_frame`` over one document, so the paths share code)."""
+    out, _gdoc = glyph_frame(chunk_frame([chunks]))
     return out
 
 
-def _concat_glyphs_many(chunk_lists: list[list[tuple]]
-                        ) -> tuple[dict, np.ndarray]:
-    """Batched finalize of MANY documents' show records: one segmented
-    prefix sum over ALL advances, then positions dev = cum*A + B, widths
-    adv*m00, keys base + within-show index — a handful of whole-BATCH
-    vector ops instead of per-show (or even per-document) small-array
-    work. Returns (global glyph frame, per-glyph document index).
+# per-show float columns of a ChunkFrame, in ``ChunkFrame.f64`` order
+_F64_COLS = ("ax", "bx", "ay", "by", "m00", *_SCALAR_F64)
+_F64_SLOTS = (_K_AX, _K_BX, _K_AY, _K_BY, _K_M00, *_SCALAR_F64.values())
 
-    Cross-document safety: the page-segmented prefix sum also breaks at
-    document boundaries (two adjacent documents can share a page number),
-    and the style-identity dict is global — ids stay equality-faithful
-    within any single document, which is the only scope the chunker
-    compares them in."""
+
+@dataclass
+class ChunkFrame:
+    """Show records of many documents as columns: one row per non-empty
+    show, doc-major and in stream order within a document. ``f64`` holds
+    the _F64_COLS per show, ``obj`` the _SCALAR_OBJ string columns,
+    ``sid`` the style identity (equal ids <=> equal 8-field BoxStyle
+    identity, within one document), ``codes``/``adv`` the glyphs' code
+    points and advances, show after show. Built from per-document show
+    tuples (``chunk_frame``) or directly by the batch interpreter."""
+    doc: np.ndarray
+    key: np.ndarray
+    page: np.ndarray
+    lens: np.ndarray
+    f64: np.ndarray
+    obj: dict
+    sid: np.ndarray
+    codes: np.ndarray
+    adv: np.ndarray
+
+    @staticmethod
+    def empty() -> "ChunkFrame":
+        i = np.empty(0, dtype=np.int64)
+        return ChunkFrame(i, i, i, i, np.empty((0, len(_F64_COLS))),
+                          {c: np.empty(0, dtype=object) for c in _SCALAR_OBJ},
+                          np.empty(0, dtype=np.int32),
+                          np.empty(0, dtype=np.uint32), np.empty(0))
+
+    def concat_sorted(self, other: "ChunkFrame") -> "ChunkFrame":
+        """Both frames' shows, doc-major (stable: each document's shows
+        come from one frame and keep their order)."""
+        if not len(other.doc):
+            return self
+        if not len(self.doc):
+            return other
+        doc = np.concatenate((self.doc, other.doc))
+        order = np.argsort(doc, kind="stable")
+        lens = np.concatenate((self.lens, other.lens))
+        gst = np.zeros(len(lens), dtype=np.int64)
+        np.cumsum(lens[:-1], out=gst[1:])
+        ol = lens[order]
+        ng = int(ol.sum())
+        ost = np.zeros(len(ol), dtype=np.int64)
+        np.cumsum(ol[:-1], out=ost[1:])
+        gidx = np.repeat(gst[order] - ost, ol) + np.arange(ng)
+        # style ids are only compared within a document, and each
+        # document's shows come from one frame
+        sid = np.concatenate((self.sid, other.sid))
+        return ChunkFrame(
+            doc[order], np.concatenate((self.key, other.key))[order],
+            np.concatenate((self.page, other.page))[order], ol,
+            np.concatenate((self.f64, other.f64))[order],
+            {c: np.concatenate((self.obj[c], other.obj[c]))[order]
+             for c in _SCALAR_OBJ},
+            sid[order].astype(np.int32),
+            np.concatenate((self.codes, other.codes))[gidx],
+            np.concatenate((self.adv, other.adv))[gidx])
+
+
+def chunk_frame(chunk_lists: list[list[tuple]]) -> ChunkFrame:
+    """Per-document show tuples (``DocInterp.run(concat=False)``) ->
+    ChunkFrame with document index = position in ``chunk_lists``."""
     ndocs = len(chunk_lists)
-    nch_per = np.fromiter((len(cl) for cl in chunk_lists), np.int64, ndocs)
     chunks = [ch for cl in chunk_lists for ch in cl]
     if not chunks:
-        return ({c: np.array([]) for c in GLYPH_COLS},
-                np.empty(0, dtype=np.int64))
+        return ChunkFrame.empty()
     nch = len(chunks)
-    chunk_doc = np.repeat(np.arange(ndocs, dtype=np.int64), nch_per)
+    doc = np.repeat(np.arange(ndocs, dtype=np.int64), np.fromiter(
+        (len(cl) for cl in chunk_lists), np.int64, ndocs))
     lens = np.fromiter((len(ch[_K_ADV]) for ch in chunks), dtype=np.int64,
                        count=nch)
-    n = int(lens.sum())
-    adv = np.concatenate([ch[_K_ADV] for ch in chunks])
-    codes = np.concatenate([ch[_K_CODES] for ch in chunks])
-    starts = np.zeros(nch, dtype=np.int64)
-    np.cumsum(lens[:-1], out=starts[1:])
-    # Prefix-sum the advances PER PAGE, not per document: a doc-global
-    # cumsum makes every glyph position carry rounding error from all
-    # earlier pages, so the page-split path (pagesplit.py groups at page
-    # boundaries) would drift from the unsplit path at the 1e-13 level.
-    # Page-local accumulation is bit-identical under any page-aligned
-    # split and strictly closer to the reference's per-show arithmetic.
-    pg = np.fromiter((ch[_K_PAGE] for ch in chunks), dtype=np.int64,
-                     count=nch)
-    page_chunk_starts = np.flatnonzero(
-        np.concatenate(([True], (pg[1:] != pg[:-1])
-                        | (chunk_doc[1:] != chunk_doc[:-1]))))
-    gps = starts[page_chunk_starts]            # glyph index per page start
-    cs = np.empty(n)
-    pb = np.append(gps, n)
-    for a, b in zip(pb[:-1], pb[1:]):
-        cs[a] = 0.0
-        if b - a > 1:
-            np.cumsum(adv[a:b - 1], out=cs[a + 1:b])
-    cum = cs - np.repeat(cs[starts], lens)
-
-    # ONE 2-D row-repeat for all 12 per-chunk float scalars instead of 12
-    # per-column np.repeat passes (same values, one memory sweep)
-    _f64_slots = (_K_AX, _K_BX, _K_AY, _K_BY, _K_M00,
-                  *_SCALAR_F64.values())
     # flat fromiter + reshape: 1.8x over np.array on the nested list comp
     # (no per-row list objects), same values
-    sc = np.fromiter(
-        (ch[sl] for ch in chunks for sl in _f64_slots),
-        dtype=np.float64, count=nch * len(_f64_slots),
-    ).reshape(nch, len(_f64_slots))
-    scr = np.repeat(sc, lens, axis=0)
-
-    out: dict = {}
-    out["x"] = cum * scr[:, 0] + scr[:, 1]
-    out["y"] = cum * scr[:, 2] + scr[:, 3]
-    out["width"] = adv * scr[:, 4]
-    within = np.arange(n, dtype=np.int64) - np.repeat(starts, lens)
-    out["key"] = np.repeat(
-        np.fromiter((ch[_K_KEY] for ch in chunks), dtype=np.int64,
-                    count=nch), lens) + within
-    out["page_no"] = np.repeat(pg.astype(np.int32), lens)
-    for i, c in enumerate(_SCALAR_F64):
-        out[c] = scr[:, 5 + i]
-    for c, slot in _SCALAR_OBJ.items():
-        out[c] = np.repeat(
-            np.array([ch[slot] for ch in chunks], dtype=object), lens)
+    f64 = np.fromiter(
+        (ch[sl] for ch in chunks for sl in _F64_SLOTS),
+        dtype=np.float64, count=nch * len(_F64_SLOTS),
+    ).reshape(nch, len(_F64_SLOTS))
     # per-chunk style-identity id: the 8-field BoxStyle identity
     # (BoxStyle.java:366-405) is CONSTANT within a show, so the chunker can
     # compare one small int per glyph instead of 8 full-length columns
@@ -1296,34 +1349,160 @@ def _concat_glyphs_many(chunk_lists: list[list[tuple]]
         key = (np.float32(ch[11]), np.float32(ch[20]), np.float32(ch[21]),
                ch[15], ch[16], ch[17], ch[18], ch[19])
         sid[j] = style_ids.setdefault(key, len(style_ids))
-    out["style_id"] = np.repeat(sid, lens)
-    all_text = "".join(ch[_K_S] for ch in chunks)
-    out["unicode"] = np.array(list(all_text), dtype=object)
+    return ChunkFrame(
+        doc=doc,
+        key=np.fromiter((ch[_K_KEY] for ch in chunks), dtype=np.int64,
+                        count=nch),
+        page=np.fromiter((ch[_K_PAGE] for ch in chunks), dtype=np.int64,
+                         count=nch),
+        lens=lens, f64=f64,
+        obj={c: np.array([ch[slot] for ch in chunks], dtype=object)
+             for c, slot in _SCALAR_OBJ.items()},
+        sid=sid,
+        codes=np.concatenate([ch[_K_CODES] for ch in chunks]),
+        adv=np.concatenate([ch[_K_ADV] for ch in chunks]))
+
+
+_CHAR_FLAGS: dict[int, tuple[bool, bool]] = {}
+
+
+def _char_flags(c: int) -> tuple[bool, bool]:
+    hit = _CHAR_FLAGS.get(c)
+    if hit is None:
+        ch = chr(c)
+        hit = (is_diacritic_char(ch), is_rtl_char(ch))
+        if len(_CHAR_FLAGS) < 65536:
+            _CHAR_FLAGS[c] = hit
+    return hit
+
+
+def glyph_frame(cf: ChunkFrame) -> tuple[dict, np.ndarray]:
+    """Batched finalize of MANY documents' shows: one segmented prefix
+    sum over ALL advances, then positions dev = cum*A + B, widths
+    adv*m00, keys base + within-show index — a handful of whole-BATCH
+    vector ops instead of per-show (or even per-document) small-array
+    work. Returns (global glyph frame, per-glyph document index).
+
+    Cross-document safety: the page-segmented prefix sum also breaks at
+    document boundaries (two adjacent documents can share a page number),
+    and style ids are only compared within a single document."""
+    nch = len(cf.doc)
+    if not nch:
+        return ({c: np.array([]) for c in GLYPH_COLS},
+                np.empty(0, dtype=np.int64))
+    lens = cf.lens
+    n = int(lens.sum())
+    adv = cf.adv
+    codes = cf.codes
+    starts = np.zeros(nch, dtype=np.int64)
+    np.cumsum(lens[:-1], out=starts[1:])
+    # Prefix-sum the advances PER PAGE, not per document: a doc-global
+    # cumsum makes every glyph position carry rounding error from all
+    # earlier pages, so the page-split path (pagesplit.py groups at page
+    # boundaries) would drift from the unsplit path at the 1e-13 level.
+    # Page-local accumulation is bit-identical under any page-aligned
+    # split and strictly closer to the reference's per-show arithmetic.
+    pg = cf.page
+    page_chunk_starts = np.flatnonzero(
+        np.concatenate(([True], (pg[1:] != pg[:-1])
+                        | (cf.doc[1:] != cf.doc[:-1]))))
+    cs = _page_cumsum(adv, starts[page_chunk_starts], n)
+    cum = cs - np.repeat(cs[starts], lens)
+
+    # ONE 2-D row-repeat for all 12 per-chunk float scalars instead of 12
+    # per-column np.repeat passes (same values, one memory sweep)
+    scr = np.repeat(cf.f64, lens, axis=0)
+
+    out: dict = {}
+    out["x"] = cum * scr[:, 0] + scr[:, 1]
+    out["y"] = cum * scr[:, 2] + scr[:, 3]
+    out["width"] = adv * scr[:, 4]
+    within = np.arange(n, dtype=np.int64) - np.repeat(starts, lens)
+    out["key"] = np.repeat(cf.key, lens) + within
+    out["page_no"] = np.repeat(pg.astype(np.int32), lens)
+    for i, c in enumerate(_SCALAR_F64):
+        out[c] = scr[:, 5 + i]
+    for c in _SCALAR_OBJ:
+        out[c] = np.repeat(cf.obj[c], lens)
+    out["style_id"] = np.repeat(cf.sid, lens)
+    out["unicode"] = np.array(
+        list(codes.astype("<u4", copy=False).tobytes().decode("utf-32-le")),
+        dtype=object)
     # whitespace test mirrors Java String.trim().isEmpty()
     # (PDFBoxTree.java:599): ONLY code points <= U+0020 count — NBSP and the
     # typographic U+2000.. spaces are printable glyphs in the reference
     is_ws = codes <= 32
     is_dia = np.zeros(n, dtype=bool)
     rtl = np.zeros(n, dtype=bool)
-    if codes.max(initial=0) >= 128:
-        # per-char unicodedata only for the non-ASCII chunks
-        pos = 0
-        for ch, m in zip(chunks, lens):
-            m = int(m)
-            if ch[_K_CODES].max(initial=0) >= 128:
-                s_ = ch[_K_S]
-                is_dia[pos:pos + m] = np.fromiter(
-                    (is_diacritic_char(c) for c in s_), dtype=bool, count=m)
-                rtl[pos:pos + m] = np.fromiter(
-                    (is_rtl_char(c) for c in s_), dtype=bool, count=m)
-            pos += m
+    wide = np.flatnonzero(codes >= 128)
+    if len(wide):
+        # per-char unicodedata only for the non-ASCII code points
+        uniq, inv = np.unique(codes[wide], return_inverse=True)
+        flags = np.array([_char_flags(int(c)) for c in uniq],
+                         dtype=bool).reshape(len(uniq), 2)
+        is_dia[wide] = flags[inv, 0]
+        rtl[wide] = flags[inv, 1]
     out["is_ws"] = is_ws
     out["is_dia"] = is_dia
     out["rtl"] = rtl
-    return out, np.repeat(chunk_doc, lens)
+    return out, np.repeat(cf.doc, lens)
+
+
+# pages up to this many glyphs are prefix-summed together as rows of one
+# zero-padded 2-D cumsum; longer ones one by one
+_PAGE_ROW_MAX = 512
+
+
+def _page_cumsum(adv: np.ndarray, page_starts: np.ndarray,
+                 n: int) -> np.ndarray:
+    """Exclusive prefix sum of ``adv`` restarting at every page start,
+    accumulated left to right exactly like ``np.cumsum`` on each page's
+    slice (a row-wise cumsum is the same sequential sum; trailing zero
+    padding cannot change a prefix)."""
+    cs = np.empty(n)
+    if not n:
+        return cs
+    pb = np.append(page_starts, n)
+    plen = pb[1:] - pb[:-1]
+    short = np.flatnonzero(plen <= _PAGE_ROW_MAX)
+    if len(short):
+        width = int(plen[short].max())
+        rows = np.zeros((len(short), width))
+        col = np.arange(width)
+        valid = col[None, :] < plen[short, None] - 1
+        src = pb[short, None] + col[None, :]
+        rows[valid] = adv[src[valid]]
+        acc = np.cumsum(rows, axis=1)
+        dst = src + 1
+        cs[pb[short]] = 0.0
+        cs[dst[valid]] = acc[valid]
+    for k in np.flatnonzero(plen > _PAGE_ROW_MAX).tolist():
+        a, b = int(pb[k]), int(pb[k + 1])
+        cs[a] = 0.0
+        np.cumsum(adv[a:b - 1], out=cs[a + 1:b])
+    return cs
 
 
 _FORM_DEPTH_MAX = 8
+
+
+def image_op_args(text: str | None, media_ref: str | None) -> list:
+    """An image span's DoMedia operands: (media_ref, width, height,
+    name) from its ``"W H Name"`` text. The metadata rides the untrusted
+    span text: a missing or non-numeric dimension is 1.0 instead of
+    killing the document."""
+    meta = (text or "").split()
+
+    def dim(idx: int) -> float:
+        if len(meta) > idx:
+            try:
+                return float(meta[idx])
+            except ValueError:
+                return 1.0
+        return 1.0
+
+    return [media_ref or "", dim(0), dim(1),
+            meta[2] if len(meta) > 2 else "Untitled"]
 
 
 def doc_tokens(spans: list[dict]) -> list[tuple[str, list]]:
@@ -1379,23 +1558,8 @@ def doc_tokens(spans: list[dict]) -> list[tuple[str, list]]:
         if kind in ("form", "meta", "cmap", "widths", "fontfile"):
             continue  # definitions/document-info/encodings are not content
         if kind == "image":
-            meta = (sp.get("text") or "").split()
-
-            def _dim(idx: int) -> float:
-                # image metadata rides the untrusted span text: a
-                # non-numeric dimension falls back to 1.0 instead of
-                # killing the document
-                if len(meta) > idx:
-                    try:
-                        return float(meta[idx])
-                    except ValueError:
-                        return 1.0
-                return 1.0
-
-            w = _dim(0)
-            h = _dim(1)
-            name = meta[2] if len(meta) > 2 else "Untitled"
-            toks.append(("DoMedia", [sp.get("media_ref") or "", w, h, name]))
+            toks.append(("DoMedia", image_op_args(sp.get("text"),
+                                                  sp.get("media_ref"))))
         elif forms:
             expand(tokenize(sp.get("text") or ""), frozenset(), 0)
         else:
@@ -1403,3 +1567,839 @@ def doc_tokens(spans: list[dict]) -> list[tuple[str, list]]:
             # unchanged — one C-level extend instead of the per-token loop
             toks.extend(tokenize(sp.get("text") or ""))
     return toks
+
+
+# --- batch interpreter --------------------------------------------------------
+#
+# ``run_batch`` interprets every covered document of an Arrow batch at once,
+# over the flat operator arrays of ``tokenizer.tokenize_batch``. It returns
+# what ``DocInterp.run(concat=False)`` returns per document — layout
+# events, font table, end key, page-flush keys — with the shows as one
+# ChunkFrame, and it computes every float with the same operations in
+# the same order as ``DocInterp.run``, so the two paths agree bit for bit.
+# The running state becomes whole-batch array operations:
+#   - page numbers are a per-document cumsum of PG;
+#   - a graphics-state setter is visible until the q/Q scope it was made
+#     in closes: Q is a setter that copies the state before its matching
+#     q (``_scoped_sources``); PG resets everything;
+#   - the sticky Pdf2Dom Tw/Tc (never restored by Q, never reset by PG)
+#     are a per-document forward fill;
+#   - the text line matrix and the text matrix are two chains of
+#     translations, reset by BT/Tm/PG (and Td/TD/T* for the text matrix)
+#     and advanced by Td/TD/T*, shows and TJ kerns, accumulated exactly
+#     in stream order (``_chain``);
+#   - the CTM is composed once per cm, in stream order, with ``compose``.
+# Paths and images, a few per document, run through the same
+# ``render_path``/``image_event`` as DocInterp. A document that uses any
+# operator or operand shape outside ``_B_SIG`` is not covered and takes
+# the per-document path.
+
+_B_SIG = {
+    "PG": (ARG_NUM,) * 3, "BT": (), "ET": (), "Tf": (ARG_NAME, ARG_NUM),
+    "Tj": (ARG_STR,), "TJ": (ARG_ARR,), "Tm": (ARG_NUM,) * 6,
+    "Td": (ARG_NUM,) * 2, "TD": (ARG_NUM,) * 2, "T*": (),
+    "TL": (ARG_NUM,), "Tc": (ARG_NUM,), "Tw": (ARG_NUM,), "Tz": (ARG_NUM,),
+    "Ts": (ARG_NUM,), "Tr": (ARG_NUM,), "q": (), "Q": (),
+    "cm": (ARG_NUM,) * 6, "w": (ARG_NUM,), "rg": (ARG_NUM,) * 3,
+    "RG": (ARG_NUM,) * 3, "g": (ARG_NUM,), "G": (ARG_NUM,),
+    "m": (ARG_NUM,) * 2, "l": (ARG_NUM,) * 2, "h": (),
+    "re": (ARG_NUM,) * 4, **{op: () for op in _PAINT_OPS}, "n": (),
+    "Do": (ARG_NAME,),
+}
+_B_OPS = tuple(_B_SIG)
+_OC = {op: i for i, op in enumerate(_B_OPS)}
+_OC_DOMEDIA = len(_B_OPS)  # an image span's synthetic DoMedia
+FRAG_CONTENT, FRAG_FORM, FRAG_OTHER = range(3)  # run_batch's frag_kind
+_OP_LUT = np.full(1 << 14, -1, dtype=np.int64)
+for _op, _i in _OC.items():
+    _OP_LUT[op_key(_op)] = _i
+_SIG_OF = np.array([sum(k << (3 * j) for j, k in enumerate(_B_SIG[op]))
+                    for op in _B_OPS] + [0], dtype=np.int64)
+_PAINT_CODES = {_OC[op]: flags for op, flags in _PAINT_OPS.items()}
+_PATH_CODES = np.array([_OC[op] for op in ("m", "l", "h", "re", "n",
+                                           *_PAINT_OPS)])
+_PATH_END_CODES = np.array([_OC[op] for op in ("n", *_PAINT_OPS)])
+_POINT_CODES = np.array([_OC[op] for op in ("m", "l", "re")])
+# path segments each op adds: l/h one, re four, a closing paint one
+_NSEG = np.zeros(len(_B_OPS) + 1, dtype=np.int64)
+_NSEG[[_OC["l"], _OC["h"]]] = 1
+_NSEG[_OC["re"]] = 4
+for _op, (_s, _f, _close) in _PAINT_OPS.items():
+    _NSEG[_OC[_op]] = int(_close)
+_NSEG_DISABLED = _NSEG.copy()  # disable_graphics: only the closing ones
+_NSEG_DISABLED[[_OC["l"], _OC["h"], _OC["re"]]] = 0
+
+
+_NO_FONTS = F.FontTable()
+
+
+@dataclass
+class BatchRun:
+    """``run_batch`` output. Per document of the batch: ``covered`` (False:
+    take the per-document path; every other field is then empty),
+    ``events``, ``fonts`` (FontTable), ``end_key`` and ``flushes``
+    (page -> flush key); ``chunks`` holds the covered documents' shows."""
+    covered: np.ndarray
+    events: list
+    fonts: list
+    end_key: np.ndarray
+    flushes: list
+    chunks: ChunkFrame
+
+
+def _chain(reset: np.ndarray, value: np.ndarray,
+           inc: np.ndarray) -> np.ndarray:
+    """``out[i] = value[i]`` where ``reset[i]``, else ``out[i-1] + inc[i]``
+    (``reset[0]`` must hold). Each segment is accumulated left to right,
+    one rank per vector step, so every element is the same sum a scalar
+    ``+=`` loop gives. ``value``/``inc`` may carry trailing columns."""
+    n = len(reset)
+    out = np.where(reset.reshape((n,) + (1,) * (value.ndim - 1)),
+                   value, 0.0)
+    st = np.maximum.accumulate(np.where(reset, np.arange(n), 0))
+    rank = np.arange(n) - st
+    order = np.argsort(rank, kind="stable")
+    counts = np.bincount(rank)
+    pos = int(counts[0])
+    for r in range(1, len(counts)):
+        idx = order[pos:pos + counts[r]]
+        pos += int(counts[r])
+        out[idx] = out[idx - 1] + inc[idx]
+    return out
+
+
+def _pairwise_sums(adv: np.ndarray, starts: np.ndarray,
+                   lens: np.ndarray) -> np.ndarray:
+    """``adv[s:s + l].sum()`` for every (s, l), bit-equal: numpy sums a
+    contiguous float64 slice pairwise — sequentially below 8 elements,
+    else in 8 interleaved accumulators folded as a tree plus a sequential
+    tail, splitting in halves past 128. The first two cases run as vector
+    steps over all slices; longer slices call ``sum`` one by one."""
+    m = len(lens)
+    out = np.zeros(m)
+    small = np.flatnonzero(lens < 8)
+    if len(small):
+        sl = lens[small]
+        w = int(sl.max(initial=0))
+        col = np.arange(w)
+        ok = col[None, :] < sl[:, None]
+        idx = np.where(ok, starts[small, None] + col[None, :], 0)
+        acc = np.zeros(len(small))
+        for k in range(w):
+            acc = np.where(ok[:, k], acc + adv[idx[:, k]], acc)
+        out[small] = acc
+    mid = np.flatnonzero((lens >= 8) & (lens <= 128))
+    if len(mid):
+        ml, ms = lens[mid], starts[mid]
+        nb = ml // 8
+        lane = np.arange(8)
+        r = adv[ms[:, None] + lane[None, :]]
+        for b in range(1, int(nb.max())):
+            on = (b < nb)[:, None]
+            blk = adv[np.where(on, ms[:, None] + 8 * b + lane[None, :], 0)]
+            r = np.where(on, r + blk, r)
+        res = (((r[:, 0] + r[:, 1]) + (r[:, 2] + r[:, 3]))
+               + ((r[:, 4] + r[:, 5]) + (r[:, 6] + r[:, 7])))
+        tail0 = ms + 8 * nb
+        for k in range(7):
+            on = k < ml - 8 * nb
+            res = np.where(on, res + adv[np.where(on, tail0 + k, 0)], res)
+        out[mid] = 0.0 + res
+    for j in np.flatnonzero(lens > 128).tolist():
+        s = int(starts[j])
+        out[j] = adv[s:s + int(lens[j])].sum()
+    return out
+
+
+def _hypot(x: np.ndarray, y: np.ndarray) -> np.ndarray:
+    """``math.hypot`` per element: exact for an axis-aligned pair, and
+    ``math.hypot`` itself for the rest (a libm hypot may differ in the
+    last bit)."""
+    out = np.where(y == 0.0, np.abs(x), np.abs(y))
+    for j in np.flatnonzero((x != 0.0) & (y != 0.0)).tolist():
+        out[j] = math.hypot(x[j], y[j])
+    return out
+
+
+def _row_ids(cols: list, n: int) -> np.ndarray:
+    """Equal int32 ids for equal rows of the columns ``cols``."""
+    if not n:
+        return np.zeros(0, dtype=np.int32)
+    o = np.lexsort(cols)
+    new = np.zeros(n, dtype=bool)
+    new[0] = True
+    for c in cols:
+        cs = c[o]
+        new[1:] |= cs[1:] != cs[:-1]
+    out = np.empty(n, dtype=np.int32)
+    out[o] = np.cumsum(new) - 1
+    return out
+
+
+def _jint_arr(v: np.ndarray) -> np.ndarray:
+    """``_jint`` on finite values."""
+    return np.trunc(np.clip(v, -2147483648.0, 2147483647.0)).astype(np.int64)
+
+
+def run_batch(tb, frag_doc: np.ndarray, frag_rank: np.ndarray,
+              frag_kind: np.ndarray, frag_form: dict,
+              img_doc: np.ndarray, img_rank: np.ndarray,
+              img_args: list, ndocs: int, start_page: int = 0,
+              end_page: int = 2**31 - 1, disable_graphics: bool = False,
+              disable_images: bool = False, collect_fonts: bool = True,
+              raster_paths: bool = False) -> BatchRun:
+    """Interpret the documents of one batch together (see the block
+    comment above). ``tb`` tokenizes the batch's spans: fragment ``f``
+    belongs to document ``frag_doc[f]``, has span rank ``frag_rank[f]``
+    (the span's position in the batch, documents in order and each
+    document's spans by offset) and is content (``frag_kind`` FRAG_CONTENT),
+    the definition of the form ``frag_form[f]`` (FRAG_FORM) or not part of
+    the stream (FRAG_OTHER).
+    Image span ``k`` of document ``img_doc[k]`` at span rank
+    ``img_rank[k]`` is the DoMedia op with operands ``img_args[k]``
+    (media_ref, width, height, name)."""
+    K = KEY_STRIDE
+    nops = len(tb.op_tok)
+    nimg = len(img_doc)
+    okey = tb.op_key
+    code = np.where(okey >= 0, _OP_LUT.take(np.clip(okey, 0, len(_OP_LUT)
+                                                     - 1)), -1)
+    badop = (code < 0) | (tb.op_sig != _SIG_OF.take(np.maximum(code, 0)))
+    fbad = (tb.bad_frag | np.bincount(
+        tb.op_frag[badop], minlength=len(frag_doc)).astype(bool)) \
+        & (frag_kind != FRAG_OTHER)
+    covered = np.ones(ndocs, dtype=bool)
+    covered[frag_doc[fbad]] = False
+
+    # unified op table: tokenized ops, DoMedia ops, then a synthetic q, Q
+    uq, uQ = nops + nimg, nops + nimg + 1
+    ucode = np.concatenate((code, np.full(nimg, _OC_DOMEDIA),
+                            [_OC["q"], _OC["Q"]]))
+    arg_of = tb.op_arg0
+
+    def num(u: np.ndarray, k: int) -> np.ndarray:
+        return tb.tok_num[tb.arg_tok[arg_of[u] + k]]
+
+    def arg_text(u: int) -> str:
+        t = tb.arg_tok[arg_of[u]]
+        return tb.text(tb.tok_a[t], tb.tok_b[t])
+
+    # main streams: content ops and DoMedia ops in span order
+    op_doc = frag_doc[tb.op_frag]
+    main = np.flatnonzero((frag_kind[tb.op_frag] == FRAG_CONTENT)
+                          & covered[op_doc])
+    mimg = np.flatnonzero(covered[img_doc]) if nimg else \
+        np.empty(0, dtype=np.int64)
+    rank = np.concatenate((frag_rank[tb.op_frag[main]], img_rank[mimg]))
+    order = np.argsort(rank, kind="stable")
+    stream = np.concatenate((main, nops + mimg))[order]
+    sdoc = np.concatenate((op_doc[main], img_doc[mimg]))[order]
+
+    # forms: '/Name Do' expands in place to q, the form's ops, Q
+    # (doc_tokens); an unexpanded Do stays and does nothing
+    fstart = np.searchsorted(tb.op_frag, np.arange(len(frag_doc)))
+    fend = np.searchsorted(tb.op_frag, np.arange(len(frag_doc)), "right")
+    forms: dict[int, dict[str, np.ndarray]] = {}
+    for f in sorted(frag_form, key=lambda f: frag_rank[f]):
+        d = int(frag_doc[f])
+        if covered[d]:
+            forms.setdefault(d, {})[frag_form[f]] = np.arange(fstart[f],
+                                                              fend[f])
+    do_docs = set(op_doc[code == _OC["Do"]].tolist()) & set(forms)
+    bounds = np.searchsorted(sdoc, np.arange(ndocs + 1))
+    if do_docs:
+        q_arr, Q_arr = np.array([uq]), np.array([uQ])
+        do_at: dict[int, list] = {}  # Do positions per form body
+        names: dict[int, str] = {}
+
+        def expand(seq, fm, active, depth, out):
+            dos = do_at.get(id(seq))
+            if dos is None:
+                dos = np.flatnonzero(ucode[seq] == _OC["Do"]).tolist()
+            prev = 0
+            for p in dos:
+                u = int(seq[p])
+                nm = names.get(u)
+                if nm is None:
+                    nm = names[u] = arg_text(u)
+                if nm in fm and nm not in active and depth < _FORM_DEPTH_MAX:
+                    out += [seq[prev:p], q_arr]
+                    expand(fm[nm], fm, active | {nm}, depth + 1, out)
+                    out.append(Q_arr)
+                    prev = p + 1
+            out.append(seq[prev:])
+
+        pieces, lens, prev = [], np.diff(bounds), 0
+        for d in sorted(do_docs):
+            a, b = int(bounds[d]), int(bounds[d + 1])
+            pieces.append(stream[prev:a])
+            out: list = []
+            for body in forms[d].values():
+                do_at[id(body)] = np.flatnonzero(
+                    ucode[body] == _OC["Do"]).tolist()
+            expand(stream[a:b], forms[d], frozenset(), 0, out)
+            pieces += out
+            lens[d] = sum(len(x) for x in out)
+            prev = b
+        pieces.append(stream[prev:])
+        stream = np.concatenate(pieces)
+        sdoc = np.repeat(np.arange(ndocs), lens)
+        bounds = np.zeros(ndocs + 1, dtype=np.int64)
+        np.cumsum(lens, out=bounds[1:])
+    ntok = np.diff(bounds)
+    end_key = ntok * K
+    spos = np.arange(len(stream)) - bounds[sdoc]
+
+    # pages: 1-based per document; ops before the first PG and on gated
+    # pages are skipped, PG itself always counts and flushes
+    sc = ucode[stream]
+    ispg = sc == _OC["PG"]
+    cpg = np.cumsum(ispg)
+    cpg0 = np.concatenate(([0], cpg))
+    page_no = cpg - cpg0[bounds[sdoc]]
+    npages = cpg0[bounds[1:]] - cpg0[bounds[:-1]]
+
+    def page_on(p):
+        return (p >= 1) & (p >= start_page) & (p <= end_page)
+
+    active = page_on(page_no)
+    flushes: list = [{} for _ in range(ndocs)]
+    pgi = np.flatnonzero(ispg)
+    prevp = page_no[pgi] - 1
+    fl = np.flatnonzero(page_on(prevp))
+    for d, p, k in zip(sdoc[pgi[fl]].tolist(), prevp[fl].tolist(),
+                       (spos[pgi[fl]] * K).tolist()):
+        flushes[d][p] = k
+    for d in np.flatnonzero(page_on(npages) & covered).tolist():
+        flushes[d][int(npages[d])] = int(end_key[d])
+
+    # per page (PG ordinal): box, rotation, page matrix
+    apg = pgi[active[pgi]]
+    pw, ph, prot_f = (num(stream[apg], k) for k in range(3))
+    prot = [int(v) for v in prot_f.tolist()]
+    events: list = [[] if c else None for c in covered.tolist()]
+    npg = len(pgi)
+    pm = np.zeros((npg, 6))
+    page_m_list: list = [None] * npg
+    rot_list = [0] * npg
+    ordinal = cpg[apg] - 1
+    for j, (o, w, h, r) in enumerate(zip(ordinal.tolist(), pw.tolist(),
+                                         ph.tolist(), prot)):
+        m = page_transform_cached(w, h, r)
+        page_m_list[o] = m
+        rot_list[o] = r
+        pm[o] = m.ravel()
+        i = int(apg[j])
+        events[sdoc[i]].append(("page", int(spos[i]) * K + 1,
+                                int(page_no[i]), w, h, r))
+
+    A = np.flatnonzero(active)
+    nA = len(A)
+    au = stream[A]
+    ac = sc[A]
+    adoc = sdoc[A]
+    akey = spos[A] * K
+    apage = page_no[A]
+    agp = cpg[A] - 1
+    # documents without a Tf share one (never written) empty table
+    fonts_out: list = [_NO_FONTS] * ndocs
+    if not nA:
+        return BatchRun(covered, events, fonts_out, end_key, flushes,
+                        ChunkFrame.empty())
+    ar = np.arange(nA)
+
+    def at(op: str) -> np.ndarray:
+        return ac == _OC[op]
+
+    isPG = at("PG")
+    isq, isQ = at("q"), at("Q")
+
+    # q/Q: depth per page is a cumsum of +-1 floored at 0 (a Q on an
+    # empty stack does nothing); each Q pops the nearest open q
+    seg = np.cumsum(isPG) - 1
+    S = np.cumsum(isq.astype(np.int64) - isQ)
+    S -= S[np.maximum.accumulate(np.where(isPG, ar, 0))]
+    big = 2 * nA + 2
+    X = S - (np.minimum.accumulate(S - seg * big) + seg * big)
+    Xb = np.concatenate(([0], X[:-1]))
+    effQ = isQ & (Xb > 0)
+    qi, Qi = np.flatnonzero(isq), np.flatnonzero(effQ)
+    match = np.full(nA, -1)
+    if len(Qi):
+        keys = np.concatenate((seg[qi] * big + X[qi],
+                               seg[Qi] * big + Xb[Qi]))
+        posn = np.concatenate((qi, Qi))
+        o = np.lexsort((posn, keys))
+        ps = posn[o]
+        qs = np.flatnonzero(np.concatenate(
+            (np.zeros(len(qi), bool), np.ones(len(Qi), bool)))[o])
+        match[ps[qs]] = ps[qs - 1]
+
+    def sources(setter: np.ndarray) -> np.ndarray:
+        """Position of the setter (or the page's PG, for the default)
+        whose value is in effect just before each op."""
+        m = setter | isPG | effQ
+        last = np.maximum.accumulate(np.where(m, ar, -1))
+        lb = np.concatenate(([0], last[:-1]))
+        f = ar.copy()
+        if len(Qi):
+            f[Qi] = lb[match[Qi]]
+            while True:
+                nxt = f[f[Qi]]
+                if np.array_equal(nxt, f[Qi]):
+                    break
+                f[Qi] = nxt
+        return f[lb]
+
+    def setter_values(ops: tuple, default, fns) -> tuple:
+        """(setter mask, value arrays): ``fns[i](positions)`` gives the
+        value of the i-th op of ``ops`` at those positions."""
+        mask = np.zeros(nA, dtype=bool)
+        vals = None
+        for op, fn in zip(ops, fns):
+            pos = np.flatnonzero(at(op))
+            if not len(pos):
+                continue
+            mask[pos] = True
+            v = fn(pos)
+            if vals is None:
+                vals = [np.full(nA, d, dtype=np.asarray(x).dtype)
+                        for d, x in zip(default, v)]
+            for arr, x in zip(vals, v):
+                arr[pos] = x
+        if vals is None:
+            vals = [np.full(nA, d) for d in default]
+        return sources(mask), vals
+
+    def nums_at(pos, k):
+        return num(au[pos], k)
+
+    def state(ops, default, fns, where):
+        src, vals = setter_values(ops, default, fns)
+        return [v[src[where]] for v in vals], src
+
+    def rgb3(pos):
+        return nums_at(pos, 0), nums_at(pos, 1), nums_at(pos, 2)
+
+    def gray3(pos):
+        v = nums_at(pos, 0)
+        return v, v, v
+
+    def one(pos):
+        return (nums_at(pos, 0),)
+
+    # ---- CTM: composed per cm in stream order ---------------------------
+    ctm_src = sources(at("cm"))
+    cm_pos = np.flatnonzero(at("cm"))
+    ctm_at = {}
+    cmv = np.stack([nums_at(cm_pos, k) for k in range(6)], axis=1) \
+        if len(cm_pos) else np.zeros((0, 6))
+    first_cm: dict[tuple, np.ndarray] = {}  # cm on a fresh page state
+    for c, row in zip(cm_pos.tolist(), cmv.tolist()):
+        prev = int(ctm_src[c])
+        if prev in ctm_at:
+            ctm_at[c] = compose(mat(*row), ctm_at[prev])
+        else:
+            key = tuple(row)
+            hit = first_cm.get(key)
+            if hit is None:
+                hit = first_cm[key] = compose(mat(*row), ident())
+            ctm_at[c] = hit
+    C = np.tile(_IDENT.ravel(), (nA, 1))
+    for c, m in ctm_at.items():
+        C[c] = m.ravel()
+
+    def ctm_of(i: int) -> np.ndarray:
+        s = int(ctm_src[i])
+        return ctm_at[s] if s in ctm_at else ident()
+
+    # ---- text: linear part of Tm, text line matrix, text matrix ---------
+    is_tm = at("Tm")
+    lin = np.maximum.accumulate(np.where(isPG | at("BT") | is_tm, ar, 0))
+    L = np.zeros((nA, 4))
+    L[:, 0] = L[:, 3] = 1.0
+    tm_pos = np.flatnonzero(is_tm)
+    for k in range(4):
+        L[tm_pos, k] = nums_at(tm_pos, k)
+    la, lb_, lc, ld = (L[lin, k] for k in range(4))
+
+    tl_src, (tlv,) = setter_values(
+        ("TL", "TD"), (0.0,), (one, lambda p: (-nums_at(p, 1),)))
+    moves = isPG | at("BT") | is_tm | at("Td") | at("TD") | at("T*")
+    e1 = np.flatnonzero(moves)
+    e1c = ac[e1]
+    r1 = (e1c == _OC["PG"]) | (e1c == _OC["BT"]) | (e1c == _OC["Tm"])
+    v1 = np.zeros((len(e1), 2))
+    tmr = np.flatnonzero(e1c == _OC["Tm"])
+    v1[tmr, 0] = nums_at(e1[tmr], 4)
+    v1[tmr, 1] = nums_at(e1[tmr], 5)
+    tx = np.zeros(len(e1))
+    ty = np.zeros(len(e1))
+    tdd = np.flatnonzero((e1c == _OC["Td"]) | (e1c == _OC["TD"]))
+    tx[tdd] = nums_at(e1[tdd], 0)
+    ty[tdd] = nums_at(e1[tdd], 1)
+    tst = np.flatnonzero(e1c == _OC["T*"])
+    ty[tst] = -tlv[tl_src[e1[tst]]]
+    i1 = np.stack((tx * la[e1] + ty * lc[e1], tx * lb_[e1] + ty * ld[e1]),
+                  axis=1)
+    tlm = _chain(r1, v1, i1)
+
+    # text events: the moves, each Tj string, each TJ element
+    tj = np.flatnonzero(at("Tj"))
+    TJ = np.flatnonzero(at("TJ"))
+    lbt = tb.arg_tok[arg_of[au[TJ]]]
+    nel = tb.arr_end[lbt] - lbt - 1
+    ev_op = np.concatenate((e1, tj, np.repeat(TJ, nel)))
+    eo = np.argsort(ev_op, kind="stable")
+    ev_op = ev_op[eo]
+    within = np.arange(int(nel.sum())) - np.repeat(np.cumsum(nel) - nel,
+                                                   nel)
+    ev_tok = np.concatenate((np.full(len(e1), -1),
+                             tb.arg_tok[arg_of[au[tj]]],
+                             np.repeat(lbt, nel) + 1 + within))[eo]
+    ev_move = np.concatenate((np.ones(len(e1), bool),
+                              np.zeros(len(tj) + len(within), bool)))[eo]
+    ev_tlm = np.zeros((len(ev_op), 2))
+    ev_tlm[ev_move] = tlm[np.searchsorted(e1, ev_op[ev_move])]
+    tk = np.where(ev_move, TK_OP, tb.tok_kind[np.maximum(ev_tok, 0)])
+    is_str = tk == TK_STR
+    slen = np.where(is_str, tb.tok_b[np.maximum(ev_tok, 0)]
+                    - tb.tok_a[np.maximum(ev_tok, 0)], 0)
+    cs_ = np.concatenate(([0], np.cumsum(slen)))
+    first_of_op = np.searchsorted(ev_op, ev_op)
+    sub = cs_[:-1] - cs_[first_of_op]
+    show = np.flatnonzero(is_str & (slen > 0))
+    kern = np.flatnonzero(tk == TK_NUM)
+
+    # graphics state at the shows and kerns
+    sh_op = ev_op[show]
+    kn_op = ev_op[kern]
+    txt_ops = np.concatenate((sh_op, kn_op))
+    font_pos = np.flatnonzero(at("Tf"))
+    font_names: list[str] = []
+    font_ids: dict[bytes, int] = {}
+    fid_at_tf = np.empty(len(font_pos), dtype=np.int64)
+    nt = tb.arg_tok[arg_of[au[font_pos]]]
+    raw = tb.codes
+    for j, (a, b) in enumerate(zip(tb.tok_a[nt].tolist(),
+                                   tb.tok_b[nt].tolist())):
+        key = raw[a:b].tobytes()
+        fid = font_ids.get(key)
+        if fid is None:
+            fid = font_ids[key] = len(font_names)
+            font_names.append(key.decode("utf-32-le"))
+        fid_at_tf[j] = fid
+    fid_full = np.full(nA, -1, dtype=np.int64)
+    fid_full[font_pos] = fid_at_tf
+    (fid_t, fsize_t), _ = state(
+        ("Tf",), (-1, 0.0),
+        (lambda p: (fid_full[p], nums_at(p, 1)),), txt_ops)
+    (th_t,), _ = state(("Tz",), (1.0,), (lambda p: (nums_at(p, 0) / 100.0,),),
+                       txt_ops)
+    ns = len(show)
+    fid_s, fsize_s, th_s = fid_t[:ns], fsize_t[:ns], th_t[:ns]
+    (tc_s,), _ = state(("Tc",), (0.0,), (one,), sh_op)
+    (tw_s,), _ = state(("Tw",), (0.0,), (one,), sh_op)
+    (ts_s,), _ = state(("Ts",), (0.0,), (one,), sh_op)
+    (tr_s,), _ = state(("Tr",), (0,), (lambda p: (_jint_arr(nums_at(p, 0)),),),
+                       sh_op)
+
+    # glyph codes and advances (DocInterp.run.show)
+    ga = tb.tok_a[ev_tok[show]]
+    glen = slen[show]
+    gst = np.zeros(ns, dtype=np.int64)
+    np.cumsum(glen[:-1], out=gst[1:])
+    ng = int(glen.sum())
+    gi = np.repeat(ga - gst, glen) + np.arange(ng)
+    codes = tb.codes[gi]
+    mono = np.array([F.is_mono(nm) for nm in font_names] + [False])
+    scale = fsize_s * th_s / 1000.0
+    w = np.where(np.repeat(mono[fid_s], glen), F._MONO_WIDTH,
+                 F._WIDTHS_EXT.take(codes, mode="clip"))
+    adv = w * np.repeat(scale, glen)
+    tc_g = np.repeat(tc_s, glen)
+    adv = np.where(tc_g != 0.0, adv + tc_g * np.repeat(th_s, glen), adv)
+    tw_g = np.repeat(tw_s, glen)
+    adv = np.where((tw_g != 0.0) & (codes == 32),
+                   adv + tw_g * np.repeat(th_s, glen), adv)
+
+    # text matrix chain: moves reset it, shows and kerns advance it
+    keep = np.sort(np.concatenate((np.flatnonzero(ev_move), show, kern)))
+    nk = len(keep)
+    slot = np.full(len(ev_op), -1)
+    slot[keep] = np.arange(nk)
+    kop = ev_op[keep]
+    ka, kb, kc, kd = la[kop], lb_[kop], lc[kop], ld[kop]
+    inc = np.zeros((nk, 2))
+    s_slot = slot[show]
+    # a show's advance is only read when the chain continues after it
+    need = np.flatnonzero((s_slot + 1 < nk)
+                          & ~ev_move[keep[np.minimum(s_slot + 1, nk - 1)]])
+    total = np.zeros(ns)
+    if len(need):
+        total[need] = _pairwise_sums(adv, gst[need], glen[need])
+    inc[s_slot, 0] = total * ka[s_slot]
+    inc[s_slot, 1] = total * kb[s_slot]
+    k_slot = slot[kern]
+    shift = (-tb.tok_num[ev_tok[kern]] / 1000.0 * fsize_t[ns:] * th_t[ns:])
+    inc[k_slot, 0] = shift * ka[k_slot] + 0.0 * kc[k_slot]
+    inc[k_slot, 1] = shift * kb[k_slot] + 0.0 * kd[k_slot]
+    tmv = _chain(ev_move[keep], ev_tlm[keep], inc)
+    te, tf_ = tmv[s_slot - 1, 0], tmv[s_slot - 1, 1]
+
+    # Tm x CTM, then the page transformation (DocInterp.run.show)
+    m00, m01, m10, m11 = la[sh_op], lb_[sh_op], lc[sh_op], ld[sh_op]
+    m20, m21 = te, tf_
+    cid = ctm_src[sh_op]
+    for j in np.flatnonzero(~isPG[cid]).tolist():
+        t = compose(mat(m00[j], m01[j], m10[j], m11[j], m20[j], m21[j]),
+                    ctm_at[int(cid[j])])
+        m00[j], m01[j], m10[j], m11[j], m20[j], m21[j] = t.ravel()
+    ox = ts_s * m10 + m20
+    oy = ts_s * m11 + m21
+    P = pm[agp[sh_op]]
+    ax = m00 * P[:, 0] + m01 * P[:, 2]
+    ay = m00 * P[:, 1] + m01 * P[:, 3]
+    bx = ox * P[:, 0] + oy * P[:, 2] + P[:, 4]
+    by = ox * P[:, 1] + oy * P[:, 3] + P[:, 5]
+    sx, sy = _hypot(m00, m01), _hypot(m10, m11)
+    yscale = fsize_s * sy
+    xscale = fsize_s * th_s * sx
+
+    # colors (updateStyleForRenderingMode): one color_hex per setter
+    fill_src, fill_v = setter_values(("rg", "g"), (0.0,) * 3, (rgb3, gray3))
+    stroke_src, stroke_v = setter_values(("RG", "G"), (0.0,) * 3,
+                                         (rgb3, gray3))
+    str_ids: dict = {None: -1}
+
+    def str_id(v) -> int:
+        return str_ids.setdefault(v, len(str_ids))
+
+    def colors(src, vals, on):
+        u, inv = np.unique(src[sh_op], return_inverse=True)
+        hx = [color_hex(t) for t in zip(*(v[u].tolist() for v in vals))]
+        hx_t = np.array(hx + [TRANSPARENT], dtype=object)
+        ids = np.array([str_id(h) for h in hx] + [str_id(TRANSPARENT)])
+        pick = np.where(on, inv, len(hx))
+        return hx_t[pick], ids[pick]
+
+    color, color_id = colors(fill_src, fill_v,
+                             np.isin(tr_s, list(FILL_MODES)))
+    stroke_color, stroke_id = colors(stroke_src, stroke_v,
+                                     np.isin(tr_s, list(STROKE_MODES)))
+
+    # the sticky Pdf2Dom style spacing
+    doc_first = np.searchsorted(adoc, adoc)
+
+    def sticky(op: str) -> np.ndarray:
+        pos = at(op)
+        last = np.maximum.accumulate(np.where(pos, ar, -1))[sh_op]
+        vals = np.zeros(nA)
+        vals[pos] = nums_at(np.flatnonzero(pos), 0)
+        return np.where(last >= doc_first[sh_op], vals[np.maximum(last, 0)],
+                        0.0)
+
+    word_sp, letter_sp = sticky("Tw"), sticky("Tc")
+
+    # fonts: the table (page prescans, in first-use order) and the style
+    # triple per (document, font)
+    tf_doc = adoc[font_pos]
+    nf1 = len(font_names) + 1
+    if collect_fonts and len(font_pos):
+        tf_pair = tf_doc * nf1 + fid_at_tf
+        _u, first = np.unique(tf_pair, return_index=True)
+        first.sort()
+        for d, fid in zip(tf_doc[first].tolist(),
+                          fid_at_tf[first].tolist()):
+            if fonts_out[d] is _NO_FONTS:
+                fonts_out[d] = F.FontTable()
+            fonts_out[d].add_entry(font_names[fid])
+    sdoc_s = adoc[sh_op]
+    upair, pinv = np.unique(sdoc_s * nf1 + (fid_s + 1), return_inverse=True)
+    triples = []
+    for pk in upair.tolist():
+        d, f1 = divmod(pk, nf1)
+        nm = font_names[f1 - 1] if f1 else ""
+        if not nm:  # no Tf on the page, or '/ size Tf'
+            triples.append((None, "normal", "normal"))
+        else:
+            triples.append((F.resolve_family(nm, fonts_out[d]),
+                            *F.font_weight_style(nm)))
+    tri = np.empty((len(triples), 3), dtype=object)
+    if triples:
+        tri[:] = triples
+    tri_ids = np.array([[str_id(v) for v in t] for t in triples],
+                       dtype=np.int64).reshape(len(triples), 3)
+    fam, weight, fstyle = (tri[pinv, k] for k in range(3))
+
+    # style identity (chunk_frame's 8-field key): float32 numerics
+    # (+0.0 folds -0.0 into 0.0; a NaN equals nothing) and string ids
+    cols = [tri_ids[pinv, k] for k in range(3)] + [color_id, stroke_id]
+    for v in (xscale, word_sp, letter_sp):
+        f32 = v.astype(np.float32) + np.float32(0.0)
+        cols.append(np.where(np.isnan(f32), -1 - np.arange(ns),
+                             f32.view(np.uint32).astype(np.int64)))
+    sid = _row_ids(cols, ns)
+    f64 = np.stack((ax, bx, ay, by, m00, F.CAP_HEIGHT / 1000.0 * yscale,
+                    xscale, yscale, F.ASCENT / 1000.0 * yscale,
+                    F.DESCENT / 1000.0 * yscale, word_sp, letter_sp),
+                   axis=1)
+    chunks = ChunkFrame(
+        doc=sdoc_s, key=akey[sh_op] + sub[show], page=apage[sh_op],
+        lens=glen, f64=f64,
+        obj={"font_family": fam, "font_weight": weight,
+             "font_style": fstyle, "color": color,
+             "stroke_color": stroke_color},
+        sid=sid, codes=codes, adv=adv)
+
+    # ---- paths: segments in device space, grouped by the paint (or n)
+    # that consumes them; the path persists across pages
+    gx = np.flatnonzero(np.isin(ac, _PATH_CODES))
+    late: list = []  # (position, paint index, path) of pathimg and images
+    if len(gx):
+        gc = ac[gx]
+        nseg = _NSEG[gc] if not disable_graphics else _NSEG_DISABLED[gc]
+        pts = np.zeros((len(gx), 4))
+        xy = np.flatnonzero(np.isin(gc, _POINT_CODES))
+        if len(xy) and not disable_graphics:
+            g_ = gx[xy]
+            x, y = nums_at(g_, 0), nums_at(g_, 1)
+            x2, y2 = x.copy(), y.copy()
+            re_ = np.flatnonzero(gc[xy] == _OC["re"])
+            x2[re_] += nums_at(g_[re_], 2)
+            y2[re_] += nums_at(g_[re_], 3)
+            c = C[ctm_src[g_]]
+            p = pm[agp[g_]]
+            for col, (px_, py_) in enumerate(((x, y), (x2, y2))):
+                # transformPosition (DocInterp.run.tp): CTM, then page
+                ux = px_ * c[:, 0] + py_ * c[:, 2] + c[:, 4]
+                uy = px_ * c[:, 1] + py_ * c[:, 3] + c[:, 5]
+                pts[xy, 2 * col] = ux * p[:, 0] + uy * p[:, 2] + p[:, 4]
+                pts[xy, 2 * col + 1] = ux * p[:, 1] + uy * p[:, 3] + p[:, 5]
+        gfirst = np.searchsorted(adoc[gx], adoc[gx])
+        gi_ = np.arange(len(gx))
+
+        def point_before(codes_: tuple) -> np.ndarray:
+            # the last m (and l) endpoint before each op, (0, 0) at first
+            on = np.isin(gc, codes_) & ~disable_graphics
+            last = np.maximum.accumulate(np.where(on, gi_, -1))
+            last = np.concatenate(([-1], last[:-1]))
+            ok = last >= gfirst
+            return np.where(ok[:, None], pts[np.maximum(last, 0), :2], 0.0)
+
+        cur = point_before((_OC["m"], _OC["l"]))
+        start = point_before((_OC["m"],))
+        so = np.repeat(gi_, nseg)
+        k = np.arange(len(so)) - np.repeat(np.cumsum(nseg) - nseg, nseg)
+        sc_ = gc[so]
+        seg = np.empty((len(so), 4))
+        seg[:, :2] = cur[so]
+        seg[:, 2:] = start[so]                      # h, and s/b closing
+        isl = sc_ == _OC["l"]
+        seg[isl, 2:] = pts[so[isl], :2]
+        isr = np.flatnonzero(sc_ == _OC["re"])
+        r = pts[so[isr]]
+        kr = k[isr]
+        x1, y1, x2_, y2_ = r[:, 0], r[:, 1], r[:, 2], r[:, 3]
+        seg[isr, 0] = np.where((kr == 0) | (kr == 3), x1, x2_)
+        seg[isr, 1] = np.where(kr <= 1, y1, y2_)
+        seg[isr, 2] = np.where(kr >= 2, x1, x2_)
+        seg[isr, 3] = np.where((kr == 0) | (kr == 3), y1, y2_)
+        if not np.isfinite(seg).all():
+            covered[np.unique(adoc[gx[so[~np.isfinite(seg).all(axis=1)]]])] \
+                = False
+        # each segment joins the path of the next paint or n of its doc
+        ends = np.flatnonzero(np.isin(gc, _PATH_END_CODES))
+        owner = np.searchsorted(ends, so)
+        okseg = owner < len(ends)
+        okseg[okseg] = adoc[gx[ends[owner[okseg]]]] == adoc[gx[so[okseg]]]
+        seg, owner, k = seg[okseg], owner[okseg], k[okseg]
+        pn = np.bincount(owner, minlength=len(ends))
+        p0 = np.cumsum(pn) - pn
+        paint = np.flatnonzero(gc[ends] != _OC["n"])
+        pa_ = gx[ends[paint]]
+        flags = np.array([_PAINT_CODES[c_] for c_ in ac[pa_].tolist()],
+                         dtype=bool).reshape(len(pa_), 3)
+        lw_src, (lw_v,) = setter_values(("w",), (1.0,), (one,))
+        cc = C[ctm_src[pa_]]
+        xx = cc[:, 0] + cc[:, 2]
+        yy = cc[:, 1] + cc[:, 3]
+        lw = lw_v[lw_src[pa_]] * np.sqrt((xx * xx + yy * yy) * 0.5)
+        pnp = pn[paint]
+        # PDFBoxTree.toRectangle: 4 segments, 2 distinct x and 2 distinct y
+        rect = np.zeros(len(paint), dtype=bool)
+        r4 = np.flatnonzero(pnp == 4)
+        box = np.zeros((len(paint), 4))
+        if len(r4):
+            sidx = p0[paint[r4], None] + np.arange(4)[None, :]
+            sx4 = np.sort(seg[sidx][:, :, [0, 2]].reshape(len(r4), 8),
+                          axis=1)
+            sy4 = np.sort(seg[sidx][:, :, [1, 3]].reshape(len(r4), 8),
+                          axis=1)
+            nx = 1 + (sx4[:, 1:] != sx4[:, :-1]).sum(axis=1)
+            ny = 1 + (sy4[:, 1:] != sy4[:, :-1]).sum(axis=1)
+            rect[r4] = (nx == 2) & (ny == 2)
+            box[r4] = np.stack((sx4[:, 0], sy4[:, 0], sx4[:, -1],
+                                sy4[:, -1]), axis=1)
+        fill_rgb = [v[fill_src[pa_]] for v in fill_v]
+        stroke_rgb = [v[stroke_src[pa_]] for v in stroke_v]
+        hex_cache: dict = {}
+
+        def hx(rgb) -> str:
+            h = hex_cache.get(rgb)
+            if h is None:
+                h = hex_cache[rgb] = color_hex(rgb)
+            return h
+
+        pdoc = adoc[pa_].tolist()
+        pkey = akey[pa_].tolist()
+        ppage = apage[pa_].tolist()
+        fl = flags.tolist()
+        frgb = list(zip(*(v.tolist() for v in fill_rgb)))
+        srgb = list(zip(*(v.tolist() for v in stroke_rgb)))
+        lwl = lw.tolist()
+        for j in np.flatnonzero(rect).tolist():
+            st_, fi_, _c = fl[j]
+            x0, y0, x1_, y1_ = box[j].tolist()
+            events[pdoc[j]].append((
+                "rect", pkey[j], ppage[j], x0, y0, x1_ - x0, y1_ - y0,
+                lwl[j], st_, fi_, hx(srgb[j]), hx(frgb[j])))
+        line_p = np.flatnonzero(~rect & flags[:, 0] & (pnp > 0))
+        if len(line_p):
+            lo = np.repeat(line_p, pnp[line_p])
+            li = np.arange(len(lo)) - np.repeat(np.cumsum(pnp[line_p])
+                                                - pnp[line_p], pnp[line_p])
+            ls = seg[p0[paint[lo]] + li].tolist()
+            for j, i_, (a1, b1, a2, b2) in zip(lo.tolist(), li.tolist(), ls):
+                events[pdoc[j]].append(("line", pkey[j] + i_, ppage[j], a1,
+                                        b1, a2, b2, lwl[j], hx(srgb[j])))
+        for j in np.flatnonzero(~rect & ~flags[:, 0] & (pnp > 0)).tolist():
+            path = [tuple(t) for t in
+                    seg[p0[paint[j]]:p0[paint[j]] + pnp[j]].tolist()]
+            late.append((int(pa_[j]), j, path))
+
+    # ---- images and filled non-rectangular paths, in stream order (they
+    # share the save-to-dir namer)
+    if not disable_images:
+        for i in np.flatnonzero(ac == _OC_DOMEDIA).tolist():
+            late.append((i, -1, None))
+    late.sort(key=lambda t: t[0])
+    for i, j, path in late:
+        d = int(adoc[i])
+        if path is None:
+            mr, iw, ih, nm = img_args[int(au[i]) - nops]
+            image_event(events[d], int(akey[i]), int(apage[i]), mr, iw, ih,
+                        nm, ctm_of(i), page_m_list[agp[i]], rot_list[agp[i]])
+        else:
+            render_path(events[d], path, pkey[j], ppage[j], False, True,
+                        ctm_of(i), lwl[j], srgb[j], frgb[j], raster_paths)
+    if not covered.all():
+        keep = covered[chunks.doc]
+        if not keep.all():
+            gk = np.repeat(keep, chunks.lens)
+            chunks = ChunkFrame(
+                chunks.doc[keep], chunks.key[keep], chunks.page[keep],
+                chunks.lens[keep], chunks.f64[keep],
+                {c: v[keep] for c, v in chunks.obj.items()},
+                chunks.sid[keep], chunks.codes[gk], chunks.adv[gk])
+    return BatchRun(covered, events, fonts_out, end_key, flushes, chunks)

@@ -365,6 +365,7 @@ def extract_groups(groups: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG,
                 parts_list, doc_ids, doc_parts, columns=columns,
                 extra=[("grp", pa.int32(),
                         np.asarray(grps, dtype=np.int32))])
+        memtune.task_done()
 
     # per-document renumber over the split subset only (an exchange +
     # sort of just those docs' spans; sub-threshold docs never enter it).

@@ -1667,9 +1667,10 @@ def pdf_docs_df(spark, path_glob: str, password: bytes = b"",
     PDF cannot skew a task beyond its own size; the extraction stage
     re-salts by doc_id hash anyway (pipeline.extract_spans).
 
-    A file's doc_id is its path relative to the glob's input root (see
-    ``_input_root``), so ``a/x.pdf`` and ``b/x.pdf`` stay two documents
-    and the files directly under a given directory keep their names."""
+    The scan recurses into subdirectories. A file's doc_id is its path
+    relative to the glob's input root (see ``_input_root``), so
+    ``a/x.pdf`` and ``b/x.pdf`` stay two documents and the files directly
+    under a given directory keep their names."""
     from .schema import DOC_SCHEMA
 
     root = _input_root(spark, path_glob)
@@ -1698,6 +1699,7 @@ def pdf_docs_df(spark, path_glob: str, password: bytes = b"",
 
     files = (spark.read.format("binaryFile")
              .option("pathGlobFilter", "*.pdf")
+             .option("recursiveFileLookup", "true")
              .load(path_glob)
              .select("path", "content"))
     return files.mapInPandas(parse_batch, DOC_SCHEMA)
@@ -1827,6 +1829,7 @@ def pdf_archive_docs_df(spark, path_glob: str, suffix: str = "*",
 
     files = (spark.read.format("binaryFile")
              .option("pathGlobFilter", suffix)
+             .option("recursiveFileLookup", "true")
              .load(path_glob)
              .select("path", "content"))
     return files.mapInPandas(parse_batch, DOC_SCHEMA)

@@ -21,7 +21,7 @@ anything path-like is a parquet directory.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -61,6 +61,17 @@ def read_table(spark: SparkSession, source: str) -> DataFrame:
     return spark.read.parquet(source)
 
 
+def in_filter(column: str, values: list) -> Column:
+    """``column IN (values)`` for integer values, built from SQL text: a
+    few py4j round trips at any length, where ``Column.isin`` makes about
+    four per value (1,000 part ids took ~4,000 round trips, ~1 s). The
+    plan is the same ``In`` over integer literals, so static partition
+    pruning still applies."""
+    if not values:
+        return F.lit(False)
+    return F.expr(f"`{column}` IN ({', '.join(str(int(v)) for v in values)})")
+
+
 def read_partitions(spark: SparkSession, source: str, schema: StructType,
                     column: str, values: list) -> DataFrame:
     """Only the partitions ``column IN values`` of a partitioned table. The
@@ -73,7 +84,7 @@ def read_partitions(spark: SparkSession, source: str, schema: StructType,
         df = spark.read.format("iceberg").load(source)
     else:
         df = spark.read.schema(schema).parquet(source)
-    return df.where(F.col(column).isin(values))
+    return df.where(in_filter(column, values))
 
 
 def table_exists(spark: SparkSession, target: str) -> bool:

@@ -126,7 +126,7 @@ def boxes_from_glyphs_batched(glyph_frames: list[dict],
 def boxes_core(gl0: dict, gdoc0: np.ndarray,
                flushes: list[dict]) -> tuple[dict, np.ndarray]:
     """Chunking core over an already-global glyph frame + per-glyph doc
-    index (the shape ``interp._concat_glyphs_many`` produces directly)."""
+    index (the shape ``interp.glyph_frame`` produces directly)."""
     if len(gl0["key"]) == 0:
         return _empty_boxes(), np.empty(0, dtype=np.int64)
     any_dia = bool(gl0["is_dia"].any())

@@ -111,3 +111,55 @@ print(len(reads), gc.get_freeze_count(), zpkg.VALUE + zpkg.sub.a.A + zpkg.sub.b.
     assert reads == 0
     assert frozen > 0
     assert total == 6
+
+
+def test_kernel_tasks_leave_no_heap_for_the_daemon_collection():
+    """200 extraction tasks in one worker-like loop (a fresh task context
+    and unpickled kernel per task, then the daemon's full
+    ``gc.collect()``): the collection finds almost nothing left to walk
+    — the kernel's caches, the per-document tokenizer memo included, are
+    frozen when each task ends — and nothing leaks: the frozen heap and
+    the RSS stay flat from task 50 to task 200."""
+    code = r"""
+import gc, os
+import cloudpickle, pyarrow as pa
+from pyspark import TaskContext
+from pyspark.sql.pandas.types import to_arrow_schema
+from pdf2dom_spark import corpus, extract
+from pdf2dom_spark.schema import DOC_SCHEMA
+
+schema = to_arrow_schema(DOC_SCHEMA)
+def doc(i):
+    spans = corpus.rich_stream(f"gc{i}", " ".join(f"w{i}x{j}" for j in range(30)))
+    if i % 2:  # a width table: this document takes the per-document path
+        spans.append({"kind": "widths", "text": "default:500",
+                      "media_ref": "widths:Nope", "offset": 999})
+    return {"doc_id": f"gc{i}", "spans": spans}
+batches = [pa.RecordBatch.from_pylist([doc(16 * b + i) for i in range(12)],
+                                      schema=schema) for b in range(16)]
+payload = cloudpickle.dumps(extract.make_extract_arrow())
+def rss():
+    return int(open("/proc/self/statm").read().split()[1]) * os.sysconf("SC_PAGE_SIZE")
+seen = {}
+for t in range(200):
+    tc = TaskContext()
+    tc._partitionId = 0
+    TaskContext._setTaskContext(tc)
+    kernel = cloudpickle.loads(payload)
+    n = sum(b.num_rows for b in kernel(iter([batches[t % 16]])))
+    assert n > 0
+    del kernel
+    TaskContext._setTaskContext(None)
+    gc.collect()
+    if t + 1 in (50, 200):
+        seen[t + 1] = (gc.get_freeze_count(), rss(), len(gc.get_objects()))
+print(*seen[50], *seen[200])
+"""
+    out = subprocess.run([sys.executable, "-c", code],
+                         capture_output=True, text=True,
+                         cwd=os.path.dirname(os.path.dirname(__file__)))
+    assert out.returncode == 0, out.stderr
+    f50, rss50, left50, f200, rss200, left200 = map(int, out.stdout.split())
+    assert left50 < 500 and left200 < 500, (left50, left200)
+    assert abs(f200 - f50) <= 100, (f50, f200)
+    assert rss200 - rss50 < 16 * 2**20, (rss50, rss200)

@@ -735,3 +735,30 @@ def test_upsert_lineage_swap_crash_recovery(spark, docs, tmp_path):
     after = sorted(map(tuple, spark.read.parquet(lin_dir)
                        .select("part_id", "checksum").collect()))
     assert {p for p, _ in after} == {p for p, _ in before}
+
+
+def test_ingest_reads_nested_input_directories(spark, tmp_path):
+    """A root whose PDFs (and archives) sit only in subdirectories is read
+    recursively, each file named by its path under the root."""
+    import zipfile
+
+    from pdf2dom_spark.corpus import oracle_stream
+    from pdf2dom_spark.pdfread import pdf_archive_docs_df, pdf_docs_df
+    from pdf2dom_spark.pdfwrite import spans_to_pdf
+
+    pdf = spans_to_pdf("x", oracle_stream("x", "two words"))
+    root = tmp_path / "ingest"
+    for sub in ("a", "b c", "b c/deep"):
+        (root / sub).mkdir(parents=True)
+        (root / sub / "x.pdf").write_bytes(pdf)
+        with zipfile.ZipFile(root / sub / "batch.zip", "w") as zf:
+            zf.writestr("x.pdf", pdf)
+
+    def ids(df):
+        return sorted(r["doc_id"] for r in df.select("doc_id").collect())
+
+    assert ids(pdf_docs_df(spark, str(root))) == [
+        "a/x.pdf", "b c/deep/x.pdf", "b c/x.pdf"]
+    assert ids(pdf_archive_docs_df(spark, str(root), suffix="*.zip")) == [
+        "a/batch.zip/x.pdf", "b c/batch.zip/x.pdf",
+        "b c/deep/batch.zip/x.pdf"]

@@ -248,3 +248,49 @@ def test_extract_spans_realfile_single_shuffle(spark):
     # the fused write+parse+extract kernel moved to MapInArrow (r6)
     assert plan.count("MapInPandas") + plan.count("MapInArrow") == 1, plan
 
+
+
+def test_resume_filter_and_lineage_are_built_from_sql_text(spark):
+    """The resume filter over 1,000 part ids and the lineage aggregate are
+    built in a handful of py4j round trips (``Column.isin`` costs about
+    four per value, the Column-built lineage about 500), and they plan the
+    same as the Column forms, the literal IN included."""
+    from py4j.clientserver import ClientServerConnection
+
+    from pdf2dom_spark import tables
+    from pdf2dom_spark.pipeline import lineage
+    from pdf2dom_spark.schema import SPAN_FLAT_SCHEMA
+
+    spans = spark.createDataFrame([], SPAN_FLAT_SCHEMA)
+    ids = list(range(1000))
+    calls = []
+    orig = ClientServerConnection.send_command
+
+    def counted(self, command, *a, **kw):
+        # py4j also sends a memory-release command whenever a Python
+        # proxy of a JVM object is collected; those come at random times
+        if not command.startswith("m\nd\n"):
+            calls.append(command)
+        return orig(self, command, *a, **kw)
+
+    ClientServerConnection.send_command = counted
+    try:
+        cond = tables.in_filter("part_id", ids)
+        n_filter = len(calls)
+        agg = lineage(spans)
+        n_lineage = len(calls) - n_filter
+    finally:
+        ClientServerConnection.send_command = orig
+    assert n_filter <= 10, n_filter
+    assert n_lineage <= 100, n_lineage
+
+    def plan(df):
+        import re
+        text = df._jdf.queryExecution().optimizedPlan().toString()
+        return re.sub(r"#\d+L?", "", text)
+
+    assert plan(spans.where(cond)) == plan(
+        spans.where(F.col("part_id").isin(ids)))
+    assert agg.columns == ["part_id", "doc_count", "span_count", "n_text",
+                           "n_page", "n_rect", "n_line", "n_image",
+                           "n_font", "n_meta", "max_doc_spans", "checksum"]
