@@ -473,6 +473,22 @@ def _utf32(arr) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     return codes, starts, ends
 
 
+def _utf32_where(arr, keep: np.ndarray):
+    """``_utf32`` of the values where ``keep`` is set; every other value
+    is empty and starts where the kept value before it ends, so the
+    ranges stay ascending and adjacent."""
+    if keep.all():
+        return _utf32(arr)
+    kept = np.flatnonzero(keep)
+    codes, s, e = _utf32(arr.take(kept))
+    ends = np.zeros(len(arr), dtype=np.int64)
+    ends[kept] = e
+    np.maximum.accumulate(ends, out=ends)
+    starts = ends.copy()
+    starts[kept] = s
+    return codes, starts, ends
+
+
 def batch_parts(batch, cfg: ExtractConfig = DEFAULT_CONFIG) -> BatchParts:
     """One Arrow batch of DOC_SCHEMA rows -> BatchParts. The ``spans``
     column is read through its offsets and child arrays, tokenized as one
@@ -507,10 +523,14 @@ def batch_parts(batch, cfg: ExtractConfig = DEFAULT_CONFIG) -> BatchParts:
     if offset.null_count:
         fallback[span_doc[~np.asarray(offset.is_valid())]] = True
     off = np.asarray(offset.fill_null(0)).astype(np.int64)
+    # the spans of documents already known to fall back are neither
+    # decoded nor tokenized
+    live = ~fallback[span_doc]
     try:
-        codes, cst, cen = _utf32(text)
+        codes, cst, cen = _utf32_where(text, live)
     except UnicodeDecodeError:
         fallback[:] = True
+        live[:] = False
         codes = np.zeros(0, np.uint32)
         cst = cen = np.zeros(len(child), np.int64)
 
@@ -518,7 +538,6 @@ def batch_parts(batch, cfg: ExtractConfig = DEFAULT_CONFIG) -> BatchParts:
     order = np.lexsort((off, span_doc))
     rank = np.empty(len(order), dtype=np.int64)
     rank[order] = np.arange(len(order))
-    live = ~fallback[span_doc]
     fkind = np.full(len(cat), FRAG_OTHER)
     fkind[live & (cat == _K_CONTENT)] = FRAG_CONTENT
     fkind[live & (cat == _K_FORM)] = FRAG_FORM
@@ -537,8 +556,10 @@ def batch_parts(batch, cfg: ExtractConfig = DEFAULT_CONFIG) -> BatchParts:
     img_args = [image_op_args(span_text(i), named_ref[i])
                 for i in imgs.tolist()]
 
+    # only content and form definitions are tokenized
+    tok_end = np.where(fkind != FRAG_OTHER, cen, cst)
     run = run_batch(
-        tokenize_batch(codes, cst, cen), span_doc, rank, fkind, frag_form,
+        tokenize_batch(codes, cst, tok_end), span_doc, rank, fkind, frag_form,
         span_doc[imgs], rank[imgs], img_args, n,
         start_page=cfg.start_page, end_page=cfg.end_page,
         disable_graphics=cfg.disable_graphics,
@@ -549,13 +570,13 @@ def batch_parts(batch, cfg: ExtractConfig = DEFAULT_CONFIG) -> BatchParts:
 
     # document-info titles: the first title span in input order
     titles: dict[int, str | None] = {}
-    meta = np.flatnonzero(cat == _K_SKIP)
+    meta = np.flatnonzero(live & (cat == _K_SKIP))
     if len(meta):
+        valid = np.asarray(text.is_valid())
         for i, ref in zip(meta.tolist(), mref.take(meta).to_pylist()):
             d = int(span_doc[i])
             if ref == "title" and d not in titles:
-                titles[d] = span_text(i) if text.is_valid()[i].as_py() \
-                    else None
+                titles[d] = span_text(i) if valid[i] else None
 
     records: list = [None] * n
     flushes: list = [None] * n
@@ -569,11 +590,11 @@ def batch_parts(batch, cfg: ExtractConfig = DEFAULT_CONFIG) -> BatchParts:
     chunks = run.chunks
     fb = np.flatnonzero(fallback)
     if len(fb):
-        doc_ids = batch.column(names.index("doc_id"))
+        doc_ids = batch.column(names.index("doc_id")).take(fb).to_pylist()
         fb_chunks = []
-        for d in fb.tolist():
-            r, g, f = extract_doc_parts(str(doc_ids[d].as_py()),
-                                        spans[d].as_py(), cfg)
+        for d, doc_id, sp in zip(fb.tolist(), doc_ids,
+                                 spans.take(fb).to_pylist()):
+            r, g, f = extract_doc_parts(str(doc_id), sp, cfg)
             records[d], flushes[d] = r, f
             fb_chunks.append(g)
         fcf = chunk_frame(fb_chunks)

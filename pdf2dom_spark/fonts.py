@@ -109,8 +109,8 @@ def font_type(font_name: str) -> tuple[str, str]:
     return ("TrueType", "")
 
 
-# (type, subtype, family) per font name, for FontTable.add_entry
-_ENTRY_CACHE: dict[str, tuple[str, str, str]] = {}
+def is_supported(font_name: str) -> bool:
+    return font_type(font_name)[0] != "Type1"
 
 
 # --- family / weight / style classification (PDFBoxTree.java:91-98) --------
@@ -204,18 +204,14 @@ class FontTable:
         self._by_name: dict[str, str] = {}
 
     def add_entry(self, font_name: str) -> None:
-        hit = _ENTRY_CACHE.get(font_name)
-        if hit is None:
-            hit = (*font_type(font_name), find_font_family(font_name))
-            if len(_ENTRY_CACHE) < 65536:
-                _ENTRY_CACHE[font_name] = hit
-        ftype, subtype, family = hit
-        if ftype == "Type1":
+        if not is_supported(font_name):
             return  # PDFBoxTree.java:390-391 — unsupported types skipped
+        ftype, subtype = font_type(font_name)
         key = (font_name, ftype, subtype)
         if key in self._keys:
             return
         self._keys.add(key)
+        family = find_font_family(font_name)
         used = self._next_used_name(family)
         self._used_names.add(used)
         self.entries.append(

@@ -1145,10 +1145,12 @@ def transform_width(w: float, ctm: np.ndarray) -> float:
 def render_path(events: list, path: list, key: int, page_no: int,
                 stroke: bool, fill: bool, ctm: np.ndarray,
                 line_width: float, stroke_rgb: tuple, fill_rgb: tuple,
-                raster_paths: bool) -> None:
+                raster_paths: bool, memo: dict | None = None) -> None:
     """PDFDomTree.renderPath dispatch (PDFDomTree.java:234-252): the
     events one path paint appends, from the device-space segments
-    ``path`` and the graphics state at the paint."""
+    ``path`` and the graphics state at the paint. ``memo``, a dict the
+    caller keeps for one batch, shares the content hash of a filled
+    path among its repeats."""
     rect = _to_rectangle(path)
     if rect is not None:
         lw = transform_width(line_width, ctm)
@@ -1173,50 +1175,44 @@ def render_path(events: list, path: list, key: int, page_no: int,
         if raster_paths:
             from .raster import draw_path_png
             ref = draw_path_png(path, fill_rgb, x0, y0, w, h)
-        else:
+        elif memo is None:
             ref = _path_ref(xs, ys, color_hex(fill_rgb))
+        else:
+            ck = (tuple(xs), tuple(ys), color_hex(fill_rgb))
+            ref = memo.get(ck)
+            if ref is None:
+                ref = memo[ck] = _path_ref(*ck)
         events.append(("pathimg", key, page_no, float(x0), float(y0),
                        float(w), float(h), ref))
 
 
-_PATH_REF_CACHE: dict[tuple, str] = {}
-
-
 def _path_ref(xs: list, ys: list, color: str) -> str:
     """Content-hash ref of a filled path from its int-truncated endpoint
-    coordinates (x1, x2 and y1, y2 per segment) and fill color; shapes
-    repeat across pages, so the hash is memoized."""
-    ck = (tuple(xs), tuple(ys), color)
-    hit = _PATH_REF_CACHE.get(ck)
-    if hit is None:
-        hit = "path:" + hashlib.sha256(
-            (";".join(f"{xs[2 * i]},{ys[2 * i]},{xs[2 * i + 1]},"
-                      f"{ys[2 * i + 1]}" for i in range(len(xs) // 2))
-             + "|" + color).encode()).hexdigest()[:16]
-        if len(_PATH_REF_CACHE) < 4096:
-            _PATH_REF_CACHE[ck] = hit
-    return hit
+    coordinates (x1, x2 and y1, y2 per segment) and fill color."""
+    return "path:" + hashlib.sha256(
+        (";".join(f"{xs[2 * i]},{ys[2 * i]},{xs[2 * i + 1]},"
+                  f"{ys[2 * i + 1]}" for i in range(len(xs) // 2))
+         + "|" + color).encode()).hexdigest()[:16]
 
 
 def image_event(events: list, key: int, page_no: int, media_ref: str,
                 iw: float, ih: float, name: str, ctm: np.ndarray,
-                page_m: np.ndarray, page_rot: int) -> None:
+                page_m: np.ndarray, page_rot: int,
+                memo: dict | None = None) -> None:
     """processImageOperation + calculateImagePosition
-    (PDFBoxTree.java:544-590)."""
+    (PDFBoxTree.java:544-590). ``memo``, a dict the caller keeps for one
+    batch, shares the geometry of a placement among its repeats."""
     if iw <= 0 or ih <= 0:
         return
-    # placements repeat (one logo or layout per page of a corpus): the
-    # geometry is a pure function of the operands and both matrices
-    ck = (iw, ih, ctm.tobytes(), page_m.tobytes(), page_rot)
-    hit = _IMAGE_GEOM_CACHE.get(ck)
-    if hit is None:
-        hit = _image_geom(iw, ih, ctm, page_m, page_rot)
-        if len(_IMAGE_GEOM_CACHE) < 4096:
-            _IMAGE_GEOM_CACHE[ck] = hit
-    events.append(("image", key, page_no, *hit[:4], media_ref, name, hit[4]))
-
-
-_IMAGE_GEOM_CACHE: dict[tuple, tuple] = {}
+    if memo is None:
+        geom = _image_geom(iw, ih, ctm, page_m, page_rot)
+    else:
+        ck = (iw, ih, ctm.tobytes(), page_m.tobytes(), page_rot)
+        geom = memo.get(ck)
+        if geom is None:
+            geom = memo[ck] = _image_geom(iw, ih, ctm, page_m, page_rot)
+    events.append(("image", key, page_no, *geom[:4], media_ref, name,
+                   geom[4]))
 
 
 def _image_geom(iw: float, ih: float, ctm: np.ndarray, page_m: np.ndarray,
@@ -1363,19 +1359,6 @@ def chunk_frame(chunk_lists: list[list[tuple]]) -> ChunkFrame:
         adv=np.concatenate([ch[_K_ADV] for ch in chunks]))
 
 
-_CHAR_FLAGS: dict[int, tuple[bool, bool]] = {}
-
-
-def _char_flags(c: int) -> tuple[bool, bool]:
-    hit = _CHAR_FLAGS.get(c)
-    if hit is None:
-        ch = chr(c)
-        hit = (is_diacritic_char(ch), is_rtl_char(ch))
-        if len(_CHAR_FLAGS) < 65536:
-            _CHAR_FLAGS[c] = hit
-    return hit
-
-
 def glyph_frame(cf: ChunkFrame) -> tuple[dict, np.ndarray]:
     """Batched finalize of MANY documents' shows: one segmented prefix
     sum over ALL advances, then positions dev = cum*A + B, widths
@@ -1438,7 +1421,8 @@ def glyph_frame(cf: ChunkFrame) -> tuple[dict, np.ndarray]:
     if len(wide):
         # per-char unicodedata only for the non-ASCII code points
         uniq, inv = np.unique(codes[wide], return_inverse=True)
-        flags = np.array([_char_flags(int(c)) for c in uniq],
+        flags = np.array([(is_diacritic_char(ch), is_rtl_char(ch))
+                          for ch in map(chr, uniq.tolist())],
                          dtype=bool).reshape(len(uniq), 2)
         is_dia[wide] = flags[inv, 0]
         rtl[wide] = flags[inv, 1]
@@ -2384,15 +2368,20 @@ def run_batch(tb, frag_doc: np.ndarray, frag_rank: np.ndarray,
         for i in np.flatnonzero(ac == _OC_DOMEDIA).tolist():
             late.append((i, -1, None))
     late.sort(key=lambda t: t[0])
+    # placements and path shapes repeat across the batch's pages
+    img_memo: dict = {}
+    path_memo: dict = {}
     for i, j, path in late:
         d = int(adoc[i])
         if path is None:
             mr, iw, ih, nm = img_args[int(au[i]) - nops]
             image_event(events[d], int(akey[i]), int(apage[i]), mr, iw, ih,
-                        nm, ctm_of(i), page_m_list[agp[i]], rot_list[agp[i]])
+                        nm, ctm_of(i), page_m_list[agp[i]], rot_list[agp[i]],
+                        img_memo)
         else:
             render_path(events[d], path, pkey[j], ppage[j], False, True,
-                        ctm_of(i), lwl[j], srgb[j], frgb[j], raster_paths)
+                        ctm_of(i), lwl[j], srgb[j], frgb[j], raster_paths,
+                        path_memo)
     if not covered.all():
         keep = covered[chunks.doc]
         if not keep.all():

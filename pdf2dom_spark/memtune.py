@@ -55,8 +55,8 @@ against a 0.4 s bare shuffle; with ``tune_worker`` at its top, 0.6 s and
    ``gc.freeze()`` once per process moves that import-time heap out of
    the collector's reach; objects a task allocates are collected as
    before.
-3. The kernel's long-lived caches (tokenizer memo, color, page-matrix,
-   image and path caches) grow after that first freeze, and the daemon's
+3. The kernel's long-lived caches (tokenizer memo, color and
+   page-matrix caches) grow after that first freeze, and the daemon's
    collection re-walked them after every task: about 50k tracked
    objects, 25-30 ms per task, after 3000 documents in one process.
    ``task_done`` collects the task's garbage when a kernel generator

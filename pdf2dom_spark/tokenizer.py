@@ -340,9 +340,11 @@ def _class_table() -> np.ndarray:
         t[ord(ch)] = _C_DIG
     for o in list(range(65, 91)) + list(range(97, 123)):
         t[o] = _C_LET
-    for ch in "%<>{}\\":
+    # NUL is whitespace to the full scanner but part of a name to the
+    # fast path's regex, so a fragment holding one is left to ``tokenize``
+    for ch in "%<>{}\\\x00":
         t[ord(ch)] = _C_BAD
-    for ch in " \t\n\f\x00\x0b":
+    for ch in " \t\n\f\x0b":
         t[ord(ch)] = _C_WS
     return t
 

@@ -289,7 +289,8 @@ def test_tokenize_batch_agrees_with_tokenize():
     rng = random.Random(11)
     alpha = list("0123456789.+-/ ()[]Tjmfq*\n\tab") + [
         "Tj", "Tm", " 1 0 0 1 ", "(ab)", "[(a) -5 (b)]", "/F1 ", "12",
-        "-.5", "3.", " TJ ", "(é)", "%", "<", "\\"]
+        "-.5", "3.", " TJ ", "(é)", "%", "<", "\\", "\x00", "\x0b",
+        "\f", "/F1\x00"]
     frags = ["".join(rng.choice(alpha) for _ in range(rng.randint(0, 12)))
              for _ in range(3000)]
     frags += [sp["text"] or "" for _d, spans in _rich(20)
