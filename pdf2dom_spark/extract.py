@@ -15,7 +15,8 @@ Two ways produce the pre-finalize parts of a document, with equal results:
     tokenized in one pass (``tokenizer.tokenize_batch``) and interpreted
     as flat arrays (``interp.run_batch``). A document it does not cover
     goes through ``extract_doc_parts``; only those are converted to
-    Python dicts.
+    Python dicts, and the spans of a document known to fall back from
+    its span kinds alone are neither decoded nor tokenized.
 The merge/sort/gather finalize is BATCHED across the whole Arrow batch
 (``finalize_docs``): one global stable lexsort by (doc, emission key)
 replaces per-document argsorts and double concatenation.

@@ -163,6 +163,22 @@ def test_mixed_batch_empty_image_only_and_fallback(monkeypatch):
     assert_same(docs)
     assert _fallbacks(docs, ExtractConfig(), monkeypatch) == 6
 
+    # the batch tokenizer sees the content and form spans of every
+    # document except those whose span kinds already send it back
+    seen = []
+    orig = extract.tokenize_batch
+
+    def recorded(buf, starts, ends):
+        seen.extend(buf[s:e].tobytes().decode("utf-32-le")
+                    for s, e in zip(starts, ends) if e > s)
+        return orig(buf, starts, ends)
+
+    monkeypatch.setattr(extract, "tokenize_batch", recorded)
+    extract.batch_parts(_batch(docs), ExtractConfig())
+    assert seen == [sp["text"] for d, spans in docs
+                    if d not in ("cmap", "widths") for sp in spans
+                    if sp["kind"] not in ("image", "meta") and sp["text"]]
+
 
 def test_shuffled_span_offsets():
     docs = []
