@@ -1145,12 +1145,10 @@ def transform_width(w: float, ctm: np.ndarray) -> float:
 def render_path(events: list, path: list, key: int, page_no: int,
                 stroke: bool, fill: bool, ctm: np.ndarray,
                 line_width: float, stroke_rgb: tuple, fill_rgb: tuple,
-                raster_paths: bool, memo: dict | None = None) -> None:
+                raster_paths: bool) -> None:
     """PDFDomTree.renderPath dispatch (PDFDomTree.java:234-252): the
     events one path paint appends, from the device-space segments
-    ``path`` and the graphics state at the paint. ``memo``, a dict the
-    caller keeps for one batch, shares the content hash of a filled
-    path among its repeats."""
+    ``path`` and the graphics state at the paint."""
     rect = _to_rectangle(path)
     if rect is not None:
         lw = transform_width(line_width, ctm)
@@ -1175,13 +1173,8 @@ def render_path(events: list, path: list, key: int, page_no: int,
         if raster_paths:
             from .raster import draw_path_png
             ref = draw_path_png(path, fill_rgb, x0, y0, w, h)
-        elif memo is None:
-            ref = _path_ref(xs, ys, color_hex(fill_rgb))
         else:
-            ck = (tuple(xs), tuple(ys), color_hex(fill_rgb))
-            ref = memo.get(ck)
-            if ref is None:
-                ref = memo[ck] = _path_ref(*ck)
+            ref = _path_ref(xs, ys, color_hex(fill_rgb))
         events.append(("pathimg", key, page_no, float(x0), float(y0),
                        float(w), float(h), ref))
 
@@ -1197,20 +1190,12 @@ def _path_ref(xs: list, ys: list, color: str) -> str:
 
 def image_event(events: list, key: int, page_no: int, media_ref: str,
                 iw: float, ih: float, name: str, ctm: np.ndarray,
-                page_m: np.ndarray, page_rot: int,
-                memo: dict | None = None) -> None:
+                page_m: np.ndarray, page_rot: int) -> None:
     """processImageOperation + calculateImagePosition
-    (PDFBoxTree.java:544-590). ``memo``, a dict the caller keeps for one
-    batch, shares the geometry of a placement among its repeats."""
+    (PDFBoxTree.java:544-590)."""
     if iw <= 0 or ih <= 0:
         return
-    if memo is None:
-        geom = _image_geom(iw, ih, ctm, page_m, page_rot)
-    else:
-        ck = (iw, ih, ctm.tobytes(), page_m.tobytes(), page_rot)
-        geom = memo.get(ck)
-        if geom is None:
-            geom = memo[ck] = _image_geom(iw, ih, ctm, page_m, page_rot)
+    geom = _image_geom(iw, ih, ctm, page_m, page_rot)
     events.append(("image", key, page_no, *geom[:4], media_ref, name,
                    geom[4]))
 
@@ -2368,20 +2353,15 @@ def run_batch(tb, frag_doc: np.ndarray, frag_rank: np.ndarray,
         for i in np.flatnonzero(ac == _OC_DOMEDIA).tolist():
             late.append((i, -1, None))
     late.sort(key=lambda t: t[0])
-    # placements and path shapes repeat across the batch's pages
-    img_memo: dict = {}
-    path_memo: dict = {}
     for i, j, path in late:
         d = int(adoc[i])
         if path is None:
             mr, iw, ih, nm = img_args[int(au[i]) - nops]
             image_event(events[d], int(akey[i]), int(apage[i]), mr, iw, ih,
-                        nm, ctm_of(i), page_m_list[agp[i]], rot_list[agp[i]],
-                        img_memo)
+                        nm, ctm_of(i), page_m_list[agp[i]], rot_list[agp[i]])
         else:
             render_path(events[d], path, pkey[j], ppage[j], False, True,
-                        ctm_of(i), lwl[j], srgb[j], frgb[j], raster_paths,
-                        path_memo)
+                        ctm_of(i), lwl[j], srgb[j], frgb[j], raster_paths)
     if not covered.all():
         keep = covered[chunks.doc]
         if not keep.all():
