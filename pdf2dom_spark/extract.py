@@ -21,10 +21,12 @@ The merge/sort/gather finalize is BATCHED across the whole Arrow batch
 (``finalize_docs``): one global stable lexsort by (doc, emission key)
 replaces per-document argsorts and double concatenation.
 
-``make_extract_arrow`` builds the Spark-facing generator for
-``DataFrame.mapInArrow(kernel, SPAN_FLAT_SCHEMA)`` on ``batch_parts``; the
-nested ``style`` struct of SPAN_SCHEMA is a JVM-side projection over its
-output (pipeline.extract_spans).
+``extract_batch`` is the kernel's body: one DOC_SCHEMA Arrow batch in,
+one SPAN_FLAT batch out. ``make_extract_arrow`` wraps it as the
+Spark-facing generator for ``DataFrame.mapInArrow(kernel,
+SPAN_FLAT_SCHEMA)``, and ``docs_to_arrow_spans`` runs it on documents
+given as Python lists; the nested ``style`` struct of SPAN_SCHEMA is a
+JVM-side projection over the kernel's output (pipeline.extract_spans).
 """
 
 from __future__ import annotations
@@ -38,7 +40,7 @@ from .interp import (FRAG_CONTENT, FRAG_FORM, FRAG_OTHER, ChunkFrame,
                      DocInterp, chunk_frame, doc_cid2_fonts, doc_cmaps,
                      doc_tokens, doc_vmetrics, doc_widths, glyph_frame,
                      image_op_args, run_batch)
-from .schema import STYLE_FIELDS
+from .schema import DOC_SCHEMA, SPAN_FLAT_SCHEMA, STYLE_FIELDS
 from .tokenizer import tokenize_batch
 
 
@@ -105,8 +107,7 @@ def extract_doc_parts(doc_id: str, spans: list[dict],
         widths=doc_widths(spans),
         vmetrics=doc_vmetrics(spans),
     )
-    glyph_chunks, events, font_table, end_key, page_flush = interp.run(
-        tokens, concat=False)
+    glyph_chunks, events, font_table, end_key, page_flush = interp.run(tokens)
     title = _title_text(spans)
     records = _event_records(events, cfg, title)
     if emit_fonts:
@@ -351,15 +352,21 @@ def extract_doc(doc_id: str, spans: list[dict],
     return rows
 
 
-def docs_to_arrow_spans(doc_ids, spans_col, parts, cfg: ExtractConfig):
-    """Per-document extraction of python lists -> ONE pyarrow RecordBatch
-    with the SPAN_FLAT schema (``parts``: per-doc part_id values, or None
-    for a null column). The kernels that synthesize their documents in
-    the worker use it; the mapInArrow kernel reads Arrow batches through
-    ``batch_parts`` instead."""
-    parts_list = [extract_doc_parts(str(doc_id), spans, cfg)
-                  for doc_id, spans in zip(doc_ids, spans_col)]
-    return parts_to_arrow(parts_list, doc_ids, parts)
+def docs_to_arrow_spans(doc_ids, spans_col,
+                        cfg: ExtractConfig = DEFAULT_CONFIG,
+                        columns: list[str] | None = None):
+    """Documents as python lists -> ONE pyarrow RecordBatch with the
+    SPAN_FLAT schema (or its ``columns``) and a null ``part_id`` column:
+    the lists become one DOC_SCHEMA batch, extracted as the mapInArrow
+    kernel extracts it (``extract_batch``). The kernels that build their
+    documents in the worker (synthesized streams, parsed PDF files) use
+    it."""
+    import pyarrow as pa
+
+    batch = pa.RecordBatch.from_pydict(
+        {"doc_id": [str(d) for d in doc_ids], "spans": list(spans_col)},
+        schema=_to_arrow(DOC_SCHEMA))
+    return extract_batch(batch, cfg, columns=columns)
 
 
 def parts_to_arrow(parts_list: list, doc_ids, parts,
@@ -384,7 +391,7 @@ def parts_to_arrow(parts_list: list, doc_ids, parts,
                     if parts_list else ({}, None))
 
     n = len(cols["order"]) if parts_list else 0
-    schema = _arrow_schema()
+    schema = _to_arrow(SPAN_FLAT_SCHEMA)
     if want is not None:
         schema = pa.schema([f for f in schema if f.name in want])
     if extra:
@@ -427,13 +434,10 @@ def parts_to_arrow(parts_list: list, doc_ids, parts,
         [arrays[f.name] for f in schema], schema=schema)
 
 
-def _arrow_schema():
-    import pyarrow as pa
+def _to_arrow(schema):
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    from .schema import SPAN_FLAT_SCHEMA
-
-    return to_arrow_schema(SPAN_FLAT_SCHEMA)
+    return to_arrow_schema(schema)
 
 
 # span kinds -> how a document's stream uses them (doc_tokens): content
@@ -604,9 +608,27 @@ def batch_parts(batch, cfg: ExtractConfig = DEFAULT_CONFIG) -> BatchParts:
     return BatchParts(records, chunks, flushes)
 
 
+def extract_batch(batch, cfg: ExtractConfig = DEFAULT_CONFIG,
+                  pid: int | None = None,
+                  columns: list[str] | None = None):
+    """One Arrow batch of DOC_SCHEMA rows -> ONE pyarrow RecordBatch with
+    the SPAN_FLAT schema (or its ``columns``): ``batch_parts``, then
+    ``parts_to_arrow``. The ``part_id`` column repeats the batch's own
+    ``part_id`` column when it has one, else ``pid`` (None: a null
+    column)."""
+    names = batch.schema.names
+    doc_ids = batch.column(names.index("doc_id")).to_pylist()
+    if "part_id" in names:
+        parts = batch.column(names.index("part_id")).to_pylist()
+    else:
+        parts = None if pid is None else [pid] * len(doc_ids)
+    return parts_to_arrow(batch_parts(batch, cfg), doc_ids, parts,
+                          columns=columns)
+
+
 def make_extract_arrow(cfg: ExtractConfig = DEFAULT_CONFIG):
-    """mapInArrow kernel: pyarrow batches in/out, flat schema. Each batch
-    is interpreted as a whole (``batch_parts``)."""
+    """mapInArrow kernel: pyarrow batches in/out, flat schema, one
+    ``extract_batch`` per batch."""
 
     def extract_arrow(batches):
         memtune.tune_worker()
@@ -617,13 +639,7 @@ def make_extract_arrow(cfg: ExtractConfig = DEFAULT_CONFIG):
         except Exception:  # pragma: no cover
             pid = -1
         for b in batches:
-            names = b.schema.names
-            doc_ids = b.column(names.index("doc_id")).to_pylist()
-            if "part_id" in names:
-                parts = b.column(names.index("part_id")).to_pylist()
-            else:
-                parts = [pid] * len(doc_ids)
-            yield parts_to_arrow(batch_parts(b, cfg), doc_ids, parts)
+            yield extract_batch(b, cfg, pid)
         memtune.task_done()
 
     return extract_arrow

@@ -4,15 +4,15 @@ Reimplements the stateful single-pass of the reference
 (``PDFBoxTree.processOperator`` PDFBoxTree.java:410-542 and
 ``processTextPosition`` PDFBoxTree.java:592-656 / PDFBox's
 LegacyPDFStreamEngine glyph positioning) twice, with equal results:
-  - ``DocInterp.run``: a per-document scan of ``(op, args)`` tuples whose
-    high-cardinality inner work (per-glyph positions/advances) is
-    numpy-vectorized per show-string; it covers every operator and every
-    damaged operand shape;
   - ``run_batch``: a whole Arrow batch at once over the flat operator
     arrays of ``tokenizer.tokenize_batch``, the running state turned into
-    cumulative array operations (see the block comment above it). The
-    mapInArrow kernel uses it for every document whose operators and
-    operand shapes it covers, and ``DocInterp.run`` for the rest.
+    cumulative array operations (see the block comment above it). Every
+    document whose operators and operand shapes it covers takes this path.
+  - ``DocInterp.run``: a per-document scan of ``(op, args)`` tuples, one
+    handler per operator, whose per-glyph work (advances) is
+    numpy-vectorized per show string. It covers every operator and every
+    damaged operand shape, and serves the documents ``run_batch`` does not
+    cover, the page-split groups and the per-document reference.
 Both produce layout events, the font table and the shows, which
 ``glyph_frame`` turns into the batch's glyph frame.
 
@@ -182,11 +182,6 @@ def cmyk_to_rgb(c, m, y, k) -> tuple[float, float, float]:
 
 FILL_MODES = {0, 2, 4, 6}    # FILL, FILL_STROKE, FILL_CLIP, FILL_STROKE_CLIP
 STROKE_MODES = {1, 2, 5, 6}  # STROKE, FILL_STROKE, STROKE_CLIP, F_S_CLIP
-
-# positioning ops that can open a batched show run (see DocInterp.run's
-# scan_run): translate-only Tm, the Td/TD relative moves, T* next-line,
-# and ' which fuses the next-line move with its own show
-_RUN_OPS = frozenset(("Tm", "Td", "TD", "T*", "'"))
 
 
 def _jint(v: float) -> int:
@@ -413,9 +408,10 @@ def doc_cid2_fonts(spans: list[dict]) -> set[str]:
 
 
 class DocInterp:
-    """Interprets one document's token list. Produces:
+    """Interprets one document's token list. ``run`` returns:
 
-    - ``glyphs``: dict of columnar arrays (GLYPH_COLS)
+    - the show records: one tuple per non-empty show string (``chunk_frame``
+      turns many documents' records into one ChunkFrame)
     - ``events``: list of layout-event tuples
         ('page', key, page_no, w, h, rot)
         ('rect', key, page_no, left, top, w, h, line_w, stroke, fill, scol, fcol)
@@ -436,11 +432,7 @@ class DocInterp:
                  widths: dict[str, tuple[float, dict[int, float]]]
                  | None = None,
                  vmetrics: dict[str, tuple[float, float, float]]
-                 | None = None,
-                 batch_runs: bool = True):
-        # batch_runs=False forces the scalar Tm/Tj path — the equivalence
-        # knob tests/test_kernels_ext.py uses to pin show_run == show
-        self.batch_runs = batch_runs
+                 | None = None):
         # per-font code->unicode maps (the PDFBox font-encoding / ToUnicode
         # resolution that feeds processTextPosition, PDFBoxTree.java:592-656,
         # transposed: metrics stay indexed by the ORIGINAL glyph code, the
@@ -505,7 +497,7 @@ class DocInterp:
 
         return adv
 
-    def run(self, tokens: list[tuple[str, list]], concat: bool = True):
+    def run(self, tokens: list[tuple[str, list]]):
         g = _GState()
         stack: list[_GState] = []
         tm = ident()
@@ -526,7 +518,7 @@ class DocInterp:
         page_flush: dict[int, int] = {}
         flush_page: int | None = None
 
-        glyph_chunks: list[dict] = []
+        glyph_chunks: list[tuple] = []
         events: list[tuple] = []
 
         # scalar fold of the two path-point transforms, re-unpacked only
@@ -568,7 +560,7 @@ class DocInterp:
 
         def show(key: int, s: str) -> None:
             """Record one show-string. Per-glyph vector work (positions,
-            widths, keys, whitespace flags) is DEFERRED to _concat_glyphs:
+            widths, keys, whitespace flags) is DEFERRED to glyph_frame:
             glyph device coordinates are linear in the within-show advance
             prefix sum (dev = cum*A + B with A/B folded from Tm x CTM and
             the page transformation), so only the advances — needed anyway
@@ -666,7 +658,7 @@ class DocInterp:
             # TextPosition width = dxDisplay, the DEVICE-x displacement of
             # the advance (LegacyPDFStreamEngine: nextX - getTranslateX()),
             # deliberately not rotation-adjusted: widths = adv * m00 (folded
-            # in _concat_glyphs).
+            # in glyph_frame).
             glyph_chunks.append((
                 key, s, codes, adv, ax, bx, ay, by, m00, page_no,
                 _vm_cap / 1000.0 * yscale,               # height
@@ -685,163 +677,6 @@ class DocInterp:
             # always rebind it to a fresh copy)
             tm[2, 0] += total * tm[0, 0]
             tm[2, 1] += total * tm[0, 1]
-
-        def show_run(bases: list, strs: list, xs: list, ys: list) -> None:
-            """Batched fast path for a maximal run of
-            ``1 0 0 1 x y Tm (s) Tj`` pairs under an identity CTM — the
-            dominant shape of real text pages (one positioning + one show
-            per line/word). Semantically identical to interleaved
-            Tm-handler + show() calls: the per-pair matrix rebuild collapses
-            to two multiply-adds (the page transform is the only non-
-            translation left), and the whole run's advances come from ONE
-            frombuffer + ONE advance_widths call. Text state is constant
-            across the run by construction (no other ops inside it)."""
-            nonlocal tm, tlm
-            joined = "".join(strs)
-            codes_all = np.frombuffer(joined.encode("utf-32-le"),
-                                      dtype=np.uint32)
-            adv_all = F.advance_widths(codes_all, g.font,
-                                       g.fsize * g.th / 1000.0)
-            if g.tc != 0.0:
-                adv_all += g.tc * g.th
-            if g.tw != 0.0:
-                adv_all[codes_all == 32] += g.tw * g.th
-            nrun = len(strs)
-            offs = np.zeros(nrun + 1, dtype=np.int64)
-            np.cumsum(np.fromiter((len(s) for s in strs), dtype=np.int64,
-                                  count=nrun), out=offs[1:])
-            p00, p01 = page_m[0, 0], page_m[0, 1]
-            p10, p11 = page_m[1, 0], page_m[1, 1]
-            p20, p21 = page_m[2, 0], page_m[2, 1]
-            fam, weight, fstyle = _font_style(g.font)
-            yscale = g.fsize                       # sx = sy = 1 (translate Tm)
-            fill = (color_hex(g.fill_rgb) if g.tr in FILL_MODES
-                    else TRANSPARENT)
-            stroke = (color_hex(g.stroke_rgb) if g.tr in STROKE_MODES
-                      else TRANSPARENT)
-            _vm_cap, _vm_asc, _vm_dsc = self.vmetrics.get(
-                g.font, self._vm_default)
-            height = _vm_cap / 1000.0 * yscale
-            xsc = g.fsize * g.th
-            asc = _vm_asc / 1000.0 * yscale
-            dsc = _vm_dsc / 1000.0 * yscale
-            ts = g.ts
-            enc = self.cmaps.get(g.font)
-            append = glyph_chunks.append
-            for idx in range(nrun):
-                s = strs[idx]
-                if not s:
-                    continue
-                a, b = int(offs[idx]), int(offs[idx + 1])
-                codes = codes_all[a:b]
-                adv = adv_all[a:b]
-                if enc is not None:
-                    dec = [enc.get(c, ch)
-                           for c, ch in zip(codes.tolist(), s)]
-                    s = "".join(dec)
-                    if not s:
-                        continue
-                    if len(s) != len(codes):
-                        # ligature expansion: same rule as show()
-                        adv = _expand_advances(dec, adv)
-                    codes = np.frombuffer(s.encode("utf-32-le"),
-                                          dtype=np.uint32)
-                x = xs[idx]
-                oy = ys[idx] + ts
-                append((bases[idx], s, codes, adv,
-                        p00, x * p00 + oy * p10 + p20,
-                        p01, x * p01 + oy * p11 + p21,
-                        1.0, page_no,
-                        height, xsc, yscale, asc, dsc, fam, weight, fstyle,
-                        fill, stroke, sticky_tw, sticky_tc))
-            # text state after the run == after the last Tm + show
-            tlm = mat(1.0, 0.0, 0.0, 1.0, xs[-1], ys[-1])
-            tm = tlm.copy()
-            tm[2, 0] += float(adv_all[offs[-2]:].sum())  # tm[0,0] == 1
-
-        def scan_run(j):
-            """Collect a maximal run of (positioning, show) pairs starting at
-            token ``j``, under an identity CTM and a translation-only
-            text-line matrix. Accepted positioning shapes: translate-only
-            ``Tm``, ``Td``, ``TD`` (which also rebinds the leading), ``T*``,
-            and ``'`` (next-line move fused with its show). Returns
-            ``(bases, strs, xs, ys, next_i, tl)`` when the run has >= 2
-            shows, else None.
-
-            Bit-equality with the scalar handlers: on a translation-only
-            tlm, ``translate_pre(tx, ty, tlm)`` adds ``tx*1.0 + ty*0.0``
-            to x and ``tx*0.0 + ty*1.0`` to y — exact ``cx += tx`` /
-            ``cy += ty`` (float addition of an exact +0.0), so the
-            accumulated positions match the matrix chain bit for bit."""
-            # finiteness is part of the batched-eligibility contract: the
-            # scalar translate_pre multiplies each operand by 0.0/1.0, so
-            # an inf/NaN operand yields NaN there while plain `cx += tx`
-            # would keep inf — non-finite state falls back to the scalar
-            # path to stay bit-equal even on damaged streams
-            tlm_ok = (tlm[0, 0] == 1.0 and tlm[0, 1] == 0.0
-                      and tlm[1, 0] == 0.0 and tlm[1, 1] == 1.0
-                      and math.isfinite(tlm[2, 0])
-                      and math.isfinite(tlm[2, 1]))
-            cx, cy = float(tlm[2, 0]), float(tlm[2, 1])
-            tl = g.tl
-            if not math.isfinite(tl):
-                return None
-            bases: list[int] = []
-            strs: list[str] = []
-            xs: list[float] = []
-            ys: list[float] = []
-            while j < ntok:
-                op1, a1 = tokens[j]
-                if op1 == "'":
-                    if not tlm_ok or not a1 or type(a1[0]) is not str:
-                        break
-                    cy -= tl
-                    bases.append(j * KEY_STRIDE)
-                    strs.append(a1[0])
-                    xs.append(cx)
-                    ys.append(cy)
-                    j += 1
-                    continue
-                if j + 1 >= ntok:
-                    break
-                op2, a2 = tokens[j + 1]
-                if op2 != "Tj" or not a2 or type(a2[0]) is not str:
-                    break
-                if op1 == "Tm":
-                    if (len(a1) < 6 or a1[0] != 1.0 or a1[1] != 0.0
-                            or a1[2] != 0.0 or a1[3] != 1.0
-                            or type(a1[4]) is not float
-                            or type(a1[5]) is not float
-                            or not math.isfinite(a1[4])
-                            or not math.isfinite(a1[5])):
-                        break
-                    cx, cy = a1[4], a1[5]
-                    tlm_ok = True
-                elif op1 == "Td" or op1 == "TD":
-                    if (not tlm_ok or len(a1) < 2
-                            or type(a1[0]) is not float
-                            or type(a1[1]) is not float
-                            or not math.isfinite(a1[0])
-                            or not math.isfinite(a1[1])):
-                        break
-                    if op1 == "TD":
-                        tl = -a1[1]
-                    cx += a1[0]
-                    cy += a1[1]
-                elif op1 == "T*":
-                    if not tlm_ok:
-                        break
-                    cy -= tl
-                else:
-                    break
-                bases.append((j + 1) * KEY_STRIDE)
-                strs.append(a2[0])
-                xs.append(cx)
-                ys.append(cy)
-                j += 2
-            if len(strs) < 2:
-                return None
-            return bases, strs, xs, ys, j, tl
 
         i = 0
         ntok = len(tokens)
@@ -896,17 +731,6 @@ class DocInterp:
                 # number in a damaged stream is skipped
                 if args and type(args[0]) is str:
                     show(base, args[0])
-            elif (op in _RUN_OPS and self.batch_runs and g.ctm_ident
-                    and g.font not in self.cid2_fonts
-                    and g.font not in self.widths
-                    and (res := scan_run(i - 1)) is not None):
-                # batched fast path: a maximal run of (positioning, show)
-                # pairs — translate-only Tm / Td / TD / T* / ' chains under
-                # an identity CTM (see show_run / scan_run)
-                run_b, run_s, run_x, run_y, j, tl_final = res
-                show_run(run_b, run_s, run_x, run_y)
-                g.tl = tl_final
-                i = j
             elif op == "Tm" and (nv := _nums(args, 6)) is not None:
                 tlm = mat(*nv)
                 tm = tlm.copy()
@@ -1087,11 +911,9 @@ class DocInterp:
         end_key = ntok * KEY_STRIDE
         if flush_page is not None:
             page_flush[flush_page] = end_key
-        # concat=False hands the raw show chunks to the caller so the
-        # glyph-frame build can run ONCE per Arrow batch
-        # (glyph_frame) instead of once per document
-        glyphs = _concat_glyphs(glyph_chunks) if concat else glyph_chunks
-        return glyphs, events, self.font_table, end_key, page_flush
+        # the raw show records: the glyph frame is built once per Arrow
+        # batch (chunk_frame + glyph_frame), not once per document
+        return glyph_chunks, events, self.font_table, end_key, page_flush
 
     def _prescan_fonts(self, tokens: list, start: int) -> None:
         """updateFontTable at page start (PDFBoxTree.java:200-210,353-366):
@@ -1232,13 +1054,6 @@ _SCALAR_OBJ = {
 }
 
 
-def _concat_glyphs(chunks: list[tuple]) -> dict:
-    """One document's show records -> glyph frame (the batched
-    ``glyph_frame`` over one document, so the paths share code)."""
-    out, _gdoc = glyph_frame(chunk_frame([chunks]))
-    return out
-
-
 # per-show float columns of a ChunkFrame, in ``ChunkFrame.f64`` order
 _F64_COLS = ("ax", "bx", "ay", "by", "m00", *_SCALAR_F64)
 _F64_SLOTS = (_K_AX, _K_BX, _K_AY, _K_BY, _K_M00, *_SCALAR_F64.values())
@@ -1303,7 +1118,7 @@ class ChunkFrame:
 
 
 def chunk_frame(chunk_lists: list[list[tuple]]) -> ChunkFrame:
-    """Per-document show tuples (``DocInterp.run(concat=False)``) ->
+    """Per-document show tuples (``DocInterp.run``) ->
     ChunkFrame with document index = position in ``chunk_lists``."""
     ndocs = len(chunk_lists)
     chunks = [ch for cl in chunk_lists for ch in cl]
@@ -1542,7 +1357,7 @@ def doc_tokens(spans: list[dict]) -> list[tuple[str, list]]:
 #
 # ``run_batch`` interprets every covered document of an Arrow batch at once,
 # over the flat operator arrays of ``tokenizer.tokenize_batch``. It returns
-# what ``DocInterp.run(concat=False)`` returns per document — layout
+# what ``DocInterp.run`` returns per document — layout
 # events, font table, end key, page-flush keys — with the shows as one
 # ChunkFrame, and it computes every float with the same operations in
 # the same order as ``DocInterp.run``, so the two paths agree bit for bit.

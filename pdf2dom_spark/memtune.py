@@ -55,10 +55,11 @@ against a 0.4 s bare shuffle; with ``tune_worker`` at its top, 0.6 s and
    ``gc.freeze()`` once per process moves that import-time heap out of
    the collector's reach; objects a task allocates are collected as
    before.
-3. The kernel's long-lived caches (tokenizer memo, color and
-   page-matrix caches) grow after that first freeze, and the daemon's
-   collection re-walked them after every task: about 50k tracked
-   objects, 25-30 ms per task, after 3000 documents in one process.
+3. The kernel's long-lived caches (colors, page matrices) grow after
+   that first freeze, and the daemon's collection re-walked them after
+   every task: about 50k tracked objects, 25-30 ms per task, after 3000
+   documents in one process (measured while the tokenizer still kept a
+   memo of its fragments).
    ``task_done`` collects the task's garbage when a kernel generator
    ends, then freezes the survivors; the daemon's collection then costs
    0.5-1 ms.
@@ -87,7 +88,6 @@ _M_MMAP_THRESHOLD = -3
 # code change.
 THRESHOLD_BYTES = int(_os.environ.get("PDF2DOM_MALLOC_THRESHOLD",
                                       str(1 << 30)))
-_THRESHOLD_BYTES = THRESHOLD_BYTES  # back-compat alias
 
 
 def tune_malloc() -> bool:
@@ -106,8 +106,8 @@ def tune_malloc() -> bool:
         import ctypes
 
         libc = ctypes.CDLL(None, use_errno=True)
-        ok = (libc.mallopt(_M_MMAP_THRESHOLD, _THRESHOLD_BYTES) == 1
-              and libc.mallopt(_M_TRIM_THRESHOLD, _THRESHOLD_BYTES) == 1)
+        ok = (libc.mallopt(_M_MMAP_THRESHOLD, THRESHOLD_BYTES) == 1
+              and libc.mallopt(_M_TRIM_THRESHOLD, THRESHOLD_BYTES) == 1)
     except Exception:
         ok = False
     _result = ok  # don't retry per batch either way
@@ -161,6 +161,6 @@ def tuned_env(env: dict | None = None) -> dict:
     import os
 
     out = dict(os.environ if env is None else env)
-    out.setdefault("MALLOC_MMAP_THRESHOLD_", str(_THRESHOLD_BYTES))
-    out.setdefault("MALLOC_TRIM_THRESHOLD_", str(_THRESHOLD_BYTES))
+    out.setdefault("MALLOC_MMAP_THRESHOLD_", str(THRESHOLD_BYTES))
+    out.setdefault("MALLOC_TRIM_THRESHOLD_", str(THRESHOLD_BYTES))
     return out

@@ -336,10 +336,11 @@ def extract_groups(groups: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG,
         out_fields + [T.StructField("grp", T.IntegerType())])
 
     def extract_group(batches):
-        # columnar batch path (mirrors extract.docs_to_arrow_spans): one
-        # extract_doc_parts call per page-group row, ONE batched finalize +
-        # direct RecordBatch assembly per Arrow batch (r6: the pandas frame
-        # + per-column to_numeric coercion was 2x the arrow build)
+        # one extract_doc_parts call per page-group row (a group's page
+        # offset, font seed and emit flag are per-document interpreter
+        # inputs), ONE batched finalize + direct RecordBatch assembly per
+        # Arrow batch (r6: the pandas frame + per-column to_numeric
+        # coercion was 2x the arrow build)
         import pyarrow as pa
 
         from pdf2dom_spark.extract import extract_doc_parts, parts_to_arrow

@@ -1166,7 +1166,7 @@ def raster_fill_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ids.append(str(i))
                 spans.append([{"kind": "text", "text": frag,
                                "media_ref": None, "offset": 0}])
-            flat = docs_to_arrow_spans(ids, spans, None, cfg).to_pydict()
+            flat = docs_to_arrow_spans(ids, spans, cfg).to_pydict()
             out = {"doc_id": [], "w": [], "h": [], "filled_px": []}
             for did, kind, ref, w, h in zip(
                     flat["doc_id"], flat["kind"], flat["media_ref"],
@@ -1201,7 +1201,7 @@ def raster_fill_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_reg("extract_spans_realfile", _ORACLE_SPANS_SQL)
 def extract_spans_realfile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .extract import extract_doc_parts, parts_to_arrow
+    from .extract import docs_to_arrow_spans
     from .pdfread import pdf_to_spans
     from .pdfwrite import oracle_pdf_bytes
 
@@ -1215,18 +1215,15 @@ def extract_spans_realfile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def kernel(batches):
         memtune.tune_worker()
-        cfg = ExtractConfig()
         for b in batches:
             names = b.schema.names
             doc_ids = [str(d) for d in
                        b.column(names.index("doc_id")).to_pylist()]
             texts = b.column(names.index("text")).to_pylist()
-            parts_list = [
-                extract_doc_parts(did, pdf_to_spans(
-                    oracle_pdf_bytes(did, text)), cfg)
-                for did, text in zip(doc_ids, texts)]
-            yield parts_to_arrow(parts_list, doc_ids, None,
-                                 columns=ORACLE_COLS)
+            yield docs_to_arrow_spans(
+                doc_ids, [pdf_to_spans(oracle_pdf_bytes(did, text))
+                          for did, text in zip(doc_ids, texts)],
+                columns=ORACLE_COLS)
 
     import pyspark.sql.types as T
     _want = set(ORACLE_COLS)

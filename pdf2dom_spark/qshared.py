@@ -43,7 +43,7 @@ def _extract_flat(spark: SparkSession, sf_dir: str,
     finalize arrays skips pandas frame construction + per-column
     to_numeric coercion — measured 2x on the output half of the kernel."""
     from .corpus import stream_fn
-    from .extract import extract_doc_parts, parts_to_arrow
+    from .extract import docs_to_arrow_spans
 
     p = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     if mode != "rich":
@@ -79,9 +79,9 @@ def _extract_flat(spark: SparkSession, sf_dir: str,
             doc_ids = [str(d) for d in
                        b.column(names.index("doc_id")).to_pylist()]
             texts = b.column(names.index("text")).to_pylist()
-            parts_list = [extract_doc_parts(did, sgen(did, text), kcfg)
-                          for did, text in zip(doc_ids, texts)]
-            yield parts_to_arrow(parts_list, doc_ids, None, columns=columns)
+            yield docs_to_arrow_spans(
+                doc_ids, [sgen(did, text) for did, text in zip(doc_ids, texts)],
+                kcfg, columns)
 
     return src.mapInArrow(kernel, out_schema)
 
@@ -100,15 +100,14 @@ def _synth_spans(spark: SparkSession, sf_dir: str, spans_for) -> DataFrame:
     ``mapInArrow`` call extracts it with the default config (null
     ``part_id``) — the shared kernel of the synthesize-and-extract gates
     over ``_doc_ids``."""
-    from .extract import DEFAULT_CONFIG, docs_to_arrow_spans
+    from .extract import docs_to_arrow_spans
 
     def kernel(batches):
         memtune.tune_worker()
         for b in batches:
             ids = [int(d) for d in b.column(0).to_pylist()]
             yield docs_to_arrow_spans([str(i) for i in ids],
-                                      [spans_for(i) for i in ids], None,
-                                      DEFAULT_CONFIG)
+                                      [spans_for(i) for i in ids])
 
     return _doc_ids(spark, sf_dir).mapInArrow(kernel, SPAN_FLAT_SCHEMA)
 

@@ -41,8 +41,8 @@ from . import fonts as fontmod
 
 # The 8-field style identity (BoxStyle.java:366-405: xscale, word/letter
 # spacing, color, strokeColor, fontFamily, fontWeight, fontStyle) is
-# precomputed per show as the integer ``style_id`` column in
-# interp._concat_glyphs; the chunker compares only that.
+# precomputed per show as the integer ``style_id`` column of
+# interp.glyph_frame; the chunker compares only that.
 
 # box output columns (style_* naming matches SPAN_FLAT_SCHEMA)
 BOX_STYLE_MAP = {
@@ -95,38 +95,19 @@ def merge_diacritics(gl: dict, gdoc: np.ndarray) -> tuple[dict, np.ndarray]:
     return {k: v[keep] for k, v in gl.items()}, gdoc[keep]
 
 
-def boxes_from_glyphs_batched(glyph_frames: list[dict],
-                              flushes: list[dict]
-                              ) -> tuple[dict, np.ndarray]:
-    """Many documents' glyph frames -> ONE global box frame + per-box doc
-    index, in doc-major order.
-
-    The gaps-and-islands chunking is per-document by definition; batching
-    concatenates the frames and forces a split at every document boundary
-    (``lastText == null`` at each interpreter start), so the lagged
-    comparisons, segmented reductions, and text joins all run once per
-    Arrow batch instead of once per document. Every rule below is the
-    per-document rule with an explicit same-document guard where a lagged
-    comparison could otherwise cross a boundary."""
-    keep_idx = [i for i, g in enumerate(glyph_frames) if len(g["key"])]
-    if not keep_idx:
-        return _empty_boxes(), np.empty(0, dtype=np.int64)
-    frames = [glyph_frames[i] for i in keep_idx]
-    lens = np.fromiter((len(g["key"]) for g in frames), np.int64,
-                       len(frames))
-    if len(frames) == 1:
-        gl0 = frames[0]
-    else:
-        gl0 = {k: np.concatenate([g[k] for g in frames])
-               for k in frames[0]}
-    gdoc0 = np.repeat(np.array(keep_idx, dtype=np.int64), lens)
-    return boxes_core(gl0, gdoc0, flushes)
-
-
 def boxes_core(gl0: dict, gdoc0: np.ndarray,
                flushes: list[dict]) -> tuple[dict, np.ndarray]:
-    """Chunking core over an already-global glyph frame + per-glyph doc
-    index (the shape ``interp.glyph_frame`` produces directly)."""
+    """Many documents' glyphs -> ONE global box frame + per-box doc
+    index, in doc-major order. ``gl0``/``gdoc0``: a batch-global glyph
+    frame and its per-glyph doc index (``interp.glyph_frame``).
+
+    The gaps-and-islands chunking is per-document by definition; the
+    batch forces a split at every document boundary (``lastText ==
+    null`` at each interpreter start), so the lagged comparisons,
+    segmented reductions and text joins all run once per Arrow batch
+    instead of once per document. Every rule below is the per-document
+    rule with an explicit same-document guard where a lagged comparison
+    could otherwise cross a boundary."""
     if len(gl0["key"]) == 0:
         return _empty_boxes(), np.empty(0, dtype=np.int64)
     any_dia = bool(gl0["is_dia"].any())
@@ -153,7 +134,7 @@ def boxes_core(gl0: dict, gdoc0: np.ndarray,
     split[1:] = (distx > 1.0) | (distx < -6.0) | (np.abs(disty) > 1.0)
     split[1:] |= rtl[1:] != rtl[:-1]
     # T2: style-identity split — one int comparison per glyph (the 8-field
-    # identity is precomputed per show in interp._concat_glyphs, with
+    # identity is precomputed per show in interp.glyph_frame, with
     # float32-rounded numerics)
     sidv = gl["style_id"]
     split[1:] |= sidv[1:] != sidv[:-1]

@@ -3,13 +3,14 @@
 
 Two tiers, dispatched per fragment:
 
-- **fast path** — one compiled-regex scan (C-speed ``finditer``) for
+- **fast path** — one compiled-regex scan (C-speed ``findall``) for
   fragments with only the simple token surface (numbers, ``/Name``,
   flat ``(string)`` literals with simple escapes, ``[...]`` arrays,
   operators). All synthetic corpora hit this path.
 - **full scanner** — PDFBox-lexer-complete handling for anything the fast
   regex cannot express, engaged when the fragment contains ``%``/``<``/
-  octal escapes/nested parens:
+  octal escapes/nested parens, or a paren outside the literals the regex
+  matched (an unterminated literal runs to the end of the fragment):
     * nested unescaped parens in literals: ``(a(b)c)`` is one string,
     * octal escapes ``\\ddd`` (1-3 digits, mod 256) and line continuations,
     * hex strings ``<48656C6C6F>`` (whitespace ignored, odd length padded
@@ -247,38 +248,18 @@ def _tokenize_full(fragment: str) -> list[tuple[str, list]]:
     return ops
 
 
-# Memo for short fragments: real corpora repeat graphics/state fragments
-# heavily ("Q", "q ... cm" placements, per-page rect ops drawn from small
-# literal sets — measured 50%+ of fragment tokenize calls are repeats).
-# Safe because token lists are read-only downstream (the interpreter and
-# doc_tokens only iterate/read operands); bounded like _HEX_CACHE.
-_MEMO_MAX_LEN = 256
-_MEMO_MAX_ENTRIES = 32768
-_memo: dict[str, list] = {}
-
-
 def tokenize(fragment: str) -> list[tuple[str, list]]:
     """Scan one content-stream fragment into (operator, operands) pairs.
 
     Operands accumulate until an operator token flushes them
     (mirrors PDFBox's operand-stack dispatch into processOperator).
     """
-    if len(fragment) <= _MEMO_MAX_LEN:
-        hit = _memo.get(fragment)
-        if hit is None:
-            hit = _tokenize_uncached(fragment)
-            if len(_memo) < _MEMO_MAX_ENTRIES:
-                _memo[fragment] = hit
-        return hit
-    return _tokenize_uncached(fragment)
-
-
-def _tokenize_uncached(fragment: str) -> list[tuple[str, list]]:
     if _NEEDS_FULL_RE.search(fragment) is not None:
         return _tokenize_full(fragment)
     ops: list[tuple[str, list]] = []
     args: list = []
     arr: list | None = None
+    lit_parens = 0  # parens inside matched literals, delimiters included
     # findall yields one 6-tuple per token; exactly one group participates
     # per match and none can match the empty string, so truthiness IS the
     # dispatch — no match objects, no group() calls in the hot loop
@@ -289,8 +270,8 @@ def _tokenize_uncached(fragment: str) -> list[tuple[str, list]]:
             ops.append((opname, args))
             args = []
         elif sstr:
-            s = _unescape(sstr[1:-1])
-            (arr if arr is not None else args).append(s)
+            lit_parens += sstr.count("(") + sstr.count(")")
+            (arr if arr is not None else args).append(_unescape(sstr[1:-1]))
         elif name:
             args.append(PdfName(name[1:]))
         elif lbrk:
@@ -298,6 +279,11 @@ def _tokenize_uncached(fragment: str) -> list[tuple[str, list]]:
         else:  # rbrk
             args.append(arr if arr is not None else [])
             arr = None
+    if fragment.count("(") + fragment.count(")") != lit_parens:
+        # a paren outside every matched literal: an unterminated literal,
+        # which reads to the end of the fragment, or a stray ")". The
+        # regex would skip it and tokenize the literal's body as operators
+        return _tokenize_full(fragment)
     return ops
 
 

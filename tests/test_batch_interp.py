@@ -47,6 +47,10 @@ def _reference(docs, cfg):
 
 
 def _fallbacks(docs, cfg, monkeypatch) -> int:
+    return len(_fallback_ids(docs, cfg, monkeypatch))
+
+
+def _fallback_ids(docs, cfg, monkeypatch) -> list:
     calls = []
     orig = extract.extract_doc_parts
 
@@ -57,7 +61,7 @@ def _fallbacks(docs, cfg, monkeypatch) -> int:
     monkeypatch.setattr(extract, "extract_doc_parts", counted)
     extract.batch_parts(_batch(docs), cfg)
     monkeypatch.setattr(extract, "extract_doc_parts", orig)
-    return len(calls)
+    return calls
 
 
 def assert_same(docs, cfg=None):
@@ -110,6 +114,49 @@ def test_corpus_modes_batch_equals_per_document(mode):
 
 def test_fixtures_in_one_batch():
     assert_same(sorted(corpus.fixture_docs().items()))
+
+
+_PG = "612 792 0 PG "
+# Td/TD/T*/' chains, the dominant layout of real text PDFs (the synthetic
+# corpora mostly position shows with an absolute Tm): name -> (fragment,
+# whether the batch path covers it). ' chains, hex strings and damaged
+# operands fall back to the per-document path.
+_TD_CHAINS = {
+    "td": (_PG + "BT /Helvetica 12 Tf 72 700 Td (first line) Tj "
+           "0 -14 Td (second) Tj 0 -14 Td (third one) Tj ET", True),
+    "quote": (_PG + "BT /Times 10 Tf 14 TL 72 700 Td (a) Tj 0 -14 TD (b) Tj "
+              "T* (c) Tj (d) ' (e) ' ET", False),
+    "tm_td_tstar": (_PG + "BT /Courier 9 Tf 1 0 0 1 50 600 Tm (x one) Tj "
+                    "12 -11 Td (y two) Tj T* (z) Tj ET", True),
+    "color_mid_chain": (_PG + "BT /Helvetica 12 Tf 72 700 Td (p) Tj "
+                        "0 -14 Td (q) Tj 0.5 0 0 rg 0 -14 Td (r) Tj ET",
+                        True),
+    "rotated": ("612 792 90 PG BT /Helvetica 12 Tf 72 700 Td (rot a) Tj "
+                "0 -14 Td (rot b) Tj T* (rot c) Tj ET", True),
+    "quote_empties": (_PG + "BT /Helvetica 12 Tf 20 TL (top) ' () Tj "
+                      "0 -5 Td () Tj 0 -5 Td (bot) Tj ET", False),
+    "spacing": (_PG + "BT /Helvetica 12 Tf 120 Tz 0.4 Tc 1.1 Tw 3 Ts "
+                "72 700 Td (sp ace d) Tj 0 -14 Td (more wo rds) Tj ET",
+                True),
+    "td_sets_leading": (_PG + "BT /Helvetica 12 Tf 72 700 Td (l1) Tj "
+                        "0 -20 TD (l2) Tj T* (l3) Tj T* (l4) Tj ET", True),
+    "scaled_tm": (_PG + "BT /Helvetica 12 Tf 2 0 0 2 72 700 Tm (scaled) Tj "
+                  "0 -14 Td (still scaled) Tj ET", True),
+    "inf_operand": (_PG + "BT /Helvetica 12 Tf 72 700 Td (a) Tj 0 "
+                    + "9" * 350 + " Td (b) Tj 0 -14 Td (c) Tj ET", False),
+    "name_shown": (_PG + "BT /Helvetica 12 Tf 72 700 Td (a) Tj 0 -5 Td "
+                   "/Nm Tj 0 -5 Td (c) Tj ET", False),
+    "hex": (_PG + "BT /Helvetica 12 Tf 72 700 Td <6869> Tj "
+            "0 -14 Td (b) Tj ET", False),
+}
+
+
+def test_td_chains(monkeypatch):
+    docs = [(name, [corpus.text_span(frag, 0)])
+            for name, (frag, _covered) in _TD_CHAINS.items()]
+    assert_same(docs)
+    assert sorted(_fallback_ids(docs, ExtractConfig(), monkeypatch)) == \
+        sorted(n for n, (_f, covered) in _TD_CHAINS.items() if not covered)
 
 
 @pytest.mark.parametrize("cfg", [
@@ -343,7 +390,7 @@ def test_tokenize_batch_agrees_with_tokenize():
         def typed(ops):
             return [(o, [(type(a), a) for a in args]) for o, args in ops]
 
-        assert typed(got) == typed(tokenizer._tokenize_uncached(frag)), frag
+        assert typed(got) == typed(tokenizer.tokenize(frag)), frag
     assert good > 500
 
 

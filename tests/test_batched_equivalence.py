@@ -1,11 +1,12 @@
 """Batched-kernel == single-document invariant.
 
-The finalize (extract.finalize_docs) and the text-box chunker
-(textpipe.boxes_from_glyphs_batched) run once per Arrow batch over ALL
+The production mapInArrow kernel interprets a whole Arrow batch at once
+(extract.batch_parts) and runs the finalize (extract.finalize_docs) and
+the text-box chunker (textpipe.boxes_core) once per batch over ALL
 documents; correctness rests on every lagged comparison carrying a
 same-document guard. These tests pin: for ANY multi-document batch,
-``docs_to_arrow_spans`` (the batch core of the production mapInArrow
-kernel) over the batch equals the concatenation of per-document
+``docs_to_arrow_spans`` (the kernel's body, ``extract_batch``, over one
+DOC_SCHEMA batch) equals the concatenation of per-document
 ``extract_doc`` results — including the boundary cases a batched
 implementation can get wrong (diacritic pending at a document boundary,
 equal page numbers across a boundary, equal emission keys, empty /
@@ -34,7 +35,7 @@ def _single_rows(doc_ids, spans_by_doc, cfg):
 
 def _batch_rows(doc_ids, spans_by_doc, cfg):
     rows = docs_to_arrow_spans(
-        doc_ids, [spans_by_doc[d] for d in doc_ids], None, cfg).to_pylist()
+        doc_ids, [spans_by_doc[d] for d in doc_ids], cfg).to_pylist()
     for row in rows:
         del row["part_id"]
     return rows

@@ -218,89 +218,6 @@ def test_dia_gap_splits_box():
     assert texts == ["xe", "y"]
 
 
-def test_show_run_batched_equals_scalar():
-    """The Tm/Tj run-batched fast path (interp.show_run) must be
-    bit-identical to the scalar interpreter on every corpus class and
-    every fixture — glyph arrays, events, and font tables."""
-    import duckdb
-    import numpy as np
-
-    from pdf2dom_spark.corpus import (fixture_docs, forms_stream,
-                                      oracle_stream, rich_lite_stream,
-                                      rich_stream, rot_text_stream)
-    from pdf2dom_spark.interp import DocInterp, doc_cmaps, doc_tokens
-
-    con = duckdb.connect()
-    rows = con.execute(
-        "SELECT doc_id, text FROM read_parquet("
-        "'/root/testdata/sf0.001/documents.parquet') LIMIT 80").fetchall()
-
-    def run_one(spans, batch):
-        interp = DocInterp(cmaps=doc_cmaps(spans), batch_runs=batch)
-        glyphs, events, ft, ek, pf = interp.run(doc_tokens(spans))
-        return glyphs, events, tuple(ft.entries)
-
-    def assert_eq(a, b, ctx):
-        ga, ea, fa = a
-        gb, eb, fb = b
-        assert fa == fb and ea == eb, ctx
-        for k in ga:
-            va, vb = ga[k], gb[k]
-            assert len(va) == len(vb), (ctx, k)
-            if getattr(va, "dtype", None) is not None and va.dtype == object:
-                assert all(x == y for x, y in zip(va, vb)), (ctx, k)
-            elif va.dtype.kind == "f":
-                # bit-equality including NaN slots (inf-operand chains
-                # produce NaN positions on BOTH paths by design)
-                assert np.array_equal(va, vb, equal_nan=True), (ctx, k)
-            else:
-                assert np.array_equal(va, vb), (ctx, k)
-
-    gens = (rich_stream, oracle_stream, rich_lite_stream, rot_text_stream,
-            forms_stream)
-    for gen in gens:
-        for d, t in rows:
-            spans = gen(str(d), t)
-            assert_eq(run_one(spans, True), run_one(spans, False),
-                      (gen.__name__, d))
-    for name, spans in fixture_docs().items():
-        assert_eq(run_one(spans, True), run_one(spans, False), name)
-
-    # Td/TD/T*/' chain shapes (scan_run's relative-positioning tier) —
-    # the dominant layout of real text PDFs, absent from the synthetic
-    # corpora above which position with absolute Tm
-    pg = "612 792 0 PG "
-    chains = [
-        pg + "BT /Helvetica 12 Tf 72 700 Td (first line) Tj "
-             "0 -14 Td (second) Tj 0 -14 Td (third one) Tj ET",
-        pg + "BT /Times 10 Tf 14 TL 72 700 Td (a) Tj 0 -14 TD (b) Tj "
-             "T* (c) Tj (d) ' (e) ' ET",
-        pg + "BT /Courier 9 Tf 1 0 0 1 50 600 Tm (x one) Tj "
-             "12 -11 Td (y two) Tj T* (z) Tj ET",
-        pg + "BT /Helvetica 12 Tf 72 700 Td (p) Tj 0 -14 Td (q) Tj "
-             "0.5 0 0 rg 0 -14 Td (r) Tj ET",            # broken mid-chain
-        "612 792 90 PG BT /Helvetica 12 Tf 72 700 Td (rot a) Tj "
-             "0 -14 Td (rot b) Tj T* (rot c) Tj ET",      # rotated page
-        pg + "BT /Helvetica 12 Tf 20 TL (top) ' () Tj 0 -5 Td () Tj "
-             "0 -5 Td (bot) Tj ET",                       # empties in run
-        pg + "BT /Helvetica 12 Tf 120 Tz 0.4 Tc 1.1 Tw 3 Ts 72 700 Td "
-             "(sp ace d) Tj 0 -14 Td (more wo rds) Tj ET",
-        pg + "BT /Helvetica 12 Tf 72 700 Td (l1) Tj 0 -20 TD (l2) Tj "
-             "T* (l3) Tj T* (l4) Tj ET",                  # TD rebinds TL
-        pg + "BT /Helvetica 12 Tf 2 0 0 2 72 700 Tm (scaled) Tj "
-             "0 -14 Td (still scaled) Tj ET",             # non-translate tlm
-        pg + "BT /Helvetica 12 Tf 72 700 Td (a) Tj 0 " + "9" * 350 +
-             " Td (b) Tj 0 -14 Td (c) Tj ET",  # inf operand -> scalar path
-        pg + "BT /Helvetica 12 Tf 72 700 Td (a) Tj 0 -5 Td /Nm Tj "
-             "0 -5 Td (c) Tj ET",              # name breaks the run
-    ]
-    for ci, frag in enumerate(chains):
-        spans = [{"kind": "text", "text": frag, "media_ref": None,
-                  "offset": 0}]
-        assert_eq(run_one(spans, True), run_one(spans, False),
-                  ("td_chain", ci))
-
-
 def test_widths_span_overrides_metrics():
     """A kind='widths' span switches the named font to REAL per-code
     advances (default + per-code overrides); other fonts keep the

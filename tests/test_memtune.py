@@ -117,9 +117,8 @@ def test_kernel_tasks_leave_no_heap_for_the_daemon_collection():
     """200 extraction tasks in one worker-like loop (a fresh task context
     and unpickled kernel per task, then the daemon's full
     ``gc.collect()``): the collection finds almost nothing left to walk
-    — the kernel's caches, the per-document tokenizer memo included, are
-    frozen when each task ends — and nothing leaks: the frozen heap and
-    the RSS stay flat from task 50 to task 200."""
+    — what a task leaves is frozen when it ends — and nothing leaks: the
+    frozen heap and the RSS stay flat from task 50 to task 200."""
     code = r"""
 import gc, os
 import cloudpickle, pyarrow as pa

@@ -82,12 +82,25 @@ _simple_word = st.text(alphabet=string.ascii_letters + string.digits,
     st.floats(-999, 999, allow_nan=False).map(lambda v: f"{round(v, 3)} 0 Td"),
     _simple_word.map(lambda w: f"/{w} 10 Tf"),
     st.just("[ (a) -250 (b) ] TJ"),
+    # unbalanced and misordered parens: an unterminated literal reads to
+    # the end of the fragment, so no operator after it may appear
+    _simple_word.map(lambda w: f"({w} Tj"),
+    _simple_word.map(lambda w: f"{w}) Tj"),
+    _simple_word.map(lambda w: f"){w}( Tj"),
+    st.sampled_from(["(", ")", ")(", r"(a\) Tj"]),
 ), min_size=1, max_size=10))
 def test_fast_and_full_paths_agree(parts):
-    """On the simple token surface both tiers must produce identical output
-    (the fast path is an optimization, never a semantic fork)."""
+    """Both tiers must produce identical output on the simple token
+    surface and around unbalanced parens (the fast path is an
+    optimization, never a semantic fork)."""
     frag = " ".join(parts)
     assert tokenize(frag) == _tokenize_full(frag)
+
+
+def test_unterminated_literal_has_no_phantom_operators():
+    assert tokenize("BT (abc Tj ET") == [("BT", [])]
+    assert tokenize("BT ) (x) Tj ET") == [("BT", []), ("Tj", ["x"]),
+                                          ("ET", [])]
 
 
 def _esc_literal(s: str) -> str:
