@@ -28,14 +28,18 @@ Scale design (the 10^12-doc / 1000-executor story, tested at local[32]):
   its own files (Iceberg overwrite-by-partition in production; parquet
   dynamic overwrite in this sandbox).
 - **Resume = driver-side lineage + literal pruning.** The lineage table
-  has one row per finished ``part_id`` (at most P rows), so it is collected
-  once and every decision over it is made on the driver: pending ids are
-  ``range(P) - done``, the docs are filtered with a literal
-  ``part_id IN (...)``, and this run's lineage comes from one pruned
-  read-back of only its own partitions. No join, no scan of the docs to
-  find pending ids, no re-read of the lineage table. The new lineage rows
-  go back to the JVM as one Arrow table (``_lineage_frame``): no Python
-  worker, no shuffle, one file per append.
+  is append-only: every run and every upsert appends one row per part_id
+  it wrote, numbered by the output's run sequence ``seq``, and a part's
+  current row is its row with the largest ``seq``. It is collected once
+  (P rows plus one per part an upsert rewrote) and every decision over it
+  is made on the driver: pending ids are ``range(P) - done``, the docs are
+  filtered with a literal ``part_id IN (...)``, and the run's lineage
+  comes from one pruned read-back of only its own partitions. No join, no
+  scan of the docs to find pending ids, no re-read of the lineage table.
+  The new lineage rows go back to the JVM as one Arrow table
+  (``_lineage_frame``): no Python worker, no shuffle, one file per
+  append. ``run_checkpointed`` and ``upsert_docs`` share this reader and
+  this tail.
 - **Bounded Arrow batches.** Set
   ``spark.sql.execution.arrow.maxRecordsPerBatch`` (docs vary wildly in
   size); the kernel is O(tokens) per batch with numpy-vectorized glyph work.
@@ -45,6 +49,7 @@ from __future__ import annotations
 
 import uuid
 from datetime import datetime
+from operator import itemgetter
 
 from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
@@ -161,28 +166,6 @@ _LINEAGE_AGGS = (
 )
 
 
-def _recover_lineage_swap(lineage_dir: str) -> None:
-    """Self-heal a crash mid-way through upsert_docs' parquet lineage swap
-    (write _new -> rename live aside to _old -> rename _new in -> rm _old).
-    Every crash window leaves a complete copy under exactly one of the
-    three names; prefer _new (it is fully written before any rename)."""
-    import os
-    import shutil
-
-    if os.path.isdir(lineage_dir):
-        # normal case — at worst a stale _old survived the final rmtree
-        # crash window; it is superseded, drop it
-        shutil.rmtree(lineage_dir + "_old", ignore_errors=True)
-        return
-    old, new = lineage_dir + "_old", lineage_dir + "_new"
-    if os.path.isdir(old) and os.path.isdir(new):
-        # crashed between the two renames: _new is the complete result
-        os.rename(new, lineage_dir)
-        shutil.rmtree(old)
-    elif os.path.isdir(old):
-        os.rename(old, lineage_dir)
-
-
 def table_targets(out_dir: str) -> tuple[str, str]:
     """(spans, lineage) targets of an output: ``<out>_spans`` /
     ``<out>_lineage`` tables in an Iceberg catalog namespace, or the
@@ -194,44 +177,45 @@ def table_targets(out_dir: str) -> tuple[str, str]:
     return f"{out_dir}/spans", f"{out_dir}/lineage"
 
 
-def _prior_lineage(spark: SparkSession, lineage_dir: str):
-    """(columns, rows) of the lineage table, collected once (at most one
-    row per part_id), or None when no lineage table exists yet. Any other
-    read failure raises: taking an unreadable table for "no lineage" would
-    turn a resume into a full re-extraction with duplicate lineage rows."""
+def _prior_lineage(spark: SparkSession, lineage_dir: str) -> list | None:
+    """The current lineage rows, collected once: each part_id's row with
+    the largest ``seq`` (``completed_at`` follows the driver's clock, which
+    can go backwards). None when no lineage table exists; any other read
+    failure raises, as an unreadable table taken for "no lineage" would
+    re-extract everything. A table lacking a ``LINEAGE_SCHEMA`` column
+    (one written before ``seq``, too: footer inference over mixed schemas
+    picks one file's) or naming another part_id formula is refused: its
+    part_ids would not match the ones this version computes."""
     from . import tables
 
-    if not tables.is_table_identifier(lineage_dir):
-        _recover_lineage_swap(lineage_dir)
     if not tables.table_exists(spark, lineage_dir):
         return None
     prior = tables.read_table(spark, lineage_dir)
-    return prior.columns, prior.collect()
-
-
-def _check_part_scheme(columns: list[str], rows: list,
-                       lineage_dir: str) -> None:
-    """Refuse an output whose part_ids were computed by another formula:
-    resuming or upserting it under ``PART_SCHEME`` would re-extract its
-    documents into different part_ids and leave the old spans in place."""
-    if "part_scheme" not in columns:
+    missing = [c for c in LINEAGE_SCHEMA.names if c not in prior.columns]
+    if missing:
         raise ValueError(
-            f"{lineage_dir} has no part_scheme column — its part_ids were "
-            f"not written under part_id = {PART_SCHEME}; resume or upsert "
-            "it with the version that wrote it, or re-run into a fresh "
-            "output")
-    other = {r.part_scheme for r in rows} - {PART_SCHEME}
+            f"{lineage_dir} has no {', '.join(missing)} column"
+            f"{'s' * (len(missing) > 1)} — it was not written by this "
+            "version's run_checkpointed; resume or upsert it with the "
+            "version that wrote it, or re-run into a fresh output")
+    rows = prior.collect()
+    # fields by position: at 2^18 rows, the pick took 1.7 s through Row
+    # attributes and 0.2 s this way
+    part_id, seq, scheme = map(prior.columns.index,
+                               ("part_id", "seq", "part_scheme"))
+    other = set(map(itemgetter(scheme), rows)) - {PART_SCHEME}
     if other:
         raise ValueError(
             f"{lineage_dir} was written under part_id scheme(s) "
             f"{sorted(map(str, other))}, not {PART_SCHEME}; re-run into a "
             "fresh output")
+    # in ascending seq, each part_id keeps its last row
+    return list({r[part_id]: r
+                 for r in sorted(rows, key=itemgetter(seq))}.values())
 
 
-def _pinned_modulus(columns: list[str], rows: list) -> int | None:
+def _pinned_modulus(rows: list) -> int | None:
     """The salt modulus P recorded in lineage (None if none recorded)."""
-    if "num_partitions" not in columns:
-        return None
     return max((r.num_partitions for r in rows
                 if r.num_partitions is not None), default=None)
 
@@ -239,20 +223,6 @@ def _pinned_modulus(columns: list[str], rows: list) -> int | None:
 _LineageRow = Row(*LINEAGE_SCHEMA.names)
 # lineage()'s aggregates: the columns between part_id and run_id
 _STAT_COLS = LINEAGE_SCHEMA.names[1:LINEAGE_SCHEMA.names.index("run_id")]
-
-
-def _lineage_rows(stats: list, part_ids, run_id: str,
-                  num_partitions: int) -> list[Row]:
-    """Lineage rows for ``part_ids`` from the collected ``lineage(...)``
-    rows. An id with no spans (its docs extract to nothing, or it has no
-    docs at all) gets an explicit zero row (checksum 0) so that it counts
-    as done."""
-    by_part = {r.part_id: r for r in stats}
-    now = datetime.now()
-    return [_LineageRow(p, *(by_part[p][c] if p in by_part else 0
-                             for c in _STAT_COLS),
-                        run_id, now, num_partitions, PART_SCHEME)
-            for p in sorted(part_ids)]
 
 
 def _lineage_frame(spark: SparkSession, rows: list) -> DataFrame:
@@ -284,10 +254,38 @@ def _lineage_frame(spark: SparkSession, rows: list) -> DataFrame:
     return spark.createDataFrame(table, LINEAGE_SCHEMA).coalesce(1)
 
 
+def _append_lineage(spark: SparkSession, out_dir: str, part_ids: list,
+                    prior_rows: list, run_id: str,
+                    num_partitions: int) -> list[Row]:
+    """The lineage tail of both write paths, once the spans of
+    ``part_ids`` are written: one read-back of ONLY those partitions
+    (static pruning: O(this run's output), never O(table)), its
+    ``lineage(...)`` rows collected once, and one row per id appended
+    under the output's next ``seq``. An id with no spans (its docs
+    extract to nothing, or it has none) gets a zero row (checksum 0), so
+    it counts as done. Returns the appended rows."""
+    from . import tables
+
+    spans_dir, lineage_dir = table_targets(out_dir)
+    written = tables.read_partitions(spark, spans_dir, SPAN_FLAT_SCHEMA,
+                                     "part_id", part_ids)
+    stats = {r.part_id: r for r in lineage(written).collect()}
+    seq = max((r.seq for r in prior_rows), default=-1) + 1
+    now = datetime.now()
+    rows = [_LineageRow(p, *(stats[p][c] if p in stats else 0
+                             for c in _STAT_COLS),
+                        run_id, now, num_partitions, PART_SCHEME, seq)
+            for p in sorted(part_ids)]
+    # one file per run, appended from an Arrow-built frame: a Row-built
+    # one pickles every row through a Python-worker task first
+    tables.append_table(_lineage_frame(spark, rows), lineage_dir, spark)
+    return rows
+
+
 def _run_stats(run_id: str, prior_rows: list, new_rows: list) -> dict:
-    # cumulative size comes from the P-row lineage (each done part_id has
-    # exactly one row; failed partitions have none and no data), never from
-    # a count() scan of the cumulative spans table
+    # cumulative size comes from the current lineage rows (one per done
+    # part_id; new_rows are for parts not done before), never from a
+    # count() scan of the cumulative spans table
     rows = prior_rows + new_rows
     return {
         "run_id": run_id,
@@ -312,11 +310,12 @@ def run_checkpointed(
     yet, write them idempotently, append lineage. Returns run stats.
 
     The lineage table is read once; the pinned modulus, the done set and
-    the prior span total all come from those rows on the driver. Pending
-    ids are ``range(P) - done - fail_parts``, every one of which gets a
-    lineage row (zero if it has no spans). With nothing pending the run
-    reads lineage and returns: no extraction, no write. An output whose
-    lineage records another ``part_id`` formula, or none, is refused.
+    the prior span total all come from its current rows on the driver.
+    Pending ids are ``range(P) - done - fail_parts``, every one of which
+    gets a lineage row (zero if it has no spans). With nothing pending the
+    run reads lineage and returns: no extraction, no write. An output
+    whose lineage records another ``part_id`` formula, or lacks a column,
+    is refused.
 
     ``fail_parts`` injects a failure for those part_ids (the partition is
     neither extracted nor written, and gets no lineage row) to test resume.
@@ -334,16 +333,13 @@ def run_checkpointed(
                       pages_per_group=pages_per_group)
     run_id = run_id or uuid.uuid4().hex[:12]
     spans_dir, lineage_dir = table_targets(out_dir)
-    prior = _prior_lineage(spark, lineage_dir)
-    columns, prior_rows = prior if prior is not None else ([], [])
-    if prior is not None:
-        _check_part_scheme(columns, prior_rows, lineage_dir)
+    prior_rows = _prior_lineage(spark, lineage_dir) or []
 
     # part_id = pmod(hash(xxhash64(doc_id)), P): resuming with a different
     # P would remap every part_id and double-write already-extracted
     # documents — so the salt modulus is pinned by the first run's lineage
     # and reused
-    stored = _pinned_modulus(columns, prior_rows)
+    stored = _pinned_modulus(prior_rows)
     if stored is not None and stored != num_partitions:
         import warnings
         warnings.warn(
@@ -375,17 +371,8 @@ def run_checkpointed(
         spans = extract_gathered(pending, cfg, num_partitions)
 
     tables.write_partitioned(spans, spans_dir, "part_id", spark)
-
-    # lineage from one read-back of ONLY this run's partitions (static
-    # pruning on the partition column: O(this run's output), never
-    # O(cumulative table)), collected once — it has at most P rows
-    this_run = tables.read_partitions(spark, spans_dir, SPAN_FLAT_SCHEMA,
-                                      "part_id", processed)
-    new_rows = _lineage_rows(lineage(this_run).collect(), processed,
-                             run_id, num_partitions)
-    # one file per run, appended from an Arrow-built frame: a Row-built
-    # one pickles every row through a Python-worker task first
-    tables.append_table(_lineage_frame(spark, new_rows), lineage_dir, spark)
+    new_rows = _append_lineage(spark, out_dir, processed, prior_rows,
+                               run_id, num_partitions)
     return _run_stats(run_id, prior_rows, new_rows)
 
 
@@ -403,43 +390,47 @@ def upsert_docs(
     Dynamic partition overwrite replaces whole ``part_id`` partitions, and a
     partition holds unrelated documents too — so each affected partition is
     rebuilt as (existing spans minus updated doc_ids) UNION (fresh spans),
-    then overwritten. Cost is O(affected partitions), never O(table): the
-    read-back prunes on a literal part_id IN list (static partition
-    pruning), and unaffected partitions' files are untouched. Lineage rows
-    for the affected partitions are recomputed so checksums stay true.
-    On Iceberg the same shape is a MERGE INTO with
-    write.delete.mode=copy-on-write at partition granularity.
+    overwritten, and given a new lineage row by ``run_checkpointed``'s
+    tail. Cost is O(affected partitions), never O(table): the read-backs
+    prune on a literal part_id IN list, and other partitions' files and
+    lineage rows are untouched. A failure before the append leaves the old
+    rows current; the same upsert run again rebuilds the same parts. A
+    part with no lineage row (failed, not resumed) is refused. On Iceberg
+    the same shape is a MERGE INTO with write.delete.mode=copy-on-write
+    at partition granularity.
     """
+    import pyarrow as pa
+
     from . import tables
 
     run_id = run_id or uuid.uuid4().hex[:12]
     spans_dir, lineage_dir = table_targets(out_dir)
-    prior = _prior_lineage(spark, lineage_dir)
-    if prior is None:
+    prior_rows = _prior_lineage(spark, lineage_dir)
+    if prior_rows is None:
         raise ValueError(
             f"{lineage_dir} does not exist — upsert needs the output of a "
             "run_checkpointed run")
-    columns, prior_rows = prior
-    if "num_partitions" not in columns:
-        raise ValueError(
-            f"{lineage_dir} has no num_partitions column — this output was "
-            "not created by run_checkpointed and does not support upsert")
-    num_partitions = _pinned_modulus(columns, prior_rows)
+    num_partitions = _pinned_modulus(prior_rows)
     if num_partitions is None:
         raise ValueError(
             f"{lineage_dir} has only null num_partitions values — cannot "
             "recover the salt modulus; this target does not support upsert")
-    _check_part_scheme(columns, prior_rows, lineage_dir)
 
     salted = with_part_id(updated_docs, num_partitions)
-    # one aggregate gives the affected ids and the doc count (a doc_id maps
-    # to exactly one part_id, so the per-part distinct counts add up)
-    per_part = (salted.groupBy("part_id")
-                .agg(F.countDistinct("doc_id").alias("n")).collect())
-    affected = sorted(r.part_id for r in per_part)
+    # the updated ids and their part_ids, one narrow scan: the affected
+    # ids, the doc count and the anti-join's broadcast side
+    part_of = dict(salted.select("doc_id", "part_id").collect())
+    affected = sorted(set(part_of.values()))
     if not affected:
         return {"run_id": run_id, "parts_touched": 0, "docs_updated": 0}
-    updated_ids = salted.select("doc_id").distinct()
+    present = {r.part_id for r in prior_rows}
+    if not present.issuperset(affected):
+        raise ValueError(
+            f"{lineage_dir} has no lineage row for part_id(s) "
+            f"{sorted(set(affected) - present)} — resume the output before "
+            "upserting into it")
+    updated_ids = spark.createDataFrame(
+        pa.table({"doc_id": pa.array(list(part_of), pa.string())}))
 
     fresh = extract_salted(salted, cfg, min(num_partitions, len(affected)))
     existing = tables.read_partitions(spark, spans_dir, SPAN_FLAT_SCHEMA,
@@ -451,18 +442,15 @@ def upsert_docs(
     merged = (kept.select(fresh.columns).unionByName(fresh)
               .repartition(num_partitions, salt_key()))
     # one materialization: the overwrite deletes the very files `existing`
-    # reads, and the lineage aggregate below must not re-run extraction
+    # reads, and the emptied-part check below must not re-run extraction
     merged = merged.localCheckpoint(eager=True)
     tables.write_partitioned(merged, spans_dir, "part_id", spark)
-    stats = lineage(merged).collect()
 
     # dynamic overwrite only touches partitions PRESENT in `merged`: an
     # affected partition whose every doc updated to a zero-span version
-    # would keep its stale files on disk — delete those explicitly; every
-    # affected partition gets a lineage row (zero row if empty) so lineage
-    # and data stay consistent
-    touched = set(affected)
-    emptied = sorted(touched - {r.part_id for r in stats})
+    # keeps its stale files — delete them before the lineage read-back
+    emptied = sorted(set(affected) - {
+        r.part_id for r in merged.select("part_id").distinct().collect()})
     if emptied:
         if tables.is_table_identifier(out_dir):
             spark.sql(f"DELETE FROM {spans_dir} WHERE part_id IN "
@@ -473,31 +461,7 @@ def upsert_docs(
                 shutil.rmtree(f"{spans_dir}/part_id={pid}",
                               ignore_errors=True)
 
-    # replace the affected partitions' lineage rows and keep the rest:
-    # build the new table on the driver, write it to a sibling dir, swap
-    # (Iceberg: one atomic replace commit)
-    survivors = [tuple(r[c] for c in LINEAGE_SCHEMA.names)
-                 for r in prior_rows if r.part_id not in touched]
-    merged_lineage = _lineage_frame(
-        spark,
-        survivors + _lineage_rows(stats, affected, run_id, num_partitions))
-    if tables.is_table_identifier(out_dir):
-        merged_lineage.writeTo(lineage_dir).createOrReplace()
-    else:
-        merged_lineage.write.mode("overwrite").parquet(lineage_dir + "_new")
-        import os
-        import shutil
-        # rename the live table ASIDE first (never delete-then-move): a
-        # crash at any step leaves a complete copy under lineage, _old or
-        # _new — the rmtree+move it replaces had a window that lost the
-        # whole table (ADVICE r3)
-        old_dir = lineage_dir + "_old"
-        shutil.rmtree(old_dir, ignore_errors=True)  # stale prior crash
-        os.rename(lineage_dir, old_dir)
-        os.rename(lineage_dir + "_new", lineage_dir)
-        shutil.rmtree(old_dir)
-    return {
-        "run_id": run_id,
-        "parts_touched": len(affected),
-        "docs_updated": sum(r.n for r in per_part),
-    }
+    _append_lineage(spark, out_dir, affected, prior_rows, run_id,
+                    num_partitions)
+    return {"run_id": run_id, "parts_touched": len(affected),
+            "docs_updated": len(part_of)}

@@ -84,9 +84,11 @@ SPAN_FLAT_SCHEMA = T.StructType(
     + [T.StructField(f"style_{f.name}", f.dataType, True) for f in STYLE_STRUCT.fields]
 )
 
-# One lineage row per finished part_id: pipeline.lineage()'s aggregates plus
-# the run that produced them, and the salt modulus and formula
-# (pipeline.PART_SCHEME) that define part_id.
+# One lineage row per part_id a run or an upsert wrote: pipeline.lineage()'s
+# aggregates plus the run that produced them, the salt modulus and formula
+# (pipeline.PART_SCHEME) that define part_id, and ``seq``, the run's
+# position in the output's history (0, then 1 + the largest earlier seq).
+# The table is append-only; a part's current row is its largest-seq row.
 LINEAGE_SCHEMA = T.StructType(
     [T.StructField("part_id", T.IntegerType())]
     + [T.StructField(c, T.LongType()) for c in (
@@ -99,6 +101,7 @@ LINEAGE_SCHEMA = T.StructType(
         T.StructField("completed_at", T.TimestampType()),
         T.StructField("num_partitions", T.IntegerType()),
         T.StructField("part_scheme", T.StringType()),
+        T.StructField("seq", T.LongType()),
     ]
 )
 

@@ -135,6 +135,7 @@ def test_job_cli_lifecycle(spark, tmp_path):
     fresh run over A + B."""
     import glob
 
+    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     import job
@@ -185,8 +186,13 @@ def test_job_cli_lifecycle(spark, tmp_path):
     assert got.count() == want.count() == n1
     assert got.exceptAll(want).count() == 0
     assert want.exceptAll(got).count() == 0
+    # the lineage is append-only: each part's current row is its row
+    # with the largest seq
+    latest = Window.partitionBy("part_id").orderBy(F.col("seq").desc())
     lin = {r.part_id: r.checksum
-           for r in spark.read.parquet(f"{grown}/lineage").collect()}
+           for r in spark.read.parquet(f"{grown}/lineage")
+           .withColumn("rank", F.row_number().over(latest))
+           .where("rank = 1").collect()}
     assert lin == {r.part_id: r.checksum
                    for r in lineage(got).collect()}
     # --render-html after --upsert renders the grown spans table

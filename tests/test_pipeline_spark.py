@@ -210,6 +210,16 @@ def _mtimes(root):
             for d, _, files in os.walk(root) for f in files}
 
 
+def _current_lineage(spark, out):
+    """Each part_id's lineage row with the largest seq, picked here from
+    the raw rows (the lineage table is append-only)."""
+    current = {}
+    for r in spark.read.parquet(f"{out}/lineage").collect():
+        if r.part_id not in current or r.seq > current[r.part_id].seq:
+            current[r.part_id] = r
+    return current
+
+
 def test_checkpoint_resume_job_count(spark, docs, tmp_path):
     """A failed first run plus its resume is a bounded number of Spark
     jobs: lineage is collected once per run and decided on the driver, and
@@ -266,9 +276,9 @@ def test_lineage_timestamps_survive_a_non_utc_driver(spark, docs, tmp_path):
     """completed_at is the driver's wall clock when the driver's zone is
     not the session's: lineage frames are built through Arrow, where a
     naive datetime would be read in the session zone (UTC here) and land
-    4-5 hours off in New York. An upsert rebuilds the lineage table from
-    the collected rows, so every part it does not touch must keep its row
-    unchanged in every column, completed_at included."""
+    4-5 hours off in New York. An upsert appends rows only for the parts
+    it touches, so every other part's current row must stay unchanged in
+    every column, completed_at included."""
     from pdf2dom_spark.pipeline import upsert_docs
 
     small = docs.limit(40).localCheckpoint(eager=True)
@@ -284,8 +294,7 @@ def test_lineage_timestamps_survive_a_non_utc_driver(spark, docs, tmp_path):
             run_checkpointed(spark, small, out, num_partitions=8,
                              run_id="r2")
             t1 = datetime.now()
-            before = {r.part_id: r for r in
-                      spark.read.parquet(f"{out}/lineage").collect()}
+            before = _current_lineage(spark, out)
             assert sorted(before) == list(range(8))
             assert all(t0 <= r.completed_at <= t1 for r in before.values())
 
@@ -295,8 +304,7 @@ def test_lineage_timestamps_survive_a_non_utc_driver(spark, docs, tmp_path):
             assert upsert_docs(spark, updated, out,
                                run_id="u1")["parts_touched"] == 1
             t2 = datetime.now()
-            after = {r.part_id: r for r in
-                     spark.read.parquet(f"{out}/lineage").collect()}
+            after = _current_lineage(spark, out)
             assert sorted(after) == list(range(8))
             for pid in range(8):
                 if pid != 3:
@@ -524,11 +532,11 @@ def test_upsert_docs_equals_full_rerun(spark, docs, tmp_path):
     b = spark.read.parquet(f"{out}/spans")
     assert a.count() == b.count()
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-    # lineage still reconciles with the merged table
-    lin = spark.read.parquet(f"{out}/lineage").select("part_id", "checksum")
+    # the current lineage rows still reconcile with the merged table
+    lin = [(r.part_id, r.checksum)
+           for r in _current_lineage(spark, out).values()]
     fresh = lineage(b).select("part_id", "checksum")
-    assert (sorted(map(tuple, lin.collect()))
-            == sorted(map(tuple, fresh.collect())))
+    assert sorted(lin) == sorted(map(tuple, fresh.collect()))
     # resume over the upserted table is still a no-op
     stats2 = run_checkpointed(spark, full_docs, out, num_partitions=8,
                               run_id="noop")
@@ -589,9 +597,11 @@ def test_upsert_empties_partition(spark, docs, tmp_path):
     after = spark.read.parquet(f"{out}/spans")
     assert after.where(F.col("part_id") == target_part).count() == 0
     assert after.where(F.col("doc_id") == target_doc).count() == 0
-    lin = spark.read.parquet(f"{out}/lineage")
-    row = lin.where(F.col("part_id") == target_part).collect()
-    assert len(row) == 1 and row[0].span_count == 0
+    rows = spark.read.parquet(f"{out}/lineage").where(
+        F.col("part_id") == target_part).collect()
+    assert sorted(r.seq for r in rows) == [0, 1]
+    row = _current_lineage(spark, out)[target_part]
+    assert row.run_id == "up-empty" and row.span_count == 0
 
     # resume over the upserted table is still a no-op (lineage complete)
     full_docs = (small.where(F.col("doc_id") != target_doc)
@@ -618,8 +628,10 @@ def test_other_part_scheme_lineage_refused(spark, docs, tmp_path):
     """An output whose lineage has no part_scheme column (written before
     part_id followed the shuffle's placement) or names another formula is
     refused by both resume and upsert, never remapped: its part_ids would
-    not match the ones this version computes."""
-    from pdf2dom_spark.pipeline import upsert_docs
+    not match the ones this version computes. A lineage with no seq
+    column (written before lineage became append-only) is refused too:
+    its rows cannot be ordered."""
+    from pdf2dom_spark.pipeline import PART_SCHEME, upsert_docs
     from pdf2dom_spark.schema import LINEAGE_SCHEMA
 
     row = {c: 0 for c in LINEAGE_SCHEMA.names}
@@ -631,16 +643,21 @@ def test_other_part_scheme_lineage_refused(spark, docs, tmp_path):
         "other": (spark.createDataFrame(
             [{**row, "part_scheme": "pmod(xxhash64(doc_id), P)"}],
             LINEAGE_SCHEMA), "pmod\\(xxhash64"),
+        "no_seq": (spark.createDataFrame(
+            [{**row, "part_scheme": PART_SCHEME}], LINEAGE_SCHEMA)
+            .drop("seq"), "no seq column"),
     }
     for name, (lin, msg) in cases.items():
         out = tmp_path / name
         lin.write.parquet(str(out / "lineage"))
+        lineage_files = sorted((out / "lineage").iterdir())
         with pytest.raises(ValueError, match=msg):
             run_checkpointed(spark, docs, str(out), num_partitions=4,
                              run_id="r")
         with pytest.raises(ValueError, match=msg):
             upsert_docs(spark, docs.limit(1), str(out), run_id="u")
         assert not (out / "spans").exists()
+        assert sorted((out / "lineage").iterdir()) == lineage_files
 
 
 def test_one_task_writes_one_part(spark, docs, tmp_path):
@@ -649,7 +666,7 @@ def test_one_task_writes_one_part(spark, docs, tmp_path):
     file in each part_id dir it touches: a failed first run, its resume and
     an upsert leave exactly one file per dir (the upsert's rewrite
     replaces the dir), and so does a run on the split path. The first run,
-    its resume and the upsert also each leave one new lineage file. The
+    its resume and the upsert also each append one lineage file. The
     task check also covers the split path's renumber exchange, which adaptive
     execution would otherwise coalesce into one task on this small
     corpus."""
@@ -694,9 +711,9 @@ def test_one_task_writes_one_part(spark, docs, tmp_path):
     upsert_docs(spark, docs.where(F.col("doc_id").isin(ids))
                 .withColumn("spans", F.reverse("spans")), out, run_id="u1")
     assert sorted(files_per_dir(out).values()) == [1, 1, 1, 1]
-    # the upsert rewrites the lineage table: one new file replaces both
+    # the upsert appends one lineage file and leaves the earlier ones
     upserted = lineage_files(out)
-    assert len(upserted) == 1 and not upserted & resumed
+    assert resumed < upserted and len(upserted) == 3
 
     split = str(tmp_path / "split")
     run_checkpointed(spark, docs, split, num_partitions=4, run_id="s1",
@@ -704,37 +721,120 @@ def test_one_task_writes_one_part(spark, docs, tmp_path):
     assert sorted(files_per_dir(split).values()) == [1, 1, 1, 1]
 
 
-def test_upsert_lineage_swap_crash_recovery(spark, docs, tmp_path):
-    """A crash between the lineage-swap renames must leave a recoverable
-    table that the next run restores automatically (ADVICE r3: the old
-    rmtree+move had a window that lost lineage entirely)."""
-    import os
-    import shutil
+def _assert_lineage_describes(spark, out, spans, num_partitions):
+    """Every part's current lineage row equals lineage(spans) for it, in
+    every aggregate column (a zero row for a part with no spans)."""
+    want = {r.part_id: r for r in lineage(spans).collect()}
+    current = _current_lineage(spark, out)
+    assert sorted(current) == list(range(num_partitions))
+    cols = lineage(spans).columns
+    for pid, row in current.items():
+        expect = (tuple(want[pid]) if pid in want
+                  else (pid,) + (0,) * (len(cols) - 1))
+        assert tuple(row[c] for c in cols) == expect, pid
 
+
+def test_upsert_failed_before_lineage_append_reruns(spark, docs, tmp_path,
+                                                   monkeypatch):
+    """An upsert that fails after its spans overwrite and before its
+    lineage append leaves the rewritten spans under the old lineage rows.
+    Running the same upsert again gives the spans a full re-run over the
+    updated corpus gives, current lineage rows that describe them, and a
+    resume after it is a no-op."""
+    from pdf2dom_spark import tables
     from pdf2dom_spark.pipeline import upsert_docs
 
-    small = docs.limit(20).localCheckpoint(eager=True)
-    out = str(tmp_path / "swapcrash")
-    run_checkpointed(spark, small, out, num_partitions=8, run_id="base")
-    lin_dir = f"{out}/lineage"
-    before = sorted(map(tuple, spark.read.parquet(lin_dir)
-                        .select("part_id", "checksum").collect()))
-
-    # simulate the between-renames crash state: live renamed aside to _old,
-    # _new fully written (here: identical content), nothing at the live name
-    shutil.copytree(lin_dir, lin_dir + "_new")
-    os.rename(lin_dir, lin_dir + "_old")
-
-    ids = [r.doc_id for r in small.select("doc_id").limit(3).collect()]
-    updated = (small.where(F.col("doc_id").isin(ids))
+    out = str(tmp_path / "crash")
+    run_checkpointed(spark, docs, out, num_partitions=8, run_id="base")
+    before = sorted(map(tuple, spark.read.parquet(f"{out}/lineage")
+                        .collect()))
+    ids = [r.doc_id for r in docs.select("doc_id").limit(20).collect()]
+    updated = (docs.where(F.col("doc_id").isin(ids))
                .withColumn("spans", F.reverse("spans")))
-    stats = upsert_docs(spark, updated, out, run_id="recovered")
+
+    append = tables.append_table
+
+    def fail_once(*args, **kwargs):
+        monkeypatch.setattr(tables, "append_table", append)
+        raise RuntimeError("injected lineage append failure")
+
+    monkeypatch.setattr(tables, "append_table", fail_once)
+    with pytest.raises(RuntimeError, match="injected"):
+        upsert_docs(spark, updated, out, run_id="u1")
+    assert tables.append_table is append
+    assert sorted(map(tuple, spark.read.parquet(f"{out}/lineage")
+                      .collect())) == before
+
+    stats = upsert_docs(spark, updated, out, run_id="u2")
     assert stats["docs_updated"] == len(ids)
-    assert not os.path.isdir(lin_dir + "_old")
-    assert not os.path.isdir(lin_dir + "_new")
-    after = sorted(map(tuple, spark.read.parquet(lin_dir)
-                       .select("part_id", "checksum").collect()))
-    assert {p for p, _ in after} == {p for p, _ in before}
+
+    full_docs = (docs.where(~F.col("doc_id").isin(ids))
+                 .unionByName(updated))
+    ref = str(tmp_path / "ref")
+    run_checkpointed(spark, full_docs, ref, num_partitions=8, run_id="full")
+    a = spark.read.parquet(f"{ref}/spans")
+    b = spark.read.parquet(f"{out}/spans")
+    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+    _assert_lineage_describes(spark, out, b, 8)
+    assert {r.run_id for r in _current_lineage(spark, out).values()
+            if r.seq == 1} == {"u2"}
+
+    mtimes = _mtimes(out)
+    again = run_checkpointed(spark, full_docs, out, num_partitions=8,
+                             run_id="noop")
+    assert again["span_count"] == 0 and again["parts_done"] == 8
+    assert again["total_span_count"] == b.count()
+    assert _mtimes(out) == mtimes
+
+
+def test_latest_lineage_row_wins(spark, docs, tmp_path):
+    """Lineage is append-only: a part rewritten by two upserts holds three
+    rows with increasing seq, its largest-seq row describes its spans,
+    and a resume counts only each part's current row."""
+    from pdf2dom_spark.pipeline import upsert_docs
+
+    by_part: dict[int, list] = {}
+    for r in with_part_id(docs, 8).select("doc_id", "part_id").collect():
+        by_part.setdefault(r.part_id, []).append(r.doc_id)
+    first_ids = by_part[2][:2] + by_part[5][:2]
+    second_ids = by_part[5][2:4] + by_part[6][:2]
+
+    out = str(tmp_path / "latest")
+    run_checkpointed(spark, docs, out, num_partitions=8, run_id="base")
+    for run_id, ids in (("u1", first_ids), ("u2", second_ids)):
+        upsert_docs(spark, docs.where(F.col("doc_id").isin(ids))
+                    .withColumn("spans", F.reverse("spans")), out,
+                    run_id=run_id)
+
+    spans = spark.read.parquet(f"{out}/spans")
+    rows = spark.read.parquet(f"{out}/lineage").collect()
+    shared = sorted((r.seq, r.run_id) for r in rows if r.part_id == 5)
+    assert shared == [(0, "base"), (1, "u1"), (2, "u2")]
+    _assert_lineage_describes(spark, out, spans, 8)
+
+    total = spans.count()
+    # summing every row would count the rewritten parts more than once
+    assert sum(r.span_count for r in rows) > total
+    stats = run_checkpointed(spark, docs, out, num_partitions=8,
+                             run_id="noop")
+    assert stats["parts_done"] == 8 and stats["span_count"] == 0
+    assert stats["total_span_count"] == total
+
+
+def test_upsert_refuses_parts_without_lineage(spark, docs, tmp_path):
+    """An upsert touching a part that failed and was not resumed yet is
+    refused before it writes: a lineage row for that part would mark it
+    done with only the updated documents in it."""
+    from pdf2dom_spark.pipeline import upsert_docs
+
+    out = str(tmp_path / "gap")
+    run_checkpointed(spark, docs, out, num_partitions=8, run_id="r1",
+                     fail_parts={3})
+    before = _mtimes(out)
+    gap = with_part_id(docs, 8).where(F.col("part_id") == 3).drop("part_id")
+    with pytest.raises(ValueError, match=r"part_id\(s\) \[3\]"):
+        upsert_docs(spark, gap.limit(2), out, run_id="u1")
+    assert _mtimes(out) == before
 
 
 def test_ingest_reads_nested_input_directories(spark, tmp_path):
