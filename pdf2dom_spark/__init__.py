@@ -14,9 +14,10 @@ Architecture (Spark-first, not a port):
 - Extraction runs as one ``mapInArrow`` over Arrow batches on every path
   (``extract_spans``, ``run_checkpointed``, ``upsert_docs``, ``job.py``,
   pagesplit), through ``pipeline.extract_salted`` or, in
-  ``run_checkpointed``, ``pipeline.extract_gathered``, except pagesplit's
-  page-group kernel; inside the kernel everything is columnar numpy (no
-  per-row Python at the Spark level). The nested-style
+  ``run_checkpointed``, ``pipeline.extract_gathered``; one kernel body,
+  ``extract.extract_batch``, serves every path, pagesplit's page groups
+  included, and inside it everything is columnar numpy (no per-row
+  Python at the Spark level). The nested-style
   ``extract_spans(nested=True)`` output is a JVM-side ``struct``
   projection over the same flat kernel output.
 - Skew from giant documents is defused by salted repartitioning on the raw
@@ -41,7 +42,7 @@ Modules:
   pdfwrite   — real PDF writer for the synthetic corpora
   jpegdec    — baseline/progressive JPEG codec for the image-pixel path
   pipeline   — Spark-level wiring: salting, mapInArrow, lineage, resume
-  pagesplit  — giant-document page-group fan-out (skew layer 3)
+  pagesplit  — giant-document page-group fan-out (skew layer 3), no pandas
   tables     — Iceberg-or-parquet table IO routing
   memtune    — once-per-worker tuning every kernel calls first: glibc
                malloc thresholds, no per-task zip-importer re-reads,

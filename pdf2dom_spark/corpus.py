@@ -604,7 +604,7 @@ def build_groups_df(spark, sf_dir: str, mode: str = "oracle",
     ~2.0x to ~1.3x the unsplit kernel."""
     from pyspark.sql import functions as F
 
-    from .pagesplit import GROUP_SCHEMA, split_doc
+    from .pagesplit import GROUP_SCHEMA, groups_batch, split_doc
 
     src = spark.read.parquet(f"{sf_dir}/documents.parquet")
     if where:
@@ -614,14 +614,14 @@ def build_groups_df(spark, sf_dir: str, mode: str = "oracle",
     sgen = stream_fn(mode)
 
     def gen_split(batches):
-        cols = [f.name for f in GROUP_SCHEMA]
-        for pdf in batches:
+        for b in batches:
             rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+            for doc_id, text in zip(b.column("doc_id").to_pylist(),
+                                    b.column("text").to_pylist()):
                 did = str(doc_id)
                 rows.extend(split_doc(did, sgen(did, text), pages_per_group,
                                       min_bytes, start_page=start_page,
                                       end_page=end_page))
-            yield pd.DataFrame(rows, columns=cols)
+            yield groups_batch(rows)
 
-    return src.select("doc_id", "text").mapInPandas(gen_split, GROUP_SCHEMA)
+    return src.select("doc_id", "text").mapInArrow(gen_split, GROUP_SCHEMA)

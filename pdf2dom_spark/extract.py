@@ -9,7 +9,8 @@ order, PDFDomTree.java:222-258).
 
 Two ways produce the pre-finalize parts of a document, with equal results:
   - ``extract_doc_parts``: one document's ``list[dict]`` spans through
-    ``doc_tokens`` and ``DocInterp.run`` (per-op Python dispatch);
+    ``doc_tokens`` and ``DocInterp.run`` (per-op Python dispatch), run
+    only as ``batch_parts``' fallback and by the test-facing wrappers;
   - ``batch_parts``: a whole Arrow batch, read through the ``spans``
     column's offsets and child arrays (one content buffer per batch),
     tokenized in one pass (``tokenizer.tokenize_batch``) and interpreted
@@ -21,8 +22,9 @@ The merge/sort/gather finalize is BATCHED across the whole Arrow batch
 (``finalize_docs``): one global stable lexsort by (doc, emission key)
 replaces per-document argsorts and double concatenation.
 
-``extract_batch`` is the kernel's body: one DOC_SCHEMA Arrow batch in,
-one SPAN_FLAT batch out. ``make_extract_arrow`` wraps it as the
+``extract_batch`` is the one kernel body every extraction path runs: one
+DOC_SCHEMA Arrow batch (or pagesplit's GROUP_SCHEMA page groups) in, one
+SPAN_FLAT batch out. ``make_extract_arrow`` wraps it as the
 Spark-facing generator for ``DataFrame.mapInArrow(kernel,
 SPAN_FLAT_SCHEMA)``, and ``docs_to_arrow_spans`` runs it on documents
 given as Python lists; the nested ``style`` struct of SPAN_SCHEMA is a
@@ -93,7 +95,8 @@ def extract_doc_parts(doc_id: str, spans: list[dict],
     ``page_offset``/``font_seed``/``emit_fonts`` serve the page-split path
     (pagesplit.py): a page-group numbers its pages from the offset, seeds the
     font table with earlier groups' fonts, and only the last group emits the
-    document's font spans."""
+    document's font spans; ``batch_parts`` reads them from a group batch's
+    columns and passes them on for a group that falls back."""
     tokens = doc_tokens(spans)
     interp = DocInterp(
         start_page=cfg.start_page, end_page=cfg.end_page,
@@ -370,13 +373,12 @@ def docs_to_arrow_spans(doc_ids, spans_col,
 
 
 def parts_to_arrow(parts_list: list, doc_ids, parts,
-                   extra: list[tuple] | None = None,
                    columns: list[str] | None = None):
-    """Per-document parts -> ONE pyarrow RecordBatch with the SPAN_FLAT
-    schema (plus ``extra`` trailing columns: (name, pa.type, per-doc
-    values) repeated by span count). ``parts=None`` emits a null part_id
-    column — the contract of the fused synthesize-inside-the-query
-    kernels, which carry no partition id.
+    """Per-document parts (a BatchParts, or ``extract_doc_parts``
+    results) -> ONE pyarrow RecordBatch with the SPAN_FLAT schema, as
+    ``extract_batch`` builds it on every path.
+    ``parts=None`` emits a null part_id column — the contract of the fused
+    synthesize-inside-the-query kernels, which carry no partition id.
 
     ``columns`` restricts the OUTPUT to a subset of the flat schema (in
     schema order): column pruning cannot cross an opaque Python map, so a
@@ -384,22 +386,25 @@ def parts_to_arrow(parts_list: list, doc_ids, parts,
     Arrow build + IPC + JVM deserialization for all 22 (guide §4.2). The
     kernel still computes everything (finalize is shared); only the
     per-column array builds and the boundary bytes are skipped."""
+    return _span_batch(parts_list, doc_ids, parts, columns)[0]
+
+
+def _span_batch(parts_list, doc_ids, parts, columns):
+    """``parts_to_arrow``, and the span count of each document."""
     import pyarrow as pa
 
     want = None if columns is None else set(columns)
     cols, counts = (finalize_docs(parts_list, columns=want)
-                    if parts_list else ({}, None))
+                    if len(parts_list) else ({}, np.zeros(0, np.int64)))
 
-    n = len(cols["order"]) if parts_list else 0
+    n = len(cols["order"]) if len(parts_list) else 0
     schema = _to_arrow(SPAN_FLAT_SCHEMA)
     if want is not None:
         schema = pa.schema([f for f in schema if f.name in want])
-    if extra:
-        schema = pa.schema(
-            list(schema) + [pa.field(name, typ) for name, typ, _v in extra])
     if n == 0:
         return pa.RecordBatch.from_arrays(
-            [pa.array([], type=f.type) for f in schema], schema=schema)
+            [pa.array([], type=f.type) for f in schema],
+            schema=schema), counts
 
     arrays = {}
     if want is None or "doc_id" in want:
@@ -427,11 +432,8 @@ def parts_to_arrow(parts_list: list, doc_ids, parts,
                                      type=pa.float32(), from_pandas=True)
         else:
             arrays[c] = pa.array(merged, type=pa.string(), from_pandas=True)
-    for name, typ, vals in (extra or []):
-        arrays[name] = pa.array(
-            np.repeat(np.asarray(vals), counts), type=typ)
     return pa.RecordBatch.from_arrays(
-        [arrays[f.name] for f in schema], schema=schema)
+        [arrays[f.name] for f in schema], schema=schema), counts
 
 
 def _to_arrow(schema):
@@ -505,6 +507,11 @@ def batch_parts(batch, cfg: ExtractConfig = DEFAULT_CONFIG) -> BatchParts:
     names = batch.schema.names
     spans = batch.column(names.index("spans"))
     n = batch.num_rows
+    # a page group's columns (pagesplit.GROUP_SCHEMA); absent: the values
+    # of an unsplit document
+    page_offset, font_seed, emit_fonts = (
+        batch.column(names.index(c)).to_pylist() if c in names else None
+        for c in ("page_offset", "font_seed", "emit_fonts"))
     fallback = np.zeros(n, dtype=bool)
     if spans.null_count:
         fallback |= ~np.asarray(spans.is_valid())
@@ -570,7 +577,8 @@ def batch_parts(batch, cfg: ExtractConfig = DEFAULT_CONFIG) -> BatchParts:
         disable_graphics=cfg.disable_graphics,
         disable_images=cfg.disable_images,
         collect_fonts=cfg.font_handler != "ignore",
-        raster_paths=cfg.raster_paths)
+        raster_paths=cfg.raster_paths, page_offset=page_offset,
+        font_seed=font_seed)
     fallback |= ~run.covered
 
     # document-info titles: the first title span in input order
@@ -588,8 +596,9 @@ def batch_parts(batch, cfg: ExtractConfig = DEFAULT_CONFIG) -> BatchParts:
     for d in np.flatnonzero(~fallback).tolist():
         title = titles.get(d)
         recs = _event_records(run.events[d], cfg, title)
-        _tail_records(recs, run.fonts[d], int(run.end_key[d]), cfg, title,
-                      [])
+        if emit_fonts is None or emit_fonts[d]:
+            _tail_records(recs, run.fonts[d], int(run.end_key[d]), cfg,
+                          title, [])
         records[d] = recs
         flushes[d] = run.flushes[d]
     chunks = run.chunks
@@ -599,7 +608,11 @@ def batch_parts(batch, cfg: ExtractConfig = DEFAULT_CONFIG) -> BatchParts:
         fb_chunks = []
         for d, doc_id, sp in zip(fb.tolist(), doc_ids,
                                  spans.take(fb).to_pylist()):
-            r, g, f = extract_doc_parts(str(doc_id), sp, cfg)
+            r, g, f = extract_doc_parts(
+                str(doc_id), sp, cfg,
+                page_offset=page_offset[d] if page_offset else 0,
+                font_seed=font_seed and font_seed[d],
+                emit_fonts=emit_fonts is None or bool(emit_fonts[d]))
             records[d], flushes[d] = r, f
             fb_chunks.append(g)
         fcf = chunk_frame(fb_chunks)
@@ -615,20 +628,27 @@ def extract_batch(batch, cfg: ExtractConfig = DEFAULT_CONFIG,
     the SPAN_FLAT schema (or its ``columns``): ``batch_parts``, then
     ``parts_to_arrow``. The ``part_id`` column repeats the batch's own
     ``part_id`` column when it has one, else ``pid`` (None: a null
-    column)."""
+    column). A batch of page groups (pagesplit.GROUP_SCHEMA) also gets
+    its ``grp`` column repeated on every span, as the last column."""
     names = batch.schema.names
     doc_ids = batch.column(names.index("doc_id")).to_pylist()
     if "part_id" in names:
         parts = batch.column(names.index("part_id")).to_pylist()
     else:
         parts = None if pid is None else [pid] * len(doc_ids)
-    return parts_to_arrow(batch_parts(batch, cfg), doc_ids, parts,
-                          columns=columns)
+    bp = batch_parts(batch, cfg)
+    if "grp" not in names:  # perfbench's trace times this call
+        return parts_to_arrow(bp, doc_ids, parts, columns=columns)
+    out, counts = _span_batch(bp, doc_ids, parts, columns)
+    rows = np.repeat(np.arange(len(counts)), counts)
+    return out.append_column("grp", batch.column(names.index("grp"))
+                             .take(rows))
 
 
-def make_extract_arrow(cfg: ExtractConfig = DEFAULT_CONFIG):
-    """mapInArrow kernel: pyarrow batches in/out, flat schema, one
-    ``extract_batch`` per batch."""
+def make_extract_arrow(cfg: ExtractConfig = DEFAULT_CONFIG,
+                       columns: list[str] | None = None):
+    """mapInArrow kernel: pyarrow batches in/out, flat schema (or its
+    ``columns``), one ``extract_batch`` per batch."""
 
     def extract_arrow(batches):
         memtune.tune_worker()
@@ -639,7 +659,7 @@ def make_extract_arrow(cfg: ExtractConfig = DEFAULT_CONFIG):
         except Exception:  # pragma: no cover
             pid = -1
         for b in batches:
-            yield extract_batch(b, cfg, pid)
+            yield extract_batch(b, cfg, pid, columns)
         memtune.task_done()
 
     return extract_arrow

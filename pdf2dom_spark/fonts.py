@@ -192,16 +192,20 @@ class FontTable:
     """Per-document font registry (FontTable.java:33-118).
 
     Entries identified by (name, type, subtype); display names de-duplicated
-    with a numeric suffix (``nextUsedName``, FontTable.java:77-88).
+    with a numeric suffix (``nextUsedName``, FontTable.java:77-88). ``seed``
+    names go in first, in order: a page group starts with the fonts of the
+    groups before it (pagesplit.py), so used names stay document-wide.
     """
 
-    def __init__(self) -> None:
+    def __init__(self, seed: list[str] | tuple = ()) -> None:
         self.entries: list[dict] = []
         self._keys: set[tuple[str, str, str]] = set()
         self._used_names: set[str] = set()
         # name -> used_name index: type/subtype are functions of the name,
         # so one entry per name and the dict mirrors the list exactly
         self._by_name: dict[str, str] = {}
+        for name in seed:
+            self.add_entry(name)
 
     def add_entry(self, font_name: str) -> None:
         if not is_supported(font_name):

@@ -460,13 +460,8 @@ class DocInterp:
         self.collect_fonts = collect_fonts
         self.page_offset = page_offset
         self.raster_paths = raster_paths
-        self.font_table = F.FontTable()
+        self.font_table = F.FontTable(font_seed or ())
         self._adv = self._make_adv()
-        # page-split seeding: fonts from earlier page-groups, in first-use
-        # order, so used-name de-dup stays globally consistent (pagesplit.py)
-        for name in (font_seed or []):
-            self.font_table.add_entry(name)
-        self.n_seed = len(self.font_table.entries)
 
     def _make_adv(self):
         """advance function: real per-font width tables when the document
@@ -1531,7 +1526,8 @@ def run_batch(tb, frag_doc: np.ndarray, frag_rank: np.ndarray,
               img_args: list, ndocs: int, start_page: int = 0,
               end_page: int = 2**31 - 1, disable_graphics: bool = False,
               disable_images: bool = False, collect_fonts: bool = True,
-              raster_paths: bool = False) -> BatchRun:
+              raster_paths: bool = False, page_offset: list | None = None,
+              font_seed: list | None = None) -> BatchRun:
     """Interpret the documents of one batch together (see the block
     comment above). ``tb`` tokenizes the batch's spans: fragment ``f``
     belongs to document ``frag_doc[f]``, has span rank ``frag_rank[f]``
@@ -1541,7 +1537,8 @@ def run_batch(tb, frag_doc: np.ndarray, frag_rank: np.ndarray,
     the stream (FRAG_OTHER).
     Image span ``k`` of document ``img_doc[k]`` at span rank
     ``img_rank[k]`` is the DoMedia op with operands ``img_args[k]``
-    (media_ref, width, height, name)."""
+    (media_ref, width, height, name). Per document, ``page_offset`` and
+    ``font_seed`` (None: 0 and no seed) are DocInterp's."""
     K = KEY_STRIDE
     nops = len(tb.op_tok)
     nimg = len(img_doc)
@@ -1634,28 +1631,31 @@ def run_batch(tb, frag_doc: np.ndarray, frag_rank: np.ndarray,
     end_key = ntok * K
     spos = np.arange(len(stream)) - bounds[sdoc]
 
-    # pages: 1-based per document; ops before the first PG and on gated
-    # pages are skipped, PG itself always counts and flushes
+    # pages: numbered per document from its offset; ops before its first
+    # PG and on gated pages are skipped, PG itself counts and flushes
     sc = ucode[stream]
     ispg = sc == _OC["PG"]
     cpg = np.cumsum(ispg)
     cpg0 = np.concatenate(([0], cpg))
-    page_no = cpg - cpg0[bounds[sdoc]]
+    seen = cpg - cpg0[bounds[sdoc]]  # the document's PGs so far
     npages = cpg0[bounds[1:]] - cpg0[bounds[:-1]]
+    off = np.asarray(page_offset or np.zeros(ndocs), dtype=np.int64)
+    page_no = seen + off[sdoc]
 
-    def page_on(p):
-        return (p >= 1) & (p >= start_page) & (p <= end_page)
+    def page_on(n, p):
+        return (n >= 1) & (p >= start_page) & (p <= end_page)
 
-    active = page_on(page_no)
+    active = page_on(seen, page_no)
     flushes: list = [{} for _ in range(ndocs)]
     pgi = np.flatnonzero(ispg)
     prevp = page_no[pgi] - 1
-    fl = np.flatnonzero(page_on(prevp))
+    fl = np.flatnonzero(page_on(seen[pgi] - 1, prevp))
     for d, p, k in zip(sdoc[pgi[fl]].tolist(), prevp[fl].tolist(),
                        (spos[pgi[fl]] * K).tolist()):
         flushes[d][p] = k
-    for d in np.flatnonzero(page_on(npages) & covered).tolist():
-        flushes[d][int(npages[d])] = int(end_key[d])
+    lastp = npages + off
+    for d in np.flatnonzero(page_on(npages, lastp) & covered).tolist():
+        flushes[d][int(lastp[d])] = int(end_key[d])
 
     # per page (PG ordinal): box, rotation, page matrix
     apg = pgi[active[pgi]]
@@ -1685,8 +1685,10 @@ def run_batch(tb, frag_doc: np.ndarray, frag_rank: np.ndarray,
     akey = spos[A] * K
     apage = page_no[A]
     agp = cpg[A] - 1
-    # documents without a Tf share one (never written) empty table
-    fonts_out: list = [_NO_FONTS] * ndocs
+    # documents without a seed or a Tf share one (never written) empty
+    # table; a seed goes in first, whether or not fonts are collected
+    fonts_out: list = [F.FontTable(s) if s else _NO_FONTS
+                       for s in font_seed or [None] * ndocs]
     if not nA:
         return BatchRun(covered, events, fonts_out, end_key, flushes,
                         ChunkFrame.empty())

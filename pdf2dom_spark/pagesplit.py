@@ -4,6 +4,12 @@ single task's working set. This module splits oversized documents at page
 boundaries into independent page-groups, extracts groups in parallel, and
 reassembles the global ``order`` with one window renumber.
 
+Both halves are mapInArrow stages and no pandas is involved: the split
+kernel yields ``groups_batch`` batches, and the groups run through the
+one extraction kernel body every path shares (``extract.extract_batch``),
+which reads a group's page offset, font seed and emit flag from its
+GROUP_SCHEMA columns.
+
 Exactness: PDF resets the graphics state at each page (the interpreter does
 too), so page-groups are independent except for
   - the cumulative font table (affects used-name de-dup + family
@@ -22,18 +28,14 @@ too), so page-groups are independent except for
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from . import memtune
-from .extract import DEFAULT_CONFIG, ExtractConfig
-from .fonts import FontTable
+from .extract import DEFAULT_CONFIG, ExtractConfig, make_extract_arrow
 from .pipeline import (_require_positive, extract_salted, salt_key,
                        with_part_id)
 from .schema import IN_SPAN_STRUCT, SPAN_FLAT_SCHEMA
@@ -152,9 +154,10 @@ def split_doc(doc_id: str, spans: list[dict], pages_per_group: int,
     font prescan entirely."""
     spans = sorted(spans, key=lambda s: s["offset"])
     size = sum(len(s.get("text") or "") for s in spans)
+    whole = [{"doc_id": doc_id, "grp": 0, "page_offset": 0,
+              "emit_fonts": True, "font_seed": [], "spans": spans}]
     if size < min_bytes:
-        return [{"doc_id": doc_id, "grp": 0, "page_offset": 0,
-                 "emit_fonts": True, "font_seed": [], "spans": spans}]
+        return whole
 
     # form XObject DEFINITIONS are position-independent (doc_tokens collects
     # them before splicing): replicate them into every page-group so /Name Do
@@ -208,8 +211,7 @@ def split_doc(doc_id: str, spans: list[dict], pages_per_group: int,
     if not groups:
         # definitions/meta only: passthrough so the endDocument records
         # (title, fonts) still emit instead of the doc vanishing
-        return [{"doc_id": doc_id, "grp": 0, "page_offset": 0,
-                 "emit_fonts": True, "font_seed": [], "spans": spans}]
+        return whole
 
     # per-group font first-use order (regex prescan mirrors
     # DocInterp._prescan_fonts granularity: names referenced by Tf on the
@@ -305,17 +307,27 @@ def split_doc(doc_id: str, spans: list[dict], pages_per_group: int,
     return out
 
 
+def groups_batch(rows: list[dict]):
+    """``split_doc`` rows -> one GROUP_SCHEMA Arrow batch: the front half
+    of the paged path (``extract_spans_paged``'s split kernel, or a
+    source-fused splitter like ``corpus.build_groups_df``) is a mapInArrow
+    kernel yielding these."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return pa.RecordBatch.from_pylist(rows, to_arrow_schema(GROUP_SCHEMA))
+
+
 def extract_groups(groups: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG,
                    num_partitions: int | None = None,
                    columns: list[str] | None = None) -> DataFrame:
     """GROUP_SCHEMA rows -> flat spans with the per-document global
     ``order`` restored.
 
-    The back half of the paged path. The front half — producing the group
-    rows — is either ``extract_spans_paged``'s split kernel (arbitrary
-    DOC_SCHEMA input) or a source-fused splitter like
-    ``corpus.build_groups_df`` (synthesis/scan and split in ONE Python
-    stage, the shape a production scan->split pipeline has).
+    The back half of the paged path: the groups run through the same
+    mapInArrow kernel as unsplit documents (``extract.make_extract_arrow``),
+    which reads a group's page offset, font seed and emit flag from its
+    columns and repeats its ``grp`` on every span.
 
     ``columns`` prunes the kernel OUTPUT (and therefore the renumber
     exchange + sort) to a subset of the flat schema — the gate queries
@@ -331,53 +343,19 @@ def extract_groups(groups: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG,
                   [f for f in SPAN_FLAT_SCHEMA.fields if f.name in columns])
     salted = with_part_id(groups, p).repartition(
         p, F.xxhash64("doc_id", "grp"))
-
     out_schema = T.StructType(
         out_fields + [T.StructField("grp", T.IntegerType())])
-
-    def extract_group(batches):
-        # one extract_doc_parts call per page-group row (a group's page
-        # offset, font seed and emit flag are per-document interpreter
-        # inputs), ONE batched finalize + direct RecordBatch assembly per
-        # Arrow batch (r6: the pandas frame + per-column to_numeric
-        # coercion was 2x the arrow build)
-        import pyarrow as pa
-
-        from pdf2dom_spark.extract import extract_doc_parts, parts_to_arrow
-
-        memtune.tune_worker()
-        for b in batches:
-            names = b.schema.names
-            col = {n: b.column(names.index(n)).to_pylist()
-                   for n in ("doc_id", "spans", "part_id", "page_offset",
-                             "font_seed", "emit_fonts", "grp")}
-            parts_list, doc_ids, doc_parts, grps = [], [], [], []
-            for did, spans, pid, po, seed, emit, grp in zip(
-                    col["doc_id"], col["spans"], col["part_id"],
-                    col["page_offset"], col["font_seed"],
-                    col["emit_fonts"], col["grp"]):
-                parts_list.append(extract_doc_parts(
-                    str(did), spans, cfg, page_offset=int(po),
-                    font_seed=list(seed), emit_fonts=bool(emit)))
-                doc_ids.append(str(did))
-                doc_parts.append(int(pid))
-                grps.append(int(grp))
-            yield parts_to_arrow(
-                parts_list, doc_ids, doc_parts, columns=columns,
-                extra=[("grp", pa.int32(),
-                        np.asarray(grps, dtype=np.int32))])
-        memtune.task_done()
 
     # per-document renumber over the split subset only (an exchange +
     # sort of just those docs' spans; sub-threshold docs never enter it).
     # The exchange is keyed like extract_salted's, so task i holds
     # part_id i; the window clusters on the same key and reuses it.
     key = salt_key()
-    big_spans = (salted.mapInArrow(extract_group, out_schema)
-                 .repartition(p, key))
     win = Window.partitionBy(key, "doc_id").orderBy("grp", "order")
-    big_spans = (big_spans.withColumn(
-        "order", (F.row_number().over(win) - 1).cast("int")).drop("grp"))
+    big_spans = (salted.mapInArrow(make_extract_arrow(cfg, columns),
+                                   out_schema).repartition(p, key)
+                 .withColumn("order",
+                             (F.row_number().over(win) - 1).cast("int")))
     return big_spans.select(*[f.name for f in out_fields])
 
 
@@ -388,10 +366,7 @@ def extract_spans_paged(docs: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG,
     """Skew-proof extraction: giant docs fan out per page-group; everything
     else takes the UNSPLIT kernel verbatim.
 
-    Round 3 pushed every document through the split kernel and a global
-    window renumber — two extra full-payload passes that cost 2.2x the
-    unsplit kernel even when nothing actually split (VERDICT r3 #2). The
-    route now happens on the raw docs frame with a pure-JVM size
+    The route happens on the raw docs frame with a pure-JVM size
     expression (the same byte count split_doc checks), so:
 
     - sub-threshold documents (the vast majority at any real threshold)
@@ -416,31 +391,28 @@ def extract_spans_paged(docs: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG,
     doc_bytes = F.aggregate(
         "spans", F.lit(0),
         lambda acc, s: acc + F.coalesce(F.length(s["text"]), F.lit(0)))
-    if min_bytes <= 0:
-        # everything splits (the stress/gate configuration): the small
-        # branch is statically empty — skip its scan entirely
-        small = None
-        big = docs
-    else:
+    # min_bytes <= 0 splits everything (the stress/gate configuration):
+    # the small branch is statically empty and its scan is skipped
+    small, big = None, docs
+    if min_bytes > 0:
         small = docs.where(doc_bytes < F.lit(min_bytes))
         big = docs.where(doc_bytes >= F.lit(min_bytes))
 
-    def split_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def split_kernel(batches):
         memtune.tune_worker()
-        for pdf in batches:
+        for b in batches:
             rows: list[dict] = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                if isinstance(spans, np.ndarray):
-                    spans = list(spans)
+            for doc_id, spans in zip(b.column("doc_id").to_pylist(),
+                                     b.column("spans").to_pylist()):
                 # min_bytes=0: the JVM-side route above already filtered
                 # this branch to at-threshold docs — every one splits
                 rows.extend(split_doc(str(doc_id), spans,
                                       pages_per_group, 0,
                                       start_page=cfg.start_page,
                                       end_page=cfg.end_page))
-            yield pd.DataFrame(rows, columns=[f.name for f in GROUP_SCHEMA])
+            yield groups_batch(rows)
 
-    groups = big.mapInPandas(split_kernel, GROUP_SCHEMA)
+    groups = big.mapInArrow(split_kernel, GROUP_SCHEMA)
     big_spans = extract_groups(groups, cfg, num_partitions=p)
     if small is None:
         return big_spans

@@ -10,7 +10,10 @@ the rich and oracle corpora, the other corpus modes, the golden fixtures,
 fuzzed streams over the covered operators (q/Q nesting, cm, text state,
 TJ kerns, paths, nested and cyclic forms, damaged operands), documents
 that fall back mixed with covered ones, empty and image-only documents,
-shuffled span offsets and every ExtractConfig switch.
+shuffled span offsets and every ExtractConfig switch. Page groups
+(``pagesplit.split_doc`` rows: page offset, font seed, emit flag and
+``grp`` as batch columns) are compared the same way, against
+``extract_doc_parts`` given the group's three values.
 """
 
 from __future__ import annotations
@@ -22,7 +25,7 @@ import pyarrow as pa
 import pytest
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from pdf2dom_spark import corpus, extract, interp, tokenizer
+from pdf2dom_spark import corpus, extract, interp, pagesplit, tokenizer
 from pdf2dom_spark.extract import ExtractConfig
 from pdf2dom_spark.schema import DOC_SCHEMA
 
@@ -30,6 +33,8 @@ SCHEMA = to_arrow_schema(DOC_SCHEMA)
 
 
 def _batch(docs):
+    if isinstance(docs, pa.RecordBatch):  # already a batch (page groups)
+        return docs
     return pa.RecordBatch.from_pylist(
         [{"doc_id": d, "spans": s} for d, s in docs], schema=SCHEMA)
 
@@ -66,7 +71,10 @@ def _fallback_ids(docs, cfg, monkeypatch) -> list:
 
 def assert_same(docs, cfg=None):
     cfg = cfg or ExtractConfig()
-    got, ref = _kernel(docs, cfg), _reference(docs, cfg)
+    _assert_equal(_kernel(docs, cfg), _reference(docs, cfg))
+
+
+def _assert_equal(got, ref):
     assert got.schema == ref.schema
     for name in ref.schema.names:
         a, b = got.column(name), ref.column(name)
@@ -344,6 +352,118 @@ def test_fuzzed_streams(seed, monkeypatch):
     assert_same(docs)
     # most fuzzed documents stay on the batch path
     assert _fallbacks(docs, ExtractConfig(), monkeypatch) < 30
+
+
+# --- page groups -------------------------------------------------------------
+
+def _groups(docs, pages_per_group, min_bytes=0, cfg=None):
+    cfg = cfg or ExtractConfig()
+    return [g for d, s in docs
+            for g in pagesplit.split_doc(d, s, pages_per_group, min_bytes,
+                                         cfg.start_page, cfg.end_page)]
+
+
+def _group_reference(rows, cfg):
+    parts = [extract.extract_doc_parts(
+        r["doc_id"], r["spans"], cfg, page_offset=r["page_offset"],
+        font_seed=list(r["font_seed"]), emit_fonts=r["emit_fonts"])
+        for r in rows]
+    ref = extract.parts_to_arrow(parts, [r["doc_id"] for r in rows],
+                                 [-1] * len(rows))
+    _cols, counts = extract.finalize_docs(parts) if parts else ({}, [])
+    grp = np.repeat([r["grp"] for r in rows], counts).astype(np.int32)
+    return ref.append_column("grp", pa.array(grp, type=pa.int32()))
+
+
+def assert_groups_same(rows, cfg=None):
+    cfg = cfg or ExtractConfig()
+    _assert_equal(_kernel(pagesplit.groups_batch(rows), cfg),
+                  _group_reference(rows, cfg))
+
+
+_SPLIT_MODES = ["rich", "oracle", "rot_text", "forms", "enc", "rich_lite"]
+
+
+@pytest.mark.parametrize("pages_per_group", [1, 2, 3])
+@pytest.mark.parametrize("mode", _SPLIT_MODES)
+def test_page_groups_batch_equals_per_group(mode, pages_per_group,
+                                            monkeypatch):
+    from perfbench import inputs
+
+    fn = corpus.stream_fn(mode)
+    docs = [(d, fn(d, t)) for d, t in inputs.rich_docs(8, 40)]
+    rows = _groups(docs, pages_per_group)
+    # the documents really split (an oracle document has at most three
+    # pages): later groups carry offsets and seeds
+    if (mode, pages_per_group) != ("oracle", 3):
+        assert len(rows) > len(docs)
+        assert any(r["page_offset"] for r in rows)
+        assert any(r["font_seed"] for r in rows)
+    assert_groups_same(rows)
+    if mode in ("rich", "oracle"):
+        batch = pagesplit.groups_batch(rows)
+        assert _fallbacks(batch, ExtractConfig(), monkeypatch) == 0
+
+
+@pytest.mark.parametrize("cfg", [
+    ExtractConfig(start_page=2, end_page=3),
+    ExtractConfig(image_handler="dir", font_handler="dir"),
+    ExtractConfig(image_handler="ignore", font_handler="ignore"),
+], ids=["pages2-3", "dir", "ignore"])
+def test_page_groups_config_switches(cfg):
+    rows = _groups(_rich(30, seed=9), 1, cfg=cfg)
+    assert_groups_same(rows, cfg)
+
+
+def test_page_groups_gated_font_seed(monkeypatch):
+    """Pre-PG content and pages outside the start/end gate put nothing
+    in a seed; the last group alone emits the document's fonts."""
+    spans = [
+        {"kind": "text", "text": "/Phantom 9 Tf", "media_ref": None,
+         "offset": 0},
+        {"kind": "text", "text": ("612 792 0 PG BT /Serif 10 Tf "
+                                  "1 0 0 1 72 700 Tm (a) Tj ET"),
+         "media_ref": None, "offset": 1},
+        {"kind": "text", "text": ("612 792 0 PG BT /Gated 10 Tf "
+                                  "1 0 0 1 72 700 Tm (b) Tj ET"),
+         "media_ref": None, "offset": 2},
+    ]
+    cfg = ExtractConfig(start_page=1, end_page=1)
+    rows = _groups([("d", spans)], 1, cfg=cfg)
+    assert len(rows) == 2
+    assert_groups_same(rows, cfg)
+    got = _kernel(pagesplit.groups_batch(rows), cfg)
+    fonts = [(t, g) for t, k, g in zip(*(got.column(c).to_pylist() for c
+                                         in ("text", "kind", "grp")))
+             if k == "font"]
+    assert fonts == [("Serif", 1)]
+    assert _fallbacks(pagesplit.groups_batch(rows), cfg, monkeypatch) == 0
+
+
+def test_page_groups_mixed_with_plain_documents(monkeypatch):
+    """One batch of documents that split, documents that pass through
+    whole (grp 0, offset 0, no seed) and documents that fall back."""
+    rich = _rich(24, seed=10)
+    widths = {"kind": "widths", "text": "default:600",
+              "media_ref": "widths:Helvetica"}
+    docs = rich[:20] + [(f"w{d}", _with(s, widths)) for d, s in rich[20:]]
+    sizes = sorted(sum(len(sp["text"] or "") for sp in s) for _d, s in docs)
+    rows = _groups(docs, 2, min_bytes=sizes[len(sizes) // 2])
+    whole = [r for r in rows if r["grp"] == 0 and r["emit_fonts"]]
+    assert 0 < len(whole) < len(docs) < len(rows)
+    rng = random.Random(3)
+    rng.shuffle(rows)
+    assert_groups_same(rows)
+    fell = _fallback_ids(pagesplit.groups_batch(rows), ExtractConfig(),
+                         monkeypatch)
+    assert sorted(set(fell)) == [f"w{d}" for d, _s in rich[20:]]
+
+
+@pytest.mark.parametrize("seed", range(6))
+def test_page_groups_fuzzed_streams(seed):
+    rng = random.Random(seed)
+    docs = [_fuzz_doc(rng, 60 * seed + i) for i in range(60)]
+    assert_groups_same(_groups(docs, 1))
 
 
 # --- the exact-arithmetic building blocks -----------------------------------

@@ -190,8 +190,8 @@ def test_paged_fused_split_is_single_python_stage(spark):
                              num_partitions=8)
     flat = extract_groups(groups, ExtractConfig(), num_partitions=8)
     plan = _plan(flat)
-    # gen+split is MapInPandas; the extract back half moved to MapInArrow
-    # (r6: direct RecordBatch assembly) — still exactly TWO Python stages
+    # gen+split and the extract back half are both MapInArrow — still
+    # exactly TWO Python stages
     assert plan.count("MapInPandas") + plan.count("MapInArrow") == 2
     assert "Window" in plan
     # no Exchange between the scan and the fused gen+split kernel beyond
