@@ -28,7 +28,8 @@ def parse_args(argv):
     p.add_argument("--input", help="documents table (DOC_SCHEMA parquet dir)")
     p.add_argument("--input-pdfs", help="directory/glob of real .pdf files "
                    "to ingest, subdirectories included (distributed "
-                   "binaryFile scan -> stdlib PDF parser -> DOC_SCHEMA; "
+                   "binaryFile scan of the PDF bytes, parsed by the "
+                   "stdlib PDF parser inside the extraction kernel; "
                    "pdf2dom_spark.pdfread); a file's doc_id is its path "
                    "under the input root, the glob's leading components "
                    "with no glob character")
@@ -43,7 +44,7 @@ def parse_args(argv):
     p.add_argument("--input-archives", help="directory/glob of .zip "
                    "archives of PDFs, subdirectories included (one "
                    "binaryFile row per archive -> "
-                   "in-memory member parse -> DOC_SCHEMA with "
+                   "in-memory member unpack -> PDF bytes with "
                    "<archive>/<member> doc_ids, <archive> being the "
                    "archive's path under the input root as for "
                    "--input-pdfs)")
@@ -117,21 +118,18 @@ def main(argv=None):
         disable_images=args.disable_images,
         disable_image_data=args.disable_image_data,
         image_handler=args.image_handler, font_handler=args.font_handler,
+        pdf_password=args.pdf_password.encode("utf-8"),
+        image_pixels=args.image_pixels,
     )
     p = args.partitions or int(
         spark.conf.get("spark.sql.shuffle.partitions", "200"))
 
     if args.input_pdfs:
         from pdf2dom_spark.pdfread import pdf_docs_df
-        docs = pdf_docs_df(spark, args.input_pdfs,
-                           password=args.pdf_password.encode("utf-8"),
-                           image_pixels=args.image_pixels)
+        docs = pdf_docs_df(spark, args.input_pdfs)
     elif args.input_archives:
         from pdf2dom_spark.pdfread import pdf_archive_docs_df
-        docs = pdf_archive_docs_df(
-            spark, args.input_archives,
-            password=args.pdf_password.encode("utf-8"),
-            image_pixels=args.image_pixels)
+        docs = pdf_archive_docs_df(spark, args.input_archives)
     elif args.synth:
         from pdf2dom_spark.corpus import build_docs_df
         docs = build_docs_df(spark, args.synth, mode="rich", num_partitions=p)

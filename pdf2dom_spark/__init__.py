@@ -10,7 +10,9 @@ text / image / rect / line, and emit an ordered span sequence per document
 Architecture (Spark-first, not a port):
 
 - The input is a DataFrame of interleaved text+media documents
-  ``(doc_id, spans: array<struct<kind,text,media_ref,offset>>)``.
+  ``(doc_id, spans: array<struct<kind,text,media_ref,offset>>)``, or of
+  real PDF files ``(doc_id, pdf: binary)`` from a JVM ``binaryFile`` scan,
+  which the kernel parses before it extracts (one Python crossing).
 - Extraction runs as one ``mapInArrow`` over Arrow batches on every path
   (``extract_spans``, ``run_checkpointed``, ``upsert_docs``, ``job.py``,
   pagesplit), through ``pipeline.extract_salted`` or, in
@@ -37,7 +39,7 @@ Modules:
   raster     — polygon scanline fill + stdlib PNG codec (G11, pixel paths)
   extract    — per-document driver: spans in -> ordered span rows out
   corpus     — deterministic synthetic corpora (fixtures + oracle + rich)
-  pdfread    — real PDF reader + distributed binaryFile ingest
+  pdfread    — real PDF reader (the kernel's parse) + binaryFile ingest
   pdfcrypt   — standard security handler (empty/known-password decryption)
   pdfwrite   — real PDF writer for the synthetic corpora
   jpegdec    — baseline/progressive JPEG codec for the image-pixel path

@@ -24,9 +24,7 @@ from __future__ import annotations
 
 import hashlib
 
-import pandas as pd
-
-from .schema import DOC_SCHEMA
+from .schema import DOC_SCHEMA, doc_batch
 
 # ---------------------------------------------------------------------------
 # layout constants shared with the SQL oracles (keep in sync with queries.py)
@@ -545,7 +543,7 @@ def build_docs_df(spark, sf_dir: str, mode: str = "rich", replicate: int = 1,
                   num_partitions: int | None = None,
                   where: str | None = None):
     """documents.parquet -> DataFrame[DOC_SCHEMA] via a distributed,
-    deterministic generator (mapInPandas; no driver-side loops).
+    deterministic generator (mapInArrow; no driver-side loops).
 
     ``num_partitions``: repartition the *source rows* before generation —
     the testdata parquet is a single file, so without this the synthesis
@@ -574,14 +572,12 @@ def build_docs_df(spark, sf_dir: str, mode: str = "rich", replicate: int = 1,
     sgen = stream_fn(mode)
 
     def gen(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                did = str(doc_id)
-                rows.append({"doc_id": did, "spans": sgen(did, text)})
-            yield pd.DataFrame(rows, columns=["doc_id", "spans"])
+        for b in batches:
+            ids = [str(d) for d in b.column("doc_id").to_pylist()]
+            yield doc_batch(ids, [sgen(did, text) for did, text in
+                                  zip(ids, b.column("text").to_pylist())])
 
-    return src.select("doc_id", "text").mapInPandas(gen, DOC_SCHEMA)
+    return src.select("doc_id", "text").mapInArrow(gen, DOC_SCHEMA)
 
 
 def build_groups_df(spark, sf_dir: str, mode: str = "oracle",

@@ -23,12 +23,13 @@ The merge/sort/gather finalize is BATCHED across the whole Arrow batch
 replaces per-document argsorts and double concatenation.
 
 ``extract_batch`` is the one kernel body every extraction path runs: one
-DOC_SCHEMA Arrow batch (or pagesplit's GROUP_SCHEMA page groups) in, one
-SPAN_FLAT batch out. ``make_extract_arrow`` wraps it as the
-Spark-facing generator for ``DataFrame.mapInArrow(kernel,
-SPAN_FLAT_SCHEMA)``, and ``docs_to_arrow_spans`` runs it on documents
-given as Python lists; the nested ``style`` struct of SPAN_SCHEMA is a
-JVM-side projection over the kernel's output (pipeline.extract_spans).
+DOC_SCHEMA Arrow batch (or pagesplit's GROUP_SCHEMA page groups, or
+PDF_SCHEMA files, parsed first) in, one SPAN_FLAT batch out.
+``make_extract_arrow`` wraps it as the Spark-facing generator for
+``DataFrame.mapInArrow(kernel, SPAN_FLAT_SCHEMA)``, and
+``docs_to_arrow_spans`` runs it on documents given as Python lists; the
+nested ``style`` struct of SPAN_SCHEMA is a JVM-side projection over the
+kernel's output (pipeline.extract_spans).
 """
 
 from __future__ import annotations
@@ -42,7 +43,7 @@ from .interp import (FRAG_CONTENT, FRAG_FORM, FRAG_OTHER, ChunkFrame,
                      DocInterp, chunk_frame, doc_cid2_fonts, doc_cmaps,
                      doc_tokens, doc_vmetrics, doc_widths, glyph_frame,
                      image_op_args, run_batch)
-from .schema import DOC_SCHEMA, SPAN_FLAT_SCHEMA, STYLE_FIELDS
+from .schema import SPAN_FLAT_SCHEMA, STYLE_FIELDS, doc_batch
 from .tokenizer import tokenize_batch
 
 
@@ -66,6 +67,10 @@ class ExtractConfig:
     # normalize / WOFF1 for CFF — fontbytes.py) and embeds it as a data URI;
     # False keeps the stable "font:<name>" ref
     font_payloads: bool = False
+    # parse options of a PDF_SCHEMA input (pdfread.pdf_to_spans): the
+    # password of encrypted files, and image XObjects decoded to pixels
+    pdf_password: bytes = b""
+    image_pixels: bool = False
 
 
 DEFAULT_CONFIG = ExtractConfig()
@@ -361,15 +366,10 @@ def docs_to_arrow_spans(doc_ids, spans_col,
     """Documents as python lists -> ONE pyarrow RecordBatch with the
     SPAN_FLAT schema (or its ``columns``) and a null ``part_id`` column:
     the lists become one DOC_SCHEMA batch, extracted as the mapInArrow
-    kernel extracts it (``extract_batch``). The kernels that build their
-    documents in the worker (synthesized streams, parsed PDF files) use
-    it."""
-    import pyarrow as pa
-
-    batch = pa.RecordBatch.from_pydict(
-        {"doc_id": [str(d) for d in doc_ids], "spans": list(spans_col)},
-        schema=_to_arrow(DOC_SCHEMA))
-    return extract_batch(batch, cfg, columns=columns)
+    kernel extracts it (``extract_batch``). The kernels that synthesize
+    their documents' streams in the worker use it."""
+    return extract_batch(doc_batch(doc_ids, spans_col), cfg,
+                         columns=columns)
 
 
 def parts_to_arrow(parts_list: list, doc_ids, parts,
@@ -392,13 +392,14 @@ def parts_to_arrow(parts_list: list, doc_ids, parts,
 def _span_batch(parts_list, doc_ids, parts, columns):
     """``parts_to_arrow``, and the span count of each document."""
     import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     want = None if columns is None else set(columns)
     cols, counts = (finalize_docs(parts_list, columns=want)
                     if len(parts_list) else ({}, np.zeros(0, np.int64)))
 
     n = len(cols["order"]) if len(parts_list) else 0
-    schema = _to_arrow(SPAN_FLAT_SCHEMA)
+    schema = to_arrow_schema(SPAN_FLAT_SCHEMA)
     if want is not None:
         schema = pa.schema([f for f in schema if f.name in want])
     if n == 0:
@@ -434,12 +435,6 @@ def _span_batch(parts_list, doc_ids, parts, columns):
             arrays[c] = pa.array(merged, type=pa.string(), from_pandas=True)
     return pa.RecordBatch.from_arrays(
         [arrays[f.name] for f in schema], schema=schema), counts
-
-
-def _to_arrow(schema):
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    return to_arrow_schema(schema)
 
 
 # span kinds -> how a document's stream uses them (doc_tokens): content
@@ -629,7 +624,13 @@ def extract_batch(batch, cfg: ExtractConfig = DEFAULT_CONFIG,
     ``parts_to_arrow``. The ``part_id`` column repeats the batch's own
     ``part_id`` column when it has one, else ``pid`` (None: a null
     column). A batch of page groups (pagesplit.GROUP_SCHEMA) also gets
-    its ``grp`` column repeated on every span, as the last column."""
+    its ``grp`` column repeated on every span, as the last column. A
+    batch of PDF files (a ``pdf`` column, schema.PDF_SCHEMA) is parsed
+    into DOC_SCHEMA rows first (``pdfread.parse_pdf_batch``, with the
+    config's ``pdf_password`` and ``image_pixels``)."""
+    if "pdf" in batch.schema.names:
+        from .pdfread import parse_pdf_batch
+        batch = parse_pdf_batch(batch, cfg.pdf_password, cfg.image_pixels)
     names = batch.schema.names
     doc_ids = batch.column(names.index("doc_id")).to_pylist()
     if "part_id" in names:

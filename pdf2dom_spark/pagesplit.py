@@ -38,7 +38,7 @@ from . import memtune
 from .extract import DEFAULT_CONFIG, ExtractConfig, make_extract_arrow
 from .pipeline import (_require_positive, extract_salted, salt_key,
                        with_part_id)
-from .schema import IN_SPAN_STRUCT, SPAN_FLAT_SCHEMA
+from .schema import DOC_SCHEMA, IN_SPAN_STRUCT, SPAN_FLAT_SCHEMA
 
 # chars that open a region the tokenizer treats as non-operator content
 # (string/hex literal, dict operand, comment) — everything else is
@@ -380,11 +380,26 @@ def extract_spans_paged(docs: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG,
     The two branches each scan ``docs`` upstream; in production that is a
     pruned columnar table scan (cheap, and the right trade against caching
     the corpus). ``min_bytes=0`` remains the everything-splits stress
-    configuration the oracle gate runs."""
+    configuration the oracle gate runs.
+
+    PDF files (a ``pdf`` column) are parsed first, by the kernel's own
+    parse (``pdfread.parse_pdf_batch``) as a mapInArrow stage: the route
+    reads ``spans``. So this path crosses into Python three times."""
     spark = docs.sparkSession
     p = num_partitions or int(
         spark.conf.get("spark.sql.shuffle.partitions", "32"))
     _require_positive(num_partitions=p, pages_per_group=pages_per_group)
+    if "pdf" in docs.columns:
+        from .pdfread import parse_pdf_batch
+
+        def parse_kernel(batches):
+            memtune.tune_worker()
+            for b in batches:
+                yield parse_pdf_batch(b, cfg.pdf_password, cfg.image_pixels)
+
+        docs = docs.mapInArrow(parse_kernel, T.StructType(
+            DOC_SCHEMA.fields + [f for f in docs.schema.fields
+                                 if f.name not in ("doc_id", "pdf")]))
 
     # exact transliteration of split_doc's size check:
     # sum(len(s.text or "") for s in spans)

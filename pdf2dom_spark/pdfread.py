@@ -10,6 +10,11 @@ gating (:76-86), rotation quadrants (TestPageRotation.java:15-97) — can be
 asserted against our output from the very files the reference asserts them
 on (tests/test_realpdf.py).
 
+Distributed ingest (``pdf_docs_df``, ``pdf_archive_docs_df``) yields
+PDF_SCHEMA rows, (doc_id, PDF bytes), with doc_id computed on the JVM; the
+extraction kernel parses them (``parse_pdf_batch``), so a file crosses into
+Python once.
+
 Stdlib only (zlib + re). Covers the constructs the fixtures use:
 
 - classic xref tables (incl. /Prev chains and hybrid /XRefStm),
@@ -1624,8 +1629,31 @@ def pdf_file_to_row(path: str, doc_id: str | None = None,
 
 
 # ---------------------------------------------------------------------------
-# distributed ingest: a directory of real PDF files -> DOC_SCHEMA DataFrame
+# distributed ingest: a directory of real PDF files -> PDF_SCHEMA DataFrame
 # ---------------------------------------------------------------------------
+
+
+def parse_pdf_batch(batch, password: bytes = b"",
+                    image_pixels: bool = False):
+    """One Arrow batch with a ``pdf`` column (schema.PDF_SCHEMA) -> its
+    documents as DOC_SCHEMA rows, the batch's other columns kept after
+    them: the extraction kernel's parse (extract.extract_batch). A file
+    that does not parse (damaged, or locked without its password) gets
+    no spans, so it extracts to nothing and never poisons its batch."""
+    from .schema import doc_batch
+
+    spans = []
+    for data in batch.column("pdf").to_pylist():
+        try:
+            spans.append(pdf_to_spans(data, password=password,
+                                      image_pixels=image_pixels))
+        except Exception:
+            spans.append([])
+    out = doc_batch(batch.column("doc_id").to_pylist(), spans)
+    for f in batch.schema:
+        if f.name not in ("doc_id", "pdf"):
+            out = out.append_column(f, batch.column(f.name))
+    return out
 
 
 def _input_root(spark, path_glob: str) -> str:
@@ -1643,27 +1671,34 @@ def _input_root(spark, path_glob: str) -> str:
     return fs.makeQualified(path).toUri().getPath()
 
 
-def _relative_id(path: str, root: str) -> str:
-    """doc_id of one scanned file: its path relative to the input root
-    (``binaryFile``'s ``path`` is a URI such as ``file:/d/b c/x.pdf``,
-    unescaped), or its basename when the root is the file itself."""
-    import posixpath
+def _scan_files(spark, path_glob: str, suffix: str):
+    """(doc_id, pdf) rows of a recursive ``binaryFile`` scan. doc_id is a
+    JVM expression over the scan's ``path`` (a URI such as
+    ``file:/d/b c/x.pdf``, unescaped): the path without scheme and
+    authority, relative to the input root, or its basename when the root
+    is the file itself."""
+    from pyspark.sql import functions as F
 
-    path = re.sub(r"^[A-Za-z][A-Za-z0-9+.-]+:(//[^/]*)?", "", path)
-    if path == root:
-        return posixpath.basename(path)
-    return posixpath.relpath(path, root)
+    root = _input_root(spark, path_glob)
+    path = F.regexp_replace("path", r"^[A-Za-z][A-Za-z0-9+.-]+:(//[^/]*)?",
+                            "")
+    doc_id = F.when(path == F.lit(root), F.regexp_extract(path, "[^/]*$", 0)
+                    ).otherwise(F.substring(path, len(root.rstrip("/")) + 2,
+                                            2**31 - 1))
+    return (spark.read.format("binaryFile")
+            .option("pathGlobFilter", suffix)
+            .option("recursiveFileLookup", "true")
+            .load(path_glob)
+            .select(doc_id.alias("doc_id"), F.col("content").alias("pdf")))
 
 
-def pdf_docs_df(spark, path_glob: str, password: bytes = b"",
-                image_pixels: bool = False):
-    """Distributed real-PDF ingest: ``binaryFile`` scan -> per-file parse in
-    Arrow batches -> DOC_SCHEMA rows (the same shape every other pipeline
-    entry consumes, so run_checkpointed/extract_spans work unchanged).
-
-    Scale shape: the binaryFile source splits the file listing across
-    executors (one row per PDF, content as bytes); parsing is a narrow
-    mapInPandas — no shuffle at all until the extraction salt. One monster
+def pdf_docs_df(spark, path_glob: str):
+    """Distributed real-PDF ingest: a ``binaryFile`` scan -> PDF_SCHEMA
+    rows, no Python stage. The extraction kernel parses the bytes, so
+    each file crosses into Python once, and since doc_id is made on the
+    JVM, ``with_part_id`` and a resume's pending filter run before any
+    parse. Parse options are ExtractConfig's ``pdf_password`` and
+    ``image_pixels``. No shuffle until the extraction salt. One monster
     PDF cannot skew a task beyond its own size; the extraction stage
     re-salts by doc_id hash anyway (pipeline.extract_spans).
 
@@ -1671,38 +1706,7 @@ def pdf_docs_df(spark, path_glob: str, password: bytes = b"",
     relative to the glob's input root (see ``_input_root``), so
     ``a/x.pdf`` and ``b/x.pdf`` stay two documents and the files directly
     under a given directory keep their names."""
-    from .schema import DOC_SCHEMA
-
-    root = _input_root(spark, path_glob)
-
-    def parse_batch(it):
-        import pandas as pd
-
-        from .memtune import tune_worker
-        tune_worker()
-        for pdf_batch in it:
-            ids, spans = [], []
-            for path, content in zip(pdf_batch["path"], pdf_batch["content"]):
-                try:
-                    spans.append(pdf_to_spans(bytes(content),
-                                              password=password,
-                                              image_pixels=image_pixels))
-                    ids.append(_relative_id(str(path), root))
-                except Exception:
-                    # unparseable file: skip, never poison the batch
-                    continue
-            # object dtype even when EMPTY: a batch whose every file was
-            # skipped would otherwise produce float64 columns Arrow cannot
-            # cast to list<struct>
-            yield pd.DataFrame({"doc_id": pd.Series(ids, dtype=object),
-                                "spans": pd.Series(spans, dtype=object)})
-
-    files = (spark.read.format("binaryFile")
-             .option("pathGlobFilter", "*.pdf")
-             .option("recursiveFileLookup", "true")
-             .load(path_glob)
-             .select("path", "content"))
-    return files.mapInPandas(parse_batch, DOC_SCHEMA)
+    return _scan_files(spark, path_glob, "*.pdf")
 
 
 # A crawled-archive corpus can hide zip/gzip bombs; any single member
@@ -1715,8 +1719,6 @@ MAX_ARCHIVE_MEMBER_BYTES = 256 * 1024 * 1024
 def _gzip_bounded(data: bytes, limit: int) -> bytes | None:
     """Incremental gzip decompress with a hard output ceiling — returns
     None (skip) instead of materializing a decompression bomb."""
-    import zlib
-
     d = zlib.decompressobj(wbits=31)
     out = bytearray()
     try:
@@ -1737,102 +1739,82 @@ def _container_pdf_members(data: bytes,
     import io as _io
     import tarfile
     import zipfile
+    from functools import partial
 
-    if data[:2] == b"PK":
-        try:
-            zf = zipfile.ZipFile(_io.BytesIO(data))
-        except Exception:
-            return
-        for info in zf.infolist():
-            if info.filename.lower().endswith(".pdf"):
-                if info.file_size > limit:
-                    continue  # declared size over cap
-                try:
-                    with zf.open(info) as fh:
-                        # read bounded even if the header lies about size
-                        blob = fh.read(limit + 1)
-                    if len(blob) > limit:
-                        continue
-                    yield info.filename, blob
-                except Exception:
-                    continue
-        return
     if data[:2] == b"\x1f\x8b":
-        inner = _gzip_bounded(data, limit)
-        if inner is None:
-            return
-        if inner.startswith(b"%PDF"):
-            yield "member.pdf", inner  # bare gzipped PDF
-            return
-        data = inner  # fall through: likely a .tar.gz
-    if len(data) > 262 and data[257:262] == b"ustar" \
-            or data[:4] == b"%PDF":
-        if data[:4] == b"%PDF":
-            yield "member.pdf", data
-            return
-        try:
+        data = _gzip_bounded(data, limit)
+        if data is None or data[:2] == b"PK":
+            return  # a zip inside gzip is not opened
+    if data[:4] == b"%PDF":
+        yield "member.pdf", data  # bare (gzipped) PDF
+        return
+    try:
+        if data[:2] == b"PK":
+            zf = zipfile.ZipFile(_io.BytesIO(data))
+            members = [(i.filename, i.file_size, partial(zf.open, i))
+                       for i in zf.infolist()]
+        elif len(data) > 262 and data[257:262] == b"ustar":
             tf = tarfile.open(fileobj=_io.BytesIO(data))
-        except Exception:
+            members = [(m.name, m.size, partial(tf.extractfile, m))
+                       for m in tf.getmembers() if m.isfile()]
+        else:
             return
-        for m in tf.getmembers():
-            if m.isfile() and m.name.lower().endswith(".pdf"):
-                if m.size > limit:
-                    continue
-                try:
-                    fh = tf.extractfile(m)
-                    if fh is None:
-                        continue
-                    blob = fh.read(limit + 1)
-                    if len(blob) > limit:
-                        continue  # stored size lied past the cap
-                    yield m.name, blob
-                except Exception:
-                    continue
+    except Exception:
+        return
+    for name, size, open_member in members:
+        if not name.lower().endswith(".pdf") or size > limit:
+            continue  # declared size over cap
+        try:
+            with open_member() as fh:
+                # read bounded even if the header lies about size
+                blob = fh.read(limit + 1)
+        except Exception:
+            continue
+        if len(blob) <= limit:
+            yield name, blob
 
 
-def pdf_archive_docs_df(spark, path_glob: str, suffix: str = "*",
-                        password: bytes = b"", image_pixels: bool = False):
+def pdf_archive_docs_df(spark, path_glob: str, suffix: str = "*"):
     """Distributed ingest of PDFs packed inside container files — the
     shapes web-scale corpora actually ship in (many small PDFs per
     S3-friendly object): zip, tar, tar.gz, or bare gzipped PDFs, sniffed
-    by magic bytes per container. Same plan as ``pdf_docs_df``:
-    binaryFile scan (one row per CONTAINER) -> one narrow mapInPandas
-    that opens each container in memory and emits DOC_SCHEMA rows with
-    ``<container>/<member>`` doc_ids, the container named as
-    ``pdf_docs_df`` names a file. Zero shuffle before the extraction
-    salt; a corrupt container or member degrades to a skip, never
-    poisoning its batch. Stdlib codecs only — no temp files on
-    executors."""
-    from .schema import DOC_SCHEMA
+    by magic bytes per container. The same binaryFile scan as
+    ``pdf_docs_df`` (one row per CONTAINER, named as ``pdf_docs_df``
+    names a file) -> one narrow mapInArrow that only opens each
+    container in memory and emits PDF_SCHEMA rows with
+    ``<container>/<member>`` doc_ids; the extraction kernel parses them.
+    Zero shuffle before the extraction salt; a corrupt container or
+    member degrades to a skip, never poisoning its batch. Stdlib codecs
+    only — no temp files on executors."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    root = _input_root(spark, path_glob)
+    from .schema import PDF_SCHEMA
 
-    def parse_batch(it):
-        import pandas as pd
+    schema = to_arrow_schema(PDF_SCHEMA)
 
+    def open_containers(it):
         from .memtune import tune_worker
         tune_worker()
         for batch in it:
-            ids, spans = [], []
-            for path, content in zip(batch["path"], batch["content"]):
-                base = _relative_id(str(path), root)
-                for name, blob in _container_pdf_members(bytes(content)):
-                    try:
-                        spans.append(pdf_to_spans(
-                            blob, password=password,
-                            image_pixels=image_pixels))
-                        ids.append(f"{base}/{name}")
-                    except Exception:
-                        continue  # one bad member never kills the rest
-            yield pd.DataFrame({"doc_id": pd.Series(ids, dtype=object),
-                                "spans": pd.Series(spans, dtype=object)})
+            ids, pdfs, size = [], [], 0
+            for base, content in zip(batch.column("doc_id").to_pylist(),
+                                     batch.column("pdf").to_pylist()):
+                for name, blob in _container_pdf_members(content):
+                    if pdfs and size + len(blob) > MAX_ARCHIVE_MEMBER_BYTES:
+                        # bounded output batches: members can expand far
+                        # past their containers' bytes
+                        yield pa.RecordBatch.from_pydict(
+                            {"doc_id": ids, "pdf": pdfs}, schema=schema)
+                        ids, pdfs, size = [], [], 0
+                    ids.append(f"{base}/{name}")
+                    pdfs.append(blob)
+                    size += len(blob)
+            yield pa.RecordBatch.from_pydict({"doc_id": ids, "pdf": pdfs},
+                                             schema=schema)
 
-    files = (spark.read.format("binaryFile")
-             .option("pathGlobFilter", suffix)
-             .option("recursiveFileLookup", "true")
-             .load(path_glob)
-             .select("path", "content"))
-    return files.mapInPandas(parse_batch, DOC_SCHEMA)
+    return _scan_files(spark, path_glob, suffix).mapInArrow(
+        open_containers, PDF_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

@@ -40,6 +40,10 @@ Scale design (the 10^12-doc / 1000-executor story, tested at local[32]):
   (``_lineage_frame``): no Python worker, no shuffle, one file per
   append. ``run_checkpointed`` and ``upsert_docs`` share this reader and
   this tail.
+- **Real PDFs are parsed in the kernel.** ``pdfread.pdf_docs_df`` yields
+  (doc_id, pdf bytes) with doc_id made on the JVM, so ``with_part_id``
+  and a resume's pending filter run before any parse, and the one
+  extraction kernel parses the bytes it is handed.
 - **Bounded Arrow batches.** Set
   ``spark.sql.execution.arrow.maxRecordsPerBatch`` (docs vary wildly in
   size); the kernel is O(tokens) per batch with numpy-vectorized glyph work.
@@ -48,6 +52,7 @@ Scale design (the 10^12-doc / 1000-executor story, tested at local[32]):
 from __future__ import annotations
 
 import uuid
+from collections import namedtuple
 from datetime import datetime
 
 import numpy as np
@@ -177,10 +182,14 @@ def table_targets(out_dir: str) -> tuple[str, str]:
     return f"{out_dir}/spans", f"{out_dir}/lineage"
 
 
+# the lineage fields the write paths read from a part's current row
+_Current = namedtuple("_Current", "part_id num_partitions seq span_count")
+
+
 def _prior_lineage(spark: SparkSession, lineage_dir: str) -> list | None:
     """The current lineage rows, collected once: each part_id's row with
-    the largest ``seq`` (``completed_at`` follows the driver's clock, which
-    can go backwards). None when no lineage table exists; any other read
+    the largest ``seq`` (``completed_at`` follows the driver's clock,
+    which can go backwards), as ``_Current`` tuples. None when no lineage table exists; any other read
     failure raises, as an unreadable table taken for "no lineage" would
     re-extract everything. A table lacking a ``LINEAGE_SCHEMA`` column
     (one written before ``seq``, too: footer inference over mixed schemas
@@ -212,7 +221,9 @@ def _prior_lineage(spark: SparkSession, lineage_dir: str) -> list | None:
     part_id = table.column("part_id").to_numpy()
     o = np.lexsort((table.column("seq").to_numpy(), part_id))[::-1]
     last = o[np.unique(part_id[o], return_index=True)[1]]
-    return [Row(**r) for r in table.take(last).to_pylist()]
+    current = table.select(list(_Current._fields)).take(last)
+    return [_Current(*r) for r in
+            zip(*(c.to_pylist() for c in current.columns))]
 
 
 def _pinned_modulus(rows: list) -> int | None:

@@ -130,9 +130,7 @@ SELECT * FROM boxes UNION ALL SELECT * FROM pages UNION ALL
 SELECT * FROM rects UNION ALL SELECT * FROM imgs UNION ALL SELECT * FROM fonts
 """
 
-@_reg("extract_spans_oracle", _ORACLE_SPANS_SQL)
-def extract_spans_oracle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    flat = _extract_flat(spark, sf_dir, mode="oracle", columns=ORACLE_COLS)
+def _oracle_proj(flat: DataFrame) -> DataFrame:
     return flat.select(
         "doc_id",
         F.col("order").cast("int").alias("ord"),
@@ -147,6 +145,12 @@ def extract_spans_oracle(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("style_color").alias("color"),
         F.col("style_font_family").alias("font_family"),
     )
+
+
+@_reg("extract_spans_oracle", _ORACLE_SPANS_SQL)
+def extract_spans_oracle(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _oracle_proj(_extract_flat(spark, sf_dir, mode="oracle",
+                                      columns=ORACLE_COLS))
 
 
 # 1a-flags. P4 graphics/image disable flags under the cross-engine gate:
@@ -607,23 +611,6 @@ fonts AS (
 SELECT * FROM pages UNION ALL SELECT * FROM b0
 UNION ALL SELECT * FROM bg UNION ALL SELECT * FROM fonts
 """
-
-
-def _oracle_proj(flat: DataFrame) -> DataFrame:
-    return flat.select(
-        "doc_id",
-        F.col("order").cast("int").alias("ord"),
-        "kind", "text", "media_ref",
-        F.col("page_no").cast("int").alias("page_no"),
-        F.round(F.col("style_left").cast("double"), 2).alias("left_pt"),
-        F.round(F.col("style_top").cast("double"), 2).alias("top_pt"),
-        F.round(F.col("style_width").cast("double"), 2).alias("width_pt"),
-        F.round(F.col("style_height").cast("double"), 2).alias("height_pt"),
-        F.round(F.col("style_line_height").cast("double"), 2).alias("line_height"),
-        F.round(F.col("style_font_size").cast("double"), 2).alias("font_size"),
-        F.col("style_color").alias("color"),
-        F.col("style_font_family").alias("font_family"),
-    )
 
 
 @_reg("extract_spans_rot_text", _ROT_TEXT_SQL)
@@ -1201,8 +1188,10 @@ def raster_fill_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_reg("extract_spans_realfile", _ORACLE_SPANS_SQL)
 def extract_spans_realfile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .extract import docs_to_arrow_spans
-    from .pdfread import pdf_to_spans
+    import pyarrow as pa
+    import pyspark.sql.types as T
+
+    from .extract import extract_batch
     from .pdfwrite import oracle_pdf_bytes
 
     # uniform per-doc work (oracle corpus): single-wave task count, like
@@ -1216,33 +1205,14 @@ def extract_spans_realfile(spark: SparkSession, sf_dir: str) -> DataFrame:
     def kernel(batches):
         memtune.tune_worker()
         for b in batches:
-            names = b.schema.names
-            doc_ids = [str(d) for d in
-                       b.column(names.index("doc_id")).to_pylist()]
-            texts = b.column(names.index("text")).to_pylist()
-            yield docs_to_arrow_spans(
-                doc_ids, [pdf_to_spans(oracle_pdf_bytes(did, text))
-                          for did, text in zip(doc_ids, texts)],
-                columns=ORACLE_COLS)
+            doc_ids = [str(d) for d in b.column("doc_id").to_pylist()]
+            pdfs = [oracle_pdf_bytes(did, text) for did, text in
+                    zip(doc_ids, b.column("text").to_pylist())]
+            # PDF_SCHEMA rows: the kernel parses them, then extracts
+            yield extract_batch(pa.RecordBatch.from_pydict(
+                {"doc_id": doc_ids, "pdf": pdfs}), columns=ORACLE_COLS)
 
-    import pyspark.sql.types as T
     _want = set(ORACLE_COLS)
-    flat = src.mapInArrow(
+    return _oracle_proj(src.mapInArrow(
         kernel, T.StructType(
-            [f for f in SPAN_FLAT_SCHEMA.fields if f.name in _want]))
-    return flat.select(
-        "doc_id",
-        F.col("order").cast("int").alias("ord"),
-        "kind", "text", "media_ref",
-        F.col("page_no").cast("int").alias("page_no"),
-        F.round(F.col("style_left").cast("double"), 2).alias("left_pt"),
-        F.round(F.col("style_top").cast("double"), 2).alias("top_pt"),
-        F.round(F.col("style_width").cast("double"), 2).alias("width_pt"),
-        F.round(F.col("style_height").cast("double"), 2).alias("height_pt"),
-        F.round(F.col("style_line_height").cast("double"), 2)
-            .alias("line_height"),
-        F.round(F.col("style_font_size").cast("double"), 2)
-            .alias("font_size"),
-        F.col("style_color").alias("color"),
-        F.col("style_font_family").alias("font_family"),
-    )
+            [f for f in SPAN_FLAT_SCHEMA.fields if f.name in _want])))

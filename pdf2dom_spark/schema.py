@@ -36,6 +36,26 @@ DOC_SCHEMA = T.StructType(
     ]
 )
 
+# Real-PDF ingest rows (pdfread.pdf_docs_df): the file's bytes, parsed into
+# DOC_SCHEMA spans inside the extraction kernel (extract.extract_batch)
+PDF_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.StringType(), False),
+        T.StructField("pdf", T.BinaryType(), False),
+    ]
+)
+
+
+def doc_batch(doc_ids, spans):
+    """Documents as Python lists -> one DOC_SCHEMA Arrow batch."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return pa.RecordBatch.from_pydict(
+        {"doc_id": [str(d) for d in doc_ids], "spans": list(spans)},
+        schema=to_arrow_schema(DOC_SCHEMA))
+
+
 # ---------------------------------------------------------------------------
 # Output: ordered span sequence (the checked invariant is
 # (kind, text, media_ref, order) per doc_id)

@@ -153,9 +153,10 @@ def _three_page_pdf() -> bytes:
 def test_corrupt_pdf_bytes_terminate():
     """pdf_to_spans on mutated/truncated/garbage PDF bytes must TERMINATE
     (raise or return) — never hang or corrupt state. The production ingest
-    (pdfread.pdf_docs_df) wraps the per-file parse in a broad except and
-    skips, so any exception class is batch-safe; what it cannot survive is
-    a parser loop that stops advancing."""
+    parses inside the extraction kernel (pdfread.parse_pdf_batch), which
+    wraps the per-file parse in a broad except and gives a failed file no
+    spans, so any exception class is batch-safe; what it cannot survive
+    is a parser loop that stops advancing."""
     from pdf2dom_spark.pdfread import pdf_to_spans
 
     real = _three_page_pdf()

@@ -207,19 +207,22 @@ def test_identity_crypt_filter_stream_stays_plain():
 def test_spark_ingest_skips_protected_extracts_encrypted(spark, tmp_path):
     """Directory scan semantics at corpus scale: an empty-password
     encrypted file extracts like its plaintext twin; a password-protected
-    file is SKIPPED (never poisons the batch)."""
+    file gives NO spans (never poisons the batch)."""
     from pdf2dom_spark.pdfread import pdf_docs_df
+    from pdf2dom_spark.pipeline import extract_spans
+    from tests.conftest import local_spans, spans_by_doc
 
     src = tmp_path / "pdfs"
     src.mkdir()
     (src / "open.pdf").write_bytes(_rc4_doc(3, 128))
     (src / "locked.pdf").write_bytes(
         _rc4_doc(3, 128, user_pwd=b"secret", owner_pwd=b"secret"))
-    docs = pdf_docs_df(spark, str(src)).collect()
-    assert [d["doc_id"] for d in docs] == ["open.pdf"]
-    spans = docs[0]["spans"]
-    texts = [s["text"] for s in spans if s["kind"] == "text"]
-    assert any("(Secret)" in t for t in texts)
+    got = spans_by_doc(extract_spans(pdf_docs_df(spark, str(src)),
+                                     num_partitions=4, nested=False))
+    assert list(got) == ["open.pdf"]
+    assert got == local_spans({"open.pdf": src / "open.pdf"})
+    texts = [r["text"] for r in got["open.pdf"] if r["kind"] == "text"]
+    assert texts == ["Secret", "Body"]
 
 
 def test_encrypted_objstm_strings_not_double_decrypted():

@@ -862,3 +862,134 @@ def test_ingest_reads_nested_input_directories(spark, tmp_path):
     assert ids(pdf_archive_docs_df(spark, str(root), suffix="*.zip")) == [
         "a/batch.zip/x.pdf", "b c/batch.zip/x.pdf",
         "b c/deep/batch.zip/x.pdf"]
+
+
+def _executions(spark, description):
+    """The SQL executions run under ``sc.setJobDescription(description)``,
+    in run order: per execution its final plan's nodes top-down as
+    (name, description) pairs, and per Exchange node its records-written
+    metric."""
+    jvm = spark.sparkContext._jvm
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    out = []
+    for e in sorted((execs.apply(i) for i in range(execs.size())),
+                    key=lambda e: e.executionId()):
+        if e.description() != description:
+            continue
+        values = jvm.scala.jdk.javaapi.CollectionConverters.asJava(
+            store.executionMetrics(e.executionId()))
+        nodes = store.planGraph(e.executionId()).allNodes()
+        plan, written = [], []
+        for j in range(nodes.size()):
+            n = nodes.apply(j)
+            plan.append((n.name().strip(), n.desc()))
+            metrics = n.metrics()
+            for k in range(metrics.size()):
+                m = metrics.apply(k)
+                if m.name() == "shuffle records written":
+                    written.append((j, int(values.get(m.accumulatorId())
+                                           .replace(",", ""))))
+        out.append((plan, dict(written)))
+    return out
+
+
+def _python_nodes(plan) -> list[str]:
+    return [n for n, _d in plan
+            if "Python" in n or "InPandas" in n or "InArrow" in n]
+
+
+def test_pdf_resume_parses_only_pending_files(spark, tmp_path):
+    """Real-PDF ingest makes doc_id on the JVM, so a resume's part_id
+    filter runs below the only Python node: a resume of one failed part
+    of four parses only that part's files (the docs exchange writes one
+    record per pending file), the resumed output equals a one-shot run,
+    and an upsert's id collect runs no Python at all."""
+    from pdf2dom_spark.corpus import oracle_stream
+    from pdf2dom_spark.pdfread import pdf_docs_df
+    from pdf2dom_spark.pdfwrite import spans_to_pdf
+    from pdf2dom_spark.pipeline import upsert_docs
+
+    def write(d, ids, words):
+        d.mkdir()
+        for i in ids:
+            (d / f"d{i}.pdf").write_bytes(spans_to_pdf(
+                f"d{i}", oracle_stream(f"d{i}", f"{words} of doc {i}")))
+
+    write(tmp_path / "pdfs", range(12), "the words")
+    docs = pdf_docs_df(spark, str(tmp_path / "pdfs"))
+    failed = 1
+    n_failed = (with_part_id(docs, 4).where(F.col("part_id") == failed)
+                .count())
+    assert n_failed > 0
+
+    one, out = str(tmp_path / "one"), str(tmp_path / "resumed")
+    run_checkpointed(spark, docs, one, num_partitions=4, run_id="one")
+    run_checkpointed(spark, docs, out, num_partitions=4, run_id="r1",
+                     fail_parts={failed})
+    sc = spark.sparkContext
+    sc.setJobDescription("pdf-resume")
+    try:
+        stats = run_checkpointed(spark, docs, out, num_partitions=4,
+                                 run_id="r2")
+    finally:
+        sc.setJobDescription(None)
+    assert stats["parts_done"] == 4
+
+    [(plan, written)] = [e for e in _executions(spark, "pdf-resume")
+                         if any(n == "Scan binaryFile" for n, _d in e[0])]
+    names = [n for n, _d in plan]
+    assert "MapInPandas" not in names
+    assert _python_nodes(plan) == ["MapInArrow"]
+    scan = names.index("Scan binaryFile")
+    docs_exchange = max(j for j, n in enumerate(names[:scan])
+                        if n == "Exchange")
+    assert names.index("MapInArrow") < docs_exchange
+    filters = [j for j, (n, d) in enumerate(plan)
+               if n == "Filter" and "pmod(hash(xxhash64(" in d]
+    assert filters and all(docs_exchange < j < scan for j in filters)
+    assert _python_nodes(plan[min(filters):scan]) == []
+    assert written[docs_exchange] == n_failed
+
+    a = spark.read.parquet(f"{one}/spans")
+    b = spark.read.parquet(f"{out}/spans")
+    assert a.count() == b.count() > 0
+    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+
+    write(tmp_path / "updated", (0, 1), "new words")
+    sc.setJobDescription("pdf-upsert")
+    try:
+        up = upsert_docs(spark, pdf_docs_df(spark, str(tmp_path / "updated")),
+                         out, run_id="u1")
+    finally:
+        sc.setJobDescription(None)
+    assert up["docs_updated"] == 2
+    # the first execution to scan the files is the updated-id collect
+    id_collect = next(plan for plan, _w in _executions(spark, "pdf-upsert")
+                      if any(n == "Scan binaryFile" for n, _d in plan))
+    assert _python_nodes(id_collect) == []
+    assert "Exchange" not in [n for n, _d in id_collect]
+
+
+def test_paged_extraction_parses_pdf_input(spark, tmp_path):
+    """The page-split path parses a ``pdf`` input in a stage of its own
+    (its size route reads ``spans``): written multi-page oracle PDFs,
+    every one split per page, extract to the unsplit spans."""
+    from pdf2dom_spark.corpus import oracle_stream
+    from pdf2dom_spark.pagesplit import extract_spans_paged
+    from pdf2dom_spark.pdfread import pdf_docs_df
+    from pdf2dom_spark.pdfwrite import spans_to_pdf
+
+    src = tmp_path / "pdfs"
+    src.mkdir()
+    for i in range(6):
+        words = " ".join(f"w{i}x{k}" for k in range(40 * (i % 3) + 30))
+        (src / f"d{i}.pdf").write_bytes(
+            spans_to_pdf(f"d{i}", oracle_stream(f"d{i}", words)))
+    docs = pdf_docs_df(spark, str(src))
+    paged = extract_spans_paged(docs, num_partitions=4, pages_per_group=1,
+                                min_bytes=0)
+    plain = extract_spans(docs, num_partitions=4, nested=False)
+    assert paged.count() == plain.count() > 0
+    assert paged.exceptAll(plain).count() == 0
+    assert plain.exceptAll(paged).count() == 0

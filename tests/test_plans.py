@@ -154,33 +154,32 @@ def test_paged_stress_single_window(spark):
 
 
 def test_pdf_ingest_is_narrow(spark, tmp_path):
-    """Real-PDF ingest: binaryFile scan -> ONE Python node, zero Exchange
-    (parsing is embarrassingly parallel; the only shuffle in a full job is
-    the extraction salt downstream)."""
-    import os
-    import shutil
-
+    """Real-PDF ingest: a binaryFile scan with doc_id made on the JVM, zero
+    Python nodes and zero Exchange (the extraction kernel parses the
+    bytes; the only shuffle in a full job is the extraction salt
+    downstream)."""
+    from pdf2dom_spark.corpus import oracle_stream
     from pdf2dom_spark.pdfread import pdf_docs_df
+    from pdf2dom_spark.pdfwrite import spans_to_pdf
 
-    res = "/root/reference/src/test/resources"
-    if not os.path.isdir(res):
-        import pytest
-        pytest.skip("reference fixtures not present")
     src = tmp_path / "pdfs"
     src.mkdir()
-    shutil.copy(f"{res}/text-rendering-mode-fill.pdf", src)
+    (src / "x.pdf").write_bytes(
+        spans_to_pdf("x", oracle_stream("x", "two words")))
     df = pdf_docs_df(spark, str(src))
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
-    assert plan.count("MapInPandas") == 1
+    for node in ("MapInPandas", "MapInArrow", "Python"):
+        assert node not in plan
+    assert "FileScan binaryFile" in plan
 
 
 def test_paged_fused_split_is_single_python_stage(spark):
     """The stress gate's front half (synthesis+split) must be ONE
-    MapInPandas fed by the scan with no Exchange before it — the
+    MapInArrow fed by the scan with no Exchange before it — the
     source-fused shape; and the whole paged plan must cross Python
     exactly three times (gen+split, extract) ... i.e. exactly TWO
-    MapInPandas nodes, one Exchange between them, one Window after."""
+    MapInArrow nodes, one Exchange between them, one Window after."""
     from pdf2dom_spark.corpus import build_groups_df
     from pdf2dom_spark.extract import ExtractConfig
     from pdf2dom_spark.pagesplit import extract_groups

@@ -23,10 +23,39 @@ from pdf2dom_spark.pdfread import pdf_file_to_row
 
 RES = "/root/reference/src/test/resources"
 
-pytestmark = pytest.mark.skipif(
+# the tests that read a reference fixture file; the rest build their
+# inputs in the test (pdfwrite, pdfcrypt or hand-written object syntax)
+needs_reference = pytest.mark.skipif(
     not os.path.isdir(RES), reason="reference fixtures not present")
 
 DELTA = 10.0  # TestUtils.java delta
+
+# the reference fixtures the Spark ingest tests read, and the synthetic
+# fixture (corpus.fixture_docs) written by pdfwrite in each one's place
+# when the reference checkout is absent
+_STAND_INS = {"text-rendering-mode-stroke.pdf": "fx_rendering_mode_stroke",
+              "text-rendering-mode-fill.pdf": "fx_rendering_mode_fill",
+              "3-page-document.pdf": "fx_3_pages",
+              "images.pdf": "fx_images"}
+
+
+def _fixture_pdf(name: str) -> bytes:
+    """The bytes of reference fixture ``name``, or of its stand-in."""
+    if os.path.isdir(RES):
+        with open(f"{RES}/{name}", "rb") as fh:
+            return fh.read()
+    from pdf2dom_spark.corpus import fixture_docs
+    from pdf2dom_spark.pdfwrite import spans_to_pdf
+
+    return spans_to_pdf(name, fixture_docs()[_STAND_INS[name]])
+
+
+def _ingest_spans(docs) -> dict[str, list[dict]]:
+    """An ingest frame through the Spark extraction, as ``spans_by_doc``."""
+    from pdf2dom_spark.pipeline import extract_spans
+    from tests.conftest import spans_by_doc
+
+    return spans_by_doc(extract_spans(docs, num_partitions=4, nested=False))
 
 
 def run(rel: str, cfg: ExtractConfig | None = None) -> list[dict]:
@@ -40,30 +69,35 @@ def first_text(rows):
 
 # --- rendering modes (TestPDFDomTree.java:28-74) ---------------------------
 
+@needs_reference
 def test_real_mode_neither_invisible():
     r = first_text(run("text-rendering-mode-neither.pdf"))
     assert r["style_color"] == "rgba(0,0,0,0)"          # transparentColor
     assert r["style_stroke_color"] == "rgba(0,0,0,0)"
 
 
+@needs_reference
 def test_real_mode_fill():
     r = first_text(run("text-rendering-mode-fill.pdf"))
     assert r["style_color"] in ("#8000fe", "#8000ff")   # platform envelope
     assert r["style_stroke_color"] == "rgba(0,0,0,0)"   # no text-stroke
 
 
+@needs_reference
 def test_real_mode_stroke():
     r = first_text(run("text-rendering-mode-stroke.pdf"))
     assert r["style_color"] == "rgba(0,0,0,0)"
     assert r["style_stroke_color"] == "#ff00ff"
 
 
+@needs_reference
 def test_real_mode_stroke_and_fill():
     r = first_text(run("text-rendering-mode-stroke-and-fill.pdf"))
     assert r["style_color"] in ("#9af0e6", "#9af0e7")   # HSV rounding
     assert r["style_stroke_color"] == "#ff00ff"
 
 
+@needs_reference
 def test_real_mode_words_and_font():
     rows = run("text-rendering-mode-stroke.pdf")
     assert [r["text"] for r in rows if r["kind"] == "text"] == \
@@ -78,6 +112,7 @@ def _page_text(rows, p=None):
                     and (p is None or r["page_no"] == p))
 
 
+@needs_reference
 def test_real_3page_cid_text_decodes():
     """Type0/Identity-H subset fonts (one per page, per-page ToUnicode):
     the 2-byte code path must decode every page's text."""
@@ -88,6 +123,7 @@ def test_real_3page_cid_text_decodes():
     assert "#3" in _page_text(rows, 3)
 
 
+@needs_reference
 def test_real_3page_range_keeps_first_page_only():
     rows = run("3-page-document.pdf", ExtractConfig(start_page=1, end_page=1))
     text = _page_text(rows)
@@ -132,12 +168,14 @@ def _not_outside(r, pg):
     assert r["style_top"] + r["style_height"] < pg["style_height"] + DELTA
 
 
+@needs_reference
 def test_real_rotation_0_image_top_left_rect_bottom_right():
     pg, img, rect = _rects(0)
     _in_top(img, pg); _in_left(img, pg)
     _not_outside(rect, pg); _in_bottom(rect, pg); _in_right(rect, pg)
 
 
+@needs_reference
 def test_real_rotation_90_image_top_right_rect_bottom_left():
     pg, img, rect = _rects(90)
     # M3: 90-degree rotation swaps the page dims
@@ -147,12 +185,14 @@ def test_real_rotation_90_image_top_right_rect_bottom_left():
     _not_outside(rect, pg); _in_bottom(rect, pg); _in_left(rect, pg)
 
 
+@needs_reference
 def test_real_rotation_180_image_bottom_right_rect_top_left():
     pg, img, rect = _rects(180)
     _in_bottom(img, pg); _in_right(img, pg)
     _not_outside(rect, pg); _in_top(rect, pg); _in_left(rect, pg)
 
 
+@needs_reference
 def test_real_rotation_270_image_bottom_left_rect_top_right():
     pg, img, rect = _rects(270)
     _in_bottom(img, pg); _in_left(img, pg)
@@ -161,6 +201,7 @@ def test_real_rotation_270_image_bottom_left_rect_top_right():
 
 # --- broader fixtures: structural smoke -------------------------------------
 
+@needs_reference
 def test_real_images_pdf_has_images():
     rows = run("images.pdf")
     imgs = [r for r in rows if r["kind"] == "image"]
@@ -170,6 +211,7 @@ def test_real_images_pdf_has_images():
         assert r["media_ref"].startswith("sha:")
 
 
+@needs_reference
 def test_real_horarios_full_document_extracts():
     """206 KB classic-xref PDF with CID fonts, form XObjects, and images:
     the whole ingest + kernel path must survive a real-world document."""
@@ -190,6 +232,7 @@ def test_real_horarios_full_document_extracts():
     assert "6.30" in text  # the timetable's first departure
 
 
+@needs_reference
 def test_real_pdf_deterministic():
     a = pdf_file_to_row(f"{RES}/3-page-document.pdf")
     b = pdf_file_to_row(f"{RES}/3-page-document.pdf")
@@ -197,29 +240,22 @@ def test_real_pdf_deterministic():
 
 
 def test_real_pdf_spark_ingest(spark, tmp_path):
-    """Distributed binaryFile -> mapInPandas ingest produces the same rows
-    as the local parser, and feeds the Spark extraction pipeline."""
-    import shutil
-
+    """Distributed binaryFile ingest, parsed inside the extraction kernel,
+    gives the spans the local parser's rows extract to."""
     from pdf2dom_spark.pdfread import pdf_docs_df
-    from pdf2dom_spark.pipeline import extract_spans
+    from tests.conftest import local_spans
 
     src = tmp_path / "pdfs"
     src.mkdir()
-    for f in ["text-rendering-mode-stroke.pdf", "3-page-document.pdf"]:
-        shutil.copy(f"{RES}/{f}", src / f)
+    names = ["text-rendering-mode-stroke.pdf", "3-page-document.pdf"]
+    for f in names:
+        (src / f).write_bytes(_fixture_pdf(f))
 
-    docs = pdf_docs_df(spark, str(src))
-    got = {r.doc_id: [s.asDict() for s in r.spans] for r in docs.collect()}
-    assert set(got) == {"text-rendering-mode-stroke.pdf",
-                       "3-page-document.pdf"}
-    for name in got:
-        local = pdf_file_to_row(f"{RES}/{name}")
-        assert got[name] == local["spans"]
-
-    spans = extract_spans(docs, num_partitions=4, nested=False)
-    texts = {r.text for r in spans.where("kind = 'text'").collect()}
-    assert "Stroke" in texts
+    got = _ingest_spans(pdf_docs_df(spark, str(src)))
+    assert set(got) == set(names)
+    assert got == local_spans({f: src / f for f in names})
+    texts = {r["text"] for r in got[names[0]] if r["kind"] == "text"}
+    assert ("Stroke" if os.path.isdir(RES) else "Stroked") in texts
 
 
 # --- real embedded font binaries (F2; TestFonts.java:30-86) -----------------
@@ -230,6 +266,7 @@ def _font_programs(rel):
         return embedded_font_programs(fh.read())
 
 
+@needs_reference
 def test_real_truetype_parses_and_roundtrips_woff():
     """A REAL embedded TrueType (46 KB Arial-BoldMT subset from the
     reference's own bare-cff.pdf) through the SFNT machinery: parse,
@@ -258,6 +295,7 @@ def test_real_truetype_parses_and_roundtrips_woff():
     assert fb.sfnt_is_valid(back)
 
 
+@needs_reference
 def test_real_bare_cff_to_woff():
     """The reference's bare-CFF fixture font (EKCFJL+Omsym2, FontFile3)
     through the real CFF -> WOFF1 conversion; the WOFF re-parses with >1
@@ -281,6 +319,7 @@ def test_real_bare_cff_to_woff():
     assert struct.unpack(">I", back[:4])[0] == 0x4F54544F  # OTTO flavor
 
 
+@needs_reference
 def test_real_horarios_font_programs():
     """Every embedded program in the 206 KB real-world document extracts
     with its declared type; TrueTypes all carry the SFNT magic."""
@@ -295,6 +334,7 @@ def test_real_horarios_font_programs():
 
 # --- real advance widths (/Widths + CID /W) ---------------------------------
 
+@needs_reference
 def test_real_cid_w_array_drives_geometry():
     """3-page-document's Type0 fonts carry /W arrays; a word box's width
     must equal the sum of its raw CIDs' /W advances (recomputed here
@@ -327,6 +367,7 @@ def test_real_cid_w_array_drives_geometry():
     assert page_boxes[0]["style_width"] == pytest.approx(expected, abs=0.05)
 
 
+@needs_reference
 def test_real_simple_widths_parse():
     """bare-cff.pdf's simple fonts declare /Widths; the parse keys them by
     byte code with the descriptor MissingWidth default."""
@@ -348,6 +389,7 @@ def test_real_simple_widths_parse():
     assert found >= 1
 
 
+@needs_reference
 def test_base14_without_widths_keeps_heuristics():
     """The rendering-mode fixtures use non-embedded base-14 Helvetica with
     no /Widths — no widths span is emitted and geometry stays on the
@@ -357,6 +399,7 @@ def test_base14_without_widths_keeps_heuristics():
     assert not [s for s in row["spans"] if s["kind"] == "widths"]
 
 
+@needs_reference
 def test_real_bare_cff_font_face_embeds_real_woff():
     """TestFonts.convertPdfWithBareCffFont_* end-to-end with REAL bytes:
     extraction with font payloads produces a font entry whose data URI is
@@ -459,6 +502,7 @@ def test_lzw_ascii85_runlength_filters():
     assert _rle_decode(rle_encode(payload)) == payload
 
 
+@needs_reference
 def test_xref_repair_on_corrupted_offset():
     """Corrupting the startxref offset must not kill ingestion: the reader
     falls back to an object-header scan and still extracts every page."""
@@ -488,23 +532,25 @@ def test_encrypted_pdf_raises_clear_error():
 
 
 def test_spark_ingest_skips_encrypted_and_broken(spark, tmp_path):
-    """The distributed ingest never lets one bad file poison a batch."""
-    import shutil
-
+    """The distributed ingest never lets one bad file poison a batch: the
+    garbage and the locked file give no spans, the good one its own."""
     from pdf2dom_spark.pdfread import pdf_docs_df
+    from tests.conftest import local_spans
 
     src = tmp_path / "mix"
     src.mkdir()
-    shutil.copy(f"{RES}/text-rendering-mode-fill.pdf", src / "good.pdf")
+    (src / "good.pdf").write_bytes(
+        _fixture_pdf("text-rendering-mode-fill.pdf"))
     (src / "garbage.pdf").write_bytes(b"%PDF-1.4 not really a pdf")
     (src / "encrypted.pdf").write_bytes(
         b"%PDF-1.4\n1 0 obj\n<< /Type /Catalog >>\nendobj\n"
         b"trailer\n<< /Root 1 0 R /Encrypt 9 0 R >>\nstartxref\n0\n%%EOF\n")
-    docs = pdf_docs_df(spark, str(src))
-    ids = {r.doc_id for r in docs.select("doc_id").collect()}
-    assert ids == {"good.pdf"}
+    got = _ingest_spans(pdf_docs_df(spark, str(src)))
+    assert set(got) == {"good.pdf"}
+    assert got == local_spans({"good.pdf": src / "good.pdf"})
 
 
+@needs_reference
 def test_real_bare_cff_rendered_html_has_woff_font_face():
     """TestFonts.convertPdfWithBareCffFont_outputHtmlHasWoffFontInStyle,
     on the real fixture through the real renderer: the document HTML's
@@ -521,6 +567,7 @@ def test_real_bare_cff_rendered_html_has_woff_font_face():
     assert "font-family:" in html
 
 
+@needs_reference
 def test_real_pdf_pagesplit_bit_equal():
     """The monster-doc split path over REAL PDF spans (Horarios: forms,
     CID fonts, images) produces the identical span sequence as the
@@ -553,6 +600,7 @@ def test_real_pdf_pagesplit_bit_equal():
         assert a["kind"] == b["kind"] and a["text"] == b["text"]
 
 
+@needs_reference
 def test_real_vertical_metrics_from_descriptor():
     """FontDescriptor CapHeight/Ascent/Descent ride the widths span and
     drive box geometry: MinionPro's real ascent/descent (989/-360 milli)
@@ -581,6 +629,7 @@ def test_real_vertical_metrics_from_descriptor():
     assert t["style_line_height"] != pytest.approx(12.0, abs=0.5)
 
 
+@needs_reference
 def test_winansi_base_encoding_maps_high_codes():
     """A named /WinAnsiEncoding (or /BaseEncoding in a dict, under
     /Differences) maps the cp1252 high range: curly quotes, dashes, and
@@ -948,6 +997,7 @@ def _arrow_raster_image():
     return next(r for r in rows if r["kind"] == "image")
 
 
+@needs_reference
 def test_real_arrow_path_creates_image():
     """givenPdfFilledNonRectPath_whenConverted_thenImageCreatedForPath:
     the non-rectangular filled path must come out as an <img> element
@@ -957,6 +1007,7 @@ def test_real_arrow_path_creates_image():
     assert r["style_width"] > 0 and r["style_height"] > 0
 
 
+@needs_reference
 def test_real_arrow_path_fill_color_areas():
     """...thenImageFilledWithCorrectColor: the reference decodes the PNG
     and asserts Color(217,217,217) appears in the image's bottom and top
@@ -983,6 +1034,7 @@ def test_real_arrow_path_fill_color_areas():
 
 # --- save-to-dir naming on the real fixtures (TestImages.java:38-75) --------
 
+@needs_reference
 def test_real_images_dir_names_are_title_deduped():
     """TestImages asserts files Untitled.png and Untitled1.png exist after
     converting images.pdf with SaveResourceToDirHandler: the filename base
@@ -993,6 +1045,7 @@ def test_real_images_dir_names_are_title_deduped():
     assert refs == ["Untitled.png", "Untitled1.png"]
 
 
+@needs_reference
 def test_real_horarios_dir_names_default_title_and_pathimage():
     """TestImages' infinite-loop regression fixture: Horarios has NO /Title,
     so bitmap images fall back to getTitle()'s "PDF Document" default
@@ -1191,30 +1244,30 @@ def test_title_pdfdoc_encoding():
 
 def test_archive_ingest_zip_of_pdfs(spark, tmp_path):
     """pdf_archive_docs_df: a zip of reference PDFs (plus a corrupt
-    member and a non-PDF member) ingests into DOC_SCHEMA with
-    archive/member doc_ids; spans match the local parser; the bad
-    members are skipped without poisoning the batch."""
+    member and a non-PDF member) ingests with archive/member doc_ids; the
+    Spark extraction gives the two real members the spans of the local
+    parser, and the bad members no spans, without poisoning the batch."""
     import zipfile
 
-    from pdf2dom_spark.pdfread import pdf_archive_docs_df, pdf_file_to_row
+    from pdf2dom_spark.pdfread import pdf_archive_docs_df
+    from tests.conftest import local_spans
 
-    arch = tmp_path / "batch-0001.zip"
-    with zipfile.ZipFile(arch, "w") as zf:
-        for f in ("text-rendering-mode-stroke.pdf", "images.pdf"):
-            zf.write(f"{RES}/{f}", f)
+    src, local = tmp_path / "in", tmp_path / "local"
+    src.mkdir()
+    local.mkdir()
+    members = ("text-rendering-mode-stroke.pdf", "images.pdf")
+    with zipfile.ZipFile(src / "batch-0001.zip", "w") as zf:
+        for f in members:
+            (local / f).write_bytes(_fixture_pdf(f))
+            zf.write(local / f, f)
         zf.writestr("broken.pdf", b"%PDF-1.4 garbage with no objects")
         zf.writestr("notes.txt", b"not a pdf")
-    docs = {d["doc_id"]: d["spans"]
-            for d in pdf_archive_docs_df(spark, str(tmp_path)).collect()}
-    # broken.pdf parses to zero spans (repair scan yields nothing) or is
-    # skipped; the two real members must be present and exact
-    for f in ("text-rendering-mode-stroke.pdf", "images.pdf"):
-        key = f"batch-0001.zip/{f}"
-        assert key in docs
-        local = pdf_file_to_row(f"{RES}/{f}")["spans"]
-        got = [dict(s.asDict()) for s in docs[key]]
-        assert got == local
-    assert "batch-0001.zip/notes.txt" not in docs
+    docs = pdf_archive_docs_df(spark, str(src))
+    assert sorted(r.doc_id for r in docs.select("doc_id").collect()) == [
+        "batch-0001.zip/broken.pdf", "batch-0001.zip/images.pdf",
+        "batch-0001.zip/text-rendering-mode-stroke.pdf"]
+    assert _ingest_spans(docs) == local_spans(
+        {f"batch-0001.zip/{f}": local / f for f in members})
 
 
 def test_archive_ingest_tar_gz_and_bare_gz(spark, tmp_path):
@@ -1224,24 +1277,28 @@ def test_archive_ingest_tar_gz_and_bare_gz(spark, tmp_path):
     import gzip
     import tarfile
 
-    from pdf2dom_spark.pdfread import pdf_archive_docs_df, pdf_file_to_row
+    from pdf2dom_spark.pdfread import pdf_archive_docs_df
+    from tests.conftest import local_spans
 
-    with tarfile.open(tmp_path / "dump.tar.gz", "w:gz") as tf:
-        tf.add(f"{RES}/text-rendering-mode-stroke.pdf",
+    src, local = tmp_path / "in", tmp_path / "local"
+    src.mkdir()
+    local.mkdir()
+    for f in ("text-rendering-mode-stroke.pdf", "images.pdf",
+              "3-page-document.pdf"):
+        (local / f).write_bytes(_fixture_pdf(f))
+    with tarfile.open(src / "dump.tar.gz", "w:gz") as tf:
+        tf.add(local / "text-rendering-mode-stroke.pdf",
                arcname="a/stroke.pdf")
-        tf.add(f"{RES}/images.pdf", arcname="b/images.pdf")
-    with open(f"{RES}/3-page-document.pdf", "rb") as fh:
-        (tmp_path / "single.pdf.gz").write_bytes(gzip.compress(fh.read()))
-    (tmp_path / "junk.bin").write_bytes(b"\x00\x01garbage")
+        tf.add(local / "images.pdf", arcname="b/images.pdf")
+    (src / "single.pdf.gz").write_bytes(
+        gzip.compress((local / "3-page-document.pdf").read_bytes()))
+    (src / "junk.bin").write_bytes(b"\x00\x01garbage")
 
-    docs = {d["doc_id"]: d["spans"]
-            for d in pdf_archive_docs_df(spark, str(tmp_path)).collect()}
-    assert set(docs) == {"dump.tar.gz/a/stroke.pdf",
-                         "dump.tar.gz/b/images.pdf",
-                         "single.pdf.gz/member.pdf"}
-    local = pdf_file_to_row(f"{RES}/3-page-document.pdf")["spans"]
-    got = [dict(s.asDict()) for s in docs["single.pdf.gz/member.pdf"]]
-    assert got == local
+    got = _ingest_spans(pdf_archive_docs_df(spark, str(src)))
+    assert got == local_spans({
+        "dump.tar.gz/a/stroke.pdf": local / "text-rendering-mode-stroke.pdf",
+        "dump.tar.gz/b/images.pdf": local / "images.pdf",
+        "single.pdf.gz/member.pdf": local / "3-page-document.pdf"})
 
 
 def test_bfrange_past_unicode_max_is_clamped():
@@ -1278,7 +1335,7 @@ def test_archive_member_size_cap_skips_bombs():
 
     from pdf2dom_spark.pdfread import _container_pdf_members
 
-    good = open(f"{RES}/3-page-document.pdf", "rb").read()
+    good = _fixture_pdf("3-page-document.pdf")
     buf = io.BytesIO()
     with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as zf:
         zf.writestr("bomb.pdf", b"\x00" * (4 << 20))
@@ -1318,6 +1375,25 @@ def test_tar_member_size_cap():
         tf.addfile(info2, io.BytesIO(small))
     members = list(_container_pdf_members(buf.getvalue(), limit=1 << 20))
     assert [n for n, _ in members] == ["ok.pdf"]
+
+
+def test_truncated_tar_yields_no_members():
+    """A tar cut short inside its member listing is a corrupt container:
+    it yields nothing instead of raising out of the ingest batch."""
+    import io
+    import tarfile
+
+    from pdf2dom_spark.pdfread import _container_pdf_members
+
+    buf = io.BytesIO()
+    with tarfile.open(fileobj=buf, mode="w") as tf:
+        for i in range(3):
+            data = b"%PDF-1.4 member " * 40
+            info = tarfile.TarInfo(f"d{i}.pdf")
+            info.size = len(data)
+            tf.addfile(info, io.BytesIO(data))
+    for cut in (700, 1324):
+        assert list(_container_pdf_members(buf.getvalue()[:cut])) == []
 
 
 def test_named_crypt_filter_uses_named_cfm():
