@@ -40,9 +40,10 @@ import numpy as np
 
 from . import graphics, memtune, textpipe
 from .interp import (FRAG_CONTENT, FRAG_FORM, FRAG_OTHER, ChunkFrame,
-                     DocInterp, chunk_frame, doc_cid2_fonts, doc_cmaps,
-                     doc_tokens, doc_vmetrics, doc_widths, glyph_frame,
-                     image_op_args, run_batch)
+                     DocInterp, chunk_frame, dict_flush_table,
+                     doc_cid2_fonts, doc_cmaps, doc_tokens, doc_vmetrics,
+                     doc_widths, flush_table, glyph_frame, image_op_args,
+                     run_batch)
 from .schema import SPAN_FLAT_SCHEMA, STYLE_FIELDS, doc_batch
 from .tokenizer import tokenize_batch
 
@@ -243,10 +244,11 @@ def _tail_records(records: list, font_table, end_key: int,
 @dataclass
 class BatchParts:
     """Pre-finalize parts of a batch of documents: per document its event
-    records and page-flush keys, and all shows as one ChunkFrame."""
+    records, all shows as one ChunkFrame and all page flushes as one
+    ``interp.flush_table``."""
     records: list
     chunks: ChunkFrame
-    flushes: list
+    flushes: tuple
 
     def __len__(self) -> int:
         return len(self.records)
@@ -254,9 +256,9 @@ class BatchParts:
     @staticmethod
     def from_doc_parts(parts: list[tuple[list, list, dict]]
                        ) -> "BatchParts":
-        return BatchParts([r for r, _g, _f in parts],
-                          chunk_frame([g for _r, g, _f in parts]),
-                          [f for _r, _g, f in parts])
+        records, shows, flushes = zip(*parts) if parts else ((), (), ())
+        return BatchParts(list(records), chunk_frame(list(shows)),
+                          dict_flush_table(np.arange(len(parts)), flushes))
 
 
 def finalize_docs(parts: "BatchParts | list[tuple[list, list, dict]]",
@@ -277,19 +279,18 @@ def finalize_docs(parts: "BatchParts | list[tuple[list, list, dict]]",
     per-document ``argsort(kind='stable')`` result, computed in one
     numpy pass for the whole Arrow batch.
 
-    Returns (columns dict incl. ``order``, per-doc span counts)."""
+    Returns (columns dict incl. ``order``, per-doc span counts); the
+    string columns are pyarrow arrays, the others numpy arrays."""
+    import pyarrow as pa
+
     if not isinstance(parts, BatchParts):
         parts = BatchParts.from_doc_parts(parts)
     ndocs = len(parts)
     ne = np.fromiter((len(r) for r in parts.records), np.int64, ndocs)
     frame, gdoc = glyph_frame(parts.chunks)
-    boxes, box_doc = textpipe.boxes_core(frame, gdoc, parts.flushes)
-    n_ev = int(ne.sum())
-    n_bx = len(box_doc)
-    nb = np.bincount(box_doc, minlength=ndocs) if n_bx \
-        else np.zeros(ndocs, dtype=np.int64)
-    counts = ne + nb
-    total = n_ev + n_bx
+    boxes, box_doc = textpipe.boxes_core(frame, gdoc, parts.flushes,
+                                         parts.chunks.obj)
+    counts = ne + np.bincount(box_doc, minlength=ndocs)
 
     all_recs = [r for recs in parts.records for r in recs]
     # fixed-order record tuples -> one C-level transpose (no per-field loop)
@@ -297,10 +298,8 @@ def finalize_docs(parts: "BatchParts | list[tuple[list, list, dict]]",
 
     doc_idx = np.concatenate((
         np.repeat(np.arange(ndocs, dtype=np.int64), ne), box_doc))
-    ev_keys = np.array(rec_cols[0], dtype=np.int64) if all_recs \
-        else np.empty(0, dtype=np.int64)
-    bx_keys = np.asarray(boxes["key"], dtype=np.int64)
-    keys = np.concatenate((ev_keys, bx_keys))
+    keys = np.concatenate((np.array(rec_cols[0], dtype=np.int64),
+                           boxes["key"]))
     # stable: primary doc_idx, secondary key, ties by combined position
     perm = np.lexsort((keys, doc_idx))
 
@@ -312,16 +311,15 @@ def finalize_docs(parts: "BatchParts | list[tuple[list, list, dict]]",
         colv = rec_cols[j]
         if c in _NUM_REC_COLS:
             # numpy maps None -> nan in the object->float64 cast
-            ev_arr = np.array(colv, dtype=np.float64)
-            bx_arr = np.asarray(boxes[c], dtype=np.float64)
+            out[c] = np.concatenate((np.array(colv, dtype=np.float64),
+                                     boxes[c]))[perm]
         else:
-            ev_arr = np.array(colv, dtype=object) if colv \
-                else np.empty(0, dtype=object)
-            bx_arr = np.asarray(boxes[c], dtype=object)
-        out[c] = np.concatenate((ev_arr, bx_arr))[perm]
+            out[c] = pa.concat_arrays([
+                pa.array(colv, type=pa.string(), from_pandas=True),
+                boxes[c]]).take(perm)
 
-    starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
-    out["order"] = (np.arange(total, dtype=np.int64)
+    starts = np.cumsum(counts) - counts
+    out["order"] = (np.arange(int(counts.sum()), dtype=np.int64)
                     - np.repeat(starts, counts)).astype(np.int32)
     return out, counts
 
@@ -334,11 +332,13 @@ def extract_doc_columnar(doc_id: str, spans: list[dict],
     """One document -> columnar span arrays (with dense ``order``).
 
     Single-document wrapper over ``extract_doc_parts`` + ``finalize_docs``
-    so the one-doc and batched paths cannot diverge."""
+    so the one-doc and batched paths cannot diverge. String columns are
+    object arrays (None: null)."""
     parts = extract_doc_parts(doc_id, spans, cfg, page_offset=page_offset,
                               font_seed=font_seed, emit_fonts=emit_fonts)
     out, _counts = finalize_docs([parts])
-    return out
+    return {c: v if isinstance(v, np.ndarray)
+            else v.to_numpy(zero_copy_only=False) for c, v in out.items()}
 
 
 def extract_doc(doc_id: str, spans: list[dict],
@@ -395,10 +395,8 @@ def _span_batch(parts_list, doc_ids, parts, columns):
     from pyspark.sql.pandas.types import to_arrow_schema
 
     want = None if columns is None else set(columns)
-    cols, counts = (finalize_docs(parts_list, columns=want)
-                    if len(parts_list) else ({}, np.zeros(0, np.int64)))
-
-    n = len(cols["order"]) if len(parts_list) else 0
+    cols, counts = finalize_docs(parts_list, columns=want)
+    n = len(cols["order"])
     schema = to_arrow_schema(SPAN_FLAT_SCHEMA)
     if want is not None:
         schema = pa.schema([f for f in schema if f.name in want])
@@ -409,11 +407,9 @@ def _span_batch(parts_list, doc_ids, parts, columns):
 
     arrays = {}
     if want is None or "doc_id" in want:
-        did = np.repeat(np.array([str(d) for d in doc_ids], dtype=object),
-                        counts)
-        arrays["doc_id"] = pa.array(did, type=pa.string())
-    if want is None or "order" in want:
-        arrays["order"] = pa.array(cols["order"], type=pa.int32())
+        arrays["doc_id"] = pa.array([str(d) for d in doc_ids],
+                                    type=pa.string()).take(
+            np.repeat(np.arange(len(counts)), counts))
     if want is None or "part_id" in want:
         if parts is None:
             arrays["part_id"] = pa.nulls(n, pa.int32())
@@ -421,18 +417,13 @@ def _span_batch(parts_list, doc_ids, parts, columns):
             arrays["part_id"] = pa.array(
                 np.repeat(np.asarray(parts, dtype=np.int64), counts),
                 type=pa.int32())
-    for c in _REC_COLS:
-        if c == "key" or (want is not None and c not in want):
-            continue
-        merged = cols[c]
-        if c in _NUM_REC_COLS:
-            if c == "page_no":
-                arrays[c] = pa.array(merged, type=pa.int32(), from_pandas=True)
-            else:
-                arrays[c] = pa.array(merged.astype(np.float32),
-                                     type=pa.float32(), from_pandas=True)
-        else:
-            arrays[c] = pa.array(merged, type=pa.string(), from_pandas=True)
+    for c, v in cols.items():  # finalize_docs pruned them to ``want``
+        if c in ("order", "page_no"):
+            v = pa.array(v, type=pa.int32(), from_pandas=True)
+        elif c in _NUM_REC_COLS:
+            v = pa.array(v.astype(np.float32), type=pa.float32(),
+                         from_pandas=True)
+        arrays[c] = v
     return pa.RecordBatch.from_arrays(
         [arrays[f.name] for f in schema], schema=schema), counts
 
@@ -587,7 +578,6 @@ def batch_parts(batch, cfg: ExtractConfig = DEFAULT_CONFIG) -> BatchParts:
                 titles[d] = span_text(i) if valid[i] else None
 
     records: list = [None] * n
-    flushes: list = [None] * n
     for d in np.flatnonzero(~fallback).tolist():
         title = titles.get(d)
         recs = _event_records(run.events[d], cfg, title)
@@ -595,24 +585,25 @@ def batch_parts(batch, cfg: ExtractConfig = DEFAULT_CONFIG) -> BatchParts:
             _tail_records(recs, run.fonts[d], int(run.end_key[d]), cfg,
                           title, [])
         records[d] = recs
-        flushes[d] = run.flushes[d]
-    chunks = run.chunks
+    chunks, flushes = run.chunks, run.flushes
     fb = np.flatnonzero(fallback)
     if len(fb):
         doc_ids = batch.column(names.index("doc_id")).take(fb).to_pylist()
-        fb_chunks = []
+        fb_chunks, fb_flushes = [], []
         for d, doc_id, sp in zip(fb.tolist(), doc_ids,
                                  spans.take(fb).to_pylist()):
-            r, g, f = extract_doc_parts(
+            records[d], g, f = extract_doc_parts(
                 str(doc_id), sp, cfg,
                 page_offset=page_offset[d] if page_offset else 0,
                 font_seed=font_seed and font_seed[d],
                 emit_fonts=emit_fonts is None or bool(emit_fonts[d]))
-            records[d], flushes[d] = r, f
             fb_chunks.append(g)
+            fb_flushes.append(f)
         fcf = chunk_frame(fb_chunks)
         fcf.doc = fb[fcf.doc]
         chunks = chunks.concat_sorted(fcf)
+        flushes = flush_table(*(np.concatenate(v) for v in zip(
+            flushes, dict_flush_table(fb, fb_flushes))))
     return BatchParts(records, chunks, flushes)
 
 

@@ -32,8 +32,7 @@ Fidelity notes (discoveries made against the reference, cited):
     suppressDuplicateOverlappingText configured in the constructor
     (PDFBoxTree.java:157-158) never take effect: glyphs arrive in
     content-stream order and no duplicate suppression happens. We mirror
-    stream order exactly (optional de-dup/sort are exposed as config extras,
-    off by default).
+    stream order exactly.
   - Page gate ``getCurrentPageNo() >= startPage && <= endPage`` is 1-based
     (PDFBoxTree.java:200-210); gated pages skip font-table updates too.
   - ``lastText``/``graphicsPath`` persist across pages; the text buffer is
@@ -279,14 +278,6 @@ class _GState:
                     self.line_width, self.font, self.fsize, self.tc, self.tw,
                     self.tl, self.th, self.ts, self.tr, self.ctm_ident)
         return g
-
-
-GLYPH_COLS = [
-    "key", "page_no", "x", "y", "width", "height", "xscale", "yscale",
-    "ascent", "descent", "unicode", "font_family", "font_weight",
-    "font_style", "color", "stroke_color", "word_spacing", "letter_spacing",
-    "is_dia", "is_ws", "rtl", "style_id",
-]
 
 
 def doc_cmaps(spans: list[dict]) -> dict[str, dict[int, str]]:
@@ -1159,15 +1150,15 @@ def glyph_frame(cf: ChunkFrame) -> tuple[dict, np.ndarray]:
     sum over ALL advances, then positions dev = cum*A + B, widths
     adv*m00, keys base + within-show index — a handful of whole-BATCH
     vector ops instead of per-show (or even per-document) small-array
-    work. Returns (global glyph frame, per-glyph document index).
+    work. Returns (global glyph frame, per-glyph document index). The
+    frame holds only numbers: each glyph's code point (``code``) and the
+    index of its show (``show``), whose string style columns stay per
+    show in ``cf.obj``.
 
     Cross-document safety: the page-segmented prefix sum also breaks at
     document boundaries (two adjacent documents can share a page number),
     and style ids are only compared within a single document."""
     nch = len(cf.doc)
-    if not nch:
-        return ({c: np.array([]) for c in GLYPH_COLS},
-                np.empty(0, dtype=np.int64))
     lens = cf.lens
     n = int(lens.sum())
     adv = cf.adv
@@ -1181,10 +1172,9 @@ def glyph_frame(cf: ChunkFrame) -> tuple[dict, np.ndarray]:
     # Page-local accumulation is bit-identical under any page-aligned
     # split and strictly closer to the reference's per-show arithmetic.
     pg = cf.page
-    page_chunk_starts = np.flatnonzero(
-        np.concatenate(([True], (pg[1:] != pg[:-1])
-                        | (cf.doc[1:] != cf.doc[:-1]))))
-    cs = _page_cumsum(adv, starts[page_chunk_starts], n)
+    page_first = np.ones(nch, dtype=bool)
+    page_first[1:] = (pg[1:] != pg[:-1]) | (cf.doc[1:] != cf.doc[:-1])
+    cs = _page_cumsum(adv, starts[page_first], n)
     cum = cs - np.repeat(cs[starts], lens)
 
     # ONE 2-D row-repeat for all 12 per-chunk float scalars instead of 12
@@ -1200,12 +1190,9 @@ def glyph_frame(cf: ChunkFrame) -> tuple[dict, np.ndarray]:
     out["page_no"] = np.repeat(pg.astype(np.int32), lens)
     for i, c in enumerate(_SCALAR_F64):
         out[c] = scr[:, 5 + i]
-    for c in _SCALAR_OBJ:
-        out[c] = np.repeat(cf.obj[c], lens)
     out["style_id"] = np.repeat(cf.sid, lens)
-    out["unicode"] = np.array(
-        list(codes.astype("<u4", copy=False).tobytes().decode("utf-32-le")),
-        dtype=object)
+    out["code"] = codes
+    out["show"] = np.repeat(np.arange(nch), lens)
     # whitespace test mirrors Java String.trim().isEmpty()
     # (PDFBoxTree.java:599): ONLY code points <= U+0020 count — NBSP and the
     # typographic U+2000.. spaces are printable glyphs in the reference
@@ -1416,14 +1403,39 @@ _NO_FONTS = F.FontTable()
 class BatchRun:
     """``run_batch`` output. Per document of the batch: ``covered`` (False:
     take the per-document path; every other field is then empty),
-    ``events``, ``fonts`` (FontTable), ``end_key`` and ``flushes``
-    (page -> flush key); ``chunks`` holds the covered documents' shows."""
+    ``events``, ``fonts`` (FontTable) and ``end_key``; ``flushes`` (a
+    ``flush_table``) and ``chunks`` hold the covered documents' page
+    flushes and shows."""
     covered: np.ndarray
     events: list
     fonts: list
     end_key: np.ndarray
-    flushes: list
+    flushes: tuple
     chunks: ChunkFrame
+
+
+def page_key(doc, page) -> np.ndarray:
+    """(doc << 32) | page: one int64 per (document, page) that sorts as
+    the pair (page numbers are non-negative int32)."""
+    return ((np.asarray(doc, dtype=np.int64) << 32)
+            | np.asarray(page, dtype=np.int64))
+
+
+def flush_table(pkey, key) -> tuple:
+    """Page flushes as (``page_key``, flush key) int64 arrays sorted by
+    page key: the key of each active page's end-of-stream flush
+    (PDFBoxTree.java:208), which textpipe.boxes_core looks pages up in."""
+    o = np.argsort(pkey)
+    return pkey[o], np.asarray(key, dtype=np.int64)[o]
+
+
+def dict_flush_table(docs, page_flush: list) -> tuple:
+    """``DocInterp.run``'s {page: flush key} dicts, the one of document
+    ``docs[i]`` at i, as one ``flush_table``."""
+    return flush_table(
+        page_key(np.repeat(docs, [len(f) for f in page_flush]),
+                 [p for f in page_flush for p in f]),
+        [k for f in page_flush for k in f.values()])
 
 
 def _chain(reset: np.ndarray, value: np.ndarray,
@@ -1646,16 +1658,14 @@ def run_batch(tb, frag_doc: np.ndarray, frag_rank: np.ndarray,
         return (n >= 1) & (p >= start_page) & (p <= end_page)
 
     active = page_on(seen, page_no)
-    flushes: list = [{} for _ in range(ndocs)]
     pgi = np.flatnonzero(ispg)
-    prevp = page_no[pgi] - 1
-    fl = np.flatnonzero(page_on(seen[pgi] - 1, prevp))
-    for d, p, k in zip(sdoc[pgi[fl]].tolist(), prevp[fl].tolist(),
-                       (spos[pgi[fl]] * K).tolist()):
-        flushes[d][p] = k
+    fl = pgi[page_on(seen[pgi] - 1, page_no[pgi] - 1)]
     lastp = npages + off
-    for d in np.flatnonzero(page_on(npages, lastp) & covered).tolist():
-        flushes[d][int(lastp[d])] = int(end_key[d])
+    last = np.flatnonzero(page_on(npages, lastp) & covered)
+    flushes = flush_table(
+        page_key(np.concatenate((sdoc[fl], last)),
+                 np.concatenate((page_no[fl] - 1, lastp[last]))),
+        np.concatenate((spos[fl] * K, end_key[last])))
 
     # per page (PG ordinal): box, rotation, page matrix
     apg = pgi[active[pgi]]
@@ -2188,4 +2198,6 @@ def run_batch(tb, frag_doc: np.ndarray, frag_rank: np.ndarray,
                 chunks.lens[keep], chunks.f64[keep],
                 {c: v[keep] for c, v in chunks.obj.items()},
                 chunks.sid[keep], chunks.codes[gk], chunks.adv[gk])
+        live = covered[flushes[0] >> 32]
+        flushes = (flushes[0][live], flushes[1][live])
     return BatchRun(covered, events, fonts_out, end_key, flushes, chunks)

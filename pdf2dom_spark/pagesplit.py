@@ -16,13 +16,15 @@ too), so page-groups are independent except for
     resolution): solved by prescanning fonts per group and seeding each
     group with every earlier group's fonts, in order — deterministic;
   - font spans: only the last group emits them (it holds the full table);
-  - ``lastText``/``graphicsPath`` carrying across a group boundary: only
-    observable in the stale-curstyle inherit edge / an unfinished path
-    crossing a page break. Both require the next page's first glyph to NOT
-    split or a path painted across pages — the split path is therefore
-    opt-in via a size threshold (the mainstream path stays bit-exact), and
-    the equality test in tests/test_pagesplit.py pins the corpus classes
-    where the split is exact.
+  - state that crosses a page break restarts in every group: an open
+    path painted on a later page (an image span unsplit, nothing split)
+    and the sticky Pdf2Dom ``Tw``/``Tc`` (later pages' boxes keep the
+    spacing unsplit, 0.0 in a later group). A page flush's stale
+    ``curstyle`` cannot change the output (textpipe's docstring). The
+    split path is therefore opt-in via a size threshold (the mainstream
+    path stays bit-exact); tests/test_pagesplit.py pins the corpus
+    classes where the split is exact, and the two cases where it is not
+    as expected failures.
 """
 
 from __future__ import annotations

@@ -25,9 +25,14 @@ Rules, with the reference's exact constants:
     letterSpacing, wordSpacing; NOT position/lineHeight);
   - page end forces a flush (PDFBoxTree.java:208) but does NOT refresh
     ``curstyle`` when the next glyph would not otherwise split — the new box
-    inherits the stale previous style (mirrored bug-for-bug);
-  - finishBox: concat glyphs, reverse when the first buffered char is RTL
-    (PDFBoxTree.java:666-669), left = metrics.x, top = baseline - max ascent
+    keeps the stale previous style. That needs no code: such a glyph has
+    the previous glyph's ``style_id``, which is keyed on exactly the eight
+    style fields (the three numbers rounded to float32, the width the
+    output stores), so the stale style equals the box's own;
+  - finishBox: concat glyphs (a merged mark right after its base), reverse
+    when the first buffered char is RTL (PDFBoxTree.java:666-669), so a
+    reversed box's marks precede their bases; left = metrics.x,
+    top = baseline - max ascent
     (with bbox fallback when ascent == 0, TextMetrics.java:41-47),
     line-height = bottom - top (TextMetrics.java:134-136), width telescopes
     to ``last.x + last.width - first.x`` (TextMetrics.java:30).
@@ -38,6 +43,7 @@ from __future__ import annotations
 import numpy as np
 
 from . import fonts as fontmod
+from .interp import page_key
 
 # The 8-field style identity (BoxStyle.java:366-405: xscale, word/letter
 # spacing, color, strokeColor, fontFamily, fontWeight, fontStyle) is
@@ -57,49 +63,47 @@ BOX_STYLE_MAP = {
 }
 
 
-def merge_diacritics(gl: dict, gdoc: np.ndarray) -> tuple[dict, np.ndarray]:
+def merge_diacritics(gl: dict, gdoc: np.ndarray
+                     ) -> tuple[np.ndarray, np.ndarray]:
     """Pending-diacritic merge (PDFBoxTree.java:595-605) + whitespace drop
-    (PDFBoxTree.java:599), columnar. ``gdoc`` is the per-glyph document
-    index of a batched frame: a pending diacritic never merges across a
-    document boundary (each document's interpreter starts fresh)."""
+    (PDFBoxTree.java:599), columnar. Returns the indices of the kept
+    glyphs (neither whitespace nor diacritic) and, per kept glyph, the
+    code point of the diacritic merged into it (0: none).
+
+    A diacritic is pending until the next non-whitespace glyph: that
+    glyph takes it when it is no diacritic and contains the diacritic's
+    center; a diacritic replaces a pending one, which is dropped.
+    Whitespace glyphs are inert: they neither merge nor clear the pending
+    diacritic. ``gdoc`` is the per-glyph document index of a batched
+    frame: a pending diacritic never merges across a document boundary
+    (each document's interpreter starts fresh)."""
     is_dia = gl["is_dia"]
     is_ws = gl["is_ws"]
-    if not is_dia.any():
-        keep = ~is_ws
-        if keep.all():
-            return gl, gdoc
-        return {k: v[keep] for k, v in gl.items()}, gdoc[keep]
-    # restrict to diacritics + non-whitespace glyphs (ws rows are inert:
-    # they neither merge nor clear the pending diacritic). Only the four
-    # columns the merge decision reads are gathered on this sub-selection;
-    # the surviving rows ((is_dia | ~is_ws) & ~is_dia == ~is_ws & ~is_dia)
-    # are then selected from the ORIGINAL frame in one pass.
-    sel = np.nonzero(is_dia | ~is_ws)[0]
+    sel = np.flatnonzero(is_dia | ~is_ws)
     d = is_dia[sel]
-    x, w = gl["x"][sel], gl["width"][sel]
-    sdoc = gdoc[sel]
-    prev_dia = np.empty_like(d)
-    prev_dia[0] = False
-    prev_dia[1:] = d[:-1]
-    centers = x + w / 2
-    contains = np.zeros(len(d), dtype=bool)
-    contains[1:] = ((centers[:-1] >= x[1:]) & (centers[:-1] <= x[1:] + w[1:])
-                    & (sdoc[1:] == sdoc[:-1]))
-    merge = prev_dia & ~d & contains
-    if merge.any():
-        uni = gl["unicode"]
-        for i in np.nonzero(merge)[0].tolist():
-            j = sel[i]
-            uni[j] = uni[j] + uni[sel[i - 1]]
-    keep = ~is_ws & ~is_dia
-    return {k: v[keep] for k, v in gl.items()}, gdoc[keep]
+    # (diacritic, next non-whitespace glyph) pairs where that glyph is no
+    # diacritic; x, width, doc and code are read at these pairs only
+    pair = np.flatnonzero(d[:-1] & ~d[1:])
+    mk, base = sel[pair], sel[pair + 1]
+    x, w = gl["x"], gl["width"]
+    center = x[mk] + w[mk] / 2
+    ok = ((center >= x[base]) & (center <= x[base] + w[base])
+          & (gdoc[mk] == gdoc[base]))
+    kept = np.flatnonzero(~(is_ws | is_dia))
+    mark = np.zeros(len(kept), dtype=np.uint32)
+    mark[np.searchsorted(kept, base[ok])] = gl["code"][mk[ok]]
+    return kept, mark
 
 
-def boxes_core(gl0: dict, gdoc0: np.ndarray,
-               flushes: list[dict]) -> tuple[dict, np.ndarray]:
+def boxes_core(gl: dict, gdoc: np.ndarray, flushes: tuple,
+               show_str: dict) -> tuple[dict, np.ndarray]:
     """Many documents' glyphs -> ONE global box frame + per-box doc
-    index, in doc-major order. ``gl0``/``gdoc0``: a batch-global glyph
-    frame and its per-glyph doc index (``interp.glyph_frame``).
+    index, in doc-major order. ``gl``/``gdoc``: a batch-global glyph
+    frame and its per-glyph doc index (``interp.glyph_frame``);
+    ``flushes``: the batch's ``interp.flush_table``; ``show_str``: the
+    per-show string style columns (``ChunkFrame.obj``) that the frame's
+    ``show`` column indexes. String columns come out as pyarrow string
+    arrays, numbers as numpy arrays.
 
     The gaps-and-islands chunking is per-document by definition; the
     batch forces a split at every document boundary (``lastText ==
@@ -108,27 +112,22 @@ def boxes_core(gl0: dict, gdoc0: np.ndarray,
     instead of once per document. Every rule below is the per-document
     rule with an explicit same-document guard where a lagged comparison
     could otherwise cross a boundary."""
-    if len(gl0["key"]) == 0:
-        return _empty_boxes(), np.empty(0, dtype=np.int64)
-    any_dia = bool(gl0["is_dia"].any())
+    import pyarrow as pa
 
-    gl, gdoc = merge_diacritics(gl0, gdoc0)
-    n = len(gl["key"])
-    if n == 0:
-        return _empty_boxes(), np.empty(0, dtype=np.int64)
-
-    x = gl["x"]
-    y = gl["y"]
-    w = gl["width"]
-    rtl = gl["rtl"]
-    page = gl["page_no"]
+    kept, mark = merge_diacritics(gl, gdoc)
+    n = len(kept)
+    x = gl["x"][kept]
+    y = gl["y"][kept]
+    w = gl["width"][kept]
+    rtl = gl["rtl"][kept]
+    page = gl["page_no"][kept]
+    doc = gdoc[kept]
 
     doc_changed = np.zeros(n, dtype=bool)
-    doc_changed[1:] = gdoc[1:] != gdoc[:-1]
+    doc_changed[1:] = doc[1:] != doc[:-1]
 
     # T1: geometric split (float32 arithmetic like the reference)
-    split = np.empty(n, dtype=bool)
-    split[0] = True  # lastText == null
+    split = np.ones(n, dtype=bool)  # [0]: lastText == null
     distx = (x[1:] - (x[:-1] + w[:-1])).astype(np.float32)
     disty = (y[1:] - y[:-1]).astype(np.float32)
     split[1:] = (distx > 1.0) | (distx < -6.0) | (np.abs(disty) > 1.0)
@@ -136,84 +135,48 @@ def boxes_core(gl0: dict, gdoc0: np.ndarray,
     # T2: style-identity split — one int comparison per glyph (the 8-field
     # identity is precomputed per show in interp.glyph_frame, with
     # float32-rounded numerics)
-    sidv = gl["style_id"]
+    sidv = gl["style_id"][kept]
     split[1:] |= sidv[1:] != sidv[:-1]
     # document boundary = fresh interpreter (lastText == null)
     split |= doc_changed
 
     page_changed = np.zeros(n, dtype=bool)
     page_changed[1:] = page[1:] != page[:-1]
-    start = split | page_changed
-    inherit = page_changed & ~split  # stale-curstyle case (never at a
-    #                                  doc boundary: split is forced there)
-
-    starts = np.nonzero(start)[0]
+    starts = np.flatnonzero(split | page_changed)
     nb = len(starts)
-    lasts = np.concatenate((starts[1:] - 1, [n - 1]))
+    bounds = np.append(starts, n)
+    lasts = bounds[1:] - 1
+    first = kept[starts]  # each box's first glyph in the frame
 
     # segmented aggregates (TextMetrics.java:28-55)
-    ascent = np.maximum.reduceat(gl["ascent"], starts)
-    descent = np.minimum.reduceat(gl["descent"], starts)
+    ascent = np.maximum.reduceat(gl["ascent"][kept], starts)
+    descent = np.minimum.reduceat(gl["descent"][kept], starts)
     bx = x[starts]
     baseline = y[starts]
     bwidth = x[lasts] + w[lasts] - bx
-    ys_first = gl["yscale"][starts]
+    ys_first = gl["yscale"][first]
     bbox_asc = fontmod.BBOX_ASCENT / 1000.0 * ys_first
     bbox_desc = fontmod.BBOX_DESCENT / 1000.0 * ys_first
     top = np.where(ascent != 0, baseline - ascent, baseline - bbox_asc)
     bottom = np.where(descent != 0, baseline - descent, baseline - bbox_desc)
     line_height = bottom - top
 
-    # ordered concat + RTL reverse by first buffered char. The per-glyph
-    # ``rtl`` column IS ``bidirectional(first char) in _RTL_BIDI`` for every
-    # glyph (diacritic merges append the mark to the base, never prepend,
-    # so a merged glyph's first char keeps the base flag) — the per-box
-    # unicodedata call collapses to one precomputed lookup.
-    uni = gl["unicode"]
-    texts = np.empty(nb, dtype=object)
-    bounds = np.append(starts, n)
-    rtl_first = rtl[starts]
-    if not any_dia:
-        # fast path: every glyph is one char, so one global join + O(1)
-        # string slices per box (beats per-box object-array joins)
-        all_text = "".join(uni.tolist())
-        for i in range(nb):
-            t = all_text[bounds[i]:bounds[i + 1]]
-            texts[i] = t[::-1] if rtl_first[i] else t
-    else:
-        # merged diacritics make some glyphs multi-char: slice ONE global
-        # join at per-glyph CHAR offsets instead of joining per box
-        ulist = uni.tolist()
-        clens = np.fromiter((len(u) for u in ulist), dtype=np.int64,
-                            count=n)
-        coffs = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(clens, out=coffs[1:])
-        all_text = "".join(ulist)
-        cb = coffs[bounds]
-        for i in range(nb):
-            t = all_text[cb[i]:cb[i + 1]]
-            texts[i] = t[::-1] if rtl_first[i] else t
-
     # emission key: next box's start glyph if on the same page (of the
     # same document), else this page's end-of-stream flush
     # (PDFBoxTree.java:639-644,208)
-    start_keys = gl["key"][starts]
     pages = page[starts].astype(np.int64)
-    box_doc = gdoc[starts]
-    flush_keys = np.array(
-        [flushes[int(d)].get(int(p), 2**62)
-         for d, p in zip(box_doc, pages)], dtype=np.int64)
-    emit = flush_keys
-    if nb > 1:
-        same_page = (pages[1:] == pages[:-1]) & (box_doc[1:] == box_doc[:-1])
-        emit[:-1] = np.where(same_page, start_keys[1:], flush_keys[:-1])
+    box_doc = doc[starts]
+    emit = _flush_keys(flushes, box_doc, pages)
+    same_page = (pages[1:] == pages[:-1]) & (box_doc[1:] == box_doc[:-1])
+    emit[:-1] = np.where(same_page, gl["key"][first[1:]], emit[:-1])
 
+    sidx = gl["show"][first]
     out = {
-        "key": emit.astype(np.int64),
+        "key": emit,
         "page_no": pages,
-        "kind": np.full(nb, "text", dtype=object),
-        "text": texts,
-        "media_ref": np.full(nb, None, dtype=object),
+        "kind": pa.repeat("text", nb),
+        "text": _box_texts(gl["code"][kept], mark, bounds, rtl[starts]),
+        "media_ref": pa.nulls(nb, pa.string()),
         "style_line_height": line_height.astype(np.float64),
         "style_left": bx.astype(np.float64),
         "style_top": top.astype(np.float64),
@@ -223,23 +186,52 @@ def boxes_core(gl0: dict, gdoc0: np.ndarray,
         "style_stroke_width": np.full(nb, np.nan),
     }
     for out_col, src in BOX_STYLE_MAP.items():
-        out[out_col] = gl[src][starts].copy()
-    # stale-style inheritance: rare; patch forward from the previous box
-    # (an inherit box is never its document's first box — split is forced
-    # at doc boundaries — so i-1 is always a same-document box)
-    if inherit.any():
-        inh_mask = inherit[starts]
-        for i in np.nonzero(inh_mask)[0]:
-            if i == 0:
-                continue
-            for out_col in BOX_STYLE_MAP:
-                out[out_col][i] = out[out_col][i - 1]
+        out[out_col] = (pa.array(show_str[src][sidx], type=pa.string())
+                        if src in show_str else gl[src][first])
     return out, box_doc
 
 
-def _empty_boxes() -> dict:
-    cols = ["key", "page_no", "kind", "text", "media_ref",
-            "style_line_height", "style_left", "style_top", "style_width",
-            "style_height", "style_angle", "style_stroke_width",
-            *BOX_STYLE_MAP.keys()]
-    return {c: np.array([], dtype=object) for c in cols}
+def _box_texts(code: np.ndarray, mark: np.ndarray, bounds: np.ndarray,
+               rtl_first: np.ndarray):
+    """Box strings as ONE pyarrow string array: the kept glyphs' code
+    points (``bounds``: each box's first glyph, then the glyph count),
+    each merged mark right after its base, every box whose first glyph
+    is RTL reversed (the per-glyph ``rtl`` flag is the bidi class of the
+    glyph's own code point; a merge appends the mark, so it never changes
+    a box's first char), then one UTF-32 decode."""
+    import pyarrow as pa
+
+    has = mark != 0
+    coff = np.zeros(len(code) + 1, dtype=np.int64)
+    np.cumsum(1 + has, out=coff[1:])
+    cps = np.empty(int(coff[-1]), dtype="<u4")
+    cps[coff[:-1]] = code
+    cps[coff[:-1][has] + 1] = mark[has]
+    cb = coff[bounds]
+    # one reversal index over the RTL boxes' code points
+    rb = np.flatnonzero(rtl_first)
+    s, e = cb[rb], cb[rb + 1]
+    ln = e - s
+    src = np.arange(int(ln.sum())) + np.repeat(s - (np.cumsum(ln) - ln), ln)
+    cps[src] = cps[np.repeat(s + e - 1, ln) - src]
+    utf8 = cps.tobytes().decode("utf-32-le").encode("utf-8")
+    boff = np.zeros(len(cps) + 1, dtype=np.int64)
+    np.cumsum(1 + (cps >= 0x80).astype(np.int64) + (cps >= 0x800)
+              + (cps >= 0x10000), out=boff[1:])
+    return pa.LargeStringArray.from_buffers(
+        len(cb) - 1, pa.py_buffer(boff[cb]),
+        pa.py_buffer(utf8)).cast(pa.string())
+
+
+def _flush_keys(flushes: tuple, box_doc: np.ndarray,
+                pages: np.ndarray) -> np.ndarray:
+    """Each box's page flush key (2**62: the page has none), by one
+    sorted search of its (doc, page) in the flush table."""
+    have, fkey = flushes
+    want = page_key(box_doc, pages)
+    i = np.searchsorted(have, want)
+    hit = i < len(have)
+    hit[hit] = have[i[hit]] == want[hit]
+    out = np.full(len(want), 2**62, dtype=np.int64)
+    out[hit] = fkey[i[hit]]
+    return out

@@ -85,6 +85,25 @@ def test_diacritic_at_document_end_does_not_merge_across():
     _assert_batch_equals_single(["a", "b"], {"a": a, "b": b})
 
 
+def test_batch_mixing_documents_with_and_without_diacritics():
+    """Documents with merged diacritics (one in an RTL box, one next to a
+    supplementary-plane char) and documents without any share one batch:
+    each box text equals its per-document extraction."""
+    def extra(frag):
+        return [corpus.text_span(f"BT /F1 10 Tf {frag} ET", 10_000)]
+
+    rtl = ("1 0 0 1 100 600 Tm (\u05e9) Tj 1 0 0 1 105.56 600 Tm "
+           "(\u05b8) Tj 1 0 0 1 105.56 600 Tm (\u05dc\U00010900) Tj")
+    spans = {
+        "plain_a": corpus.oracle_stream("plain_a", "no marks here"),
+        "dia": corpus.oracle_stream("dia", "x y")
+        + extra(corpus.dia_frag(100, 600) + " (\U0001d400) Tj"),
+        "plain_b": corpus.oracle_stream("plain_b", "still none"),
+        "dia_rtl": corpus.oracle_stream("dia_rtl", "z") + extra(rtl),
+    }
+    _assert_batch_equals_single(list(spans), spans)
+
+
 def test_same_page_number_across_boundary():
     """Both docs have a page 1: the emission-key 'same page' test must not
     treat doc B's first box as 'next box on the same page' of doc A."""

@@ -181,6 +181,52 @@ def test_diacritic_merge():
     assert [x["text"] for x in b] == ["é"]
 
 
+def test_merged_diacritic_in_rtl_box():
+    # the mark merges after its base (lamed + qamats); the RTL box is then
+    # reversed as one string, so the mark comes first
+    b = _boxes(PG + "BT /Mono 10 Tf 1 0 0 1 100 700 Tm (ש) Tj "
+               "1 0 0 1 105 700 Tm (ָ) Tj "
+               "1 0 0 1 105 700 Tm (ל) Tj ET")
+    assert [x["text"] for x in b] == ["ָלש"]
+
+
+def test_supplementary_plane_chars_in_ltr_and_rtl_boxes():
+    # 4-byte UTF-8 chars: MATHEMATICAL BOLD CAPITAL A (LTR) and two
+    # Phoenician letters (RTL), next to 1- and 2-byte chars in the same
+    # boxes; the direction flips split the boxes
+    b = _boxes(PG + "BT /Mono 10 Tf 1 0 0 1 100 700 Tm "
+               "(a\U0001d400b) Tj (א\U00010900\U00010901) Tj (c) Tj ET")
+    assert [x["text"] for x in b] == [
+        "a\U0001d400b", "\U00010901\U00010900א", "c"]
+
+
+def test_second_of_two_diacritics_merges():
+    # a diacritic replaces the pending one: the grave merges into 'e', the
+    # acute before it is dropped
+    b = _boxes(PG + "BT /Mono 10 Tf 1 0 0 1 100 700 Tm (́) Tj "
+               "1 0 0 1 100 700 Tm (̀) Tj "
+               "1 0 0 1 100 700 Tm (e) Tj ET")
+    assert [x["text"] for x in b] == ["è"]
+
+
+def test_glyph_frame_holds_only_numbers():
+    from pdf2dom_spark.corpus import dia_frag
+    from pdf2dom_spark.extract import batch_parts, extract_doc_parts
+    from pdf2dom_spark.interp import chunk_frame, glyph_frame
+    from pdf2dom_spark.schema import doc_batch
+
+    spans = [{"kind": "text", "media_ref": None, "offset": 0,
+              "text": PG + "BT /Mono 10 Tf " + dia_frag(100, 700)
+              + " (a b) Tj ET"}]
+    _recs, shows, _flush = extract_doc_parts("t", spans)
+    for chunks in (chunk_frame([shows]),
+                   batch_parts(doc_batch(["t"], [spans])).chunks):
+        frame, gdoc = glyph_frame(chunks)
+        assert len(frame["key"]) == 5  # mark, e, a, space, b
+        assert [c for c, v in frame.items() if v.dtype == object] == []
+        assert gdoc.dtype != object
+
+
 def test_metrics_formulas():
     # TextMetrics.java:28-55: width telescopes, top = baseline - max ascent,
     # lineHeight = bottom - top
