@@ -51,7 +51,10 @@ def parse_args(argv):
     p.add_argument("--synth", help="synthesize corpus from this sf dir instead")
     p.add_argument("--output", required=True)
     p.add_argument("--partitions", type=int, default=0,
-                   help="salt partition count (default: shuffle partitions)")
+                   help="part count P of the output (the part_id "
+                        "modulus; default: spark.sql.shuffle.partitions); "
+                        "the extraction width follows the cores and the "
+                        "input bytes")
     p.add_argument("--resume", action="store_true",
                    help="skip partitions already in the lineage table")
     p.add_argument("--run-id", default=None)

@@ -637,10 +637,54 @@ def extract_batch(batch, cfg: ExtractConfig = DEFAULT_CONFIG,
                              .take(rows))
 
 
+# content bytes one kernel call holds at most (``batch_slices``): the
+# kernel's working set is ~100-200x its content bytes, so a record-count
+# batch of large documents would otherwise follow whatever they hold.
+# Single process, 3000 seed-1 rich docs: kernel ms/doc is flat from
+# ~190 docs (0.2 MB of content) up, and the traced peak of one call grows
+# linearly with its content (SCALE.md, "Arrow batches").
+SLICE_BYTES = 256 * 1024
+
+
+def content_bytes(batch) -> np.ndarray:
+    """Each row's content bytes: the UTF-8 bytes of its span ``text``s, or
+    the file bytes of a PDF_SCHEMA batch (a null counts 0)."""
+    import pyarrow.compute as pc
+
+    names = batch.schema.names
+    if "pdf" in names:
+        return np.asarray(pc.binary_length(batch.column(names.index("pdf")))
+                          .fill_null(0), dtype=np.int64)
+    spans = batch.column(names.index("spans"))
+    text = spans.values.field(spans.type.value_type.get_field_index("text"))
+    cum = np.zeros(len(text) + 1, dtype=np.int64)
+    np.cumsum(np.asarray(pc.binary_length(text).fill_null(0)), out=cum[1:])
+    offs = np.asarray(spans.offsets)
+    return cum[offs[1:]] - cum[offs[:-1]]
+
+
+def batch_slices(batch) -> list:
+    """``batch`` cut into consecutive zero-copy ``RecordBatch.slice``s of
+    at most ``SLICE_BYTES`` content bytes each (``content_bytes``); a row
+    over the budget is a slice of its own. An empty batch is one empty
+    slice."""
+    bounds = [0]
+    acc = 0
+    for i, n in enumerate(content_bytes(batch).tolist()):
+        if acc and acc + n > SLICE_BYTES:
+            bounds.append(i)
+            acc = 0
+        acc += n
+    bounds.append(batch.num_rows)
+    return [batch.slice(a, b - a) for a, b in zip(bounds, bounds[1:])]
+
+
 def make_extract_arrow(cfg: ExtractConfig = DEFAULT_CONFIG,
                        columns: list[str] | None = None):
     """mapInArrow kernel: pyarrow batches in/out, flat schema (or its
-    ``columns``), one ``extract_batch`` per batch."""
+    ``columns``), one ``extract_batch`` per ``batch_slices`` slice of an
+    incoming batch, so no call holds more than ``SLICE_BYTES`` of
+    content unless one document does."""
 
     def extract_arrow(batches):
         memtune.tune_worker()
@@ -651,7 +695,8 @@ def make_extract_arrow(cfg: ExtractConfig = DEFAULT_CONFIG,
         except Exception:  # pragma: no cover
             pid = -1
         for b in batches:
-            yield extract_batch(b, cfg, pid, columns)
+            for piece in batch_slices(b):
+                yield extract_batch(piece, cfg, pid, columns)
         memtune.task_done()
 
     return extract_arrow

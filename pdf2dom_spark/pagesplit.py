@@ -38,8 +38,8 @@ from pyspark.sql.window import Window
 
 from . import memtune
 from .extract import DEFAULT_CONFIG, ExtractConfig, make_extract_arrow
-from .pipeline import (_require_positive, extract_salted, salt_key,
-                       with_part_id)
+from .pipeline import (_require_positive, extract_salted,
+                       extraction_width, salt_key, with_part_id)
 from .schema import DOC_SCHEMA, IN_SPAN_STRUCT, SPAN_FLAT_SCHEMA
 
 # chars that open a region the tokenizer treats as non-operator content
@@ -329,16 +329,15 @@ def extract_groups(groups: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG,
     The back half of the paged path: the groups run through the same
     mapInArrow kernel as unsplit documents (``extract.make_extract_arrow``),
     which reads a group's page offset, font seed and emit flag from its
-    columns and repeats its ``grp`` on every span.
+    columns and repeats its ``grp`` on every span. Both exchanges have
+    ``num_partitions`` tasks (default ``pipeline.extraction_width``).
 
     ``columns`` prunes the kernel OUTPUT (and therefore the renumber
     exchange + sort) to a subset of the flat schema — the gate queries
     project 14 of the 22 columns, and pruning cannot cross the opaque
     Python stage (guide §4.2). ``doc_id``/``order`` are always kept
     (the renumber needs them)."""
-    spark = groups.sparkSession
-    p = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    p = num_partitions or extraction_width(groups)
     if columns is not None:
         columns = list(dict.fromkeys(["doc_id", "order", *columns]))
     out_fields = (SPAN_FLAT_SCHEMA.fields if columns is None else
@@ -386,10 +385,9 @@ def extract_spans_paged(docs: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG,
 
     PDF files (a ``pdf`` column) are parsed first, by the kernel's own
     parse (``pdfread.parse_pdf_batch``) as a mapInArrow stage: the route
-    reads ``spans``. So this path crosses into Python three times."""
-    spark = docs.sparkSession
-    p = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    reads ``spans``. So this path crosses into Python three times.
+    ``num_partitions`` defaults to ``pipeline.extraction_width(docs)``."""
+    p = num_partitions or extraction_width(docs)
     _require_positive(num_partitions=p, pages_per_group=pages_per_group)
     if "pdf" in docs.columns:
         from .pdfread import parse_pdf_batch

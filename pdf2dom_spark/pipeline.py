@@ -3,7 +3,7 @@
 Scale design (the 10^12-doc / 1000-executor story, tested at local[32]):
 
 - **One document shuffle.** ``extract_spans`` has one exchange: the
-  salted ``repartition(P, xxhash64(doc_id))`` that defuses skew from
+  salted ``repartition(W, xxhash64(doc_id))`` that defuses skew from
   giant multi-page documents (BASELINE.json north_star). Extraction
   itself is one narrow ``mapInArrow`` kernel (``extract_salted``), and
   the nested ``style`` struct is a JVM projection over its flat output.
@@ -14,6 +14,16 @@ Scale design (the 10^12-doc / 1000-executor story, tested at local[32]):
   over the written output (``doc_count`` counts the ``order == 0``
   spans, so no distinct-count stage). (Monster documents optionally fan
   out per page-group first — pagesplit.py.)
+- **Width from cores and bytes, parts from the output.** The extraction
+  width W (tasks that run the kernel) is ``extraction_width``: one task
+  per core, or one per ``TASK_BYTES`` of the optimizer's input estimate
+  when that is more. It is not ``spark.sql.shuffle.partitions``: more
+  tasks than cores only adds per-task cost around the kernel. The part
+  count P of a written output (``num_partitions`` of
+  ``run_checkpointed``, the ``part_id`` modulus) is its layout, recorded
+  in lineage; ``extract_gathered`` extracts on W tasks and gathers the
+  spans into P. An explicit ``num_partitions`` of ``extract_spans``
+  sets W.
 - **Deterministic partitioning, one task per part.** ``part_id`` is a
   *column* (``pmod(hash(xxhash64(doc_id)), P)``) and, by construction,
   also the runtime partition index: ``F.hash`` is the Murmur3 (seed 42)
@@ -44,9 +54,12 @@ Scale design (the 10^12-doc / 1000-executor story, tested at local[32]):
   (doc_id, pdf bytes) with doc_id made on the JVM, so ``with_part_id``
   and a resume's pending filter run before any parse, and the one
   extraction kernel parses the bytes it is handed.
-- **Bounded Arrow batches.** Set
-  ``spark.sql.execution.arrow.maxRecordsPerBatch`` (docs vary wildly in
-  size); the kernel is O(tokens) per batch with numpy-vectorized glyph work.
+- **Bounded kernel calls.** An Arrow batch holds up to
+  ``spark.sql.execution.arrow.maxRecordsPerBatch`` documents, whatever
+  their size; the kernel cuts it into zero-copy slices of at most
+  ``extract.SLICE_BYTES`` of content (a larger document is a slice of
+  its own), so one call's working set follows that budget, not the
+  batch.
 """
 
 from __future__ import annotations
@@ -84,6 +97,29 @@ def with_part_id(docs: DataFrame, num_partitions: int) -> DataFrame:
         F.pmod(F.hash(salt_key()), F.lit(num_partitions)))
 
 
+# input bytes one extraction task is sized for (SCALE.md, "Sizing"): the
+# split size of Spark's own file scans (spark.sql.files.maxPartitionBytes)
+TASK_BYTES = 128 * 1024 * 1024
+
+
+def extraction_width(docs: DataFrame) -> int:
+    """The number of extraction tasks for ``docs``: one per core
+    (``defaultParallelism``), or one per ``TASK_BYTES`` of the optimizer's
+    size estimate when that asks for more. A file scan estimates its
+    file bytes (a ``localCheckpoint`` keeps its input's estimate); a frame
+    built in Python estimates little and gets the core count. A frame
+    with no estimate (Spark reports ``spark.sql.defaultSizeInBytes``,
+    Long.MaxValue by default) gets the core count too."""
+    spark = docs.sparkSession
+    cores = spark.sparkContext.defaultParallelism
+    est = int(docs._jdf.queryExecution().optimizedPlan().stats()
+              .sizeInBytes())
+    if est >= int(spark.conf.get("spark.sql.defaultSizeInBytes",
+                                 str(2**63 - 1))):
+        return cores
+    return max(cores, -(-est // TASK_BYTES))
+
+
 def _require_positive(**values: int) -> None:
     for name, v in values.items():
         if v < 1:
@@ -110,14 +146,16 @@ def extract_salted(salted: DataFrame, cfg: ExtractConfig,
 def extract_gathered(salted: DataFrame, cfg: ExtractConfig,
                      num_partitions: int) -> DataFrame:
     """``run_checkpointed``'s extraction of the pending parts: the docs
-    spread over ``num_partitions`` tasks on ``doc_id``, a placement
-    independent of ``part_id``, so a run of a few pending parts (a
-    resume) still keeps every task busy; the spans then gather on
-    ``salt_key()``, so write task ``i`` holds exactly ``part_id == i``.
-    With ``extract_salted`` alone, k pending parts would extract on k
-    tasks, and the run's time would follow the size of its largest
-    part."""
-    return (salted.repartition(num_partitions, F.col("doc_id"))
+    spread over ``extraction_width(salted)`` tasks on ``doc_id``, a
+    placement independent of ``part_id``, so a run of a few pending parts
+    (a resume) still keeps every core busy; the spans then gather on
+    ``salt_key()`` into ``num_partitions`` (P) tasks, so write task ``i``
+    holds exactly ``part_id == i``. With ``extract_salted`` alone, k
+    pending parts would extract on k tasks, and the run's time would
+    follow the size of its largest part. The width W and the part count
+    P are independent: P is the output's layout, pinned by lineage; W
+    follows the cores and the input bytes of this run."""
+    return (salted.repartition(extraction_width(salted), F.col("doc_id"))
             .mapInArrow(make_extract_arrow(cfg), SPAN_FLAT_SCHEMA)
             .repartition(num_partitions, salt_key()))
 
@@ -125,14 +163,14 @@ def extract_gathered(salted: DataFrame, cfg: ExtractConfig,
 def extract_spans(docs: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG,
                   num_partitions: int | None = None,
                   nested: bool = True) -> DataFrame:
-    """documents -> ordered spans. The salted repartition is the only
-    shuffle; extraction is narrow from there on.
+    """documents -> ordered spans. The salted repartition into
+    ``num_partitions`` tasks (default ``extraction_width(docs)``) is the
+    only shuffle; extraction is narrow from there on.
 
     ``nested=True`` gives SPAN_SCHEMA: the flat kernel output with the
     ``style_*`` columns folded into the ``style`` struct by a JVM-side
     projection (nothing nested crosses Arrow)."""
-    spark = docs.sparkSession
-    p = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    p = num_partitions or extraction_width(docs)
     _require_positive(num_partitions=p)
     flat = extract_salted(with_part_id(docs, p), cfg, p)
     if not nested:

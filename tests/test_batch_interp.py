@@ -562,3 +562,66 @@ def test_chain_equals_scalar_running_sum():
 def test_empty_batches():
     assert _kernel([], ExtractConfig()).num_rows == 0
     assert_same([("a", []), ("b", []), ("c", [corpus.meta_span("T", 0)])])
+
+
+# --- bounded kernel calls ----------------------------------------------------
+
+def test_content_bytes_counts_span_text_and_pdf_bytes():
+    docs = [("a", [corpus.text_span("12 é", 0), corpus.meta_span("T", 1)]),
+            ("b", []),
+            ("c", [{"kind": "text", "text": None, "media_ref": None,
+                    "offset": 0}, corpus.text_span("xy", 1)])]
+    b = _batch(docs)
+    assert extract.content_bytes(b).tolist() == [6, 0, 2]
+    assert extract.content_bytes(b.slice(1, 2)).tolist() == [0, 2]
+    from pdf2dom_spark.schema import PDF_SCHEMA
+    pdfs = pa.RecordBatch.from_pylist(
+        [{"doc_id": "p", "pdf": b"%PDF-1.4 ..."}, {"doc_id": "q", "pdf": b""}],
+        schema=to_arrow_schema(PDF_SCHEMA))
+    assert extract.content_bytes(pdfs).tolist() == [12, 0]
+
+
+def _traced_peak(fn) -> int:
+    import gc
+    import tracemalloc
+
+    gc.collect()
+    tracemalloc.start()
+    try:
+        fn()
+        return tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+
+
+def test_kernel_slices_batch_at_content_budget():
+    """One batch holding a 2 MB document among 400 small ones: the kernel
+    cuts it into slices of at most SLICE_BYTES of content (the big
+    document alone in its own), its output equals the unsliced
+    ``extract_batch`` of the whole batch, and the traced peak of the
+    kernel follows its largest slice, not the batch."""
+    small = _rich(400, seed=4)
+    # a short text show, then a long comment: 2 MB of content stream
+    big = ("big", [corpus.text_span(
+        _PG + "BT /F1 10 Tf 72 700 Td (big) Tj ET %" + "x" * 2**21, 0)])
+    batch = _batch(small[:200] + [big] + small[200:])
+    slices = extract.batch_slices(batch)
+    assert sum(s.num_rows for s in slices) == batch.num_rows
+    sizes = [int(extract.content_bytes(s).sum()) for s in slices]
+    assert all(n <= extract.SLICE_BYTES or s.num_rows == 1
+               for s, n in zip(slices, sizes))
+    assert sum(n > extract.SLICE_BYTES for n in sizes) == 1
+    assert len(slices) >= 3
+
+    kernel = extract.make_extract_arrow()
+    out = list(kernel(iter([batch])))
+    assert len(out) == len(slices)
+    whole = extract.extract_batch(batch, pid=-1)
+    assert pa.Table.from_batches(out).equals(pa.Table.from_batches([whole]))
+
+    sliced_peak = _traced_peak(lambda: list(kernel(iter([batch]))))
+    slice_peak = max(_traced_peak(lambda s=s: extract.extract_batch(s))
+                     for s in slices)
+    whole_peak = _traced_peak(lambda: extract.extract_batch(batch))
+    assert sliced_peak <= 1.2 * slice_peak, (sliced_peak, slice_peak)
+    assert whole_peak >= 1.5 * sliced_peak, (whole_peak, sliced_peak)

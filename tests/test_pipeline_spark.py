@@ -660,6 +660,25 @@ def test_other_part_scheme_lineage_refused(spark, docs, tmp_path):
         assert sorted((out / "lineage").iterdir()) == lineage_files
 
 
+def test_gathered_width_is_independent_of_parts(spark, docs):
+    """``extract_gathered`` extracts on ``extraction_width`` tasks (4 on
+    local[4]) and gathers the spans into P: at P=8 the docs exchange has
+    4 partitions, the spans exchange 8, and task i holds part_id i."""
+    import re
+
+    from pdf2dom_spark.extract import DEFAULT_CONFIG
+    from pdf2dom_spark.pipeline import extract_gathered
+
+    spans = extract_gathered(with_part_id(docs, 8), DEFAULT_CONFIG, 8)
+    plan = spans._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"hashpartitioning\(doc_id#\d+, 4\)", plan), plan
+    assert re.search(r"hashpartitioning\(xxhash64\(doc_id#\d+, 42\), 8\)",
+                     plan), plan
+    assert spans.where(
+        F.spark_partition_id() != F.col("part_id")).count() == 0
+    assert spans.select("part_id").distinct().count() == 8
+
+
 def test_one_task_writes_one_part(spark, docs, tmp_path):
     """part_id is the shuffle's task index (of extract_salted's doc
     shuffle and extract_gathered's span shuffle), so every write puts one

@@ -6,6 +6,8 @@ and scalar pipelines must stay inside WholeStageCodegen."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -50,6 +52,57 @@ def test_extraction_has_single_exchange(spark, nested):
     plan = _plan(spans)
     assert plan.count("Exchange") == 1, plan
     assert "MapInArrow" in plan and "MapInPandas" not in plan, plan
+
+
+def _widths(plan: str) -> list[int]:
+    # the partition count of each hash exchange (its key nests one call)
+    return [int(n) for n in re.findall(
+        r"hashpartitioning\((?:[^()]|\([^()]*\))*, (\d+)\)", plan)]
+
+
+def test_extraction_width_defaults_to_cores(spark):
+    """Without ``num_partitions`` the extraction runs one task per core,
+    whatever spark.sql.shuffle.partitions says (conftest: 8 on
+    local[4]), on the unsplit and on the page-split path."""
+    from pdf2dom_spark.corpus import build_docs_df
+    from pdf2dom_spark.pagesplit import extract_spans_paged
+    from pdf2dom_spark.pipeline import extract_spans
+
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+    docs = build_docs_df(spark, SF_SMOKE, mode="oracle").localCheckpoint()
+    plan = _plan(extract_spans(docs))
+    assert plan.count("Exchange") == 1, plan
+    assert _widths(plan) == [4], plan
+    paged = _plan(extract_spans_paged(docs, min_bytes=1000))
+    assert _widths(paged) and set(_widths(paged)) == {4}, paged
+
+
+def test_extraction_width_from_input_bytes(spark, tmp_path, monkeypatch):
+    """The width is max(cores, ceil(estimated input bytes / TASK_BYTES)):
+    a parquet scan estimates its file bytes, a local checkpoint keeps
+    that estimate, and a frame with no estimate gets the core count."""
+    from pdf2dom_spark import pipeline, tables
+    from pdf2dom_spark.corpus import build_docs_df
+    from pdf2dom_spark.schema import DOC_SCHEMA
+
+    path = tmp_path / "docs"
+    build_docs_df(spark, SF_SMOKE, mode="oracle").write.parquet(str(path))
+    docs = tables.read_table(spark, str(path))
+    est = sum(f.stat().st_size for f in path.glob("*.parquet"))
+    assert docs._jdf.queryExecution().optimizedPlan().stats() \
+        .sizeInBytes() == est
+    assert pipeline.extraction_width(docs) == 4  # the core floor
+
+    monkeypatch.setattr(pipeline, "TASK_BYTES", est // 10)
+    want = -(-est // (est // 10))
+    assert want > 4
+    assert pipeline.extraction_width(docs) == want
+    assert pipeline.extraction_width(docs.localCheckpoint()) == want
+    assert _widths(_plan(pipeline.extract_spans(docs))) == [want]
+
+    unknown = spark.createDataFrame(
+        spark.sparkContext.parallelize([("a", [])]), DOC_SCHEMA)
+    assert pipeline.extraction_width(unknown) == 4
 
 
 def test_scalar_query_stays_in_codegen(spark):
